@@ -140,11 +140,9 @@ object Curation {
     Seq("shuffle_key", "shard").foreach(c => require(!df.columns.contains(c),
       s"input already has a '$c' column — silently replacing a previous " +
         "shard assignment would let old and new assignments be confused downstream"))
-    // shard derives from the materialized key (one md5 per row, and
-    // the unit-interval contract stays stated once, in Sampling)
+    // shard = the md5 unit of the same id string the key hashes
     df.withColumn("shuffle_key", md5(col(idCol).cast("string")))
-      .withColumn("shard",
-        floor(Sampling.unitFromMd5Hex(col("shuffle_key")) * nShards).cast("int"))
+      .withColumn("shard", floor(Sampling.hashUnit(col(idCol)) * nShards).cast("int"))
   }
 
   /** The materialized form: range-repartition into nShards tasks by

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{VectorKernels, VectorMeanAgg, VectorOps}
+import graft.functions.{Md5Unit, VectorKernels, VectorMeanAgg, VectorOps}
 
 /** Spark-native Lloyd's K-Means — the reference engine's entire reason
   * to exist (`KMeans.java` in rohitseb/K-Means-Hadoop), re-expressed
@@ -24,8 +24,10 @@ import graft.functions.{VectorKernels, VectorMeanAgg, VectorOps}
   *    combiner only concatenated lists, so its shuffle was O(rows);
   *  - iterative driver with HDFS file-swap (`KMeans.java:220-282`)
   *    → a driver loop over a cached DataFrame; only k×d doubles are
-  *    ever collected. The input is read once and cached (the
-  *    reference re-read the full input from HDFS every iteration).
+  *    ever collected. The input is read once and cached as ONE
+  *    (id, f) projection per fit, which the init's passes and every
+  *    Lloyd step read (the reference re-read the full input from
+  *    HDFS every iteration).
   *
   * At cluster scale each iteration is: one scan of the cached input
   * (no shuffle for assignment — it's a map), one partial-agg exchange
@@ -56,7 +58,9 @@ object KMeans {
     * md5-derived uniform per (seed, round, id), and D²-weighted
     * sampling uses the exponential-race trick (argmin of -ln(u)/d²),
     * so re-running on a re-partitioned table picks the same seeds —
-    * unlike rand()-based sampling. k passes over the cached input. */
+    * unlike rand()-based sampling. k passes over one cached (id, f)
+    * projection: fit's own, or — for a standalone initCentroids —
+    * one cached for the init's lifetime. */
   final case class PlusPlus(k: Int, seed: Long) extends Init
 
   /** k-means‖ (Bahmani et al., "Scalable K-Means++", VLDB'12 —
@@ -68,13 +72,15 @@ object KMeans {
     * weights the ~rounds·l candidates by assignment counts and
     * reduces them to k with a driver-side weighted ++ race (the
     * candidate set is k·rounds rows, broadcast-sized, never the
-    * corpus). l = 0 means the paper's default 2k.
+    * corpus). l = 0 means the paper's default 2k. Like PlusPlus, the
+    * passes read fit's one cached (id, f) projection.
     *
     * Determinism: every coin is an md5 unit of (seed, round, id) and
-    * the driver-side reduction races on md5 units too, so reruns are
-    * bit-identical. Caveat, stated honestly: unlike PlusPlus (whose
-    * race avoids any global sum), the acceptance probability divides
-    * by cost(C) — a distributed FP sum whose last-ulp value depends
+    * the driver-side reduction races on md5 units from the same
+    * kernel (Md5Unit), so reruns are bit-identical. Caveat, stated
+    * honestly: unlike PlusPlus (whose race avoids any global sum),
+    * the acceptance probability divides by cost(C) — a distributed
+    * FP sum whose last-ulp value depends
     * on partition order, so a coin EXACTLY at the boundary could in
     * principle flip across different partitionings (~2⁻⁵⁰ per
     * point·round). Same-partitioning reruns are exactly stable.
@@ -230,9 +236,26 @@ object KMeans {
         i1 == i2 && euclideanLocal(v1, v2) <= tol
       }
 
+  /** Initial centroids for `init` over (idCol, featCol). The multi-
+    * pass inits (PlusPlus, Parallel) cache the projection for their
+    * own lifetime, so callers may pass an uncached frame. */
   def initCentroids(df: DataFrame, idCol: String, featCol: String, init: Init): Centroids = {
-    val proj = df.select(col(idCol).cast("long").as("id"),
-      VectorOps.toDouble(col(featCol)).as("f"))
+    val proj = projection(df, idCol, featCol)
+    init match {
+      case _: PlusPlus | _: Parallel =>
+        val cached = proj.cache()
+        try initFrom(cached, init) finally { cached.unpersist(); () }
+      case _ => initFrom(proj, init)
+    }
+  }
+
+  /** The (id: long, f: array<double>) projection the inits read. */
+  private def projection(df: DataFrame, idCol: String, featCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("id"), VectorOps.toDouble(col(featCol)).as("f"))
+
+  /** initCentroids over an (id, f) projection; caches nothing — the
+    * caller decides whether the projection is cached. */
+  private def initFrom(proj: DataFrame, init: Init): Centroids =
     init match {
       case ExplicitIds(ids) =>
         val byId = proj.filter(col("id").isin(ids: _*)).collect()
@@ -248,96 +271,80 @@ object KMeans {
         proj.orderBy(col("id")).limit(k).collect().zipWithIndex
           .map { case (r, i) => (i + 1) -> r.getSeq[Double](1).toArray }
       case PlusPlus(k, seed) =>
-        val cached = proj.cache()
-        try {
-          val first = cached
-            .withColumn("__u", Sampling.unitFromMd5(concat(lit(s"$seed:0:"), col("id"))))
-            .orderBy(col("__u"), col("id")).limit(1).collect()
-            .headOption.getOrElse(throw new NoSuchElementException(
-              "k-means++: input DataFrame is empty"))
-          var chosen = Vector(first.getLong(0) -> first.getSeq[Double](1).toArray)
-          for (round <- 1 until k) {
-            val soFar: Centroids = chosen.zipWithIndex
-              .map { case ((_, v), i) => (i + 1) -> v }.toArray
-            // exponential race: argmin of -ln(u)/d² samples ∝ d²;
-            // d²=0 rows (already-chosen points) are excluded up front
-            // (ANSI mode makes the division fatal, not Infinity)
-            val u = Sampling.unitFromMd5(concat(lit(s"$seed:$round:"), col("id")))
-            val d2 = minSqDistColumn(soFar, col("f"))
-            val key = when(d2 > 0.0, -log(u) / d2)
-            val rows = cached.withColumn("__key", key)
-              .filter(col("__key").isNotNull && !isnan(col("__key")))
-              .orderBy(col("__key"), col("id")).limit(1).collect()
-            require(rows.nonEmpty,
-              s"k-means++: fewer than $k distinct points in the input")
-            chosen = chosen :+ (rows(0).getLong(0) -> rows(0).getSeq[Double](1).toArray)
-          }
-          chosen.zipWithIndex.map { case ((_, v), i) => (i + 1) -> v }.toArray
-        } finally { cached.unpersist(); () }
+        val first = proj
+          .withColumn("__u", Sampling.unitFromMd5(concat(lit(s"$seed:0:"), col("id"))))
+          .orderBy(col("__u"), col("id")).limit(1).collect()
+          .headOption.getOrElse(throw new NoSuchElementException(
+            "k-means++: input DataFrame is empty"))
+        var chosen = Vector(first.getLong(0) -> first.getSeq[Double](1).toArray)
+        for (round <- 1 until k) {
+          val soFar: Centroids = chosen.zipWithIndex
+            .map { case ((_, v), i) => (i + 1) -> v }.toArray
+          // exponential race: argmin of -ln(u)/d² samples ∝ d²;
+          // d²=0 rows (already-chosen points) are excluded up front
+          // (ANSI mode makes the division fatal, not Infinity)
+          val u = Sampling.unitFromMd5(concat(lit(s"$seed:$round:"), col("id")))
+          val d2 = minSqDistColumn(soFar, col("f"))
+          val key = when(d2 > 0.0, -log(u) / d2)
+          val rows = proj.withColumn("__key", key)
+            .filter(col("__key").isNotNull && !isnan(col("__key")))
+            .orderBy(col("__key"), col("id")).limit(1).collect()
+          require(rows.nonEmpty,
+            s"k-means++: fewer than $k distinct points in the input")
+          chosen = chosen :+ (rows(0).getLong(0) -> rows(0).getSeq[Double](1).toArray)
+        }
+        chosen.zipWithIndex.map { case ((_, v), i) => (i + 1) -> v }.toArray
       case Parallel(k, seed, rounds, l0, sortedCost) =>
         val lFactor = if (l0 > 0) l0 else 2 * k
         require(rounds >= 1, s"k-means parallel needs rounds >= 1, got $rounds")
-        val cached = proj.cache()
-        try {
-          val first = cached
-            .withColumn("__u", Sampling.unitFromMd5(concat(lit(s"$seed:0:"), col("id"))))
-            .orderBy(col("__u"), col("id")).limit(1).collect()
-            .headOption.getOrElse(throw new NoSuchElementException(
-              "k-means parallel: input DataFrame is empty"))
-          var cands = Vector(first.getLong(0) -> first.getSeq[Double](1).toArray)
-          var round = 1
-          var exhausted = false
-          while (round <= rounds && !exhausted) {
-            val soFar: Centroids = cands.zipWithIndex
-              .map { case ((_, v), i) => (i + 1) -> v }.toArray
-            val d2 = minSqDistColumn(soFar, col("f"))
-            // parity mode: partial-agg-order-free cost (see Parallel doc)
-            val cost =
-              if (sortedCost)
-                cached.select(VectorOps.foldSum(array_sort(collect_list(d2))).as("c"))
-                  .head().getDouble(0)
-              else cached.select(sum(d2).as("c")).head().getDouble(0)
-            if (cost <= 0.0) exhausted = true // every point IS a candidate
-            else {
-              val u = Sampling.unitFromMd5(concat(lit(s"$seed:$round:"), col("id")))
-              val p = least(lit(1.0), lit(lFactor.toDouble) * d2 / lit(cost))
-              // collect order varies with partitioning — sort by id so
-              // the candidate sequence (and the weighted race below)
-              // sees a deterministic order
-              val newRows = cached.filter(u < p).select(col("id"), col("f"))
-                .collect().sortBy(_.getLong(0))
-              val seen = cands.map(_._1).toSet
-              cands ++= newRows.iterator
-                .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-                .filter(c => !seen(c._1))
-            }
-            round += 1
-          }
-          require(cands.length >= k,
-            s"k-means parallel sampled ${cands.length} candidates < k=$k — " +
-              "raise rounds or l (or the input has too few distinct points)")
-          // weight candidates by how many corpus points they serve
-          val candCents: Centroids = cands.zipWithIndex
+        val first = proj
+          .withColumn("__u", Sampling.unitFromMd5(concat(lit(s"$seed:0:"), col("id"))))
+          .orderBy(col("__u"), col("id")).limit(1).collect()
+          .headOption.getOrElse(throw new NoSuchElementException(
+            "k-means parallel: input DataFrame is empty"))
+        var cands = Vector(first.getLong(0) -> first.getSeq[Double](1).toArray)
+        var round = 1
+        var exhausted = false
+        while (round <= rounds && !exhausted) {
+          val soFar: Centroids = cands.zipWithIndex
             .map { case ((_, v), i) => (i + 1) -> v }.toArray
-          val wByCluster = assign(cached, "f", candCents).groupBy("cluster")
-            .agg(count(lit(1)).as("w")).collect()
-            .map(r => r.getInt(0) -> r.getLong(1)).toMap
-          val weighted = cands.zipWithIndex.map { case ((id, v), i) =>
-            (id, v, wByCluster.getOrElse(i + 1, 0L).max(1L))
-          }.toArray
-          weightedPlusPlusLocal(weighted, k, seed)
-        } finally { cached.unpersist(); () }
+          val d2 = minSqDistColumn(soFar, col("f"))
+          // parity mode: partial-agg-order-free cost (see Parallel doc)
+          val cost =
+            if (sortedCost)
+              proj.select(VectorOps.foldSum(array_sort(collect_list(d2))).as("c"))
+                .head().getDouble(0)
+            else proj.select(sum(d2).as("c")).head().getDouble(0)
+          if (cost <= 0.0) exhausted = true // every point IS a candidate
+          else {
+            val u = Sampling.unitFromMd5(concat(lit(s"$seed:$round:"), col("id")))
+            val p = least(lit(1.0), lit(lFactor.toDouble) * d2 / lit(cost))
+            // collect order varies with partitioning — sort by id so
+            // the candidate sequence (and the weighted race below)
+            // sees a deterministic order
+            val newRows = proj.filter(u < p).select(col("id"), col("f"))
+              .collect().sortBy(_.getLong(0))
+            val seen = cands.map(_._1).toSet
+            cands ++= newRows.iterator
+              .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+              .filter(c => !seen(c._1))
+          }
+          round += 1
+        }
+        require(cands.length >= k,
+          s"k-means parallel sampled ${cands.length} candidates < k=$k — " +
+            "raise rounds or l (or the input has too few distinct points)")
+        // weight candidates by how many corpus points they serve
+        val candCents: Centroids = cands.zipWithIndex
+          .map { case ((_, v), i) => (i + 1) -> v }.toArray
+        val wByCluster = assign(proj, "f", candCents).groupBy("cluster")
+          .agg(count(lit(1)).as("w")).collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+        val weighted = cands.zipWithIndex.map { case ((id, v), i) =>
+          (id, v, wByCluster.getOrElse(i + 1, 0L).max(1L))
+        }.toArray
+        weightedPlusPlusLocal(weighted, k, seed)
     }
-  }
-
-  /** Driver-side md5 unit — the local twin of Sampling.unitFromMd5,
-    * for racing over the (small) k-means parallel candidate set. */
-  private def unitLocal(s: String): Double = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s.getBytes("UTF-8")).take(4)
-      .map(b => f"${b & 0xff}%02x").mkString
-    java.lang.Long.parseLong(hex, 16).toDouble / 4294967296.0
-  }
 
   private def sqDistLocal(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
@@ -352,7 +359,9 @@ object KMeans {
     * candidates coinciding with a chosen point (d²=0) are excluded. */
   private def weightedPlusPlusLocal(cands: Array[(Long, Array[Double], Long)],
                                     k: Int, seed: Long): Centroids = {
-    def u(round: Int, id: Long) = unitLocal(s"$seed:local:$round:$id")
+    // the executors' md5-unit kernel, run on the driver
+    val md = Md5Unit.newDigest()
+    def u(round: Int, id: Long) = Md5Unit.unit(md, s"$seed:local:$round:$id")
     val first = cands.minBy { case (id, _, w) => (-math.log(u(0, id)) / w, id) }
     var chosen = Vector(first._1 -> first._2)
     var chosenIds = Set(first._1)
@@ -383,27 +392,26 @@ object KMeans {
   def fit(data: DataFrame, idCol: String, featCol: String, init: Init,
           maxIter: Int, tol: Double = 0.0, keepEmpty: Boolean = false,
           trackCost: Boolean = false): KMeansModel = {
-    val proj = data.select(col(idCol),
-      VectorOps.toDouble(col(featCol)).as(featCol))
     // init-only (maxIter=0, e.g. PQ's oracle-checkable codebooks):
     // one scan total — caching would cost a materialization to save
     // nothing
     if (maxIter == 0)
-      return KMeansModel(initCentroids(proj, idCol, featCol, init), 0, converged = false)
-    val df = proj.cache()
+      return KMeansModel(initCentroids(data, idCol, featCol, init), 0, converged = false)
+    // the fit's one cache: the init's passes and every Lloyd step read it
+    val df = projection(data, idCol, featCol).cache()
     try {
-      var cents = initCentroids(df, idCol, featCol, init)
+      var cents = initFrom(df, init)
       val cap = if (maxIter < 0) 10000 else maxIter
       var iter = 0
       var converged = false
       val costs = Seq.newBuilder[Double]
       while (!converged && iter < cap) {
-        val next = step(df, featCol, cents, keepEmpty)
+        val next = step(df, "f", cents, keepEmpty)
         converged = isConverged(cents, next, tol)
         cents = next
         iter += 1
         if (trackCost)
-          costs += df.select(minSqDistColumn(cents, col(featCol)).as("m"))
+          costs += df.select(minSqDistColumn(cents, col("f")).as("m"))
             .agg(sum(col("m"))).head().getDouble(0)
       }
       KMeansModel(cents, iter, converged, costs.result())

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Md5Unit
+
 /** Deterministic, engine-portable sampling for dataset curation —
   * train/test splits and down-sampling that are (a) stable across
   * runs, cluster sizes, and partitionings (a row's fate depends only
@@ -17,16 +19,14 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** Uniform [0, 1) from an md5 hex string: first 8 hex chars scaled
-    * by 2^-32 — every step exact. The single source of the
-    * hash-to-unit-interval contract (Multimodal.featureExtract,
-    * Curation.shuffleShards, and the oracles share it); take this
-    * overload when the hex is already materialized in a column. */
-  def unitFromMd5Hex(hex: Column): Column =
-    conv(substring(hex, 1, 8), 16, 10).cast("double") / lit(4294967296.0)
-
-  /** Uniform [0, 1) from any string column (hashes, then scales). */
-  def unitFromMd5(s: Column): Column = unitFromMd5Hex(md5(s))
+  /** Uniform [0, 1) from a string (UTF-8 bytes) or binary column: the
+    * hash-to-unit-interval contract every sampler, split, race and
+    * feature hash here shares (and the oracles replay as
+    * `CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) / 2^32`). Runs the
+    * native kernel Md5UnitExpr (graft.functions.Md5Unit); its string
+    * twin `conv(substring(md5(s), 1, 8), 16, 10) / 2^32` lives in
+    * Md5UnitSpec, which pins the two bit for bit. */
+  def unitFromMd5(s: Column): Column = Md5Unit.md5Unit(s)
 
   /** Uniform [0, 1) from an id (its decimal string form). */
   def hashUnit(id: Column): Column = unitFromMd5(id.cast("string"))

@@ -201,10 +201,21 @@ object Similarity {
   private def cellPartitionedWriter(df: DataFrame)
       : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
     val w = df.repartition(col("cell")).write
-    sys.env.get("SPARK_GRAFT_MAX_RECORDS_PER_FILE")
-      .map(_.trim.toLong).filter(_ > 0L)
+    maxRecordsPerFile(sys.env.get(MaxRecordsPerFileEnv))
       .fold(w)(cap => w.option("maxRecordsPerFile", cap))
   }
+
+  private val MaxRecordsPerFileEnv = "SPARK_GRAFT_MAX_RECORDS_PER_FILE"
+
+  /** The file-size cap from the raw env value: unset or ≤ 0 means off;
+    * anything that is not a whole number is refused by name. */
+  private[graft] def maxRecordsPerFile(raw: Option[String]): Option[Long] =
+    raw.map { v =>
+      val n = v.trim.toLongOption
+      require(n.isDefined,
+        s"$MaxRecordsPerFileEnv must be a whole number of records (≤ 0 = off), got '$v'")
+      n.get
+    }.filter(_ > 0L)
 
   /** Order- and formatting-independent digest of a centroid set: md5
     * over (cid, IEEE-754 bits) in cid order — exact doubles, no

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.operators.KMeans
 import graft.operators.KMeans._
@@ -290,5 +293,81 @@ class KMeansSpec extends AnyFunSuite {
       .collect()(0).isNullAt(0))
     assert(nul.select(KMeans.minSqDistColumnHof(tieCents, col("v")))
       .collect()(0).isNullAt(0))
+  }
+
+  /** Three blobs of small-integer points: every sum a Lloyd step takes
+    * is exact, so a step's result does not depend on summation order
+    * and two fits can be compared bit for bit. */
+  private lazy val intBlobs = {
+    val r = new scala.util.Random(5)
+    (0 until 180).map { i =>
+      val b = (i % 3) * 50.0
+      (i.toLong + 1, Seq(b + r.nextInt(21), b + r.nextInt(21), r.nextInt(21).toDouble))
+    }.toDF("id", "features")
+  }
+
+  /** Distinct RDD ids unpersisted while `body` runs. RDD ids grow
+    * monotonically, so ids at or below a watermark taken first belong
+    * to earlier work (e.g. a ContextCleaner sweep); a marker job posted
+    * after `body` drains the listener up to its events. */
+  private def unpersistedDuring(body: => Unit): Set[Int] = {
+    val sc = spark.sparkContext
+    val watermark = sc.emptyRDD[Int].id
+    val marker = s"kmeans-spec-marker-${System.nanoTime()}"
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    @volatile var drained = false
+    val l = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        if (e.rddId > watermark) ids.add(e.rddId)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          drained = true
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      eventually(timeout(30.seconds), interval(20.millis))(assert(drained))
+    } finally sc.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    ids.asScala.toSet
+  }
+
+  test("fit(PlusPlus | Parallel) starts from initCentroids' exact pick, at 1, 4 and 7 partitions") {
+    val inits = Seq(PlusPlus(3, seed = 11), Parallel(3, seed = 11, rounds = 3))
+    val picks = for (parts <- Seq(1, 4, 7); init <- inits) yield {
+      val df = intBlobs.repartition(parts)
+      val standalone = KMeans.initCentroids(df, "id", "features", init)
+      // one Lloyd step from the standalone pick, replayed outside fit
+      val replay = KMeans.step(
+        df.select($"features".cast("array<double>").as("f")), "f", standalone, keepEmpty = true)
+      val m = KMeans.fit(df, "id", "features", init, maxIter = 1, keepEmpty = true)
+      assert(m.centroids.map(c => (c._1, c._2.toSeq)).toSeq ==
+        replay.map(c => (c._1, c._2.toSeq)).toSeq, s"$init at $parts partitions")
+      (init, standalone.map(c => (c._1, c._2.toSeq)).toSeq)
+    }
+    // and the pick itself is partitioning-independent
+    picks.groupBy(_._1).foreach { case (init, ps) =>
+      assert(ps.map(_._2).distinct.size == 1, s"$init pick varies with partitioning")
+    }
+  }
+
+  test("fit caches exactly one projection and leaves no cached relation behind") {
+    val sc = spark.sparkContext
+    val df = intBlobs.repartition(4)
+    for (init <- Seq(PlusPlus(3, seed = 11), Parallel(3, seed = 11, rounds = 3))) {
+      val before = sc.getPersistentRDDs.keySet
+      val gone = unpersistedDuring {
+        KMeans.fit(df, "id", "features", init, maxIter = 3)
+      }
+      assert(gone.size == 1, s"$init: fit unpersisted ${gone.size} cached RDDs, want 1")
+      assert(sc.getPersistentRDDs.keySet.subsetOf(before), s"$init: fit left a cached RDD")
+    }
+    // the standalone init still owns (and drops) its own cache
+    val standalone = unpersistedDuring {
+      KMeans.initCentroids(df, "id", "features", PlusPlus(3, seed = 11))
+    }
+    assert(standalone.size == 1)
   }
 }

@@ -1125,6 +1125,18 @@ class SimilaritySpec extends AnyFunSuite {
     assert(fresh.map(_._1).toSet.subsetOf(ids.toSet),
       "the audited (first) instantiation is the one that must land")
   }
+
+  test("SPARK_GRAFT_MAX_RECORDS_PER_FILE: unset/≤0 is off, a malformed value is refused by name") {
+    assert(Similarity.maxRecordsPerFile(None).isEmpty)
+    assert(Similarity.maxRecordsPerFile(Some(" 4096 ")).contains(4096L))
+    assert(Similarity.maxRecordsPerFile(Some("0")).isEmpty)
+    assert(Similarity.maxRecordsPerFile(Some("-5")).isEmpty)
+    for (bad <- Seq("4k", "1e6", "", "  ", "99999999999999999999")) {
+      val e = intercept[IllegalArgumentException](Similarity.maxRecordsPerFile(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_MAX_RECORDS_PER_FILE") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
 }
 
 /** Evaluation counter for the nondeterministic-batch append spec —
