@@ -81,7 +81,8 @@ private[graft] object EntryKMeansCore {
     // in SORTED order with a sequential left fold (Spark `aggregate`
     // HOF; DuckDB `list_reduce`), which is bit-deterministic — so no
     // rounding is needed at all. This is the oracle-expressible form;
-    // the engine's scale path is VectorMeanAgg (O(k·d·tasks) shuffle).
+    // the engine's scale path is KMeans.step (k×(d+1) numbers per task
+    // to the driver, summed in partition order, no shuffle).
     "q_centroid_update" -> ((s, dir) => {
       val assigned = KMeans.assign(Tables(s, dir, "embeddings"), "embedding", cents8(s, dir))
       assigned
@@ -150,8 +151,8 @@ private[graft] object EntryKMeansCore {
     // ── op 10-11: iterative driver loop, 2 Lloyd steps from FirstK(8)
     // The loop's oracle gate: both engines run assign→mean twice with
     // the sorted-fold determinism contract, so the step-2 centroids
-    // are bit-exact. (The scale path is fit()/VectorMeanAgg, golden-
-    // tested on Iris in KMeansSpec.)
+    // are bit-exact. (The scale path is fit()/step(), one single-stage
+    // job per step, pinned against its groupBy twin in KMeansSpec.)
     "q_kmeans_fit2" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val c1 = KMeans.stepSortedFold(emb, "embedding", cents8(s, dir))

@@ -15,7 +15,7 @@ import scala.collection.mutable.ArrayBuffer
   * Aggregator runs in partial mode before the exchange, so each map
   * task ships at most k pairs per probe: the shuffle is
   * O(k · tasks · probes), independent of corpus size — the same
-  * shape-change VectorMeanAgg gives K-Means (SURVEY.md §2 op 7-8).
+  * shape-change VectorMeanAgg gives a grouped mean (SURVEY.md §2 op 7-8).
   *
   * Determinism: the final order is (score desc, id asc), so equal
   * scores break toward the lowest id — matching the oracle SQL's

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -619,6 +620,78 @@ object VectorKernels {
     best
   }
 
+  // ── K-Means round kernels ─────────────────────────────────────────
+  //
+  // One Lloyd step and one k-means++ race round, each ONE primitive
+  // loop over a partition of InternalRows that returns O(k·d) numbers
+  // to the driver. KMeans runs them over its fit's cached (id, f)
+  // projection through queryExecution.toRdd — the documented
+  // mapPartitions exception (as in Curation.globalRunningSum): a round
+  // is a single-stage job with no Catalyst plan of its own, no exchange
+  // and no encoder. Same arithmetic as their SQL twins in KMeansTwins (groupBy
+  // + VectorMeanAgg; withColumn/filter/orderBy/limit(1)), pinned in
+  // KMeansSpec.
+
+  /** One partition's Lloyd sums. `fIdx` holds f (array<double>); each
+    * row goes to nearestCentroid's ascending-cid position, or to
+    * position 0 when malformed — NearestCentroidExpr's routing. A NULL
+    * f counts toward no mean; a length-d f with a NULL element adds
+    * that element as 0.0 (what VectorMeanAgg's encoder read); a
+    * length ≠ d refuses. */
+  def lloydSums(rows: Iterator[InternalRow], fIdx: Int, cents: Array[Double],
+                d: Int): LloydSums = {
+    val acc = new LloydSums(cents.length / d, d)
+    while (rows.hasNext) {
+      val r = rows.next()
+      if (!r.isNullAt(fIdx)) {
+        val v = r.getArray(fIdx)
+        require(v.numElements() == d,
+          s"ragged vector in group: expected dim $d, got ${v.numElements()}")
+        acc.add(if (centValid(v, d)) nearestCentroid(v, cents, d) else 0, v)
+      }
+    }
+    acc
+  }
+
+  /** One partition's k-means++ race entry: the minimum (key, id) over
+    * rows (id: long at 0, f: array<double> at 1) with key =
+    * -ln(u)/d², u the md5 unit of `prefix + id`, d² the squared
+    * distance to the nearest chosen centroid — or nothing. The SQL
+    * form's exclusions, in its arithmetic: a NULL id (u is NULL), a
+    * NULL or malformed f (d² is NULL), d² ≤ 0, u ≤ 0 (Spark's Log is
+    * StrictMath.log and NULL there) and a NaN key. Equal (key, id)
+    * keep the earlier row. The digest is one per partition and u is
+    * computed only for rows that survive the d² test. */
+  def plusPlusRace(rows: Iterator[InternalRow], chosen: Array[Double], d: Int,
+                   prefix: String): Iterator[(Double, Long, Array[Double])] = {
+    val md = Md5Unit.newDigest()
+    var found = false
+    var bestKey = 0.0
+    var bestId = 0L
+    var bestF: Array[Double] = null
+    while (rows.hasNext) {
+      val r = rows.next()
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val v = r.getArray(1)
+        if (centValid(v, d)) {
+          val d2 = minSqDistToSet(v, chosen, d)
+          if (d2 > 0.0) {
+            val id = r.getLong(0)
+            val u = Md5Unit.unit(md, prefix + id)
+            if (u > 0.0) {
+              val key = -StrictMath.log(u) / d2
+              if (!key.isNaN &&
+                  (!found || key < bestKey || (key == bestKey && id < bestId))) {
+                found = true; bestKey = key; bestId = id; bestF = v.toDoubleArray()
+              }
+            }
+          }
+        }
+      }
+    }
+    if (found) Iterator.single((bestKey, bestId, bestF)) else Iterator.empty
+  }
+
   /** Encode validity: vector long enough for all m subspaces and no
     * null element in the used range; extra trailing elements are
     * ignored, as slice ignores them. The HOF twin enforces the same
@@ -677,4 +750,43 @@ object VectorKernels {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(codes)
   }
+}
+
+/** Per-cluster sums of one Lloyd step: sums(c·d + i) and n(c) over the
+  * vectors at ascending-cid position c. A cluster's first vector is
+  * adopted (not added to 0.0, so -0.0 survives) and later ones added
+  * in arrival order; partials merge the same way, in the order given —
+  * VectorMeanAgg's reduce/merge arithmetic without its encoder. */
+final class LloydSums(val k: Int, val d: Int) extends Serializable {
+  val sums = new Array[Double](k * d)
+  val n = new Array[Long](k)
+
+  /** Call with v of length d; a NULL element adds as 0.0. */
+  def add(c: Int, v: ArrayData): Unit = {
+    val base = c * d
+    var i = 0
+    if (n(c) == 0L)
+      while (i < d) { sums(base + i) = if (v.isNullAt(i)) 0.0 else v.getDouble(i); i += 1 }
+    else
+      while (i < d) { sums(base + i) += (if (v.isNullAt(i)) 0.0 else v.getDouble(i)); i += 1 }
+    n(c) += 1L
+  }
+
+  def merge(o: LloydSums): LloydSums = {
+    var c = 0
+    while (c < k) {
+      if (o.n(c) > 0L) {
+        val base = c * d
+        var i = 0
+        if (n(c) == 0L) System.arraycopy(o.sums, base, sums, base, d)
+        else while (i < d) { sums(base + i) += o.sums(base + i); i += 1 }
+        n(c) += o.n(c)
+      }
+      c += 1
+    }
+    this
+  }
+
+  /** Element-wise mean of position c — call with n(c) > 0. */
+  def mean(c: Int): Array[Double] = Array.tabulate(d)(i => sums(c * d + i) / n(c))
 }

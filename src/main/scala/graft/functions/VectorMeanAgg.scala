@@ -6,16 +6,20 @@ import org.apache.spark.sql.functions.udaf
 
 /** Element-wise mean of a group of equal-length double vectors.
   *
-  * This is the one custom aggregate in the engine (SURVEY.md §7.3): it
-  * replaces the reference's combiner + reducer pair
+  * The grouped form of the reference's combiner + reducer pair
   * (`KMeans.java:128-144` list-concat combiner, `KMeans.java:148-198`
-  * reducer mean). Unlike the reference — whose combiner only
-  * concatenates row lists, so every feature vector still crosses the
-  * network — Spark runs this Aggregator in partial mode before the
-  * exchange, so each map task ships exactly one (sum[d], count) pair
-  * per cluster: k×(d+1) numbers per task instead of all rows. That is
-  * the property that makes the shuffle O(k·d·tasks), independent of
-  * row count — the load-bearing fact for a 100 TB input.
+  * reducer mean; SURVEY.md §7.3). Unlike the reference — whose
+  * combiner only concatenates row lists, so every feature vector still
+  * crosses the network — Spark runs this Aggregator in partial mode
+  * before the exchange, so each map task ships exactly one (sum[d],
+  * count) pair per group: (d+1) numbers per group per task instead of
+  * all rows, a shuffle independent of row count.
+  *
+  * Callers: Classifier (standardizer moments and the per-iteration
+  * logistic-regression gradient) and Similarity.groupCentroids.
+  * K-Means sums the same way without a shuffle, one single-stage job
+  * per Lloyd step (VectorKernels.lloydSums), pinned against the
+  * groupBy form of this aggregate in KMeansTwins.
   *
   * Buffer = (running element-wise sum, count). The sum array starts
   * empty and adopts the first vector's length (the reference discovers

@@ -22,8 +22,8 @@ import graft.functions.{VectorMeanAgg, VectorOps}
   *  - training is `iters` passes over the data, each a single
   *    partial-aggregated mean (`VectorMeanAgg`): every task ships
   *    exactly d+2 doubles — gradient, bias slot, loss — per pass,
-  *    independent of row count (the same property as the k-means
-  *    centroid update, reference combiner `KMeans.java:128-144`);
+  *    independent of row count (the property of the reference's
+  *    k-means combiner, `KMeans.java:128-144`);
   *  - no weight broadcast variable to manage: coefficients are plan
   *    literals (the `KMeans.centLit` pattern, reference op 3), so
   *    scoring is a zero-shuffle map-only projection;

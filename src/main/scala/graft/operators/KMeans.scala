@@ -1,9 +1,11 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Md5Unit, VectorKernels, VectorMeanAgg, VectorOps}
+import graft.functions.{LloydSums, Md5Unit, VectorKernels, VectorOps}
 
 /** Spark-native Lloyd's K-Means — the reference engine's entire reason
   * to exist (`KMeans.java` in rohitseb/K-Means-Hadoop), re-expressed
@@ -18,10 +20,12 @@ import graft.functions.{Md5Unit, VectorKernels, VectorMeanAgg, VectorOps}
   *    Catalyst higher-order-function fold that stays in whole-stage
   *    codegen; tie-break = lowest centroid id (the reference's de
   *    facto HashMap-order behavior, SURVEY.md §7.4.2);
-  *  - combiner + reducer mean (`KMeans.java:128-198`)
-  *    → one hash aggregation with automatic partial (map-side) mode:
-  *    each task ships k×(d+1) doubles, NOT all rows — the reference's
-  *    combiner only concatenated lists, so its shuffle was O(rows);
+  *  - map + combiner + reducer mean (`KMeans.java:78-198`)
+  *    → one primitive loop per partition (VectorKernels.lloydSums)
+  *    that assigns each row and adds it into k×d sums and k counts;
+  *    each task returns those k×(d+1) numbers, NOT its rows — the
+  *    reference's combiner only concatenated lists, so its shuffle was
+  *    O(rows) — and the driver merges them in partition order;
   *  - iterative driver with HDFS file-swap (`KMeans.java:220-282`)
   *    → a driver loop over a cached DataFrame; only k×d doubles are
   *    ever collected. The input is read once and cached as ONE
@@ -29,11 +33,11 @@ import graft.functions.{Md5Unit, VectorKernels, VectorMeanAgg, VectorOps}
   *    Lloyd step read (the reference re-read the full input from
   *    HDFS every iteration).
   *
-  * At cluster scale each iteration is: one scan of the cached input
-  * (no shuffle for assignment — it's a map), one partial-agg exchange
-  * of k×(d+1)×numPartitions doubles, one tiny collect. No stage is
-  * O(rows) over the network, so the loop scales linearly with data on
-  * executors and constant on the driver.
+  * At cluster scale every Lloyd step and every k-means++ race round is
+  * one single-stage job: one scan of the cached input, no exchange,
+  * O(k·d) per task to the driver. No stage is O(rows) over the
+  * network, so the loop scales linearly with data on executors and
+  * constant on the driver.
   */
 object KMeans {
 
@@ -58,9 +62,11 @@ object KMeans {
     * md5-derived uniform per (seed, round, id), and D²-weighted
     * sampling uses the exponential-race trick (argmin of -ln(u)/d²),
     * so re-running on a re-partitioned table picks the same seeds —
-    * unlike rand()-based sampling. k passes over one cached (id, f)
-    * projection: fit's own, or — for a standalone initCentroids —
-    * one cached for the init's lifetime. */
+    * unlike rand()-based sampling. k single-stage passes over one
+    * cached (id, f) projection — fit's own, or, for a standalone
+    * initCentroids, one cached for the init's lifetime: the first
+    * pick is an md5-unit orderBy/limit(1), each later one a race
+    * round (plusPlusRound) that returns one candidate per partition. */
   final case class PlusPlus(k: Int, seed: Long) extends Init
 
   /** k-means‖ (Bahmani et al., "Scalable K-Means++", VLDB'12 —
@@ -169,24 +175,32 @@ object KMeans {
     df.withColumn(outCol, assignColumn(cents, VectorOps.toDouble(col(featCol))))
 
   /** One Lloyd iteration: assign + per-cluster element-wise mean
-    * (reference map/combine/shuffle/reduce, `KMeans.java:78-198`).
-    * Empty clusters vanish, exactly like the reference's reducer
-    * (SURVEY §7.4.3); pass keepEmpty=true for MLlib-style carry-over. */
+    * (reference map/combine/shuffle/reduce, `KMeans.java:78-198`) as
+    * ONE single-stage job: each partition runs VectorKernels.lloydSums
+    * and returns k×(d+1) numbers, which the driver merges in
+    * partition order and divides. Empty clusters vanish, exactly like
+    * the reference's reducer (SURVEY §7.4.3); pass keepEmpty=true for
+    * MLlib-style carry-over. A NULL vector counts toward no mean, so a
+    * cluster whose only members are NULL vectors is empty; a vector
+    * of the wrong length refuses ("ragged vector"). */
   def step(df: DataFrame, featCol: String, cents: Centroids,
-           keepEmpty: Boolean = false): Centroids = {
-    val assigned = df.select(
-      assignColumn(cents, VectorOps.toDouble(col(featCol))).as("cluster"),
-      VectorOps.toDouble(col(featCol)).as("f"))
-    val next = assigned.groupBy("cluster")
-      .agg(VectorMeanAgg.vecMean(col("f")).as("c"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-    if (!keepEmpty) next
-    else {
-      val got = next.map(_._1).toSet
-      (next ++ cents.filter(c => !got.contains(c._1))).sortBy(_._1)
-    }
+           keepEmpty: Boolean = false): Centroids =
+    lloydStep(df.select(VectorOps.toDouble(col(featCol))).queryExecution.toRdd, 0,
+      cents, keepEmpty)
+
+  /** step() over rows already planned, f at `fIdx` — fit runs every
+    * step over its projection's one RDD. */
+  private def lloydStep(rows: RDD[InternalRow], fIdx: Int, cents: Centroids,
+                        keepEmpty: Boolean): Centroids = {
+    require(cents.nonEmpty, "a Lloyd step needs at least one centroid")
+    val sorted = cents.sortBy(_._1)
+    val (cids, flat, d) = flatCents(sorted)
+    val total = rows.mapPartitions(it => Iterator.single(VectorKernels.lloydSums(it, fIdx, flat, d)))
+      .collect().foldLeft(new LloydSums(cids.length, d))(_ merge _)
+    cids.indices.iterator.collect {
+      case c if total.n(c) > 0L => cids(c) -> total.mean(c)
+      case c if keepEmpty => sorted(c)
+    }.toArray
   }
 
   /** Sorted-fold Lloyd step — the oracle-expressible FP-parity twin of
@@ -194,9 +208,10 @@ object KMeans {
     * fold over the SORTED group values (see q_centroid_update's
     * determinism contract), bit-identical to DuckDB's
     * `list_reduce(list_sort(list(v)), +)`. The scale path remains
-    * step()/VectorMeanAgg (O(k·d·tasks) shuffle); this twin ships the
-    * group VALUES (O(rows·d)) and exists so the iterative driver loop
-    * (ops 10-11) has a bit-exact cross-engine correctness gate. */
+    * step() (k×(d+1) numbers per task, summed in partition order);
+    * this twin ships the group VALUES (O(rows·d)) through a shuffle
+    * and exists so the iterative driver loop (ops 10-11) has a
+    * bit-exact cross-engine correctness gate. */
   def stepSortedFold(df: DataFrame, featCol: String, cents: Centroids): Centroids = {
     val assigned = df.select(
       assignColumn(cents, VectorOps.toDouble(col(featCol))).as("cluster"),
@@ -280,18 +295,9 @@ object KMeans {
         for (round <- 1 until k) {
           val soFar: Centroids = chosen.zipWithIndex
             .map { case ((_, v), i) => (i + 1) -> v }.toArray
-          // exponential race: argmin of -ln(u)/d² samples ∝ d²;
-          // d²=0 rows (already-chosen points) are excluded up front
-          // (ANSI mode makes the division fatal, not Infinity)
-          val u = Sampling.unitFromMd5(concat(lit(s"$seed:$round:"), col("id")))
-          val d2 = minSqDistColumn(soFar, col("f"))
-          val key = when(d2 > 0.0, -log(u) / d2)
-          val rows = proj.withColumn("__key", key)
-            .filter(col("__key").isNotNull && !isnan(col("__key")))
-            .orderBy(col("__key"), col("id")).limit(1).collect()
-          require(rows.nonEmpty,
-            s"k-means++: fewer than $k distinct points in the input")
-          chosen = chosen :+ (rows(0).getLong(0) -> rows(0).getSeq[Double](1).toArray)
+          val next = plusPlusRound(proj, soFar, seed, round)
+          require(next.nonEmpty, s"k-means++: fewer than $k distinct points in the input")
+          chosen = chosen :+ next.get
         }
         chosen.zipWithIndex.map { case ((_, v), i) => (i + 1) -> v }.toArray
       case Parallel(k, seed, rounds, l0, sortedCost) =>
@@ -345,6 +351,24 @@ object KMeans {
         }.toArray
         weightedPlusPlusLocal(weighted, k, seed)
     }
+
+  /** One k-means++ race round (1..k−1) as ONE single-stage job over
+    * the (id, f) projection's rows: exponential race, argmin of
+    * -ln(u)/d² samples ∝ d² (VectorKernels.plusPlusRace per
+    * partition, then the minimum (key, id) of the ≤ P entries, an
+    * equal pair going to the lower partition). d² = 0 rows (points
+    * already chosen) are excluded, as are NULL ids and NULL or
+    * malformed vectors. None when no row qualifies. */
+  private[graft] def plusPlusRound(proj: DataFrame, soFar: Centroids, seed: Long,
+                                   round: Int): Option[(Long, Array[Double])] = {
+    val (_, flat, d) = flatCents(soFar)
+    val prefix = s"$seed:$round:"
+    proj.queryExecution.toRdd
+      .mapPartitions(it => VectorKernels.plusPlusRace(it, flat, d, prefix))
+      .collect()
+      .reduceOption((a, b) => if (b._1 < a._1 || (b._1 == a._1 && b._2 < a._2)) b else a)
+      .map(c => c._2 -> c._3)
+  }
 
   private def sqDistLocal(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
@@ -405,8 +429,9 @@ object KMeans {
       var iter = 0
       var converged = false
       val costs = Seq.newBuilder[Double]
+      val rows = df.queryExecution.toRdd
       while (!converged && iter < cap) {
-        val next = step(df, "f", cents, keepEmpty)
+        val next = lloydStep(rows, 1, cents, keepEmpty)
         converged = isConverged(cents, next, tol)
         cents = next
         iter += 1

@@ -29,8 +29,8 @@ object Similarity {
   /** Mean embedding per group — class centroids, cluster summaries,
     * per-source prototypes: the "one vector that represents this
     * slice" reduction. One partial-agg shuffle of d+1 doubles per
-    * (group, task) via VectorMeanAgg (the same combiner K-Means'
-    * step uses) — never a collect_list of the group's vectors.
+    * (group, task) via VectorMeanAgg (the grouped form of K-Means'
+    * per-partition sums) — never a collect_list of the group's vectors.
     * n counts the NON-NULL vectors (the aggregator's actual divisor —
     * count(*) would disagree with the mean whenever a group carries
     * null embeddings). Output: (keyCol, centroid: array<double>, n). */

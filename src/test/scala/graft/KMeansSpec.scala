@@ -8,7 +8,12 @@ import org.scalatest.time.SpanSugar._
 import graft.operators.KMeans
 import graft.operators.KMeans._
 
+object KMeansSpec {
+  final case class Seen(unpersisted: Set[Int], jobs: Seq[SparkListenerJobStart])
+}
+
 class KMeansSpec extends AnyFunSuite {
+  import KMeansSpec.Seen
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -306,33 +311,44 @@ class KMeansSpec extends AnyFunSuite {
     }.toDF("id", "features")
   }
 
-  /** Distinct RDD ids unpersisted while `body` runs. RDD ids grow
+  /** What a listener saw while `body` ran: the distinct RDD ids
+    * unpersisted and the jobs `body` started. RDD ids grow
     * monotonically, so ids at or below a watermark taken first belong
-    * to earlier work (e.g. a ContextCleaner sweep); a marker job posted
-    * after `body` drains the listener up to its events. */
-  private def unpersistedDuring(body: => Unit): Set[Int] = {
+    * to earlier work (e.g. a ContextCleaner sweep); `body`'s jobs
+    * carry a job group of their own; a marker job posted after `body`
+    * drains the listener up to its events. */
+  private def seenDuring(body: => Unit): Seen = {
     val sc = spark.sparkContext
     val watermark = sc.emptyRDD[Int].id
-    val marker = s"kmeans-spec-marker-${System.nanoTime()}"
+    val stamp = System.nanoTime()
+    val group = s"kmeans-spec-body-$stamp"
+    val marker = s"kmeans-spec-marker-$stamp"
     val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
     @volatile var drained = false
     val l = new SparkListener {
       override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
         if (e.rddId > watermark) ids.add(e.rddId)
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          drained = true
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) jobs.add(e)
+        if (props.exists(_.getProperty("spark.job.description") == marker)) drained = true
+      }
     }
     sc.addSparkListener(l)
     try {
-      body
+      sc.setJobGroup(group, "KMeansSpec body")
+      try body finally sc.clearJobGroup()
       sc.setJobDescription(marker)
       try spark.range(1).count() finally sc.setJobDescription(null)
       eventually(timeout(30.seconds), interval(20.millis))(assert(drained))
     } finally sc.removeSparkListener(l)
     import scala.jdk.CollectionConverters._
-    ids.asScala.toSet
+    Seen(ids.asScala.toSet, jobs.asScala.toSeq.sortBy(_.jobId))
   }
+
+  /** Distinct RDD ids unpersisted while `body` runs. */
+  private def unpersistedDuring(body: => Unit): Set[Int] = seenDuring(body).unpersisted
 
   test("fit(PlusPlus | Parallel) starts from initCentroids' exact pick, at 1, 4 and 7 partitions") {
     val inits = Seq(PlusPlus(3, seed = 11), Parallel(3, seed = 11, rounds = 3))
@@ -369,5 +385,172 @@ class KMeansSpec extends AnyFunSuite {
       KMeans.initCentroids(df, "id", "features", PlusPlus(3, seed = 11))
     }
     assert(standalone.size == 1)
+  }
+
+  private def bits(c: Centroids): Seq[(Int, Seq[Long])] =
+    c.toSeq.map { case (cid, v) => cid -> v.toSeq.map(java.lang.Double.doubleToRawLongBits) }
+
+  /** 300 real-valued 5-d rows in three overlapping blobs, plus NULL
+    * vectors that ride along in whichever cluster is lowest. */
+  private lazy val realBlobs = {
+    val r = new scala.util.Random(17)
+    (0 until 300).map { i =>
+      val b = (i % 3) * 2.5
+      val f: Seq[Double] = if (i % 50 == 7) null else Seq.fill(5)(b + r.nextGaussian())
+      (i.toLong + 1, f)
+    }.toDF("id", "features")
+  }
+
+  test("step ≡ the groupBy + VectorMeanAgg twin: exact on integer data, 1e-12 on real data, at 1, 4 and 7 partitions") {
+    // a far centroid exercises the empty-cluster rule both ways
+    val far = 99 -> Array.fill(3)(1e6)
+    val intCents = KMeans.initCentroids(intBlobs, "id", "features", FirstK(3)) :+ far
+    val realCents = KMeans.initCentroids(realBlobs, "id", "features", FirstK(4)) :+
+      (99 -> Array.fill(5)(1e6))
+    for (parts <- Seq(1, 4, 7); keep <- Seq(false, true)) {
+      val ctx = s"at $parts partitions, keepEmpty=$keep"
+      val i = intBlobs.repartition(parts)
+      val a = KMeans.step(i, "features", intCents, keep)
+      assert(bits(a) == bits(KMeansTwins.stepSql(i, "features", intCents, keep)), ctx)
+      assert(a.map(_._1).toSeq == (if (keep) Seq(1, 2, 3, 99) else Seq(1, 2, 3)), ctx)
+      val r = realBlobs.repartition(parts)
+      val b = KMeans.step(r, "features", realCents, keep)
+      val t = KMeansTwins.stepSql(r, "features", realCents, keep)
+      assert(b.map(_._1).toSeq == t.map(_._1).toSeq, ctx)
+      b.zip(t).foreach { case ((cid, x), (_, y)) =>
+        assert(x.length == y.length, s"$ctx, cluster $cid")
+        x.zip(y).foreach { case (p, q) =>
+          assert(math.abs(p - q) <= 1e-12 * math.max(math.abs(q), 1e-300), s"$ctx, cluster $cid: $p vs $q")
+        }
+      }
+    }
+  }
+
+  test("step on malformed rows: a NULL-only cluster is empty (no driver NPE); the rest as before") {
+    val cents: Centroids = Array(1 -> Array(0.0, 0.0), 2 -> Array(10.0, 10.0))
+    def df(rows: (Long, Seq[java.lang.Double])*) = rows.toDF("id", "f").repartition(1)
+    def v(xs: java.lang.Double*): Seq[java.lang.Double] = xs
+    def got(d: org.apache.spark.sql.DataFrame, keep: Boolean = false) =
+      KMeans.step(d, "f", cents, keep).toSeq.map(c => c._1 -> c._2.toSeq)
+    // NULL vectors route to the lowest cid; when they are its only
+    // members it has no mean: it vanishes, or keepEmpty carries it
+    // (the groupBy twin threw a driver NPE here)
+    val nullOnly = df(1L -> null, 2L -> null, 3L -> v(10.0, 10.0))
+    assert(got(nullOnly) == Seq(2 -> Seq(10.0, 10.0)))
+    assert(got(nullOnly, keep = true) == Seq(1 -> Seq(0.0, 0.0), 2 -> Seq(10.0, 10.0)))
+    intercept[NullPointerException](KMeansTwins.stepSql(nullOnly, "f", cents))
+    // kept from the twin, pinned equal to it:
+    val same = Seq(
+      // a NULL vector beside real members counts toward no mean
+      df(1L -> v(1.0, 1.0), 2L -> null, 3L -> v(10.0, 10.0)) -> Seq(1 -> Seq(1.0, 1.0)),
+      // a length-d vector with a NULL element goes to the lowest cid
+      // and adds that element as 0.0, near or far
+      df(1L -> v(1.0, null), 2L -> v(1.0, 1.0), 3L -> v(10.0, 10.0)) -> Seq(1 -> Seq(1.0, 0.5)),
+      df(1L -> v(null, 12.0), 2L -> v(1.0, 1.0), 3L -> v(10.0, 10.0)) -> Seq(1 -> Seq(0.5, 6.5)),
+      df(1L -> v(12.0, null), 3L -> v(10.0, 10.0)) -> Seq(1 -> Seq(12.0, 0.0)),
+      // NaN propagates into its cluster's mean
+      df(1L -> v(Double.NaN, 1.0), 2L -> v(1.0, 1.0), 3L -> v(10.0, 10.0)) ->
+        Seq(1 -> Seq(Double.NaN, 1.0)),
+      // a cluster's first vector is adopted, so -0.0 survives
+      df(1L -> v(-0.0, -0.0), 3L -> v(10.0, 10.0)) -> Seq(1 -> Seq(-0.0, -0.0)))
+    same.foreach { case (d, first) =>
+      val a = KMeans.step(d, "f", cents)
+      assert(bits(a) == bits(KMeansTwins.stepSql(d, "f", cents)))
+      assert(bits(a.take(1)) == bits(first.map(c => c._1 -> c._2.toArray).toArray))
+      assert(bits(a.drop(1)) == bits(Array(2 -> Array(10.0, 10.0))))
+    }
+    // a vector of the wrong length refuses loudly, first or later in
+    // its cluster, and also when it is the cluster's only member (where
+    // the twin returned a centroid of the wrong length, which the next
+    // step refused as "centroid dims differ")
+    Seq(
+      df(1L -> v(1.0), 2L -> v(1.0, 1.0), 3L -> v(10.0, 10.0)),
+      df(2L -> v(1.0, 1.0), 1L -> v(1.0), 3L -> v(10.0, 10.0)),
+      df(1L -> v(1.0), 3L -> v(10.0, 10.0)),
+      df(1L -> v(1.0, 2.0, 3.0), 3L -> v(10.0, 10.0)),
+      df(1L -> v(), 3L -> v(10.0, 10.0))
+    ).foreach { d =>
+      val e = intercept[org.apache.spark.SparkException](KMeans.step(d, "f", cents))
+      assert(e.getMessage.contains("ragged vector"), e.getMessage)
+    }
+  }
+
+  /** intBlobs plus what the race must exclude: exact duplicates of
+    * earlier points under new ids (d² = 0 once the original is
+    * chosen), a NULL vector and a short vector. */
+  private lazy val raceInput = {
+    val dups = (1 to 20).map(i => (1000L + i, Seq((i % 3) * 50.0, (i % 3) * 50.0, 0.0)))
+    val base = intBlobs.as[(Long, Seq[Double])].collect().toSeq
+    val originals = (1 to 20).map(i => (2000L + i, Seq((i % 3) * 50.0, (i % 3) * 50.0, 0.0)))
+    (base ++ originals ++ dups ++ Seq((3001L, null: Seq[Double]), (3002L, Seq(50.0, 50.0))))
+      .toDF("id", "features")
+  }
+
+  private def outcome(body: => Centroids): Either[String, Seq[(Int, Seq[Long])]] =
+    scala.util.Try(body).toEither.left.map(e => s"${e.getClass.getName}: ${e.getMessage}")
+      .map(bits)
+
+  test("PlusPlus init ≡ the SQL race twin, bit for bit, at 1, 4 and 7 partitions") {
+    val picks = for (parts <- Seq(1, 4, 7); seed <- 1L to 6L) yield {
+      val d = raceInput.repartition(parts)
+      val a = outcome(KMeans.initCentroids(d, "id", "features", PlusPlus(6, seed)))
+      val b = outcome(KMeansTwins.plusPlusSql(d, "id", "features", 6, seed))
+      assert(a == b, s"seed $seed at $parts partitions")
+      a
+    }
+    // (round 0 may pick the NULL vector, which fails both alike)
+    assert(picks.count(_.isRight) >= 15, picks)
+    // fewer distinct points than k: both refuse in a race round
+    val few = raceInput.filter($"id" > 1000L).repartition(4)
+    val a = outcome(KMeans.initCentroids(few, "id", "features", PlusPlus(8, 3)))
+    assert(a == outcome(KMeansTwins.plusPlusSql(few, "id", "features", 8, 3)))
+    assert(a.left.exists(_.contains("fewer than 8 distinct points")), a)
+  }
+
+  test("k-means++ race round ≡ its SQL twin with a NULL id; a NULL id still fails round 0") {
+    // row 5 loses its id, and a far point with no id would win every
+    // race it entered
+    val withNullId = raceInput.as[(Long, Seq[Double])].collect().toSeq
+      .map { case (id, f) => (if (id == 5L) null else Long.box(id), f) } :+
+      ((null: java.lang.Long) -> Seq(500.0, 500.0, 500.0))
+    val df = withNullId.toDF("id", "features")
+    val soFar: Centroids = Array(1 -> Array(0.0, 0.0, 0.0), 2 -> Array(50.0, 50.0, 10.0))
+    for (parts <- Seq(1, 4, 7)) {
+      val proj = df.repartition(parts)
+        .select($"id".cast("long").as("id"), $"features".cast("array<double>").as("f"))
+      for (seed <- 1L to 3L; round <- 1 to 4) {
+        val a = KMeans.plusPlusRound(proj, soFar, seed, round)
+        val b = KMeansTwins.plusPlusRoundSql(proj, soFar, seed, round)
+        assert(a.map(p => p._1 -> p._2.toSeq.map(java.lang.Double.doubleToRawLongBits)) ==
+          b.map(p => p._1 -> p._2.toSeq.map(java.lang.Double.doubleToRawLongBits)),
+          s"seed $seed round $round at $parts partitions")
+      }
+    }
+    // round 0 orders md5 units ASC NULLS FIRST, so a NULL id (NULL
+    // unit) is picked first and its id cannot be read: unchanged
+    val a = outcome(KMeans.initCentroids(df, "id", "features", PlusPlus(3, 1)))
+    assert(a == outcome(KMeansTwins.plusPlusSql(df, "id", "features", 3, 1)))
+    assert(a.left.exists(_.contains("ROW_VALUE_IS_NULL")), a)
+  }
+
+  test("fit(PlusPlus(k), maxIter = n): one single-stage job per init round and per Lloyd step") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val reads = spark.sparkContext.longAccumulator("kmeans-spec-reads")
+    val counted = udf { (id: Long) => reads.add(1L); id }
+    // a local relation: no shuffle below the fit's cache either
+    val df = intBlobs.withColumn("id", counted(col("id")))
+    for ((k, n) <- Seq((3, 2), (5, 3))) {
+      reads.reset()
+      var m: KMeansModel = null
+      val seen = seenDuring {
+        m = KMeans.fit(df, "id", "features", PlusPlus(k, seed = 11), maxIter = n)
+      }
+      assert(m.iterations == n, s"k=$k: converged early, after ${m.iterations} steps")
+      assert(seen.jobs.size == k + n, s"k=$k, n=$n: ${seen.jobs.size} jobs")
+      seen.jobs.foreach(j =>
+        assert(j.stageInfos.size == 1, s"job ${j.jobId} has ${j.stageInfos.size} stages"))
+      // every round reads the one cache, which reads the input once
+      assert(reads.value == 180L, s"input rows read: ${reads.value}")
+    }
   }
 }
