@@ -64,6 +64,12 @@ object VectorOps {
   def foldSum(a: Column): Column =
     aggregate(a, lit(0.0), (acc, v) => acc + v)
 
+  /** The sorted-fold aggregate: a group's doubles folded left to
+    * right in ascending order — the oracle-parity contract that makes
+    * a grouped sum bit-identical across partitionings and to DuckDB's
+    * `list_reduce(list_sort(list(x)), +)`. */
+  def sortedSum(c: Column): Column = foldSum(array_sort(collect_list(c)))
+
   /** Element-wise sum of two equal-length vectors. */
   def vecAdd(a: Column, b: Column): Column = zip_with(a, b, _ + _)
 

@@ -162,14 +162,13 @@ object ClusterMetrics {
       assigned.select(col(clusterCol).as("__c"), ownD2.as("__d2"), f.as("__v")))
     val wRow =
       if (sortedFold)
-        scored.agg(VectorOps.foldSum(array_sort(collect_list(col("__d2")))).as("w"),
+        scored.agg(VectorOps.sortedSum(col("__d2")).as("w"),
           count(lit(1)).cast("long").as("n"))
       else scored.agg(sum(col("__d2")).as("w"), count(lit(1)).cast("long").as("n"))
     val perPos = scored.select(posexplode(col("__v")).as(Seq("__p", "__x"))).groupBy("__p")
     val muRow =
       (if (sortedFold)
-        perPos.agg((VectorOps.foldSum(array_sort(collect_list(col("__x"))))
-          / count(lit(1))).as("__m"))
+        perPos.agg((VectorOps.sortedSum(col("__x")) / count(lit(1))).as("__m"))
       else perPos.agg(avg(col("__x")).as("__m")))
         .agg(transform(sort_array(collect_list(struct(col("__p"), col("__m")))),
           s => s.getField("__m")).as("__mu"))
@@ -223,7 +222,7 @@ object ClusterMetrics {
     val perC = scored.groupBy(col("__c"))
     val sRows =
       if (sortedFold)
-        perC.agg((VectorOps.foldSum(array_sort(collect_list(col("__d"))))
+        perC.agg((VectorOps.sortedSum(col("__d"))
           / count(lit(1))).as("__s"), count(lit(1)).cast("long").as("__nc"))
       else perC.agg(avg(col("__d")).as("__s"), count(lit(1)).cast("long").as("__nc"))
     val packed = sRows.agg(

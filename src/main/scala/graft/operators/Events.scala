@@ -786,8 +786,7 @@ object Events {
         / (lit(1.0) + (col("__dmax") - col("day")).cast("double")))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).cast("long").as("n_days"),
-        graft.functions.VectorOps.foldSum(array_sort(collect_list(col("__w"))))
-          .as("decayed_score"))
+        graft.functions.VectorOps.sortedSum(col("__w")).as("decayed_score"))
   }
 
   /** Per-type daily activity trend: exact OLS slope + intercept of

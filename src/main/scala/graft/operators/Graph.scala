@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorOps
+
 /** Graph analytics over edge lists — the companion surface to
   * Dedup's component operators (near-dup pair graphs, citation /
   * link graphs, user-interaction graphs). Everything here is
@@ -12,34 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** PageRank with a FIXED number of power iterations (public
-    * formula, Brin & Page 1998): pr'(v) = (1-d)/N + d · Σ_{u→v}
-    * pr(u)/outdeg(u). Fixed-iteration (not convergence-tested)
-    * because training-data curation uses the ranking, not the exact
-    * stationary point — 3-5 rounds separate hubs from leaves, and a
-    * fixed round count keeps the result a pure function of the
-    * input (the oracle gate unrolls the same rounds in SQL).
-    *
-    * undirected=true symmetrizes the edge list first (each edge
-    * counts in both directions — the natural reading for near-dup /
-    * similarity graphs, where rank measures how centrally a document
-    * sits in its duplicate neighborhood). Directed inputs keep their
-    * orientation: dangling nodes (outdeg 0) contribute nothing and
-    * their mass is NOT redistributed — the simplified public variant,
-    * stated here so the choice is visible; nodes with no in-edges
-    * settle at the teleport floor (1-d)/N.
-    *
-    * Scale shape: per round ONE hash join (edges × current ranks on
-    * src) + ONE grouped sum on dst — the same shuffle pair as a
-    * relational group-by, repeated `iters` times on a CACHED edge
-    * list (registered under Dedup's cache lifecycle). Degrees are
-    * computed once. No collect except the single node count N (one
-    * scalar). sortedFold=true folds each node's contributions in
-    * ascending order (collect_list + sorted sequential fold) —
-    * bit-exact vs DuckDB, correctness gates only; false is the
-    * distributed partial-agg scale path.
-    *
-    * Output: (id, pr, degree) for every node in the edge list. */
   /** Shared edge prologue: named endpoints, self-loops dropped,
     * optionally symmetrized, dedup'd — UNPINNED (callers that read
     * the list more than once pin it). `castLong` aligns endpoint
@@ -70,6 +44,40 @@ object Graph {
     oriented.distinct()
   }
 
+  /** src ∪ dst of an edge list, distinct — UNPINNED. */
+  private def nodeSet(e: DataFrame): DataFrame =
+    e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
+
+  /** Canonical undirected simple graph: long-cast (least, greatest)
+    * pairs as (a, b), self-loops dropped, dedup'd — UNPINNED. */
+  private def undirectedPairs(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
+      .filter(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
+      .distinct()
+
+  /** Both orientations of an (a, b) pair set. */
+  private def symmetrize(pairs: DataFrame): DataFrame =
+    pairs.union(pairs.select(col("b").as("a"), col("a").as("b")))
+
+  /** A group's double sum: the sorted fold, or a partial-agg sum. */
+  private def foldedSum(c: Column, sortedFold: Boolean): Column =
+    if (sortedFold) VectorOps.sortedSum(c) else sum(c)
+
+  /** The fixed-round driver (`KMeans.java:220-282`'s loop, round
+    * count fixed so the oracle can unroll it): `rounds` steps from
+    * `init`, each but the last ending in an eager localCheckpoint so
+    * round r's plan never nests r join trees. The LAST round stays
+    * lazy — its one consumer is the returned plan — so every action on
+    * the result re-runs it: a partial-agg double sum (sortedFold=false)
+    * may differ in the last bit between two actions; cache the result
+    * to read it twice. */
+  private def iterate(init: DataFrame, rounds: Int)(step: DataFrame => DataFrame): DataFrame =
+    (1 to rounds).foldLeft(init) { (cur, r) =>
+      val next = step(cur)
+      if (r < rounds) next.localCheckpoint(eager = true) else next
+    }
+
   /** Shared rank-iteration prep: dedup'd (optionally symmetrized)
     * edge list + per-node out-degrees, both pinned — the opening
     * moves of pageRank and personalizedPageRank. */
@@ -78,13 +86,58 @@ object Graph {
     val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected))
     val outDeg = e.groupBy("src").agg(count(lit(1)).cast("long").as("degree"))
       .withColumnRenamed("src", "id")
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    val degs = Dedup.pin(nodes.join(outDeg, Seq("id"), "left")
+    val degs = Dedup.pin(nodeSet(e).join(outDeg, Seq("id"), "left")
       .select(col("id"), coalesce(col("degree"), lit(0L)).as("degree")))
     (e, degs)
   }
 
+  /** One pageRank/PPR round over (id, pr, degree): pr'(v) = teleport
+    * + d·Σ_{u→v} pr(u)/outdeg(u). `anchor` holds every node's (id,
+    * degree) and what `teleport` reads; degree rides in the frame, so
+    * a round is one join and one grouped sum. */
+  private def powerStep(e: DataFrame, anchor: DataFrame, teleport: Column,
+                        damping: Double, sortedFold: Boolean)(ranks: DataFrame): DataFrame = {
+    val sums = e.join(
+        ranks.filter(col("degree") > 0L)
+          .select(col("id").as("src"), (col("pr") / col("degree")).as("c")),
+        Seq("src"))
+      .select(col("dst").as("id"), col("c"))
+      .groupBy("id").agg(foldedSum(col("c"), sortedFold).as("s"))
+    anchor.join(sums, Seq("id"), "left")
+      .select(col("id"), (teleport + lit(damping) * coalesce(col("s"), lit(0.0))).as("pr"),
+        col("degree"))
+  }
+
+  /** PageRank with a FIXED number of power iterations (public
+    * formula, Brin & Page 1998): pr'(v) = (1-d)/N + d · Σ_{u→v}
+    * pr(u)/outdeg(u). Fixed-iteration (not convergence-tested)
+    * because training-data curation uses the ranking, not the exact
+    * stationary point — 3-5 rounds separate hubs from leaves, and a
+    * fixed round count keeps the result a pure function of the
+    * input (the oracle gate unrolls the same rounds in SQL).
+    *
+    * undirected=true symmetrizes the edge list first (each edge
+    * counts in both directions — the natural reading for near-dup /
+    * similarity graphs, where rank measures how centrally a document
+    * sits in its duplicate neighborhood). Directed inputs keep their
+    * orientation: dangling nodes (outdeg 0) contribute nothing and
+    * their mass is NOT redistributed — the simplified public variant,
+    * stated here so the choice is visible; nodes with no in-edges
+    * settle at the teleport floor (1-d)/N.
+    *
+    * Scale shape: per round ONE hash join (edges × current ranks on
+    * src) + ONE grouped sum on dst — the same shuffle pair as a
+    * relational group-by, repeated `iters` times on a CACHED edge
+    * list (registered under Dedup's cache lifecycle). Degrees are
+    * computed once. No collect except the single node count N (one
+    * scalar). sortedFold=true folds each node's contributions in
+    * ascending order (collect_list + sorted sequential fold) —
+    * bit-exact vs DuckDB, correctness gates only; false is the
+    * distributed partial-agg scale path. The last round stays lazy
+    * (see iterate): with sortedFold=false, two actions on the result
+    * can differ in the last bit, so cache it to read it twice.
+    *
+    * Output: (id, pr, degree) for every node in the edge list. */
   def pageRank(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
                iters: Int = 3, damping: Double = 0.85,
                undirected: Boolean = true, sortedFold: Boolean = false): DataFrame = {
@@ -93,38 +146,10 @@ object Graph {
     val (e, degs) = rankPrep(edges, srcCol, dstCol, undirected)
     val n = degs.count()
     require(n > 0, "pageRank on an empty edge list")
-    val tele = (1.0 - damping) / n.toDouble
-    // degree rides INSIDE the iterated frame (r18): the old loop
-    // re-joined ranks to the degree table every round just to read
-    // pr/degree, and the final result joined it once more — one join
-    // per round plus one at the end, all removable by carrying the
-    // (long) column through the checkpointed frame. Arithmetic is
-    // untouched, so every pr is bit-identical.
-    var ranks = degs.select(col("id"), lit(1.0 / n.toDouble).as("pr"), col("degree"))
-    for (i <- 1 to iters) {
-      val contribs = e.join(
-        ranks.filter(col("degree") > 0L)
-          .select(col("id").as("src"), (col("pr") / col("degree")).as("c")),
-        Seq("src"))
-        .select(col("dst").as("id"), col("c"))
-      val sums =
-        if (sortedFold)
-          contribs.groupBy("id").agg(
-            graft.functions.VectorOps.foldSum(array_sort(collect_list(col("c")))).as("s"))
-        else contribs.groupBy("id").agg(sum(col("c")).as("s"))
-      // per-round eager checkpoint (the labelPropagation/kCore
-      // lesson): ranks' lineage otherwise nests one join tree per
-      // round, and iters may legitimately be 50. The FINAL round
-      // stays lazy (r19): its only consumer is the returned plan, so
-      // checkpointing it would materialize the frame once and read it
-      // back once for nothing — one barrier fewer, values identical
-      ranks = degs.join(sums, Seq("id"), "left")
-        .select(col("id"),
-          (lit(tele) + lit(damping) * coalesce(col("s"), lit(0.0))).as("pr"),
-          col("degree"))
-      if (i < iters) ranks = ranks.localCheckpoint(eager = true)
-    }
-    ranks.select(col("id"), col("pr"), col("degree"))
+    val init = degs.select(col("id"), lit(1.0 / n.toDouble).as("pr"), col("degree"))
+    iterate(init, iters)(
+      powerStep(e, degs, lit((1.0 - damping) / n.toDouble), damping, sortedFold))
+      .select(col("id"), col("pr"), col("degree"))
   }
 
   /** Personalized PageRank (Haveliwala 2002 / Jeh & Widom 2003's
@@ -144,7 +169,9 @@ object Graph {
     * Scale shape: pageRank's per-round join+agg pair exactly, plus a
     * ONE-TIME broadcast left-join of the seed list (probe-sized) onto
     * the node table. sortedFold as in pageRank: bit-exact oracle
-    * twin vs distributed partial-agg scale path.
+    * twin vs distributed partial-agg scale path; the last round
+    * stays lazy, so with sortedFold=false cache the result to read it
+    * twice (see iterate).
     *
     * Output: (id, pr, degree) for every node of the edge list. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, seedCol: String,
@@ -164,32 +191,21 @@ object Graph {
     val sv = Dedup.pin(degs
       .join(broadcast(seedIds.withColumn("__s0", lit(1.0 / nS.toDouble))), Seq("id"), "left")
       .select(col("id"), col("degree"), coalesce(col("__s0"), lit(0.0)).as("__s")))
-    // degree and the seed vector ride INSIDE the iterated frame (r18,
-    // the pageRank rewrite): one join per round instead of two, and
-    // the final degree join disappears; arithmetic untouched, every
-    // pr bit-identical.
-    var ranks = sv.select(col("id"), col("__s").as("pr"), col("degree"))
-    for (i <- 1 to iters) {
-      val contribs = e.join(
-        ranks.filter(col("degree") > 0L)
-          .select(col("id").as("src"), (col("pr") / col("degree")).as("c")),
-        Seq("src"))
-        .select(col("dst").as("id"), col("c"))
-      val sums =
-        if (sortedFold)
-          contribs.groupBy("id").agg(
-            graft.functions.VectorOps.foldSum(array_sort(collect_list(col("c")))).as("s"))
-        else contribs.groupBy("id").agg(sum(col("c")).as("s"))
-      // final round lazy — single consumer, see pageRank (r19)
-      ranks = sv.join(sums, Seq("id"), "left")
-        .select(col("id"),
-          (lit(1.0 - damping) * col("__s")
-            + lit(damping) * coalesce(col("s"), lit(0.0))).as("pr"),
-          col("degree"))
-      if (i < iters) ranks = ranks.localCheckpoint(eager = true)
-    }
-    ranks.select(col("id"), col("pr"), col("degree"))
+    val init = sv.select(col("id"), col("__s").as("pr"), col("degree"))
+    iterate(init, iters)(
+      powerStep(e, sv, lit(1.0 - damping) * col("__s"), damping, sortedFold))
+      .select(col("id"), col("pr"), col("degree"))
   }
+
+  /** Neighbour-mode vote: per dst, the most frequent label among its
+    * in-neighbours' (src, label) rows, ties to the smaller label.
+    * Output (id, __new) for every dst with a voting neighbour. */
+  private def modeVote(e: DataFrame, labeled: DataFrame): DataFrame =
+    e.join(labeled, Seq("src"))
+      .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("__c"))
+      .groupBy("dst")
+      .agg(min(struct((-col("__c")).as("nc"), col("label").as("l"))).as("__b"))
+      .select(col("dst").as("id"), col("__b.l").as("__new"))
 
   /** Label propagation communities (Raghavan et al. 2007, the
     * synchronous fixed-round variant): every node starts as its own
@@ -212,29 +228,14 @@ object Graph {
                        rounds: Int = 2, undirected: Boolean = true): DataFrame = {
     require(rounds >= 1 && rounds <= 50, s"rounds must be in [1, 50], got $rounds")
     val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected))
-    val nodes = Dedup.pin(
-      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
-    var labels = nodes.select(col("id"), col("id").as("label"))
-    for (r <- 1 to rounds) {
-      val votes = e.join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("__c"))
-      val winners = votes.groupBy("dst")
-        .agg(min(struct((-col("__c")).as("nc"), col("label").as("l"))).as("__b"))
-        .select(col("dst").as("id"), col("__b.l").as("label"))
-      // each round reads the previous labels twice (votes + keep-old)
-      // — checkpoint cuts the 2^rounds lineage, as in the component
-      // loops. labels' id set IS the node set (invariant from the
-      // init + this left join), so anchoring on labels directly saves
-      // the separate nodes join each round (r18).
-      labels = labels.withColumnRenamed("label", "__old")
-        .join(winners.withColumnRenamed("label", "__new"), Seq("id"), "left")
+    val nodes = Dedup.pin(nodeSet(e))
+    // labels' id set IS the node set (the init and the left join keep
+    // it so), so a round anchors on the labels it reads, not on nodes
+    iterate(nodes.select(col("id"), col("id").as("label")), rounds) { labels =>
+      labels.withColumnRenamed("label", "__old")
+        .join(modeVote(e, labels.withColumnRenamed("id", "src")), Seq("id"), "left")
         .select(col("id"), coalesce(col("__new"), col("__old")).as("label"))
-      // final round lazy — its only consumer is the returned plan,
-      // which reads the (checkpointed) previous frame twice, a
-      // bounded lineage (r19; see pageRank)
-      labels = if (r < rounds) labels.localCheckpoint(eager = true) else labels
     }
-    labels
   }
 
   /** Semi-supervised label completion (clamped-seed label
@@ -255,8 +256,8 @@ object Graph {
     *
     * Scale shape: per round ONE join (edges × labeled nodes) + one
     * grouped count + one mode pick — labelPropagation's exact
-    * shuffle shape; localCheckpoint per round cuts the doubling
-    * lineage. Output: (id, label, is_seed). */
+    * shuffle shape; the seeded init and every round but the last
+    * (iterate) end in a localCheckpoint. Output: (id, label, is_seed). */
   def labelComplete(edges: DataFrame, srcCol: String, dstCol: String,
                     seeds: DataFrame, idCol: String, labelCol: String,
                     rounds: Int = 2, undirected: Boolean = true): DataFrame = {
@@ -270,29 +271,22 @@ object Graph {
     // bfsDistance-family convention is one long id domain throughout
     val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected,
       castLong = true))
-    val nodes = Dedup.pin(
-      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
+    val nodes = Dedup.pin(nodeSet(e))
     val sd = seeds.select(col(idCol).cast("long").as("id"),
       col(labelCol).cast("string").as("__seed"))
-    var labels = nodes.join(sd, Seq("id"), "left")
+    val init = nodes.join(sd, Seq("id"), "left")
       .select(col("id"), col("__seed").as("label"),
         col("__seed").isNotNull.cast("int").as("is_seed"))
       .localCheckpoint(eager = true)
-    for (_ <- 1 to rounds) {
-      val votes = e.join(labels.filter(col("label").isNotNull)
-          .select(col("id").as("src"), col("label")), Seq("src"))
-        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("__c"))
-      val winners = votes.groupBy("dst")
-        .agg(min(struct((-col("__c")).as("nc"), col("label").as("l"))).as("__b"))
-        .select(col("dst").as("id"), col("__b.l").as("__new"))
-      labels = labels.join(winners, Seq("id"), "left")
+    iterate(init, rounds) { labels =>
+      val winners = modeVote(e,
+        labels.filter(col("label").isNotNull).select(col("id").as("src"), col("label")))
+      labels.join(winners, Seq("id"), "left")
         .select(col("id"),
           when(col("is_seed") === 1, col("label"))
             .otherwise(coalesce(col("__new"), col("label"))).as("label"),
           col("is_seed"))
-        .localCheckpoint(eager = true)
     }
-    labels
   }
 
   /** Degree distribution of an edge list: per-node degree plus the
@@ -311,11 +305,9 @@ object Graph {
     // zero-out-degree nodes in the directed case, under-reporting
     // node count to exactly the skew decisions this profile feeds;
     // in undirected mode symmetrization makes this a no-op)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
     val deg = e.groupBy(col("src").as("id"))
       .agg(count(lit(1)).cast("long").as("degree"))
-    nodes.join(deg, Seq("id"), "left")
+    nodeSet(e).join(deg, Seq("id"), "left")
       .select(coalesce(col("degree"), lit(0L)).as("degree"))
       .groupBy("degree").agg(count(lit(1)).cast("long").as("n_nodes"))
       .orderBy("degree")
@@ -353,12 +345,7 @@ object Graph {
     * Output: one row (m_edges, r). */
   def assortativity(edges: DataFrame, srcCol: String = "src",
                     dstCol: String = "dst"): DataFrame = {
-    val base = edges.select(col(srcCol).cast("long").as("a"),
-        col(dstCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
-    val sym = base.union(base.select(col("b").as("a"), col("a").as("b")))
+    val sym = symmetrize(undirectedPairs(edges, srcCol, dstCol))
     val deg = sym.groupBy(col("a").as("id"))
       .agg(count(lit(1)).cast("long").as("d"))
     def dec(c: Column) = c.cast("decimal(38,0)")
@@ -407,13 +394,7 @@ object Graph {
             k: Int = 2, rounds: Int = 10): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 50, s"rounds must be in [1, 50], got $rounds")
-    val base = edges.select(col(srcCol).cast("long").as("a"),
-        col(dstCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
-    var cur = base.union(base.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint()
+    var cur = symmetrize(undirectedPairs(edges, srcCol, dstCol)).localCheckpoint()
     var prevCount = -1L
     var r = 0
     while (r < rounds && prevCount != 0L) {
@@ -461,14 +442,8 @@ object Graph {
     * the simple graph. */
   def triangleCounts(edges: DataFrame, srcCol: String = "src",
                      dstCol: String = "dst"): DataFrame = {
-    val base = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    // canonical undirected edge set: (min, max), dedup
-    val undup = base.select(least(col("src"), col("dst")).as("a"),
-      greatest(col("src"), col("dst")).as("b")).distinct()
-    val sym = undup.union(undup.select(col("b").as("a"), col("a").as("b")))
-    val deg = sym.groupBy(col("a").as("id"))
+    val undup = undirectedPairs(edges, srcCol, dstCol)
+    val deg = symmetrize(undup).groupBy(col("a").as("id"))
       .agg(count(lit(1)).cast("long").as("degree"))
     // orient a→b iff (deg(a), a) < (deg(b), b)
     val withDeg = undup
@@ -525,13 +500,8 @@ object Graph {
   def commonNeighbors(edges: DataFrame, srcCol: String = "src",
                       dstCol: String = "dst", minCommon: Long = 1L,
                       maxDegree: Long = Long.MaxValue): DataFrame = {
-    val base = edges.select(col(srcCol).cast("long").as("a"),
-        col(dstCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
-    val undup = Dedup.pin(base)
-    val sym = undup.union(undup.select(col("b").as("a"), col("a").as("b")))
+    val undup = Dedup.pin(undirectedPairs(edges, srcCol, dstCol))
+    val sym = symmetrize(undup)
     val deg = sym.groupBy(col("a").as("id"))
       .agg(count(lit(1)).cast("long").as("d"))
     val centers =
@@ -582,26 +552,31 @@ object Graph {
       "Graph.bfsDistance")
     val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected,
       castLong = true))
-    var dist = seeds.select(col(seedCol).cast("long").as("id")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(eager = true)
-    var frontier = dist.select("id")
-    var hop = 1
-    var exhausted = false
-    while (hop <= maxHops && !exhausted) {
-      val next = frontier.join(e, frontier("id") === e("src"))
-        .select(col("dst").as("id")).distinct()
-        .join(dist, Seq("id"), "left_anti")
-        .withColumn("dist", lit(hop.toLong))
-        .localCheckpoint(eager = true)
-      if (next.isEmpty) exhausted = true
+    frontierBfs(e, seeds.select(col(seedCol).cast("long").as("id")).distinct()
+      .withColumn("dist", lit(0L)), Seq("id"), maxHops)
+  }
+
+  /** Frontier BFS from `start` = (keys, dist 0) over the pinned
+    * list `e`; keys = Seq("id") (one wavefront) or Seq("id", "seed")
+    * (one per seed). Output (keys, dist), each key at its first hop. */
+  private def frontierBfs(e: DataFrame, start: DataFrame, keys: Seq[String],
+                          maxHops: Int): DataFrame = {
+    val keyCols = keys.map(col)
+    @annotation.tailrec
+    def expand(dist: DataFrame, frontier: DataFrame, hop: Int): DataFrame =
+      if (hop > maxHops) dist
       else {
-        dist = dist.union(next).localCheckpoint(eager = true)
-        frontier = next.select("id")
+        val next = frontier.join(e, frontier("id") === e("src"))
+          .select(col("dst").as("id") +: keyCols.tail: _*).distinct()
+          .join(dist.select(keyCols: _*), keys, "left_anti")
+          .withColumn("dist", lit(hop.toLong))
+          .localCheckpoint(eager = true)
+        if (next.isEmpty) dist
+        else expand(dist.union(next).localCheckpoint(eager = true),
+          next.select(keyCols: _*), hop + 1)
       }
-      hop += 1
-    }
-    dist
+    val dist0 = start.localCheckpoint(eager = true)
+    expand(dist0, dist0.select(keyCols: _*), 1)
   }
 
   /** Hop-bounded closeness centrality against a seed PANEL: for every
@@ -639,25 +614,8 @@ object Graph {
     val nSeeds = seedIds.count()
     require(nSeeds >= 1 && nSeeds <= maxSeeds,
       s"seed panel is $nSeeds — it multiplies frontier state; keep it in [1, $maxSeeds]")
-    var dist = seedIds.select(col("id"), col("id").as("seed"))
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(eager = true)
-    var frontier = dist.select("id", "seed")
-    var hop = 1
-    var exhausted = false
-    while (hop <= maxHops && !exhausted) {
-      val next = frontier.join(e, frontier("id") === e("src"))
-        .select(col("dst").as("id"), col("seed")).distinct()
-        .join(dist.select("id", "seed"), Seq("id", "seed"), "left_anti")
-        .withColumn("dist", lit(hop.toLong))
-        .localCheckpoint(eager = true)
-      if (next.isEmpty) exhausted = true
-      else {
-        dist = dist.union(next).localCheckpoint(eager = true)
-        frontier = next.select("id", "seed")
-      }
-      hop += 1
-    }
+    val dist = frontierBfs(e, seedIds.select(col("id"), col("id").as("seed"))
+      .withColumn("dist", lit(0L)), Seq("id", "seed"), maxHops)
     dist.groupBy("id").agg(
         count(lit(1)).cast("long").as("n_reached"),
         sum(col("dist")).cast("long").as("sum_dist"))
@@ -677,7 +635,8 @@ object Graph {
     *
     * Scale shape: per round ONE hash join (current dists × edges on
     * src) + ONE min-aggregate on dst — the pageRank shuffle pair with
-    * sum→min — on a pinned edge list, dists checkpointed per round.
+    * sum→min — on a pinned edge list, dists checkpointed per round
+    * but the last (iterate).
     * Unlike bfsDistance there is no frontier shrink (a cheaper path
     * can re-improve an already-reached node), so each round joins the
     * full reached set; maxHops bounds total work.
@@ -715,17 +674,14 @@ object Graph {
           "bounded Bellman-Ford distances are only shortest paths under " +
           "non-negative weights")
     }
-    var dist = seeds.select(col(seedCol).cast("long").as("id")).distinct()
+    val start = seeds.select(col(seedCol).cast("long").as("id")).distinct()
       .withColumn("dist", lit(0L))
       .localCheckpoint(eager = true)
-    for (_ <- 1 to maxHops) {
+    iterate(start, maxHops) { dist =>
       val relaxed = dist.join(e, dist("id") === e("src"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      dist = dist.union(relaxed)
-        .groupBy("id").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(eager = true)
+      dist.union(relaxed).groupBy("id").agg(min(col("dist")).as("dist"))
     }
-    dist
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) with a fixed number of
@@ -759,7 +715,10 @@ object Graph {
     * the tiny-task barriers that made 32 cores 3.7× slower than 8.
     * sortedFold as in pageRank: true = bit-exact oracle twin, false =
     * partial-agg scale path; both modes are bit-identical to the
-    * dense iteration (GraphSpec pins it).
+    * dense iteration (GraphSpec pins it). The last hub frame stays
+    * lazy, as in iterate: with sortedFold=false, two actions on the
+    * result can differ in the last bit once scores pass 2^53 (below
+    * it every sum is exact), so cache it to read it twice.
     *
     * Output: (id, auth, hub) for every node. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
@@ -767,12 +726,7 @@ object Graph {
     require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
     val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected = false,
       castLong = true))
-    val nodes = Dedup.pin(
-      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
-    def foldedSum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      if (sortedFold)
-        graft.functions.VectorOps.foldSum(array_sort(collect_list(c)))
-      else sum(c)
+    val nodes = Dedup.pin(nodeSet(e))
     // auths is DERIVED from hubs at the top of every round — HITS has
     // no meaningful initial auth vector, so none is seeded (review
     // r15: the old lit(0.0) auth init was dead, overwritten before
@@ -781,13 +735,13 @@ object Graph {
     val (auths, hubs) = (1 to iters).foldLeft((init, init)) {
       case ((_, hubsPrev), round) =>
         val aSums = e.join(hubsPrev.withColumnRenamed("id", "src"), Seq("src"))
-          .groupBy(col("dst").as("id")).agg(foldedSum(col("hub")).as("auth"))
+          .groupBy(col("dst").as("id")).agg(foldedSum(col("hub"), sortedFold).as("auth"))
         // checkpoint only what two consumers read: the final round's
         // auth frame feeds both this round's hub sums and the output
         val a = if (round == iters) aSums.localCheckpoint(eager = true)
                 else aSums
         val hSums0 = e.join(a.withColumnRenamed("id", "dst"), Seq("dst"))
-          .groupBy(col("src").as("id")).agg(foldedSum(col("auth")).as("hub"))
+          .groupBy(col("src").as("id")).agg(foldedSum(col("auth"), sortedFold).as("hub"))
         // the final round's hub frame has one consumer (the returned
         // plan) — leave it lazy, like pageRank's final round (r19)
         val hSums = if (round == iters) hSums0

@@ -65,8 +65,9 @@ object KMeans {
     * unlike rand()-based sampling. k single-stage passes over one
     * cached (id, f) projection — fit's own, or, for a standalone
     * initCentroids, one cached for the init's lifetime: the first
-    * pick is an md5-unit orderBy/limit(1), each later one a race
-    * round (plusPlusRound) that returns one candidate per partition. */
+    * pick is an md5-unit orderBy/limit(1) (firstPick), each later one
+    * a race round (plusPlusRound) that returns one candidate per
+    * partition. Every round skips rows with a NULL id or vector. */
   final case class PlusPlus(k: Int, seed: Long) extends Init
 
   /** k-means‖ (Bahmani et al., "Scalable K-Means++", VLDB'12 —
@@ -92,7 +93,7 @@ object KMeans {
     * point·round). Same-partitioning reruns are exactly stable.
     *
     * sortedCost = true computes each round's cost(C) with the
-    * sorted-fold contract (foldSum over array_sort(collect_list)) —
+    * sorted-fold contract (VectorOps.sortedSum) —
     * bit-deterministic under ANY partitioning, which makes the whole
     * init (candidate set AND final k) oracle-replayable in SQL
     * (q_kmeans_parallel). The fold funnels the per-point d² column
@@ -286,12 +287,7 @@ object KMeans {
         proj.orderBy(col("id")).limit(k).collect().zipWithIndex
           .map { case (r, i) => (i + 1) -> r.getSeq[Double](1).toArray }
       case PlusPlus(k, seed) =>
-        val first = proj
-          .withColumn("__u", Sampling.unitFromMd5(concat(lit(s"$seed:0:"), col("id"))))
-          .orderBy(col("__u"), col("id")).limit(1).collect()
-          .headOption.getOrElse(throw new NoSuchElementException(
-            "k-means++: input DataFrame is empty"))
-        var chosen = Vector(first.getLong(0) -> first.getSeq[Double](1).toArray)
+        var chosen = Vector(firstPick(proj, seed, "k-means++"))
         for (round <- 1 until k) {
           val soFar: Centroids = chosen.zipWithIndex
             .map { case ((_, v), i) => (i + 1) -> v }.toArray
@@ -303,12 +299,7 @@ object KMeans {
       case Parallel(k, seed, rounds, l0, sortedCost) =>
         val lFactor = if (l0 > 0) l0 else 2 * k
         require(rounds >= 1, s"k-means parallel needs rounds >= 1, got $rounds")
-        val first = proj
-          .withColumn("__u", Sampling.unitFromMd5(concat(lit(s"$seed:0:"), col("id"))))
-          .orderBy(col("__u"), col("id")).limit(1).collect()
-          .headOption.getOrElse(throw new NoSuchElementException(
-            "k-means parallel: input DataFrame is empty"))
-        var cands = Vector(first.getLong(0) -> first.getSeq[Double](1).toArray)
+        var cands = Vector(firstPick(proj, seed, "k-means parallel"))
         var round = 1
         var exhausted = false
         while (round <= rounds && !exhausted) {
@@ -318,8 +309,7 @@ object KMeans {
           // parity mode: partial-agg-order-free cost (see Parallel doc)
           val cost =
             if (sortedCost)
-              proj.select(VectorOps.foldSum(array_sort(collect_list(d2))).as("c"))
-                .head().getDouble(0)
+              proj.select(VectorOps.sortedSum(d2).as("c")).head().getDouble(0)
             else proj.select(sum(d2).as("c")).head().getDouble(0)
           if (cost <= 0.0) exhausted = true // every point IS a candidate
           else {
@@ -351,6 +341,18 @@ object KMeans {
         }.toArray
         weightedPlusPlusLocal(weighted, k, seed)
     }
+
+  /** Round 0 of PlusPlus and Parallel: the row with the least md5
+    * unit of "seed:0:id", ties to the lower id. Rows with a NULL id or
+    * a NULL vector are skipped, as the race rounds skip them. */
+  private def firstPick(proj: DataFrame, seed: Long, init: String): (Long, Array[Double]) = {
+    val r = proj.filter(col("id").isNotNull && col("f").isNotNull)
+      .withColumn("__u", Sampling.unitFromMd5(concat(lit(s"$seed:0:"), col("id"))))
+      .orderBy(col("__u"), col("id")).limit(1).collect()
+      .headOption.getOrElse(throw new NoSuchElementException(
+        s"$init: input DataFrame has no row with a non-NULL id and vector"))
+    r.getLong(0) -> r.getSeq[Double](1).toArray
+  }
 
   /** One k-means++ race round (1..k−1) as ONE single-stage job over
     * the (id, f) projection's rows: exponential race, argmin of

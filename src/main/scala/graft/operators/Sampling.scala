@@ -291,8 +291,7 @@ object Sampling {
       .groupBy(col("n"))
       .agg(countDistinct(struct(col("g"))).cast("long").as("n_groups"),
         countDistinct(struct(col("split"))).cast("long").as("__n_splits"),
-        graft.functions.VectorOps.foldSum(array_sort(collect_list(col("__t"))))
-          .as("chi2"))
+        graft.functions.VectorOps.sortedSum(col("__t")).as("chi2"))
       .select(col("n").as("n_rows"), col("n_groups"),
         ((col("n_groups") - 1L) * (col("__n_splits") - 1L)).as("dof"), col("chi2"))
   }

@@ -1934,15 +1934,18 @@ object Similarity {
     * pair serializes ~0.1-0.3 s per gate for no reason (optimization
     * guide §2.6, the trainPQCore pool precedent; r19, VERDICT r18
     * item 3). Results are unchanged: the actions share no state and
-    * each is a deterministic read. */
-  private[operators] def concurrently2[A, B](fa: => A, fb: => B): (A, B) = {
+    * each is a deterministic read. When `fa` throws, `fb` is awaited
+    * before the exception propagates, so no job of this call outlives
+    * it. */
+  private[graft] def concurrently2[A, B](fa: => A, fb: => B): (A, B) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try {
-      val fut = scala.concurrent.Future(fb)(ec)
-      val a = fa
-      (a, scala.concurrent.Await.result(fut,
-        scala.concurrent.duration.Duration.Inf))
+      val fut = Future(fb)(ec)
+      val a = try fa catch { case t: Throwable => Await.ready(fut, Duration.Inf); throw t }
+      (a, Await.result(fut, Duration.Inf))
     } finally { pool.shutdown(); () }
   }
 

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Graph}
@@ -584,5 +588,58 @@ class GraphSpec extends AnyFunSuite {
     val d = Graph.ssspBounded(ok, seeds, "id", maxHops = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(d == Map(1L -> 0L, 2L -> 5L, 3L -> 12L), s"got $d")
+  }
+
+  /** Eager localCheckpoint calls made while `body` runs: root SQL
+    * executions described "localCheckpoint at <call site>", the
+    * marker the e2ebench Checkpoints listener counts rounds by. */
+  private def checkpointsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graph-spec-checkpoints-${System.nanoTime()}"
+    val marker = s"$group-drained"
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var drained = false
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart if x.jobGroupId.contains(group) &&
+            x.rootExecutionId.forall(_ == x.executionId) &&
+            x.description.startsWith("localCheckpoint at ") => n.incrementAndGet(); ()
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          drained = true
+    }
+    sc.addSparkListener(l)
+    try {
+      // no job description, so each execution is described by its call site
+      sc.setJobGroup(group, null)
+      try body finally sc.clearJobGroup()
+      sc.setJobDescription(marker)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      eventually(timeout(30.seconds), interval(20.millis))(assert(drained))
+    } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("barrier contract: an eager localCheckpoint after every round but the last") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
+    val seeds = Seq((1L, "a")).toDF("id", "label")
+    def barriers(op: => org.apache.spark.sql.DataFrame): Int =
+      checkpointsDuring { op.collect(); () }
+    for (n <- Seq(1, 3)) try {
+      assert(barriers(Graph.pageRank(edges, iters = n)) === n - 1, s"pageRank, $n rounds")
+      assert(barriers(Graph.personalizedPageRank(edges, seeds, "id", iters = n)) === n - 1,
+        s"personalizedPageRank, $n rounds")
+      assert(barriers(Graph.labelPropagation(edges, rounds = n)) === n - 1,
+        s"labelPropagation, $n rounds")
+      // one barrier on the seeded init, then n − 1 rounds
+      assert(barriers(Graph.labelComplete(edges, "src", "dst", seeds, "id", "label",
+        rounds = n)) === n, s"labelComplete, $n rounds")
+      assert(barriers(Graph.ssspBounded(edges.withColumn("w", lit(1L)), seeds, "id",
+        maxHops = n)) === n, s"ssspBounded, $n rounds")
+      // each non-final hub frame, and the final auth frame the output reads
+      assert(barriers(Graph.hits(edges, "src", "dst", iters = n)) === n, s"hits, $n rounds")
+    } finally Dedup.releaseCaches()
   }
 }

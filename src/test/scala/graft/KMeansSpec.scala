@@ -498,7 +498,7 @@ class KMeansSpec extends AnyFunSuite {
       assert(a == b, s"seed $seed at $parts partitions")
       a
     }
-    // (round 0 may pick the NULL vector, which fails both alike)
+    // (a draw may fail on the short vector, which fails both alike)
     assert(picks.count(_.isRight) >= 15, picks)
     // fewer distinct points than k: both refuse in a race round
     val few = raceInput.filter($"id" > 1000L).repartition(4)
@@ -507,7 +507,8 @@ class KMeansSpec extends AnyFunSuite {
     assert(a.left.exists(_.contains("fewer than 8 distinct points")), a)
   }
 
-  test("k-means++ race round ≡ its SQL twin with a NULL id; a NULL id still fails round 0") {
+  test("k-means++ race round ≡ its SQL twin with a NULL id; round 0 skips NULL id/vector") {
+    import org.apache.spark.sql.functions.{concat, lit, size}
     // row 5 loses its id, and a far point with no id would win every
     // race it entered
     val withNullId = raceInput.as[(Long, Seq[Double])].collect().toSeq
@@ -526,11 +527,28 @@ class KMeansSpec extends AnyFunSuite {
           s"seed $seed round $round at $parts partitions")
       }
     }
-    // round 0 orders md5 units ASC NULLS FIRST, so a NULL id (NULL
-    // unit) is picked first and its id cannot be read: unchanged
-    val a = outcome(KMeans.initCentroids(df, "id", "features", PlusPlus(3, 1)))
-    assert(a == outcome(KMeansTwins.plusPlusSql(df, "id", "features", 3, 1)))
-    assert(a.left.exists(_.contains("ROW_VALUE_IS_NULL")), a)
+    // a NULL id has a NULL md5 unit, which sorts first: round 0 skips
+    // it as the race rounds do, for both inits
+    val pp = outcome(KMeans.initCentroids(df, "id", "features", PlusPlus(3, 1)))
+    assert(pp.isRight, pp)
+    assert(pp == outcome(KMeansTwins.plusPlusSql(df, "id", "features", 3, 1)))
+    assert(pp == outcome(KMeans.initCentroids(df.filter($"id".isNotNull), "id", "features",
+      PlusPlus(3, 1))))
+    // (Parallel's sampling rounds still take NULL and short vectors,
+    // so it runs on the well-formed ones)
+    val wellFormed = df.filter(size($"features") === 3)
+    val par = outcome(KMeans.initCentroids(wellFormed, "id", "features",
+      Parallel(3, 1, rounds = 3)))
+    assert(par.isRight, par)
+    // the row round 0 would pick loses its vector: skipped, not an NPE
+    val first = raceInput.filter($"features".isNotNull)
+      .withColumn("u", graft.operators.Sampling.unitFromMd5(concat(lit("1:0:"), $"id")))
+      .orderBy($"u", $"id").first().getLong(0)
+    val noVec = raceInput.filter($"id" =!= first)
+      .union(Seq((first, null: Seq[Double])).toDF("id", "features"))
+    val got = outcome(KMeans.initCentroids(noVec, "id", "features", PlusPlus(3, 1)))
+    assert(got.isRight, got)
+    assert(got == outcome(KMeansTwins.plusPlusSql(noVec, "id", "features", 3, 1)))
   }
 
   test("fit(PlusPlus(k), maxIter = n): one single-stage job per init round and per Lloyd step") {

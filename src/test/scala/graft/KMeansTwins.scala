@@ -52,11 +52,11 @@ object KMeansTwins {
     val proj = df.select(col(idCol).cast("long").as("id"),
       VectorOps.toDouble(col(featCol)).as("f")).cache()
     try {
-      val first = proj
+      val first = proj.filter(col("id").isNotNull && col("f").isNotNull)
         .withColumn("__u", Sampling.unitFromMd5(concat(lit(s"$seed:0:"), col("id"))))
         .orderBy(col("__u"), col("id")).limit(1).collect()
         .headOption.getOrElse(throw new NoSuchElementException(
-          "k-means++: input DataFrame is empty"))
+          "k-means++: input DataFrame has no row with a non-NULL id and vector"))
       var chosen = Vector(first.getLong(0) -> first.getSeq[Double](1).toArray)
       for (round <- 1 until k) {
         val soFar: Centroids = chosen.zipWithIndex

@@ -1137,6 +1137,16 @@ class SimilaritySpec extends AnyFunSuite {
         e.getMessage.contains(s"'$bad'"), e.getMessage)
     }
   }
+
+  test("concurrently2: when fa throws, fb finishes before the exception reaches the caller") {
+    val fbDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val fbStarted = new java.util.concurrent.CountDownLatch(1)
+    val e = intercept[IllegalStateException](Similarity.concurrently2(
+      { fbStarted.await(); throw new IllegalStateException("fa failed") },
+      { fbStarted.countDown(); Thread.sleep(300); fbDone.set(true) }))
+    assert(e.getMessage == "fa failed")
+    assert(fbDone.get, "fb was still running when fa's exception reached the caller")
+  }
 }
 
 /** Evaluation counter for the nondeterministic-batch append spec —
