@@ -109,16 +109,16 @@ private[graft] object EntryKMeansCore {
 
 
     // ── op 15: Jaccard coefficient vs ground truth ──────────────────
-    // The reference's headline metric (KMeans.java:623-665), computed
-    // from the (truth, pred) contingency table in one O(n) shuffle
-    // instead of the reference's n×n driver matrices.
+    // The reference's headline metric (KMeans.java:623-665): one grouped
+    // (truth, pred) count, collected when the query is built, then driver
+    // arithmetic — instead of the reference's n×n driver matrices.
     "q_jaccard" -> ((s, dir) => {
       val assigned = KMeans.assign(Tables(s, dir, "embeddings"), "embedding", cents8(s, dir))
       ClusterMetrics.jaccard(assigned, "label", "cluster")
     }),
 
 
-    // ── op 15 family: Rand index (same contingency table as Jaccard) ─
+    // ── op 15 family: Rand index (Jaccard's counts plus n) ─────────
     "q_rand_index" -> ((s, dir) => {
       val assigned = KMeans.assign(Tables(s, dir, "embeddings"), "embedding", cents8(s, dir))
       ClusterMetrics.randIndex(assigned, "label", "cluster")

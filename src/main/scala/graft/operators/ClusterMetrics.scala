@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.functions.VectorOps
 
 /** External cluster-validation metrics — the reference's headline
   * quality number (`KMeans.java:623-665`, printed at `:662-663`).
@@ -9,8 +12,9 @@ import org.apache.spark.sql.functions._
   * The reference materializes two n×n boolean co-membership matrices
   * (ground truth vs prediction over ALL ordered pairs, diagonal
   * included) and counts agreements — O(n²) memory and time on the
-  * driver. At 100 TB that is impossible; the same number falls out of
-  * the (truth, pred) contingency table in one O(n) shuffle:
+  * driver. At 100 TB that is impossible; the same numbers fall out of
+  * the (truth, pred) contingency table, one grouped count, collected
+  * (O(labels × clusters) cells), then driver arithmetic:
   *
   *   n_tp = |rows with truth=t, pred=p|   (the contingency cells)
   *   M11  = Σ_{t≠-1, p≠-1} n_tp²          (pairs co-clustered in both)
@@ -22,73 +26,86 @@ import org.apache.spark.sql.functions._
   * The `-1` label is excluded from co-membership on BOTH sides,
   * reproducing the outlier convention at `KMeans.java:629,640` (iyer
   * dataset outliers). Squared cell counts appear because the reference
-  * counts ordered pairs including (i,i).
+  * counts ordered pairs including (i,i). A NULL label, as in SQL,
+  * co-clusters on neither side but counts in n. Each metric's final
+  * Column arithmetic runs over a 1-row local frame of the exact counts,
+  * so 0/0 is Spark's own (NULL, or DIVIDE_BY_ZERO under ANSI) and
+  * reading the returned frame runs no job.
   */
 object ClusterMetrics {
+
+  private final case class Cell(truth: Option[Long], pred: Option[Long], n: Long)
+
+  /** The contingency cells (a NULL label is None): one grouped count,
+    * run when the calling metric is called. */
+  private def cells(assigned: DataFrame, truthCol: String, predCol: String): Seq[Cell] = {
+    import assigned.sparkSession.implicits._
+    assigned
+      .select(col(truthCol).cast("long").as("truth"), col(predCol).cast("long").as("pred"))
+      .groupBy("truth", "pred").count()
+      .as[(Option[Long], Option[Long], Long)].collect().toSeq.map(Cell.tupled)
+  }
+
+  private def total(xs: Iterable[Long]): Long = xs.foldLeft(0L)(Math.addExact)
+
+  private def sumSq(xs: Iterable[Long]): Long = total(xs.map(x => Math.multiplyExact(x, x)))
+
+  private def longRow(like: DataFrame, nullable: Boolean)(cols: (String, Any)*): DataFrame =
+    like.sparkSession.createDataFrame(
+      java.util.Collections.singletonList(Row(cols.map(_._2): _*)),
+      StructType(cols.map(c => StructField(c._1, LongType, nullable))))
+
+  /** 1-row frame (m11, g, p, ntot) of the header's counts. */
+  private def pairCounts(assigned: DataFrame, truthCol: String, predCol: String): DataFrame = {
+    val cs = cells(assigned, truthCol, predCol)
+    def member(k: Option[Long]) = k.exists(_ != -1L)
+    def side(key: Cell => Option[Long]) =
+      sumSq(cs.filter(c => member(key(c))).groupBy(key).values.map(g => total(g.map(_.n))))
+    longRow(assigned, nullable = false)(
+      "m11" -> sumSq(cs.filter(c => member(c.truth) && member(c.pred)).map(_.n)),
+      "g" -> side(_.truth), "p" -> side(_.pred), "ntot" -> total(cs.map(_.n)))
+  }
 
   /** One-row DataFrame (m11, disagree, jaccard) for an assignment
     * table carrying a ground-truth and a predicted cluster column.
     * All counts are exact longs; `jaccard` is one double division of
-    * exact integers, so it is bit-deterministic cross-engine. */
-  def jaccard(assigned: DataFrame, truthCol: String, predCol: String): DataFrame = {
-    val cells = assigned
-      .select(col(truthCol).cast("long").as("truth"), col(predCol).cast("long").as("pred"))
-      .groupBy("truth", "pred").agg(count(lit(1)).as("n"))
-    val m11 = cells.filter(col("truth") =!= -1L && col("pred") =!= -1L)
-      .agg(coalesce(sum(col("n") * col("n")), lit(0L)).as("m11"))
-    val g = cells.filter(col("truth") =!= -1L)
-      .groupBy("truth").agg(sum(col("n")).as("nt"))
-      .agg(coalesce(sum(col("nt") * col("nt")), lit(0L)).as("g"))
-    val p = cells.filter(col("pred") =!= -1L)
-      .groupBy("pred").agg(sum(col("n")).as("np"))
-      .agg(coalesce(sum(col("np") * col("np")), lit(0L)).as("p"))
-    // three 1-row aggregates; the cross joins broadcast trivially
-    m11.crossJoin(g).crossJoin(p).select(
+    * exact integers, so it is bit-deterministic cross-engine. The
+    * contingency count runs when this is called. */
+  def jaccard(assigned: DataFrame, truthCol: String, predCol: String): DataFrame =
+    pairCounts(assigned, truthCol, predCol).select(
       col("m11"),
       (col("g") + col("p") - lit(2L) * col("m11")).as("disagree"),
       (col("m11") / (col("g") + col("p") - col("m11"))).as("jaccard"))
-  }
 
   /** Rand index under the same ordered-pairs-with-diagonal convention
     * as the reference's Jaccard: agreement = co-clustered in both
     * (M11) or in neither (M00 = n² − G − P + M11, where rows labeled
-    * -1 never co-cluster). One extra 1-row aggregate (total count)
-    * over the same contingency cells. Output: (m11, m00, rand). */
-  def randIndex(assigned: DataFrame, truthCol: String, predCol: String): DataFrame = {
-    val jj = assigned
-      .select(col(truthCol).cast("long").as("truth"), col(predCol).cast("long").as("pred"))
-    val cells = jj.groupBy("truth", "pred").agg(count(lit(1)).as("n"))
-    val m11 = cells.filter(col("truth") =!= -1L && col("pred") =!= -1L)
-      .agg(coalesce(sum(col("n") * col("n")), lit(0L)).as("m11"))
-    val g = cells.filter(col("truth") =!= -1L)
-      .groupBy("truth").agg(sum(col("n")).as("nt"))
-      .agg(coalesce(sum(col("nt") * col("nt")), lit(0L)).as("g"))
-    val p = cells.filter(col("pred") =!= -1L)
-      .groupBy("pred").agg(sum(col("n")).as("np"))
-      .agg(coalesce(sum(col("np") * col("np")), lit(0L)).as("p"))
-    // total from the contingency cells (identical subtree to the other
-    // three aggregates, so the exchange is reused), not a 4th full
-    // scan of the assignment input
-    val nn = cells.agg(coalesce(sum(col("n")), lit(0L)).as("ntot"))
-    m11.crossJoin(g).crossJoin(p).crossJoin(nn).select(
+    * -1 never co-cluster). The contingency count runs when this is
+    * called. Output: (m11, m00, rand). */
+  def randIndex(assigned: DataFrame, truthCol: String, predCol: String): DataFrame =
+    pairCounts(assigned, truthCol, predCol).select(
       col("m11"),
       (col("ntot") * col("ntot") - col("g") - col("p") + col("m11")).as("m00"),
       ((col("m11") + col("ntot") * col("ntot") - col("g") - col("p") + col("m11"))
         .cast("double") / (col("ntot") * col("ntot")).cast("double")).as("rand"))
-  }
 
   /** Cluster purity: each predicted cluster votes its majority truth
     * label; purity = correctly-voted rows / all rows. No outlier
-    * convention (every row counts — standard definition). One shuffle
-    * on the contingency cells. Output: (correct, n, purity). */
-  def purity(assigned: DataFrame, truthCol: String, predCol: String): DataFrame =
-    assigned
-      .select(col(truthCol).cast("long").as("truth"), col(predCol).cast("long").as("pred"))
-      .groupBy("truth", "pred").agg(count(lit(1)).as("n"))
-      .groupBy("pred").agg(max(col("n")).as("mx"), sum(col("n")).as("ns"))
-      .agg(sum(col("mx")).as("correct"), sum(col("ns")).as("n"))
+    * convention (every row counts — standard definition; a NULL pred
+    * is a cluster). The contingency count runs when this is called.
+    * Output: (correct, n, purity), all NULL on empty input. */
+  def purity(assigned: DataFrame, truthCol: String, predCol: String): DataFrame = {
+    val byPred = cells(assigned, truthCol, predCol).groupBy(_.pred).values.map(_.map(_.n))
+    def totalOrNull(xs: Iterable[Long]): Any = if (byPred.isEmpty) null else total(xs)
+    longRow(assigned, nullable = true)(
+      "correct" -> totalOrNull(byPred.map(_.max)), "n" -> totalOrNull(byPred.map(total)))
       .select(col("correct"), col("n"),
         (col("correct").cast("double") / col("n").cast("double")).as("purity"))
+  }
+
+  /** Centroid `cid`'s vector, looked up in the plan literal. */
+  private def centOf(cents: KMeans.Centroids, cid: Column): Column =
+    element_at(filter(KMeans.centLit(cents), c => c.getField("_1") === cid), 1).getField("_2")
 
   /** Simplified (centroid-based) silhouette: per row, a = distance to
     * own centroid, b = distance to the nearest OTHER centroid,
@@ -105,7 +122,6 @@ object ClusterMetrics {
   def simplifiedSilhouette(assigned: DataFrame, featCol: String,
                            cents: KMeans.Centroids, clusterCol: String = "cluster",
                            sortedFold: Boolean = false): DataFrame = {
-    import graft.functions.VectorOps
     require(cents.length >= 2,
       s"silhouette needs >= 2 centroids (b is undefined for k=1), got ${cents.length}")
     val f = VectorOps.toDouble(col(featCol))
@@ -151,13 +167,10 @@ object ClusterMetrics {
   def calinskiHarabasz(assigned: DataFrame, featCol: String, cents: KMeans.Centroids,
                        clusterCol: String = "cluster",
                        sortedFold: Boolean = false): DataFrame = {
-    import graft.functions.VectorOps
     require(cents.length >= 2, s"CH needs >= 2 centroids, got ${cents.length}")
     val k = cents.length
     val f = VectorOps.toDouble(col(featCol))
-    val own = element_at(filter(KMeans.centLit(cents),
-      c => c.getField("_1") === col(clusterCol)), 1).getField("_2")
-    val ownD2 = VectorOps.sqDist(f, own)
+    val ownD2 = VectorOps.sqDist(f, centOf(cents, col(clusterCol)))
     val scored = Dedup.pin(
       assigned.select(col(clusterCol).as("__c"), ownD2.as("__d2"), f.as("__v")))
     val wRow =
@@ -212,13 +225,10 @@ object ClusterMetrics {
   def daviesBouldin(assigned: DataFrame, featCol: String, cents: KMeans.Centroids,
                     clusterCol: String = "cluster",
                     sortedFold: Boolean = false): DataFrame = {
-    import graft.functions.VectorOps
     require(cents.length >= 2, s"DB needs >= 2 centroids, got ${cents.length}")
     val f = VectorOps.toDouble(col(featCol))
-    val own = element_at(filter(KMeans.centLit(cents),
-      c => c.getField("_1") === col(clusterCol)), 1).getField("_2")
     val scored = assigned.select(col(clusterCol).as("__c"),
-      sqrt(VectorOps.sqDist(f, own)).as("__d"))
+      sqrt(VectorOps.sqDist(f, centOf(cents, col(clusterCol)))).as("__d"))
     val perC = scored.groupBy(col("__c"))
     val sRows =
       if (sortedFold)
@@ -228,15 +238,12 @@ object ClusterMetrics {
     val packed = sRows.agg(
       sort_array(collect_list(struct(col("__c"), col("__s")))).as("__ss"),
       sum(col("__nc")).cast("long").as("n"))
-    def centOf(cid: org.apache.spark.sql.Column) =
-      element_at(filter(KMeans.centLit(cents), e => e.getField("_1") === cid), 1)
-        .getField("_2")
     val rTerms = transform(col("__ss"), si =>
       array_max(transform(
         filter(col("__ss"), sj => sj.getField("__c") =!= si.getField("__c")),
         sj => (si.getField("__s") + sj.getField("__s"))
-          / sqrt(VectorOps.sqDist(centOf(si.getField("__c")),
-            centOf(sj.getField("__c")))))))
+          / sqrt(VectorOps.sqDist(centOf(cents, si.getField("__c")),
+            centOf(cents, sj.getField("__c")))))))
     packed.select(
       when(size(col("__ss")) >= 2,
         VectorOps.foldSum(rTerms) / size(col("__ss"))).as("db"),

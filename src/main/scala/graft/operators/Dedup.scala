@@ -1418,11 +1418,13 @@ object Dedup {
     // is ≤ 1 + min(|x|−i−1, |y|−j−1) (0-based i, j); J ≥ τ forces
     // overlap ≥ τ/(1+τ)·(|x|+|y|), so pairs whose bound falls short
     // cannot qualify — a SUPERSET filter, exactness untouched (the
-    // same brute-force specs and the oracle hash pin it). The
-    // min-by-rank aggregation replaces the old distinct() — the same
+    // same brute-force specs and the oracle hash pin it). Uncapped
+    // only: a cap can drop that first token's bucket, and the bound
+    // at a later one undercounts the overlap. The min-by-rank
+    // aggregation replaces the old distinct() — the same
     // (id1, id2)-keyed exchange — and the filter runs BEFORE the
     // verify joins ship candidate token arrays anywhere.
-    val cand = a.join(b, Seq("__rank"))
+    val met = a.join(b, Seq("__rank"))
       .filter(col("id1") < col("id2"))
       // length prune: J ≥ τ forces min ≥ τ·max (slack-relaxed)
       .filter(least(col("__n1"), col("__n2")).cast("double")
@@ -1430,11 +1432,12 @@ object Dedup {
       .groupBy(col("id1"), col("id2"))
       .agg(min(struct(col("__rank"), col("__p1"), col("__p2"),
         col("__n1"), col("__n2"))).as("__m"))
-      .filter((lit(1.0)
+    val cand = (if (maxBucket != Int.MaxValue) met
+      else met.filter((lit(1.0)
           + least(col("__m.__n1") - col("__m.__p1") - 1L,
                   col("__m.__n2") - col("__m.__p2") - 1L).cast("double"))
         >= lit(minSim / (1.0 + minSim))
-          * (col("__m.__n1") + col("__m.__n2")).cast("double") - lit(eps))
+          * (col("__m.__n1") + col("__m.__n2")).cast("double") - lit(eps)))
       .select("id1", "id2")
     val s1 = sets.select(col(idCol).as("id1"), col("__toks").as("__t1"), col("__sz").as("__m1"))
     val s2 = sets.select(col(idCol).as("id2"), col("__toks").as("__t2"), col("__sz").as("__m2"))

@@ -315,10 +315,10 @@ object KMeans {
           else {
             val u = Sampling.unitFromMd5(concat(lit(s"$seed:$round:"), col("id")))
             val p = least(lit(1.0), lit(lFactor.toDouble) * d2 / lit(cost))
-            // collect order varies with partitioning — sort by id so
-            // the candidate sequence (and the weighted race below)
-            // sees a deterministic order
-            val newRows = proj.filter(u < p).select(col("id"), col("f"))
+            // only rows with a d2 (`least` skips NULLs); collect order varies
+            // with partitioning — sort by id so the candidate sequence (and
+            // the weighted race below) sees a deterministic order
+            val newRows = proj.filter(d2.isNotNull && u < p).select(col("id"), col("f"))
               .collect().sortBy(_.getLong(0))
             val seen = cands.map(_._1).toSet
             cands ++= newRows.iterator

@@ -200,8 +200,10 @@ object UnigramTokenizer {
       : DataFrame = {
     val w = words.select(col("w")).distinct()
       .filter(length(col("w")) > 0)
-    val seg = graft.functions.UnigramKernels.segmentCol(col("w"), vocab,
-      maxPieceLen, fallbackChars.map(_.toSeq.sorted), Unk)
+    // a word past maxWordLen is never segmented; the refusal below names it
+    val seg = when(length(col("w")) <= maxWordLen,
+      graft.functions.UnigramKernels.segmentCol(col("w"), vocab,
+        maxPieceLen, fallbackChars.map(_.toSeq.sorted), Unk))
     // one pinned dictionary-sized frame — same storage contract as
     // before (review r16): the returned frame IS the LogicalRDD, so
     // unpersistLocalCheckpoint releases it; the kernel evaluates once
@@ -211,7 +213,7 @@ object UnigramTokenizer {
         seg.getField("np").as("np"))
       .localCheckpoint(eager = true)
     // the lattice-bound contract stays loud: a word longer than
-    // maxWordLen is refused, not silently mis-segmented. Checked on
+    // maxWordLen is refused, not silently left unsegmented. Checked on
     // the already-materialized frame (one cheap agg over the
     // LogicalRDD) instead of a second distinct pass over the input.
     val mxRow = res.agg(max(length(col("w")))).collect()(0)

@@ -46,14 +46,14 @@ object GeneIO {
                        featCol: String): DataFrame =
     df.select(concat_ws("\t",
       col(idCol).cast("string"), col(clusterCol).cast("string"),
-      concat_ws("\t", transform(col(featCol), _.cast("string")))).as("value"))
+      concat_ws("\t", col(featCol).cast("array<string>"))).as("value"))
 
   /** `hadoop_cluster_data_toPlot.txt` projection consumed by the PCA
     * notebook: `v1\t…\tvd\tcluster` (`KMeans.java:359-364`,
     * `PCA_Plot.ipynb:185-190`). */
   def plotOutputLines(df: DataFrame, clusterCol: String, featCol: String): DataFrame =
     df.select(concat_ws("\t",
-      concat_ws("\t", transform(col(featCol), _.cast("string"))),
+      concat_ws("\t", col(featCol).cast("array<string>")),
       col(clusterCol).cast("string")).as("value"))
 
   /** Write a single TSV file like the reference's local sinks. The

@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.spark.SparkThrowable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.StructType
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.operators.ClusterMetrics
 
@@ -145,5 +151,89 @@ class ClusterMetricsSpec extends AnyFunSuite {
     val perfect = ClusterMetrics.purity(
       Seq((1, 5), (1, 5), (2, 7)).toDF("truth", "pred"), "truth", "pred").collect()(0)
     assert(perfect.getDouble(2) == 1.0)
+  }
+
+  private type Metric = (DataFrame, String, String) => DataFrame
+
+  private val metricsAndTwins: Seq[(String, Metric, Metric)] = Seq(
+    ("jaccard", ClusterMetrics.jaccard, ClusterMetricsTwins.jaccardSql),
+    ("randIndex", ClusterMetrics.randIndex, ClusterMetricsTwins.randIndexSql),
+    ("purity", ClusterMetrics.purity, ClusterMetricsTwins.puritySql))
+
+  /** The schema and rows of `body`, or the condition of the first
+    * Spark error with one in the cause chain. */
+  private def outcome(body: => DataFrame): Either[String, (StructType, Seq[Row])] =
+    scala.util.Try { val df = body; (df.schema, df.collect().toSeq) }.toEither.left.map { e =>
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collectFirst {
+        case t: SparkThrowable if t.getCondition != null => t.getCondition
+      }.getOrElse(s"${e.getClass.getName}: ${e.getMessage}")
+    }
+
+  test("jaccard, randIndex and purity ≡ their SQL twins: rows and schema, or the same error") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    def label(): Option[Int] = if (rnd.nextInt(40) == 0) None else Some(rnd.nextInt(6) - 1)
+    val random = Seq.fill(500)((label(), label())).toDF("truth", "pred")
+    val inputs: Seq[(String, DataFrame)] = Seq(
+      "NULL truth" -> Seq((Some(1), Some(1)), (None, Some(1)), (Some(2), Some(2)), (Some(1), Some(2)))
+        .toDF("truth", "pred"),
+      "NULL pred" -> Seq((Some(1), Some(1)), (Some(1), None), (Some(2), None), (Some(-1), Some(3)))
+        .toDF("truth", "pred"),
+      "all -1" -> Seq((-1, -1), (-1, -1), (-1, -1)).toDF("truth", "pred"),
+      "empty" -> Seq.empty[(Int, Int)].toDF("truth", "pred"),
+      "single row" -> Seq((4, 2)).toDF("truth", "pred"),
+      "string labels" -> Seq(("1", 5), ("1", 5), ("2", 5), ("-1", 7), ("3", 7)).toDF("truth", "pred"),
+      "500 rows, 1 partition" -> random.repartition(1),
+      "500 rows, 7 partitions" -> random.repartition(7))
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.get(key)
+    try for (ansi <- Seq("true", "false"); (what, df) <- inputs;
+             (name, metric, twin) <- metricsAndTwins) {
+      spark.conf.set(key, ansi)
+      val a = outcome(metric(df, "truth", "pred"))
+      val b = outcome(twin(df, "truth", "pred"))
+      assert(a == b, s"$name on $what, ANSI $ansi")
+      if (what != "empty" && what != "all -1") assert(a.isRight, s"$name on $what: $a")
+      if (what == "empty" && ansi == "true" && name != "purity")
+        assert(a == Left("DIVIDE_BY_ZERO"), s"$name: $a")
+    } finally spark.conf.set(key, saved)
+  }
+
+  /** Spark jobs started while `body` runs (the KMeansSpec job-group
+    * listener, drained through a marker job). */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val stamp = System.nanoTime()
+    val (group, marker) = (s"cm-spec-body-$stamp", s"cm-spec-marker-$stamp")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var drained = false
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+        if (props.exists(_.getProperty("spark.job.description") == marker)) drained = true
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "ClusterMetricsSpec body")
+      try body finally sc.clearJobGroup()
+      sc.setJobDescription(marker)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      eventually(timeout(30.seconds), interval(20.millis))(assert(drained))
+    } finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("each external metric runs one grouped count when called; reading its row runs no job") {
+    import org.apache.spark.sql.functions.col
+    val df = spark.range(0, 500, 1, 4)
+      .select((col("id") % 5 - 1).as("truth"), (col("id") % 3).as("pred"))
+    for ((name, metric, _) <- metricsAndTwins) {
+      var out: DataFrame = null
+      val called = jobsDuring { out = metric(df, "truth", "pred") }
+      assert(called >= 1 && called <= 2, s"$name: $called jobs")
+      assert(jobsDuring(out.head()) == 0, name)
+    }
   }
 }

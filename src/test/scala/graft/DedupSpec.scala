@@ -660,6 +660,45 @@ class DedupSpec extends AnyFunSuite {
     } finally Dedup.releaseCaches()
   }
 
+  test("jaccardJoin capped: a dropped rarer bucket costs no pair a surviving bucket finds") {
+    // Pairs with J ≥ tau that share a prefix token whose bucket the
+    // cap keeps: what the capped call finds with no positional filter.
+    def capped(docs: Seq[(Long, Set[String])], tau: Double, maxBucket: Int): Set[(Long, Long)] = {
+      val df = docs.flatMap(_._2).groupBy(identity).map { case (t, ts) => t -> ts.size }
+      val prefix = docs.map { case (id, s) => id -> s.toSeq.sortBy(t => (df(t), t))
+        .take(s.size - math.ceil(tau * s.size - 1e-9).toInt + 1).toSet }.toMap
+      val bucket = prefix.values.toSeq.flatten.groupBy(identity).map { case (t, ts) => t -> ts.size }
+      (for {
+        (i, si) <- docs; (j, sj) <- docs if i < j
+        if (prefix(i) & prefix(j)).exists(bucket(_) <= maxBucket)
+        inter = (si & sj).size if inter.toDouble / (si.size + sj.size - inter) >= tau
+      } yield (i, j)).toSet
+    }
+    def run(docs: Seq[(Long, Set[String])], tau: Double, maxBucket: Int) =
+      Dedup.jaccardJoin(docs.map { case (id, s) => id -> s.mkString(" ") }.toDF("doc_id", "text"),
+          "doc_id", "text", minSim = tau, maxBucket = maxBucket)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def doc(id: Long, ts: String) = id -> ts.split(" ").toSet
+    // x and y share r1 r2 r3 s c1 (J = 5/7); the r buckets hold 4 docs
+    // and are dropped at maxBucket = 3, so s, the last token of both
+    // 4-token prefixes, is where the pair meets: the positional bound
+    // there (1 + 2 < 4) would drop a pair the cap kept
+    val fixture = Seq(
+      doc(1, "r1 r2 r3 s c1 c2"), doc(2, "r1 r2 r3 s c1 c3"),
+      doc(3, "r1 r2 r3 c1 c2 c3"), doc(4, "r1 r2 r3 c1 c2 c4"),
+      doc(5, "s u1 u2 u3"), doc(6, "s u4 u5 u6")) ++
+      (7 to 10).map(i => doc(i, s"c1 c2 c3 c4 v$i w$i"))
+    val rnd = new scala.util.Random(5L)
+    val random = (1L to 80L).map(id => id -> Seq.fill(4 + rnd.nextInt(8))(
+      s"t${rnd.nextInt(14)}").toSet)
+    try {
+      val want = capped(fixture, 0.5, 3)
+      assert(want.contains((1L, 2L)), want)
+      assert(run(fixture, 0.5, 3) == want)
+      for (mb <- Seq(2, 5, 9)) assert(run(random, 0.5, mb) == capped(random, 0.5, mb), s"maxBucket $mb")
+    } finally Dedup.releaseCaches()
+  }
+
   test("jaccardJoin plan has no cartesian or nested-loop join") {
     val docs = Seq((1L, base), (2L, nearDup), (3L, unrelated)).toDF("doc_id", "text")
     try {

@@ -196,6 +196,29 @@ class GeneIOSpec extends AnyFunSuite {
     assert(back === fin)
   }
 
+  test("row sinks: the native array<string> cast renders what the per-element transform did") {
+    import spark.implicits._
+    def v(xs: java.lang.Double*): Option[Seq[java.lang.Double]] = Some(xs)
+    val vecs = Seq(
+      v(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0, 0.0),
+      v(1e-7, 1e21, 1.5, -0.25, 123456789.0),
+      v(1.0, null, 3.0), v(null: java.lang.Double), v(), None)
+    val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, i % 3, v) }
+      .toDF("id", "cluster", "features")
+    // the form both sinks used before the native cast
+    val oldFeats = concat_ws("\t", transform(col("features"), _.cast("string")))
+    val oldFinal = df.select(concat_ws("\t", col("id").cast("string"),
+      col("cluster").cast("string"), oldFeats).as("value"))
+    val oldPlot = df.select(concat_ws("\t", oldFeats, col("cluster").cast("string")).as("value"))
+    def lines(d: org.apache.spark.sql.DataFrame) = d.as[String].collect().sorted.toSeq
+    val fin = lines(GeneIO.finalOutputLines(df, "id", "cluster", "features"))
+    assert(fin == lines(oldFinal))
+    assert(lines(GeneIO.plotOutputLines(df, "cluster", "features")) == lines(oldPlot))
+    // an empty or NULL vector keeps its trailing tab
+    assert(fin.contains("4\t1\t") && fin.contains("5\t2\t"), fin)
+    assert(fin.contains("0\t0\tNaN\tInfinity\t-Infinity\t-0.0\t0.0"), fin)
+  }
+
   // ── centroid interchange format (op 9) ───────────────────────────
 
   test("centroid interchange format round-trips, '|' sentinel honored") {

@@ -534,8 +534,7 @@ class KMeansSpec extends AnyFunSuite {
     assert(pp == outcome(KMeansTwins.plusPlusSql(df, "id", "features", 3, 1)))
     assert(pp == outcome(KMeans.initCentroids(df.filter($"id".isNotNull), "id", "features",
       PlusPlus(3, 1))))
-    // (Parallel's sampling rounds still take NULL and short vectors,
-    // so it runs on the well-formed ones)
+    // (Parallel: see "k-means parallel samples only rows with a d²")
     val wellFormed = df.filter(size($"features") === 3)
     val par = outcome(KMeans.initCentroids(wellFormed, "id", "features",
       Parallel(3, 1, rounds = 3)))
@@ -549,6 +548,18 @@ class KMeansSpec extends AnyFunSuite {
     val got = outcome(KMeans.initCentroids(noVec, "id", "features", PlusPlus(3, 1)))
     assert(got.isRight, got)
     assert(got == outcome(KMeansTwins.plusPlusSql(noVec, "id", "features", 3, 1)))
+  }
+
+  test("k-means parallel samples only rows with a d²: NULL and short vectors never become candidates") {
+    import org.apache.spark.sql.functions.size
+    val wellFormed = raceInput.filter($"features".isNotNull && size($"features") === 3)
+    for (parts <- Seq(1, 4, 7); seed <- 1L to 3L) {
+      val init = Parallel(4, seed, rounds = 3)
+      val got = outcome(KMeans.initCentroids(raceInput.repartition(parts), "id", "features", init))
+      assert(got.isRight, s"seed $seed at $parts partitions: $got")
+      assert(got == outcome(KMeans.initCentroids(wellFormed.repartition(parts), "id", "features",
+        init)), s"seed $seed at $parts partitions")
+    }
   }
 
   test("fit(PlusPlus(k), maxIter = n): one single-stage job per init round and per Lloyd step") {

@@ -102,6 +102,18 @@ class UnigramTokenizerSpec extends AnyFunSuite {
     assert(e.getMessage.contains("maxWordLen"))
   }
 
+  test("bounded lattice: a 200 000-character word is refused without being segmented") {
+    val model = UnigramTokenizer.UnigramModel(Seq(("a", 1L), ("aa", 1L), ("ab", 1L)))
+    val docs = Seq((1L, "ab " + "ab" * 100000)).toDF("doc_id", "text")
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalArgumentException] {
+      UnigramTokenizer.encode(docs, "doc_id", "text", model, maxWordLen = 8).collect()
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.contains("length 200000 exceeds maxWordLen=8"), e.getMessage)
+    assert(secs < 20.0, s"refusal took $secs s")
+  }
+
   test("saveUnigram/loadUnigram: canonical round trip; drifted artifacts refused") {
     val train = Seq((1L, "aa aa ab"), (2L, "aa")).toDF("doc_id", "text")
     val model = UnigramTokenizer.train(train, "text", vocabSize = 10,
