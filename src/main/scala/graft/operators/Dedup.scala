@@ -367,11 +367,15 @@ object Dedup {
     * (the component label IS the cluster's minimum id).
     *
     * Each round: one hash join (edge propagation) + one partial-agg
-    * min + one count action; labels only ever decrease, and the loop
-    * stops the first round nothing changes. Rounds needed = graph
-    * diameter, which for near-dup clusters is small (duplicates of a
-    * document are duplicates of each other — clusters are near-
-    * cliques; the sf0.01 corpus's deepest chain is 3 nodes). For adversarial
+    * min that also keeps each id's previous label; labels only ever
+    * decrease, so a round changed something iff one of its rows has
+    * component < prev, and the loop stops after the first round where
+    * none has (Graph.iterate's convergent mode: one narrow scan of the
+    * round's checkpoint, no second plan). Every round, the stable one
+    * included, is one eager localCheckpoint. Rounds needed = graph
+    * diameter + the stable one; for near-dup clusters that is small
+    * (duplicates of a document are duplicates of each other — clusters
+    * are near-cliques; the sf0.01 corpus's deepest chain is 3 nodes). For adversarial
     * long-path graphs the known fix is large-star/small-star
     * (Kiveris et al., "Connected Components in MapReduce and
     * Beyond", SoCC'14) at O(log²) rounds — not needed for dedup
@@ -379,42 +383,36 @@ object Dedup {
     * surprise. Everything per-round is a standard shuffle: no
     * driver-side graph, no collect.
     *
+    * A NULL id connects nothing: it is labelled NULL, and its pairs
+    * link none of their other ids (componentsStar's rule too).
+    *
     * Output: (id, component) for every id in the pair table. */
   def connectedComponents(pairs: DataFrame, id1Col: String = "id1", id2Col: String = "id2",
                           maxIter: Int = 50): DataFrame = {
     // registerCache, not a bare persist: if an action inside the loop
     // throws, releaseCaches() can still free the pinned table — the
     // same failure-safe lifecycle as every other operator intermediate
-    val edges = registerCache(
+    val sym = registerCache(
       pairs.select(col(id1Col).as("src"), col(id2Col).as("dst"))
         .union(pairs.select(col(id2Col).as("src"), col(id1Col).as("dst")))
         .distinct())
-    var labels = edges.select(col("src").as("id")).distinct()
+    val edges = sym.filter(col("src").isNotNull && col("dst").isNotNull)
+    val init = sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("component"))
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
+    // iterate checkpoints every round: a round's plan reads the one
+    // before twice (propagation join, union), so uncut lineage grows
+    // as 2^rounds. Where a lost executor must not restart the whole
+    // loop, a reliable .checkpoint() is the same shape.
+    val (labels, done) = Graph.iterate(init, maxIter,
+        Some((out, _) => !Graph.anyRow(out, col("component") < col("prev")))) { (labels, _) =>
       val prop = edges.join(labels, edges("dst") === labels("id"))
-        .select(edges("src").as("id"), labels("component"))
-      // localCheckpoint (eager) cuts the lineage each round — without
-      // it the logical plan references the previous round's plan
-      // three times (propagation join, union, convergence check) and
-      // grows as 3^rounds: the driver OOMs stringifying it long
-      // before any executor does real work. On a cluster where a lost
-      // executor must not restart the whole loop, use
-      // spark.sparkContext.setCheckpointDir + .checkpoint() instead —
-      // same shape, reliable storage. Superseded round RDDs are freed
-      // by the ContextCleaner once unreferenced (bounded by maxIter).
-      val next = labels.union(prop).groupBy("id")
-        .agg(min("component").as("component"))
-        .localCheckpoint(eager = true)
-      val changed = next.join(labels.withColumnRenamed("component", "prev"), Seq("id"))
-        .filter(col("component") < col("prev")).count()
-      labels = next
-      done = changed == 0
-      iter += 1
+        .select(edges("src").as("id"), labels("component"),
+          lit(null).cast(labels.schema("component").dataType).as("prev"))
+      labels.select(col("id"), col("component"), col("component").as("prev"))
+        .union(prop)
+        .groupBy("id").agg(min("component").as("component"), min("prev").as("prev"))
     }
-    edges.unpersist(blocking = false)
+    sym.unpersist(blocking = false)
     // a silent partial result would violate the one-label-per-
     // component contract downstream (dropNearDupClusters would keep
     // several "representatives" of one cluster) — refuse instead
@@ -422,7 +420,7 @@ object Dedup {
       "pair graph's diameter exceeds the cap (raise maxIter, or pre-split the " +
       "graph — near-dup clusters this deep usually mean the similarity " +
       "threshold is admitting chains of unrelated documents)")
-    labels
+    labels.select("id", "component")
   }
 
   /** Connected components by alternating large-star / small-star
@@ -440,28 +438,38 @@ object Dedup {
     * endpoint and connects the smaller ones to their minimum (emits
     * (v, m) for v ∈ Γ(u)\{m} plus (u, m)). Edges only ever move
     * toward component minima; the fixed point is a star per
-    * component rooted at its minimum id. No driver-side graph, no
-    * collect; per-round localCheckpoint cuts the 3^rounds lineage
-    * exactly as the propagation loop does.
+    * component rooted at its minimum id. Small-star's output is
+    * grouped together with the round's input edges, each tagged by
+    * side, so the same aggregate that dedups the new edge set also
+    * says whether it differs from the old one (an edge on one side
+    * only); the loop stops after the first round where none does
+    * (Graph.iterate's convergent mode). No driver-side graph, no
+    * collect; per-round localCheckpoint cuts the lineage exactly as
+    * the propagation loop does.
     *
     * Same contract as connectedComponents: (id, component) for every
-    * id in the pair table, component = the component's minimum id —
-    * the two are interchangeable and the oracle gate runs this one
-    * against the identical SQL closure. */
+    * id in the pair table, component = the component's minimum id,
+    * and a NULL id connects nothing and is labelled NULL — the two
+    * are interchangeable and the oracle gate runs this one against
+    * the identical SQL closure. */
   def componentsStar(pairs: DataFrame, id1Col: String = "id1", id2Col: String = "id2",
                      maxIter: Int = 50): DataFrame = {
     // read once at the end (no cache needed): the only consumer is
     // the final left join that restores isolated / self-paired ids
     val ids = pairs.select(col(id1Col).as("id"))
       .union(pairs.select(col(id2Col).as("id"))).distinct()
-    var edges = pairs
+    // __tag: 1 = an edge this round emits, 2 = an edge it read; an
+    // edge on both sides ORs to 3, so the round is stable iff all are
+    val init = pairs
       .select(least(col(id1Col), col(id2Col)).as("lo"),
         greatest(col(id1Col), col(id2Col)).as("hi"))
       .filter(col("lo") =!= col("hi")).distinct()
       .localCheckpoint(eager = true)
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
+      .withColumn("__tag", lit(1))
+    val current = col("__tag") =!= 2
+    val (tagged, done) = Graph.iterate(init, maxIter,
+        Some((out, _) => !Graph.anyRow(out, col("__tag") =!= 3))) { (cur, _) =>
+      val edges = cur.filter(current).select("lo", "hi")
       // large-star over the symmetric adjacency
       val sym = edges.select(col("lo").as("u"), col("hi").as("v"))
         .union(edges.select(col("hi").as("u"), col("lo").as("v")))
@@ -472,23 +480,20 @@ object Dedup {
         .select(col("m").as("lo"), col("v").as("hi")).distinct()
       // small-star: every edge already keyed by its larger endpoint
       val mins2 = large.groupBy("hi").agg(min(col("lo")).as("m"))
-      val small = large.join(mins2, Seq("hi"))
+      large.join(mins2, Seq("hi"))
         .filter(col("lo") =!= col("m"))
         .select(col("m").as("lo"), col("lo").as("hi"))
         .union(mins2.select(col("m").as("lo"), col("hi")))
-        .distinct()
-      val next = small.localCheckpoint(eager = true)
-      val changed = next.exceptAll(edges).count() + edges.exceptAll(next).count()
-      edges = next
-      done = changed == 0
-      iter += 1
+        .withColumn("__tag", lit(1))
+        .union(edges.withColumn("__tag", lit(2)))
+        .groupBy("lo", "hi").agg(bit_or(col("__tag")).as("__tag"))
     }
     require(done, s"componentsStar did not converge in $maxIter rounds — " +
       "O(log² n) alternation should never need this many; the edge list is " +
       "likely growing from upstream duplicate pairs")
     // fixed point is a star set: every non-root appears as hi exactly
     // once (the groupBy-min is a safety net, not a semantic step)
-    val stars = edges.groupBy(col("hi")).agg(min(col("lo")).as("component"))
+    val stars = tagged.filter(current).groupBy(col("hi")).agg(min(col("lo")).as("component"))
       .select(col("hi").as("id"), col("component"))
     ids.join(stars, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))

@@ -64,19 +64,43 @@ object Graph {
   private def foldedSum(c: Column, sortedFold: Boolean): Column =
     if (sortedFold) VectorOps.sortedSum(c) else sum(c)
 
-  /** The fixed-round driver (`KMeans.java:220-282`'s loop, round
-    * count fixed so the oracle can unroll it): `rounds` steps from
-    * `init`, each but the last ending in an eager localCheckpoint so
-    * round r's plan never nests r join trees. The LAST round stays
-    * lazy — its one consumer is the returned plan — so every action on
-    * the result re-runs it: a partial-agg double sum (sortedFold=false)
-    * may differ in the last bit between two actions; cache the result
-    * to read it twice. */
-  private def iterate(init: DataFrame, rounds: Int)(step: DataFrame => DataFrame): DataFrame =
-    (1 to rounds).foldLeft(init) { (cur, r) =>
-      val next = step(cur)
-      if (r < rounds) next.localCheckpoint(eager = true) else next
-    }
+  /** The one round driver of this file and Dedup's components
+    * (`KMeans.java:220-282`'s loop): at most `rounds` steps from
+    * `init`, `step(cur, r)` building round r (from 1) out of the round
+    * before. A round that a later round reads ends in an eager
+    * localCheckpoint, so round r's plan never nests r join trees.
+    *  - Fixed rounds (no `stable`; the oracle unrolls the same count):
+    *    the LAST round stays lazy — its one consumer is the returned
+    *    plan — so every action on the result re-runs it: a partial-agg
+    *    double sum (sortedFold=false) may differ in the last bit
+    *    between two actions; cache the result to read it twice.
+    *  - Convergent (`stable` given): every round is checkpointed, and
+    *    the loop stops after the first round whose checkpointed output
+    *    `stable(out, r)` calls stable — the reference's old-vs-new
+    *    centroid test (`KMeans.java:291-310`), read off the round's own
+    *    output rather than a second plan.
+    * Returns the last round and whether the loop stopped on stability
+    * (never, for fixed rounds). */
+  private[operators] def iterate(init: DataFrame, rounds: Int,
+                                 stable: Option[(DataFrame, Int) => Boolean] = None)
+                                (step: (DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {
+    @annotation.tailrec
+    def go(cur: DataFrame, r: Int): (DataFrame, Boolean) =
+      if (r > rounds) (cur, false)
+      else if (r == rounds && stable.isEmpty) (step(cur, r), false)
+      else {
+        val out = step(cur, r).localCheckpoint(eager = true)
+        if (stable.exists(_(out, r))) (out, true) else go(out, r + 1)
+      }
+    go(init, 1)
+  }
+
+  /** Whether some row of `df` meets `cond` — a convergent round's stop
+    * test. Over a checkpointed round this is one job with no shuffle,
+    * each task stopping at its first matching row. */
+  private[operators] def anyRow(df: DataFrame, cond: Column): Boolean =
+    df.filter(cond).queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(rows.hasNext)).collect().contains(true)
 
   /** Shared rank-iteration prep: dedup'd (optionally symmetrized)
     * edge list + per-node out-degrees, both pinned — the opening
@@ -96,7 +120,7 @@ object Graph {
     * degree) and what `teleport` reads; degree rides in the frame, so
     * a round is one join and one grouped sum. */
   private def powerStep(e: DataFrame, anchor: DataFrame, teleport: Column,
-                        damping: Double, sortedFold: Boolean)(ranks: DataFrame): DataFrame = {
+                        damping: Double, sortedFold: Boolean)(ranks: DataFrame, r: Int): DataFrame = {
     val sums = e.join(
         ranks.filter(col("degree") > 0L)
           .select(col("id").as("src"), (col("pr") / col("degree")).as("c")),
@@ -148,8 +172,7 @@ object Graph {
     require(n > 0, "pageRank on an empty edge list")
     val init = degs.select(col("id"), lit(1.0 / n.toDouble).as("pr"), col("degree"))
     iterate(init, iters)(
-      powerStep(e, degs, lit((1.0 - damping) / n.toDouble), damping, sortedFold))
-      .select(col("id"), col("pr"), col("degree"))
+      powerStep(e, degs, lit((1.0 - damping) / n.toDouble), damping, sortedFold))._1
   }
 
   /** Personalized PageRank (Haveliwala 2002 / Jeh & Widom 2003's
@@ -193,8 +216,7 @@ object Graph {
       .select(col("id"), col("degree"), coalesce(col("__s0"), lit(0.0)).as("__s")))
     val init = sv.select(col("id"), col("__s").as("pr"), col("degree"))
     iterate(init, iters)(
-      powerStep(e, sv, lit(1.0 - damping) * col("__s"), damping, sortedFold))
-      .select(col("id"), col("pr"), col("degree"))
+      powerStep(e, sv, lit(1.0 - damping) * col("__s"), damping, sortedFold))._1
   }
 
   /** Neighbour-mode vote: per dst, the most frequent label among its
@@ -231,11 +253,11 @@ object Graph {
     val nodes = Dedup.pin(nodeSet(e))
     // labels' id set IS the node set (the init and the left join keep
     // it so), so a round anchors on the labels it reads, not on nodes
-    iterate(nodes.select(col("id"), col("id").as("label")), rounds) { labels =>
+    iterate(nodes.select(col("id"), col("id").as("label")), rounds) { (labels, _) =>
       labels.withColumnRenamed("label", "__old")
         .join(modeVote(e, labels.withColumnRenamed("id", "src")), Seq("id"), "left")
         .select(col("id"), coalesce(col("__new"), col("__old")).as("label"))
-    }
+    }._1
   }
 
   /** Semi-supervised label completion (clamped-seed label
@@ -278,7 +300,7 @@ object Graph {
       .select(col("id"), col("__seed").as("label"),
         col("__seed").isNotNull.cast("int").as("is_seed"))
       .localCheckpoint(eager = true)
-    iterate(init, rounds) { labels =>
+    iterate(init, rounds) { (labels, _) =>
       val winners = modeVote(e,
         labels.filter(col("label").isNotNull).select(col("id").as("src"), col("label")))
       labels.join(winners, Seq("id"), "left")
@@ -286,7 +308,7 @@ object Graph {
           when(col("is_seed") === 1, col("label"))
             .otherwise(coalesce(col("__new"), col("label"))).as("label"),
           col("is_seed"))
-    }
+    }._1
   }
 
   /** Degree distribution of an edge list: per-node degree plus the
@@ -374,45 +396,43 @@ object Graph {
     * 2-core is its genuinely interlinked middle; degree alone
     * over-keeps stars, components under-split).
     *
-    * Bounded semantics for cross-engine replay: peel exactly `rounds`
+    * Bounded semantics for cross-engine replay: peel at most `rounds`
     * rounds (the oracle unrolls the same count); peeling is monotone
-    * — each round only removes vertices — so reaching the fixpoint
-    * early makes later rounds no-ops, and the early-exit below (via
-    * a 1-scalar surviving-vertex count per round, the K-Means-
-    * convergence posture) changes nothing. With rounds ≥ the peel
-    * depth the result IS the exact k-core.
+    * — each round only removes edges — so once a round removes none,
+    * every later round is a no-op, and stopping there (iterate's
+    * convergent mode: the round's checkpointed edge count equals the
+    * round before's) changes nothing. With rounds ≥ the peel depth
+    * the result IS the exact k-core.
     *
     * Scale shape: per round ONE grouped degree count + TWO semi-joins
     * of the edge list against the survivor set — the connected-
     * components shuffle pattern — with a localCheckpoint per round
     * (the components lesson: round r's plan otherwise nests r join
     * trees). No windows, no driver-side adjacency; the only collects
-    * are one scalar per round.
+    * are one row count per round.
     * Output: (id, core_degree) for every vertex still standing after
     * `rounds` peels — degree measured within the surviving subgraph. */
   def kCore(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
             k: Int = 2, rounds: Int = 10): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 50, s"rounds must be in [1, 50], got $rounds")
-    var cur = symmetrize(undirectedPairs(edges, srcCol, dstCol)).localCheckpoint()
-    var prevCount = -1L
-    var r = 0
-    while (r < rounds && prevCount != 0L) {
-      val deg = cur.groupBy("a").agg(count(lit(1)).as("__d"))
-      val keep = deg.filter(col("__d") >= k).select("a")
-      val n = keep.count()
-      if (n == prevCount) {
-        r = rounds // fixpoint: survivors stable, further peels are no-ops
-      } else {
-        prevCount = n
-        cur = cur.join(keep, Seq("a"), "left_semi")
-          .join(keep.select(col("a").as("b")), Seq("b"), "left_semi")
-          .select("a", "b")
-          .localCheckpoint()
-        r += 1
-      }
+    val init = symmetrize(undirectedPairs(edges, srcCol, dstCol)).localCheckpoint()
+    def edgeRows(df: DataFrame): Long = df.queryExecution.toRdd.count()
+    var before = edgeRows(init)
+    val unchanged = (peeled: DataFrame, _: Int) => {
+      val after = edgeRows(peeled)
+      val same = after == before
+      before = after
+      same
     }
-    cur.groupBy(col("a").as("id"))
+    val (core, _) = iterate(init, rounds, Some(unchanged)) { (cur, _) =>
+      val keep = cur.groupBy("a").agg(count(lit(1)).as("__d"))
+        .filter(col("__d") >= k).select("a")
+      cur.join(keep, Seq("a"), "left_semi")
+        .join(keep.select(col("a").as("b")), Seq("b"), "left_semi")
+        .select("a", "b")
+    }
+    core.groupBy(col("a").as("id"))
       .agg(count(lit(1)).cast("long").as("core_degree"))
   }
 
@@ -535,11 +555,12 @@ object Graph {
     * frontier, so each round costs ONE hash join (frontier × edges on
     * src) + distinct + ONE left-anti against the visited set — all
     * key-partitioned shuffles of frontier-sized inputs, never the
-    * whole graph. Every round's frontier is eagerly checkpointed
-    * (the pageRank lesson: otherwise lineage nests one join tree per
-    * hop). maxHops bounds rounds; the loop also exits as soon as a
-    * frontier comes back empty (the isEmpty probe is a driver scalar,
-    * same cost class as pageRank's node count).
+    * whole graph. Every hop's (id, dist) state is eagerly
+    * checkpointed (the pageRank lesson: otherwise lineage nests one
+    * join tree per hop). maxHops bounds rounds; the loop also exits
+    * after the first hop that reaches no new node (iterate's
+    * convergent mode: one narrow scan of the hop's checkpointed
+    * state for a row at the new distance).
     *
     * Output: (id, dist) — exact longs, a pure function of (edges,
     * seeds, maxHops); the oracle replays it as a bounded recursive
@@ -553,30 +574,25 @@ object Graph {
     val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected,
       castLong = true))
     frontierBfs(e, seeds.select(col(seedCol).cast("long").as("id")).distinct()
-      .withColumn("dist", lit(0L)), Seq("id"), maxHops)
+      .withColumn("dist", lit(0L)).localCheckpoint(eager = true), Seq("id"), maxHops)
   }
 
-  /** Frontier BFS from `start` = (keys, dist 0) over the pinned
-    * list `e`; keys = Seq("id") (one wavefront) or Seq("id", "seed")
-    * (one per seed). Output (keys, dist), each key at its first hop. */
+  /** Frontier BFS from the checkpointed `start` = (keys, dist 0) over
+    * the pinned list `e`; keys = Seq("id") (one wavefront) or
+    * Seq("id", "seed") (one per seed). One state frame: hop h expands
+    * its rows at dist h − 1 (the frontier) and adds the keys not yet
+    * in it at dist h; the loop stops after a hop that adds none.
+    * Output (keys, dist), each key at its first hop. */
   private def frontierBfs(e: DataFrame, start: DataFrame, keys: Seq[String],
                           maxHops: Int): DataFrame = {
     val keyCols = keys.map(col)
-    @annotation.tailrec
-    def expand(dist: DataFrame, frontier: DataFrame, hop: Int): DataFrame =
-      if (hop > maxHops) dist
-      else {
-        val next = frontier.join(e, frontier("id") === e("src"))
-          .select(col("dst").as("id") +: keyCols.tail: _*).distinct()
-          .join(dist.select(keyCols: _*), keys, "left_anti")
-          .withColumn("dist", lit(hop.toLong))
-          .localCheckpoint(eager = true)
-        if (next.isEmpty) dist
-        else expand(dist.union(next).localCheckpoint(eager = true),
-          next.select(keyCols: _*), hop + 1)
-      }
-    val dist0 = start.localCheckpoint(eager = true)
-    expand(dist0, dist0.select(keyCols: _*), 1)
+    iterate(start, maxHops, Some((dist, h) => !anyRow(dist, col("dist") === h))) { (dist, h) =>
+      val frontier = dist.filter(col("dist") === h - 1)
+      dist.union(frontier.join(e, frontier("id") === e("src"))
+        .select(col("dst").as("id") +: keyCols.tail: _*).distinct()
+        .join(dist.select(keyCols: _*), keys, "left_anti")
+        .withColumn("dist", lit(h.toLong)))
+    }._1
   }
 
   /** Hop-bounded closeness centrality against a seed PANEL: for every
@@ -598,7 +614,7 @@ object Graph {
     * themselves (sum_dist = 0) yield NULL closeness.
     *
     * Scale shape: bfsDistance's per-round join + distinct + anti-join
-    * on (id, seed) keys, frontier checkpointed each round; one final
+    * on (id, seed) keys, state checkpointed each round; one final
     * hash agg. Output: (id, n_reached, sum_dist, closeness). */
   def closenessBounded(edges: DataFrame, seeds: DataFrame, seedCol: String,
                        srcCol: String = "src", dstCol: String = "dst",
@@ -677,11 +693,11 @@ object Graph {
     val start = seeds.select(col(seedCol).cast("long").as("id")).distinct()
       .withColumn("dist", lit(0L))
       .localCheckpoint(eager = true)
-    iterate(start, maxHops) { dist =>
+    iterate(start, maxHops) { (dist, _) =>
       val relaxed = dist.join(e, dist("id") === e("src"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
       dist.union(relaxed).groupBy("id").agg(min(col("dist")).as("dist"))
-    }
+    }._1
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) with a fixed number of

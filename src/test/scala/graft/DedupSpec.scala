@@ -150,6 +150,26 @@ class DedupSpec extends AnyFunSuite {
     } finally Dedup.releaseCaches()
   }
 
+  test("connectedComponents and componentsStar agree on NULL ids: each connects nothing, labelled NULL") {
+    // NULL on either side and on both; 4–NULL must not pull 4 apart
+    // from 3, nor 1 and 2 together through their NULL partner
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), None), (None, Some(2L)), (None, None), (Some(3L), Some(4L)), (Some(4L), None))
+      .toDF("id1", "id2")
+    val want = Seq[(Option[Long], Option[Long])](
+      (None, None), (Some(1L), Some(1L)), (Some(2L), Some(2L)), (Some(3L), Some(3L)),
+      (Some(4L), Some(3L)))
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.as[(Option[Long], Option[Long])].collect().toSeq.sortBy(_._1.getOrElse(Long.MinValue))
+    try {
+      for (parts <- Seq(1, 4)) {
+        val df = pairs.repartition(parts)
+        assert(rows(Dedup.connectedComponents(df)) === want, s"connectedComponents, $parts")
+        assert(rows(Dedup.componentsStar(df)) === want, s"componentsStar, $parts")
+      }
+    } finally Dedup.releaseCaches()
+  }
+
   test("winnowNearDup surfaces shared passages, not unrelated docs; cap drops hot fps") {
     val shared = "a very long shared passage that appears verbatim in two documents"
     val docs = Seq(

@@ -590,14 +590,16 @@ class GraphSpec extends AnyFunSuite {
     assert(d == Map(1L -> 0L, 2L -> 5L, 3L -> 12L), s"got $d")
   }
 
-  /** Eager localCheckpoint calls made while `body` runs: root SQL
-    * executions described "localCheckpoint at <call site>", the
-    * marker the e2ebench Checkpoints listener counts rounds by. */
-  private def checkpointsDuring(body: => Unit): Int = {
+  /** What `body` ran in its job group: eager localCheckpoint calls
+    * (root SQL executions described "localCheckpoint at <call site>",
+    * the marker the e2ebench Checkpoints listener counts rounds by)
+    * and Spark jobs. */
+  private def workDuring(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
     val group = s"graph-spec-checkpoints-${System.nanoTime()}"
     val marker = s"$group-drained"
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     @volatile var drained = false
     val l = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -606,9 +608,12 @@ class GraphSpec extends AnyFunSuite {
             x.description.startsWith("localCheckpoint at ") => n.incrementAndGet(); ()
         case _ =>
       }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+        if (props.exists(_.getProperty("spark.job.description") == marker))
           drained = true
+      }
     }
     sc.addSparkListener(l)
     try {
@@ -619,8 +624,11 @@ class GraphSpec extends AnyFunSuite {
       try spark.range(1).count() finally sc.setJobDescription(null)
       eventually(timeout(30.seconds), interval(20.millis))(assert(drained))
     } finally sc.removeSparkListener(l)
-    n.get
+    (n.get, jobs.get)
   }
+
+  /** Eager localCheckpoint calls made while `body` runs. */
+  private def checkpointsDuring(body: => Unit): Int = workDuring(body)._1
 
   test("barrier contract: an eager localCheckpoint after every round but the last") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
@@ -640,6 +648,118 @@ class GraphSpec extends AnyFunSuite {
         maxHops = n)) === n, s"ssspBounded, $n rounds")
       // each non-final hub frame, and the final auth frame the output reads
       assert(barriers(Graph.hits(edges, "src", "dst", iters = n)) === n, s"hits, $n rounds")
+    } finally Dedup.releaseCaches()
+    // convergent callers checkpoint every round, the stable one included
+    try {
+      // path 1–…–5: min-label propagation changes labels in rounds 1–4
+      // and finds nothing to change in round 5 — the rounds e2ebench
+      // counts by these barriers
+      val path = (1L until 5L).map(i => (i, i + 1)).toDF("id1", "id2")
+      assert(barriers(Dedup.connectedComponents(path)) === 5, "connectedComponents")
+      assert(checkpointsDuring {
+        intercept[IllegalArgumentException](Dedup.connectedComponents(path, maxIter = 4)); ()
+      } === 4, "connectedComponents stopped by its cap")
+      // path 1–2–3: the input edges, round 1 makes the star {1–2, 1–3},
+      // round 2 finds it stable
+      assert(barriers(Dedup.componentsStar(Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2"))) === 3,
+        "componentsStar")
+      // the input edges, then peels: 4–5 goes in round 1, 3–4 in round
+      // 2, round 3 removes nothing
+      assert(barriers(Graph.kCore(edges, k = 2, rounds = 10)) === 4, "kCore, fixpoint at round 3")
+      assert(barriers(Graph.kCore(edges, k = 2, rounds = 3)) === 4, "kCore, fixpoint at its cap")
+      assert(barriers(Graph.kCore(edges, k = 2, rounds = 2)) === 3, "kCore, fixpoint past its cap")
+      // the start, then one per hop: from 1, hops 1–3 reach {2, 3}, {4},
+      // {5} and hop 4 reaches nothing; from {1, 5} too
+      assert(barriers(Graph.bfsDistance(edges, seeds, "id", maxHops = 50)) === 5,
+        "bfsDistance, 4 hops")
+      assert(barriers(Graph.bfsDistance(edges, seeds, "id", maxHops = 2)) === 3,
+        "bfsDistance, capped at 2 hops")
+      val panel = Seq(1L, 5L).toDF("id")
+      assert(barriers(Graph.closenessBounded(edges, panel, "id", maxHops = 50)) === 5,
+        "closenessBounded, 4 hops")
+      assert(barriers(Graph.closenessBounded(edges, panel, "id", maxHops = 2)) === 3,
+        "closenessBounded, capped at 2 hops")
+    } finally Dedup.releaseCaches()
+  }
+
+  test("connectedComponents: its stop test reads the round's own checkpoint, no second plan") {
+    // path 1–…–5: four rounds that change labels, one that finds none
+    val path = (1L until 5L).map(i => (i, i + 1)).toDF("id1", "id2")
+    try {
+      val (checkpoints, jobs) = workDuring { Dedup.connectedComponents(path).collect(); () }
+      assert(checkpoints === 5)
+      // measured at 27 on the test session (local[4], 4 shuffle
+      // partitions); a stop test that runs its own plan costs more
+      assert(jobs <= 27, s"$jobs jobs for 5 rounds")
+    } finally Dedup.releaseCaches()
+  }
+
+  /** A seeded pair list over ids 1..n: random pairs plus self-pairs,
+    * exact duplicates and reversed copies. */
+  private def randomPairs(seed: Int, n: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    def id() = 1L + rnd.nextInt(n)
+    val base = Seq.fill(n + n / 10)((id(), id()))
+    base ++ base.take(5) ++ base.slice(5, 10).map(_.swap) ++ Seq.fill(3) { val v = id(); (v, v) }
+  }
+
+  /** Component minimum of every id in `pairs`. */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    // the smaller root always wins, so a root is its set's minimum
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  /** Simple undirected edges left after `rounds` k-core peels. */
+  private def peel(pairs: Seq[(Long, Long)], k: Int, rounds: Int): Set[(Long, Long)] = {
+    def degrees(es: Set[(Long, Long)]) =
+      es.toSeq.flatMap { case (a, b) => Seq(a, b) }.groupBy(identity).map { case (v, vs) => v -> vs.size }
+    (1 to rounds).foldLeft(pairs.filter(p => p._1 != p._2).map(p => (p._1 min p._2, p._1 max p._2)).toSet) {
+      (es, _) => val d = degrees(es); es.filter { case (a, b) => d(a) >= k && d(b) >= k }
+    }
+  }
+
+  /** Hop distance from `seeds` over undirected `pairs`, up to maxHops. */
+  private def bfs(pairs: Seq[(Long, Long)], seeds: Set[Long], maxHops: Int): Map[Long, Long] = {
+    val adj = pairs.filter(p => p._1 != p._2).flatMap(p => Seq(p, p.swap))
+      .groupBy(_._1).map { case (v, ns) => v -> ns.map(_._2) }
+    (1 to maxHops).foldLeft((seeds.map(_ -> 0L).toMap, seeds)) { case ((dist, frontier), h) =>
+      val next = frontier.flatMap(adj.getOrElse(_, Nil)) -- dist.keySet
+      (dist ++ next.map(_ -> h.toLong), next)
+    }._1
+  }
+
+  test("components, kCore and bfsDistance ≡ local models on seeded random graphs, 1/4/7 partitions") {
+    for (seed <- Seq(3, 8); parts <- Seq(1, 4, 7)) try {
+      val pairs = randomPairs(seed, 40)
+      val ctx = s"seed $seed, $parts partitions"
+      val df = pairs.toDF("id1", "id2").repartition(parts)
+      val want = unionFind(pairs)
+      def labels(out: org.apache.spark.sql.DataFrame) =
+        out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels(Dedup.connectedComponents(df)) === want, s"connectedComponents, $ctx")
+      assert(labels(Dedup.componentsStar(df)) === want, s"componentsStar, $ctx")
+      val edges = df.toDF("src", "dst")
+      // the peel depth: the first round after which peeling changes nothing
+      val depth = Iterator.from(1).find(r => peel(pairs, 2, r) == peel(pairs, 2, r + 1)).get
+      for (rounds <- Seq(1, depth, 50)) {
+        val core = peel(pairs, 2, rounds).toSeq.flatMap { case (a, b) => Seq(a, b) }
+          .groupBy(identity).map { case (v, vs) => v -> vs.size.toLong }
+        assert(labels(Graph.kCore(edges, k = 2, rounds = rounds)) === core,
+          s"kCore at $rounds rounds (depth $depth), $ctx")
+      }
+      val seeds = Set(pairs.head._1, pairs(7)._2)
+      for (maxHops <- Seq(2, 50))
+        assert(labels(Graph.bfsDistance(edges, seeds.toSeq.toDF("id"), "id", maxHops = maxHops))
+          === bfs(pairs, seeds, maxHops), s"bfsDistance at $maxHops hops, $ctx")
     } finally Dedup.releaseCaches()
   }
 }
