@@ -73,4 +73,31 @@ object Md5Unit {
     * kernel the executors run. */
   def unit(md: MessageDigest, s: String): Double =
     unit(md, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** md5 units of `prefix + id` for long ids — what unit(md, prefix +
+    * id) returns, without building a string per id: the prefix's
+    * UTF-8 bytes are copied once and each id's decimal digits are
+    * written after them in a reused buffer. One instance per thread. */
+  private[graft] final class IdUnits(prefix: String) {
+    private val md = newDigest()
+    private val p = prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    private val buf = java.util.Arrays.copyOf(p, p.length + 20)
+    private val h = new Array[Byte](16)
+
+    def apply(id: Long): Double = {
+      var n = p.length
+      if (id < 0) { buf(n) = '-'; n += 1 }
+      // digits of -|id| (≤ 0, so Long.MinValue needs no special case)
+      var v = if (id < 0) id else -id
+      var len = 1
+      var t = v / 10
+      while (t != 0) { len += 1; t /= 10 }
+      var j = n + len - 1
+      while (j >= n) { buf(j) = ('0' - (v % 10)).toByte; v /= 10; j -= 1 }
+      md.update(buf, 0, n + len)
+      md.digest(h, 0, 16)
+      ((h(0) & 0xffL) << 24 | (h(1) & 0xffL) << 16 | (h(2) & 0xffL) << 8 | (h(3) & 0xffL))
+        .toDouble / 4294967296.0
+    }
+  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -622,75 +621,277 @@ object VectorKernels {
 
   // ── K-Means round kernels ─────────────────────────────────────────
   //
-  // One Lloyd step and one k-means++ race round, each ONE primitive
-  // loop over a partition of InternalRows that returns O(k·d) numbers
-  // to the driver. KMeans runs them over its fit's cached (id, f)
-  // projection through queryExecution.toRdd — the documented
-  // mapPartitions exception (as in Curation.globalRunningSum): a round
-  // is a single-stage job with no Catalyst plan of its own, no exchange
-  // and no encoder. Same arithmetic as their SQL twins in KMeansTwins (groupBy
-  // + VectorMeanAgg; withColumn/filter/orderBy/limit(1)), pinned in
+  // One kernel per K-Means round type, each ONE primitive loop over a
+  // partition's VecChunks. KMeans packs its fit's (id, f) projection
+  // once (toRdd → VecChunk.pack, persisted MEMORY_AND_DISK like
+  // Dataset.cache) and every round reads those chunks: a round is a
+  // single-stage job with no Catalyst plan, no exchange, no encoder
+  // and no decode of a columnar cache back into UnsafeRows. Public
+  // step() packs its rows as it streams them, one chunk live per
+  // task. A task returns O(k·d) numbers, except the k-means‖ parity
+  // cost (its sorted d² values) and draw (its sampled rows). Same
+  // arithmetic as the twins in KMeansTwins (the SQL inits and rounds,
+  // and the row kernels over the cached projection), pinned in
   // KMeansSpec.
 
-  /** One partition's Lloyd sums. `fIdx` holds f (array<double>); each
-    * row goes to nearestCentroid's ascending-cid position, or to
-    * position 0 when malformed — NearestCentroidExpr's routing. A NULL
-    * f counts toward no mean; a length-d f with a NULL element adds
-    * that element as 0.0 (what VectorMeanAgg's encoder read); a
-    * length ≠ d refuses. */
-  def lloydSums(rows: Iterator[InternalRow], fIdx: Int, cents: Array[Double],
-                d: Int): LloydSums = {
+  /** nearestCentroid over the packed vector at v(o): the ascending-cid
+    * position of the nearest centroid, its d² left in best(0) — the
+    * value minSqDistToSet selects. Call with a whole row. Centroids
+    * are scanned four at a time: four independent add chains, each in
+    * nearestCentroid's order, so every d² is bit-identical while the
+    * chains overlap in the FPU; the four are then compared in
+    * ascending position. */
+  private def nearestAt(v: Array[Double], o: Int, cents: Array[Double], d: Int,
+                        best: Array[Double]): Int = {
+    val n = cents.length / d
+    var bestIdx = -1
+    var bst = 0.0
+    var c = 0
+    while (c + 4 <= n) {
+      val b0 = c * d
+      val b1 = b0 + d
+      val b2 = b1 + d
+      val b3 = b2 + d
+      var a0 = 0.0
+      var a1 = 0.0
+      var a2 = 0.0
+      var a3 = 0.0
+      var i = 0
+      while (i < d) {
+        val x = v(o + i)
+        val y0 = x - cents(b0 + i)
+        val y1 = x - cents(b1 + i)
+        val y2 = x - cents(b2 + i)
+        val y3 = x - cents(b3 + i)
+        a0 = a0 + y0 * y0
+        a1 = a1 + y1 * y1
+        a2 = a2 + y2 * y2
+        a3 = a3 + y3 * y3
+        i += 1
+      }
+      if (bestIdx == -1 || java.lang.Double.compare(a0, bst) < 0) { bst = a0; bestIdx = c }
+      if (java.lang.Double.compare(a1, bst) < 0) { bst = a1; bestIdx = c + 1 }
+      if (java.lang.Double.compare(a2, bst) < 0) { bst = a2; bestIdx = c + 2 }
+      if (java.lang.Double.compare(a3, bst) < 0) { bst = a3; bestIdx = c + 3 }
+      c += 4
+    }
+    while (c < n) {
+      val base = c * d
+      var acc = 0.0
+      var i = 0
+      while (i < d) {
+        val x = v(o + i) - cents(base + i)
+        acc = acc + x * x
+        i += 1
+      }
+      if (bestIdx == -1 || java.lang.Double.compare(acc, bst) < 0) { bst = acc; bestIdx = c }
+      c += 1
+    }
+    best(0) = bst
+    bestIdx
+  }
+
+  /** `f(chunk, row, d²)` for every row with a d² to `cents` — a whole
+    * row (MinSqDistToSetExpr nulls the others) — in row order. */
+  private def foreachSqDist(chunks: Iterator[VecChunk], cents: Array[Double], d: Int)
+                           (f: (VecChunk, Int, Double) => Unit): Unit = {
+    val best = new Array[Double](1)
+    chunks.foreach { ch =>
+      var r = 0
+      while (r < ch.rows) {
+        if (ch.whole(r, d)) {
+          nearestAt(ch.values, ch.off(r), cents, d, best)
+          f(ch, r, best(0))
+        }
+        r += 1
+      }
+    }
+  }
+
+  /** One partition's Lloyd sums. Each row goes to its nearest
+    * centroid's ascending-cid position, or to position 0 when it has a
+    * NULL element — NearestCentroidExpr's routing — and adds its
+    * values there (a NULL element as 0.0, what VectorMeanAgg's encoder
+    * read). A NULL vector counts toward no mean; a length ≠ d refuses.
+    * `cost` sums the rows' d² in row order from 0.0: the cost of
+    * `cents`, as Spark's sum(minSqDist) takes it per partition. */
+  private[graft] def lloydSums(chunks: Iterator[VecChunk], cents: Array[Double], d: Int): LloydSums = {
     val acc = new LloydSums(cents.length / d, d)
-    while (rows.hasNext) {
-      val r = rows.next()
-      if (!r.isNullAt(fIdx)) {
-        val v = r.getArray(fIdx)
-        require(v.numElements() == d,
-          s"ragged vector in group: expected dim $d, got ${v.numElements()}")
-        acc.add(if (centValid(v, d)) nearestCentroid(v, cents, d) else 0, v)
+    val best = new Array[Double](1)
+    chunks.foreach { ch =>
+      var r = 0
+      while (r < ch.rows) {
+        if (!ch.has(r, VecChunk.NullVec)) {
+          require(ch.len(r) == d, s"ragged vector in group: expected dim $d, got ${ch.len(r)}")
+          if (ch.has(r, VecChunk.NullElem)) acc.add(0, ch.values, ch.off(r))
+          else {
+            acc.add(nearestAt(ch.values, ch.off(r), cents, d, best), ch.values, ch.off(r))
+            acc.cost += best(0)
+          }
+        }
+        r += 1
       }
     }
     acc
   }
 
   /** One partition's k-means++ race entry: the minimum (key, id) over
-    * rows (id: long at 0, f: array<double> at 1) with key =
-    * -ln(u)/d², u the md5 unit of `prefix + id`, d² the squared
-    * distance to the nearest chosen centroid — or nothing. The SQL
-    * form's exclusions, in its arithmetic: a NULL id (u is NULL), a
-    * NULL or malformed f (d² is NULL), d² ≤ 0, u ≤ 0 (Spark's Log is
-    * StrictMath.log and NULL there) and a NaN key. Equal (key, id)
-    * keep the earlier row. The digest is one per partition and u is
-    * computed only for rows that survive the d² test. */
-  def plusPlusRace(rows: Iterator[InternalRow], chosen: Array[Double], d: Int,
+    * rows with key = -ln(u)/d², u the md5 unit of `prefix + id`, d²
+    * the squared distance to the nearest chosen centroid — or nothing.
+    * The SQL form's exclusions, in its arithmetic: a NULL id (u is
+    * NULL), a NULL or malformed f (d² is NULL), d² ≤ 0, u ≤ 0 (Spark's
+    * Log is StrictMath.log and NULL there) and a NaN key. Equal
+    * (key, id) keep the earlier row. u is computed only for rows that
+    * survive the d² test. */
+  private[graft] def plusPlusRace(chunks: Iterator[VecChunk], chosen: Array[Double], d: Int,
                    prefix: String): Iterator[(Double, Long, Array[Double])] = {
-    val md = Md5Unit.newDigest()
+    val unit = new Md5Unit.IdUnits(prefix)
+    val best = new Array[Double](1)
     var found = false
     var bestKey = 0.0
     var bestId = 0L
     var bestF: Array[Double] = null
-    while (rows.hasNext) {
-      val r = rows.next()
-      if (!r.isNullAt(0) && !r.isNullAt(1)) {
-        val v = r.getArray(1)
-        if (centValid(v, d)) {
-          val d2 = minSqDistToSet(v, chosen, d)
+    chunks.foreach { ch =>
+      var r = 0
+      while (r < ch.rows) {
+        if (!ch.has(r, VecChunk.NullId) && ch.whole(r, d)) {
+          nearestAt(ch.values, ch.off(r), chosen, d, best)
+          val d2 = best(0)
           if (d2 > 0.0) {
-            val id = r.getLong(0)
-            val u = Md5Unit.unit(md, prefix + id)
+            val id = ch.ids(r)
+            val u = unit(id)
             if (u > 0.0) {
               val key = -StrictMath.log(u) / d2
               if (!key.isNaN &&
                   (!found || key < bestKey || (key == bestKey && id < bestId))) {
-                found = true; bestKey = key; bestId = id; bestF = v.toDoubleArray()
+                found = true; bestKey = key; bestId = id; bestF = ch.vector(r)
               }
             }
           }
         }
+        r += 1
       }
     }
     if (found) Iterator.single((bestKey, bestId, bestF)) else Iterator.empty
   }
+
+  /** One partition's round-0 pick of k-means++ / k-means‖: the least
+    * (u, id), u the md5 unit of `prefix + id`, over rows with a
+    * non-NULL id and vector (any length) — or nothing. Equal pairs
+    * keep the earlier row. */
+  private[graft] def leastUnit(chunks: Iterator[VecChunk],
+                prefix: String): Iterator[(Double, Long, Array[Double])] = {
+    val unit = new Md5Unit.IdUnits(prefix)
+    var found = false
+    var bestU = 0.0
+    var bestId = 0L
+    var bestF: Array[Double] = null
+    chunks.foreach { ch =>
+      var r = 0
+      while (r < ch.rows) {
+        if (!ch.has(r, VecChunk.NullId | VecChunk.NullVec)) {
+          val id = ch.ids(r)
+          val u = unit(id)
+          if (!found || u < bestU || (u == bestU && id < bestId)) {
+            found = true; bestU = u; bestId = id; bestF = ch.vector(r)
+          }
+        }
+        r += 1
+      }
+    }
+    if (found) Iterator.single((bestU, bestId, bestF)) else Iterator.empty
+  }
+
+  /** One partition's cost of `cents`: the rows' d² summed in row order
+    * from 0.0, as Spark's sum aggregate takes it per partition. */
+  private[graft] def costSum(chunks: Iterator[VecChunk], cents: Array[Double], d: Int): Double = {
+    var s = 0.0
+    foreachSqDist(chunks, cents, d)((_, _, d2) => s += d2)
+    s
+  }
+
+  /** One partition's d² values to `cents`, sorted ascending (NaN last,
+    * as array_sort) — the k-means‖ parity cost's share of its fold. */
+  private[graft] def sortedSqDists(chunks: Iterator[VecChunk], cents: Array[Double], d: Int): Array[Double] = {
+    val b = new scala.collection.mutable.ArrayBuilder.ofDouble
+    foreachSqDist(chunks, cents, d)((_, _, d2) => b += d2)
+    val out = b.result()
+    java.util.Arrays.sort(out)
+    out
+  }
+
+  /** One partition's k-means‖ draw, in row order: the rows with a
+    * non-NULL id and a d² to `cents` whose md5 unit u of `prefix + id`
+    * is below p = least(1, l·d²/cost) — Spark's least, which takes 1
+    * over a NaN. */
+  private[graft] def parallelDraw(chunks: Iterator[VecChunk], cents: Array[Double], d: Int, prefix: String,
+                   l: Double, cost: Double): Iterator[(Long, Array[Double])] = {
+    val unit = new Md5Unit.IdUnits(prefix)
+    val out = Vector.newBuilder[(Long, Array[Double])]
+    foreachSqDist(chunks, cents, d) { (ch, r, d2) =>
+      if (!ch.has(r, VecChunk.NullId)) {
+        val x = l * d2 / cost
+        val p = if (x < 1.0) x else 1.0
+        val id = ch.ids(r)
+        if (unit(id) < p) out += id -> ch.vector(r)
+      }
+    }
+    out.result().iterator
+  }
+
+  /** One partition's row count per nearest ascending-cid position —
+    * NearestCentroidExpr's routing, which sends a NULL or malformed
+    * vector to position 0. */
+  private[graft] def nearestCounts(chunks: Iterator[VecChunk], cents: Array[Double], d: Int): Array[Long] = {
+    val n = new Array[Long](cents.length / d)
+    val best = new Array[Double](1)
+    chunks.foreach { ch =>
+      var r = 0
+      while (r < ch.rows) {
+        n(if (ch.whole(r, d)) nearestAt(ch.values, ch.off(r), cents, d, best) else 0) += 1L
+        r += 1
+      }
+    }
+    n
+  }
+
+  /** One partition's first k rows with a non-NULL vector in KeyedRow
+    * order. `rand`, when given, is the partition's rand(seed) stream
+    * (RandGlue.stream): it draws one double per row, NULL vector or
+    * not, as Rand does in a projection; without it every draw is 0.0.
+    * Only rows that beat the current k-th enter the buffer, so a
+    * partition in id order copies k vectors. */
+  private[graft] def leastRows(chunks: Iterator[VecChunk], k: Int, rand: java.util.Random): Array[KeyedRow] = {
+    if (k <= 0) return Array.empty
+    var buf = Vector.empty[KeyedRow]
+    var kth: KeyedRow = null
+    def trim(): Unit = { buf = buf.sorted(KeyedRow.order).take(k); if (buf.length == k) kth = buf.last }
+    chunks.foreach { ch =>
+      var r = 0
+      while (r < ch.rows) {
+        val draw = if (rand == null) 0.0 else rand.nextDouble()
+        if (!ch.has(r, VecChunk.NullVec)) {
+          val nullId = ch.has(r, VecChunk.NullId)
+          if (kth == null || KeyedRow.before(draw, nullId, ch.ids(r), kth)) {
+            buf :+= KeyedRow(draw, nullId, ch.ids(r), ch.vector(r))
+            if (buf.length >= 2 * k) trim()
+          }
+        }
+        r += 1
+      }
+    }
+    trim()
+    buf.toArray
+  }
+
+  /** One partition's rows whose id is in `ids`, in row order, a NULL
+    * vector as null. */
+  private[graft] def rowsWithIds(chunks: Iterator[VecChunk], ids: Set[Long]): Iterator[(Long, Array[Double])] =
+    chunks.flatMap { ch =>
+      (0 until ch.rows).iterator
+        .filter(r => !ch.has(r, VecChunk.NullId) && ids(ch.ids(r)))
+        .map(r => ch.ids(r) -> (if (ch.has(r, VecChunk.NullVec)) null else ch.vector(r)))
+    }
 
   /** Encode validity: vector long enough for all m subspaces and no
     * null element in the used range; extra trailing elements are
@@ -753,22 +954,24 @@ object VectorKernels {
 }
 
 /** Per-cluster sums of one Lloyd step: sums(c·d + i) and n(c) over the
-  * vectors at ascending-cid position c. A cluster's first vector is
-  * adopted (not added to 0.0, so -0.0 survives) and later ones added
-  * in arrival order; partials merge the same way, in the order given —
+  * vectors at ascending-cid position c, and `cost`, the rows' summed
+  * d² to the step's centroids. A cluster's first vector is adopted
+  * (not added to 0.0, so -0.0 survives) and later ones added in
+  * arrival order; partials merge the same way, in the order given —
   * VectorMeanAgg's reduce/merge arithmetic without its encoder. */
 final class LloydSums(val k: Int, val d: Int) extends Serializable {
   val sums = new Array[Double](k * d)
   val n = new Array[Long](k)
+  var cost = 0.0
 
-  /** Call with v of length d; a NULL element adds as 0.0. */
-  def add(c: Int, v: ArrayData): Unit = {
+  /** Adds the d values at v(o) to position c. */
+  def add(c: Int, v: Array[Double], o: Int): Unit = {
     val base = c * d
-    var i = 0
-    if (n(c) == 0L)
-      while (i < d) { sums(base + i) = if (v.isNullAt(i)) 0.0 else v.getDouble(i); i += 1 }
-    else
-      while (i < d) { sums(base + i) += (if (v.isNullAt(i)) 0.0 else v.getDouble(i)); i += 1 }
+    if (n(c) == 0L) System.arraycopy(v, o, sums, base, d)
+    else {
+      var i = 0
+      while (i < d) { sums(base + i) += v(o + i); i += 1 }
+    }
     n(c) += 1L
   }
 
@@ -784,9 +987,29 @@ final class LloydSums(val k: Int, val d: Int) extends Serializable {
       }
       c += 1
     }
+    cost += o.cost
     this
   }
 
   /** Element-wise mean of position c — call with n(c) > 0. */
   def mean(c: Int): Array[Double] = Array.tabulate(d)(i => sums(c * d + i) / n(c))
+}
+
+/** A row leastRows keeps: its rand draw (0.0 without one), its id
+  * (NULL as nullId) and a copy of its vector. */
+private[graft] final case class KeyedRow(draw: Double, nullId: Boolean, id: Long, f: Array[Double])
+
+private[graft] object KeyedRow {
+  /** (draw, id) ascending with NULL ids first — orderBy(rand(seed),
+    * id) and orderBy(id); a stable sort keeps equal keys in row order. */
+  val order: Ordering[KeyedRow] = new Ordering[KeyedRow] {
+    def compare(a: KeyedRow, b: KeyedRow): Int =
+      if (before(a.draw, a.nullId, a.id, b)) -1
+      else if (before(b.draw, b.nullId, b.id, a)) 1
+      else 0
+  }
+
+  def before(draw: Double, nullId: Boolean, id: Long, b: KeyedRow): Boolean =
+    draw < b.draw || (draw == b.draw &&
+      (if (nullId || b.nullId) nullId && !b.nullId else id < b.id))
 }

@@ -10,6 +10,15 @@ import graft.operators.KMeans._
 
 object KMeansSpec {
   final case class Seen(unpersisted: Set[Int], jobs: Seq[SparkListenerJobStart])
+
+  /** Relations in the shared session's cache manager — read inside
+    * tasks, which run in this JVM under local[N]. The count is
+    * private[sql]; its JVM method is public. */
+  def cachedRelations(): Int = {
+    val cm = TestSpark.spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
+  }
 }
 
 class KMeansSpec extends AnyFunSuite {
@@ -520,7 +529,7 @@ class KMeansSpec extends AnyFunSuite {
       val proj = df.repartition(parts)
         .select($"id".cast("long").as("id"), $"features".cast("array<double>").as("f"))
       for (seed <- 1L to 3L; round <- 1 to 4) {
-        val a = KMeans.plusPlusRound(proj, soFar, seed, round)
+        val a = KMeans.plusPlusRound(KMeans.packed(proj), soFar, seed, round)
         val b = KMeansTwins.plusPlusRoundSql(proj, soFar, seed, round)
         assert(a.map(p => p._1 -> p._2.toSeq.map(java.lang.Double.doubleToRawLongBits)) ==
           b.map(p => p._1 -> p._2.toSeq.map(java.lang.Double.doubleToRawLongBits)),
@@ -580,6 +589,243 @@ class KMeansSpec extends AnyFunSuite {
         assert(j.stageInfos.size == 1, s"job ${j.jobId} has ${j.stageInfos.size} stages"))
       // every round reads the one cache, which reads the input once
       assert(reads.value == 180L, s"input rows read: ${reads.value}")
+    }
+  }
+
+  /** The root cause of a failure, as "class: message" — a task's
+    * refusal arrives wrapped in a SparkException that names the task. */
+  private def failure(e: Throwable): String = {
+    var c = e
+    while (c.getCause != null) c = c.getCause
+    s"${c.getClass.getName}: ${c.getMessage}"
+  }
+
+  private def tried(body: => Centroids): Either[String, Seq[(Int, Seq[Long])]] =
+    scala.util.Try(body).toEither.left.map(failure).map(bits)
+
+  private def fitted(body: => KMeansModel)
+      : Either[String, (Seq[(Int, Seq[Long])], Int, Boolean, Seq[Double])] =
+    scala.util.Try(body).toEither.left.map(failure)
+      .map(m => (bits(m.centroids), m.iterations, m.converged, m.costHistory))
+
+  /** Equal refusals, or bit-equal centroids, iterations and converged
+    * with costs within 1e-12 relative (a NaN cost matches a NaN). */
+  private def assertSameFit(
+      a: Either[String, (Seq[(Int, Seq[Long])], Int, Boolean, Seq[Double])],
+      b: Either[String, (Seq[(Int, Seq[Long])], Int, Boolean, Seq[Double])],
+      ctx: String): Unit = {
+    assert(a.map(m => (m._1, m._2, m._3)) == b.map(m => (m._1, m._2, m._3)), ctx)
+    for (x <- a; y <- b) {
+      assert(x._4.length == y._4.length, ctx)
+      x._4.zip(y._4).foreach { case (p, q) =>
+        assert((p.isNaN && q.isNaN) || math.abs(p - q) <= 1e-12 * math.abs(q), s"$ctx: cost $p vs $q")
+      }
+    }
+  }
+
+  /** RandomRows' skip rule: the twin's rand(seed) draw over
+    * every row, NULL-vector rows then skipped. */
+  private def randomRowsSkippingNull(df: org.apache.spark.sql.DataFrame, k: Int,
+                                     seed: Long): Centroids = {
+    import org.apache.spark.sql.functions.rand
+    df.select($"id".cast("long").as("id"), $"features".cast("array<double>").as("f"))
+      .withColumn("r", rand(seed)).filter($"f".isNotNull).orderBy($"r", $"id").limit(k)
+      .collect().zipWithIndex.map { case (r, i) => (i + 1) -> r.getSeq[Double](1).toArray }
+  }
+
+  /** 60 real-valued 3-d rows in three blobs, then one of each row a
+    * round must handle: duplicate points, -0.0, NaN, a NULL element, a
+    * ragged vector, a NULL vector, a NULL id with and without one. */
+  private lazy val awkward = {
+    val r = new scala.util.Random(23)
+    def v(xs: java.lang.Double*): Seq[java.lang.Double] = xs
+    val base = (1 to 60).map { i =>
+      val b = (i % 3) * 4.0
+      (Long.box(i.toLong), v(Seq.fill(3)(Double.box(b + r.nextGaussian())): _*))
+    }
+    val odd: Seq[(java.lang.Long, Seq[java.lang.Double])] = Seq(
+      (101L, base(0)._2), (102L, base(1)._2), (103L, base(2)._2),
+      (104L, v(-0.0, -0.0, -0.0)), (105L, v(0.0, -0.0, 0.0)),
+      (106L, v(Double.NaN, 1.0, 1.0)),
+      (107L, v(1.0, null, 2.0)),
+      (108L, v(1.0, 2.0)),
+      (109L, null),
+      (null, v(5.0, 5.0, 5.0)),
+      (null, null))
+    (base ++ odd).toDF("id", "features")
+  }
+
+  test("fit and initCentroids ≡ the cached-projection twin, bit for bit, every Init, at 1, 4 and 7 partitions") {
+    val inits = Seq(ExplicitIds(Seq(3L, 104L, 107L, 101L)), RandomRows(4, 5), FirstK(4),
+      PlusPlus(4, 5), Parallel(4, 5, rounds = 3), Parallel(4, 5, rounds = 3, sortedCost = true))
+    // the whole fixture refuses every Lloyd step (its ragged row);
+    // without the NaN row k-means‖ draws by d², not every row
+    val inputs = Seq("awkward" -> awkward,
+      "no ragged row" -> awkward.filter($"id".isNull || $"id" =!= 108L),
+      "no ragged or NaN row" -> awkward.filter($"id".isNull || !$"id".isin(106L, 108L)))
+    var npes = 0
+    var fits = 0
+    for ((name, input) <- inputs; parts <- Seq(1, 4, 7); init <- inits) {
+      val ctx = s"$init on $name at $parts partitions"
+      val df = input.repartition(parts)
+      val twinInit = tried(KMeansTwins.initCentroids(df, "id", "features", init))
+      val gotInit = tried(KMeans.initCentroids(df, "id", "features", init))
+      val gotFit = fitted(KMeans.fit(df, "id", "features", init, maxIter = 4, trackCost = true))
+      if (gotFit.isRight) fits += 1
+      if (twinInit.left.exists(_.startsWith("java.lang.NullPointerException"))) {
+        // the twin picked a NULL vector: FirstK and RandomRows skip it
+        npes += 1
+        val want = scala.util.Try(init match {
+          case FirstK(k) => KMeansTwins.initCentroids(df.filter($"features".isNotNull), "id",
+            "features", FirstK(k))
+          case RandomRows(k, seed) => randomRowsSkippingNull(df, k, seed)
+          case other => fail(s"$ctx: the twin threw a driver NPE for $other")
+        })
+        assert(gotInit == want.toEither.left.map(failure).map(bits), ctx)
+        val wantFit = want.toEither.left.map(failure).flatMap(c => fitted(KMeansTwins.fit(df,
+          "id", "features", init, maxIter = 4, trackCost = true, start = Some(c))))
+        assertSameFit(gotFit, wantFit, ctx)
+      } else {
+        assert(gotInit == twinInit, ctx)
+        assertSameFit(gotFit, fitted(KMeansTwins.fit(df, "id", "features", init, maxIter = 4,
+          trackCost = true)), ctx)
+      }
+    }
+    // FirstK's NULL ids sort first, and one of them has no vector
+    assert(npes >= 9, s"only $npes NULL-vector picks")
+    // every fit without the ragged row runs its 4 steps, or converges
+    assert(fits == 36, s"$fits fits returned a model")
+  }
+
+  test("FirstK and RandomRows skip NULL-vector rows; ExplicitIds refuses one by id (no driver NPE)") {
+    val df = Seq((1L, null: Seq[Double]), (2L, Seq(2.0, 0.0)), (3L, Seq(3.0, 0.0)),
+      (4L, null: Seq[Double]), (5L, Seq(5.0, 0.0)), (6L, Seq(6.0, 0.0))).toDF("id", "features")
+      .repartition(2)
+    def npe(body: => Centroids) =
+      assert(tried(body).left.exists(_.startsWith("java.lang.NullPointerException")))
+    npe(KMeansTwins.initCentroids(df, "id", "features", FirstK(2)))
+    assert(KMeans.initCentroids(df, "id", "features", FirstK(2)).toSeq.map(c => c._1 -> c._2.toSeq) ==
+      Seq(1 -> Seq(2.0, 0.0), 2 -> Seq(3.0, 0.0)))
+    for (seed <- 1L to 8L) {
+      val got = KMeans.initCentroids(df, "id", "features", RandomRows(3, seed))
+      assert(bits(got) == bits(randomRowsSkippingNull(df, 3, seed)), s"seed $seed")
+      assert(got.length == 3 && got.forall(_._2 != null), s"seed $seed")
+    }
+    // every draw takes all four vectors; the twin met a NULL one first
+    // for some seed
+    assert((1L to 8L).exists(s => tried(KMeansTwins.initCentroids(df, "id", "features",
+      RandomRows(4, s))).isLeft))
+    npe(KMeansTwins.initCentroids(df, "id", "features", ExplicitIds(Seq(2L, 4L))))
+    for (body <- Seq(() => KMeans.initCentroids(df, "id", "features", ExplicitIds(Seq(2L, 4L))),
+                     () => KMeans.fit(df, "id", "features", ExplicitIds(Seq(2L, 4L)), 2).centroids)) {
+      val e = intercept[IllegalArgumentException](body())
+      assert(e.getMessage.contains("initial centroid id 4 has a NULL vector"), e.getMessage)
+    }
+    // fit takes the same picks
+    assert(bits(KMeans.fit(df, "id", "features", FirstK(2), 1).centroids) ==
+      bits(KMeans.step(df, "features", KMeans.initCentroids(df, "id", "features", FirstK(2)))))
+  }
+
+  test("chunk boundaries: partitions of ChunkRows - 1, ChunkRows and ChunkRows + 1 rows sum as one unchunked block") {
+    import graft.functions.{LloydSums, VecChunk, VectorKernels}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val rnd = new scala.util.Random(3)
+    val cents = Array(0.0, 0.0, 0.0, 5.0, 5.0, 5.0, -5.0, 2.0, 9.0)
+    def same(a: LloydSums, b: LloydSums): Unit = {
+      assert(a.n.toSeq == b.n.toSeq)
+      assert(a.sums.toSeq.map(java.lang.Double.doubleToRawLongBits) ==
+        b.sums.toSeq.map(java.lang.Double.doubleToRawLongBits))
+      assert(java.lang.Double.doubleToRawLongBits(a.cost) ==
+        java.lang.Double.doubleToRawLongBits(b.cost))
+    }
+    for (n <- Seq(VecChunk.Rows - 1, VecChunk.Rows, VecChunk.Rows + 1)) {
+      val rows: Seq[(java.lang.Long, Array[java.lang.Double])] = (0 until n).map { i =>
+        val f: Array[java.lang.Double] =
+          if (i % 97 == 5) null
+          else Array.tabulate(3)(j => if (i % 89 == 7 && j == 1) null else Double.box(rnd.nextGaussian() * 4))
+        (if (i % 101 == 3) null else Long.box(i.toLong)) -> f
+      }
+      def internal: Iterator[InternalRow] = rows.iterator.map { case (id, f) =>
+        new GenericInternalRow(Array[Any](id, if (f == null) null else new GenericArrayData(f.map(x => x: Any))))
+      }
+      val chunks = VecChunk.pack(internal, 0, 1).toVector
+      assert(chunks.map(_.rows) == Seq(n.min(VecChunk.Rows)) ++ (if (n > VecChunk.Rows) Seq(1) else Nil))
+      // the same rows as one block, built by hand
+      val off = rows.scanLeft(0)((o, r) => o + (if (r._2 == null) 0 else 3)).toArray
+      val whole = new VecChunk(rows.map(r => if (r._1 == null) 0L else r._1.longValue).toArray, off,
+        rows.flatMap(r => Option(r._2).toSeq.flatMap(_.map(x => if (x == null) 0.0 else x.doubleValue))).toArray,
+        rows.map { case (id, f) =>
+          ((if (id == null) VecChunk.NullId else 0) | (if (f == null) VecChunk.NullVec else 0) |
+            (if (f != null && f.contains(null)) VecChunk.NullElem else 0)).toByte
+        }.toArray)
+      assert(chunks.flatMap(_.flags).toSeq == whole.flags.toSeq)
+      same(VectorKernels.lloydSums(chunks.iterator, cents, 3),
+        VectorKernels.lloydSums(Iterator.single(whole), cents, 3))
+      assert(VectorKernels.costSum(chunks.iterator, cents, 3) ==
+        VectorKernels.costSum(Iterator.single(whole), cents, 3))
+      assert(VectorKernels.sortedSqDists(chunks.iterator, cents, 3).toSeq ==
+        VectorKernels.sortedSqDists(Iterator.single(whole), cents, 3).toSeq)
+      assert(VectorKernels.nearestCounts(chunks.iterator, cents, 3).toSeq ==
+        VectorKernels.nearestCounts(Iterator.single(whole), cents, 3).toSeq)
+      // and through Spark: one partition of n integer rows, the twin exact
+      val df = spark.range(n).select(
+        org.apache.spark.sql.functions.array(($"id" % 7).cast("double"), ($"id" % 11).cast("double"),
+          ($"id" % 13).cast("double")).as("f")).repartition(1)
+      val ic: Centroids = Array(1 -> Array(0.0, 0.0, 0.0), 2 -> Array(6.0, 10.0, 12.0))
+      assert(bits(KMeans.step(df, "f", ic)) == bits(KMeansTwins.stepSql(df, "f", ic)), s"$n rows")
+    }
+  }
+
+  test("the packer yields its first chunk after at most ChunkRows rows") {
+    import graft.functions.VecChunk
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    var consumed = 0
+    val rows = Iterator.range(0, 5 * VecChunk.Rows / 2).map { i =>
+      consumed += 1
+      new GenericInternalRow(Array[Any](i.toLong, new GenericArrayData(Array[Any](i.toDouble)))): InternalRow
+    }
+    val chunks = VecChunk.pack(rows, 0, 1)
+    assert(consumed == 0)
+    assert(chunks.next().rows == VecChunk.Rows)
+    assert(consumed <= VecChunk.Rows, s"read $consumed rows for the first chunk")
+    assert(chunks.map(_.rows).toSeq == Seq(VecChunk.Rows, VecChunk.Rows / 2))
+  }
+
+  test("no fit or init registers an InMemoryRelation: every round reads the packed chunks") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val before = KMeansSpec.cachedRelations()
+    val grew = spark.sparkContext.longAccumulator("kmeans-spec-cache-probe")
+    // the probe runs as the fit reads its input, where a cached
+    // projection would already be registered
+    val probe = udf { (id: Long) => if (KMeansSpec.cachedRelations() != before) grew.add(1L); id }
+    val df = intBlobs.repartition(4).withColumn("id", probe(col("id")))
+    for (init <- Seq(ExplicitIds(Seq(1L, 2L, 3L)), RandomRows(3, 1), FirstK(3), PlusPlus(3, 1),
+                     Parallel(3, 1, rounds = 2), Parallel(3, 1, rounds = 2, sortedCost = true))) {
+      KMeans.fit(df, "id", "features", init, maxIter = 2, trackCost = true)
+      KMeans.initCentroids(df, "id", "features", init)
+      assert(grew.value == 0L, s"$init: a relation was cached while the input was read")
+      assert(KMeansSpec.cachedRelations() == before, s"$init")
+    }
+  }
+
+  test("fit(Parallel(k, rounds = r), trackCost, maxIter = n): 2r + n + 3 single-stage jobs") {
+    // round 0, a cost and a draw per round, the weight count, n Lloyd
+    // steps (each also costs the centroids it starts from) and the
+    // final cost
+    for ((r, n) <- Seq((2, 2), (3, 1))) {
+      var m: KMeansModel = null
+      val seen = seenDuring {
+        m = KMeans.fit(intBlobs, "id", "features", Parallel(3, seed = 11, rounds = r), maxIter = n,
+          trackCost = true)
+      }
+      assert(m.iterations == n && m.costHistory.length == n)
+      assert(seen.jobs.size == 2 * r + n + 3, s"r=$r, n=$n: ${seen.jobs.size} jobs")
+      seen.jobs.foreach(j =>
+        assert(j.stageInfos.size == 1, s"job ${j.jobId} has ${j.stageInfos.size} stages"))
     }
   }
 }

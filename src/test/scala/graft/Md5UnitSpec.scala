@@ -99,4 +99,18 @@ class Md5UnitSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("md5 unit: IdUnits(prefix)(id) == unit(prefix + id), edge and random ids") {
+    val md = Md5Unit.newDigest()
+    val r = new scala.util.Random(9)
+    val ids = Seq(0L, 1L, -1L, 9L, 10L, -10L, 99L, 100L, Long.MaxValue, Long.MinValue,
+      Long.MinValue + 1, Int.MaxValue.toLong + 1) ++ Seq.fill(20000)(r.nextLong() >> r.nextInt(64))
+    for (prefix <- Seq("", "7:0:", "123456789:42:", "é:3:")) {
+      val units = new Md5Unit.IdUnits(prefix)
+      ids.foreach { id =>
+        assert(java.lang.Double.doubleToRawLongBits(units(id)) ==
+          java.lang.Double.doubleToRawLongBits(Md5Unit.unit(md, prefix + id)), s"'$prefix' + $id")
+      }
+    }
+  }
 }
