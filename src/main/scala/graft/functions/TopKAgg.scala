@@ -79,17 +79,22 @@ object TopKAgg {
     * zero runtime cost. */
   def requireLongCastableId(df: org.apache.spark.sql.DataFrame,
                             idCol: String, op: String): Unit = {
-    import org.apache.spark.sql.types._
     val dt = df.schema(idCol).dataType
-    val ok = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case d: DecimalType => d.scale == 0
-      case _ => false
-    }
-    require(ok,
+    require(longCastable(dt),
       s"$op needs a long-castable id column (TopKAgg race pairs are " +
         s"(long, double)); '$idCol' is ${dt.simpleString} — string/UUID ids " +
         "cast to NULL and fractional ids truncate, both silently; hash to a " +
         "long (xxhash64) or use an integral surrogate id")
+  }
+
+  /** Whether cast("long") keeps every value of `dt` exact: the
+    * integral types and scale-0 decimals. */
+  private[graft] def longCastable(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case d: DecimalType => d.scale == 0
+      case _ => false
+    }
   }
 }

@@ -366,22 +366,26 @@ object Dedup {
     * components give the one-representative-per-cluster semantics
     * (the component label IS the cluster's minimum id).
     *
-    * Each round: one hash join (edge propagation) + one partial-agg
-    * min that also keeps each id's previous label; labels only ever
-    * decrease, so a round changed something iff one of its rows has
-    * component < prev, and the loop stops after the first round where
-    * none has (Graph.iterate's convergent mode: one narrow scan of the
-    * round's checkpoint, no second plan). Every round, the stable one
-    * included, is one eager localCheckpoint. Rounds needed = graph
-    * diameter + the stable one; for near-dup clusters that is small
+    * Each round: the labels broadcast to the pair list (pinned with
+    * both orientations and a self-pair per id, hash-partitioned on its
+    * first id), one grouped min per id over its pairs' labels that
+    * also keeps the id's previous label (its self-pair's), and a
+    * co-partitioned join with the pinned id table — one broadcast and
+    * no exchange (Graph.broadcastState prices the broadcast). Labels
+    * only ever decrease, so a round changed something iff one of its
+    * rows has component < prev, and the loop stops after the first
+    * round where none has (Graph.iterate's convergent mode: one narrow
+    * scan of the round's checkpoint, no second plan). Every round, the
+    * stable one included, is one eager localCheckpoint. Rounds needed
+    * = graph diameter + the stable one; for near-dup clusters that is small
     * (duplicates of a document are duplicates of each other — clusters
     * are near-cliques; the sf0.01 corpus's deepest chain is 3 nodes). For adversarial
     * long-path graphs the known fix is large-star/small-star
     * (Kiveris et al., "Connected Components in MapReduce and
     * Beyond", SoCC'14) at O(log²) rounds — not needed for dedup
     * workloads, noted here so the limit is a decision, not a
-    * surprise. Everything per-round is a standard shuffle: no
-    * driver-side graph, no collect.
+    * surprise. No driver-side graph; the only collects are the
+    * broadcast labels and the stop test.
     *
     * A NULL id connects nothing: it is labelled NULL, and its pairs
     * link none of their other ids (componentsStar's rule too).
@@ -390,29 +394,35 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, id1Col: String = "id1", id2Col: String = "id2",
                           maxIter: Int = 50): DataFrame = {
     // registerCache, not a bare persist: if an action inside the loop
-    // throws, releaseCaches() can still free the pinned table — the
-    // same failure-safe lifecycle as every other operator intermediate
-    val sym = registerCache(
-      pairs.select(col(id1Col).as("src"), col(id2Col).as("dst"))
-        .union(pairs.select(col(id2Col).as("src"), col(id1Col).as("dst")))
-        .distinct())
+    // throws, releaseCaches() can still free the pinned tables — the
+    // same failure-safe lifecycle as every other operator intermediate.
+    // Every id also pairs with itself, so a round's grouped min over an
+    // id's pairs sees its own label beside its neighbours'.
+    val sym = registerCache(Graph.partitionedOn(
+      pairs.select(explode(array(
+          Seq((id1Col, id2Col), (id2Col, id1Col), (id1Col, id1Col), (id2Col, id2Col))
+            .map { case (a, b) => struct(col(a).as("src"), col(b).as("dst")) }: _*)).as("__p"))
+        .select(col("__p.src").as("src"), col("__p.dst").as("dst")), "src")
+      .distinct())
     val edges = sym.filter(col("src").isNotNull && col("dst").isNotNull)
-    val init = sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("component"))
-    // iterate checkpoints every round: a round's plan reads the one
-    // before twice (propagation join, union), so uncut lineage grows
-    // as 2^rounds. Where a lost executor must not restart the whole
-    // loop, a reliable .checkpoint() is the same shape.
-    val (labels, done) = Graph.iterate(init, maxIter,
+    val nodes = registerCache(sym.select(col("src").as("id")).distinct())
+    val n = Graph.rows(nodes)
+    // iterate checkpoints every round, so a round's plan never nests
+    // the rounds before it. Where a lost executor must not restart the
+    // whole loop, a reliable .checkpoint() is the same shape.
+    val (labels, done) = Graph.iterate(nodes.select(col("id"), col("id").as("component")), maxIter,
         Some((out, _) => !Graph.anyRow(out, col("component") < col("prev")))) { (labels, _) =>
-      val prop = edges.join(labels, edges("dst") === labels("id"))
-        .select(edges("src").as("id"), labels("component"),
-          lit(null).cast(labels.schema("component").dataType).as("prev"))
-      labels.select(col("id"), col("component"), col("component").as("prev"))
-        .union(prop)
-        .groupBy("id").agg(min("component").as("component"), min("prev").as("prev"))
+      val mins = edges
+        .join(Graph.broadcastState(labels.select(col("id").as("dst"), col("component").as("__c")), n),
+          Seq("dst"))
+        .groupBy(col("src").as("id"))
+        .agg(min(col("__c")).as("component"),
+          min(when(col("src") === col("dst"), col("__c"))).as("prev"))
+      // the NULL id has no pairs to group: its label stays NULL
+      nodes.join(mins.hint("shuffle_hash"), Seq("id"), "left")
     }
     sym.unpersist(blocking = false)
+    nodes.unpersist(blocking = false)
     // a silent partial result would violate the one-label-per-
     // component contract downstream (dropNearDupClusters would keep
     // several "representatives" of one cluster) — refuse instead

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.VectorOps
 
@@ -15,15 +16,17 @@ import graft.functions.VectorOps
 object Graph {
 
   /** Shared edge prologue: named endpoints, self-loops dropped,
-    * optionally symmetrized, dedup'd — UNPINNED (callers that read
-    * the list more than once pin it). `castLong` aligns endpoint
-    * types with long-keyed seed relations (the bfsDistance-family
-    * convention). One implementation (review r15): six operators
-    * used to inline drifting copies of this block, and the drift is
-    * exactly what produced labelComplete's seed-cast-without-
-    * edge-cast silent no-op. */
+    * optionally symmetrized, dedup'd, hash-partitioned on `key` (see
+    * partitionedOn) — UNPINNED (callers that read the list more than
+    * once pin it). The dedup runs on the partitioned rows, so the list
+    * shuffles once. `castLong` aligns endpoint types with long-keyed
+    * seed relations (the bfsDistance-family convention). One
+    * implementation (review r15): six operators used to inline
+    * drifting copies of this block, and the drift is exactly what
+    * produced labelComplete's seed-cast-without-edge-cast silent
+    * no-op. */
   private def edgeList(edges: DataFrame, srcCol: String, dstCol: String,
-                       undirected: Boolean,
+                       undirected: Boolean, key: String,
                        castLong: Boolean = false): DataFrame = {
     if (castLong) {
       // loud, not silent: a string/UUID endpoint would cast to NULL
@@ -41,12 +44,44 @@ object Graph {
     val oriented =
       if (undirected) base.union(base.select(col("dst").as("src"), col("src").as("dst")))
       else base
-    oriented.distinct()
+    partitionedOn(oriented, key).distinct()
   }
 
-  /** src ∪ dst of an edge list, distinct — UNPINNED. */
-  private def nodeSet(e: DataFrame): DataFrame =
-    e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
+  /** `df` hash-partitioned on `key` into spark.sql.shuffle.partitions
+    * partitions. The count is explicit, so adaptive execution never
+    * coalesces it: a grouped fold on `key` over the pinned result, and
+    * a shuffle-hash join of that fold with a pinned frame partitioned
+    * the same way (a node table), run with no exchange. A checkpoint
+    * keeps no partitioning, so a round joins its fold to a pinned
+    * table, never to the checkpointed state it read. */
+  private[operators] def partitionedOn(df: DataFrame, key: String): DataFrame =
+    df.repartition(SQLConf.get.numShufflePartitions, col(key))
+
+  /** (id, degree) for every endpoint of `e`: its out-degree, 0 for a
+    * node with in-edges only. One grouped aggregate, repartitioned on
+    * id so its frame co-partitions with a round's fold — UNPINNED. */
+  private def degrees(e: DataFrame): DataFrame =
+    partitionedOn(
+      e.select(explode(array(
+          struct(col("src").as("id"), lit(true).as("out")),
+          struct(col("dst").as("id"), lit(false).as("out")))).as("__e"))
+        .select(col("__e.id").as("id"), col("__e.out").as("out")),
+      "id")
+      .groupBy("id").agg(count(when(col("out"), true)).as("degree"))
+
+  /** A vertex state on its way to a pinned edge list, `rows` rows at
+    * most: hinted to broadcast when that many rows fit Spark's own
+    * broadcast threshold (spark.sql.autoBroadcastJoinThreshold), so
+    * the edge side keeps its partitioning and the round's fold runs
+    * with no exchange. Spark cannot price this itself: a checkpointed
+    * round estimates its size as the product of its join inputs. Past
+    * the threshold Spark plans the join as it would unhinted, with the
+    * same result. A round reads its state once, so that estimate
+    * grows by one factor a round, not by its square. */
+  private[operators] def broadcastState(state: DataFrame, rows: Long): DataFrame =
+    if (rows * (8L + state.schema.defaultSize) <= SQLConf.get.autoBroadcastJoinThreshold)
+      broadcast(state)
+    else state
 
   /** Canonical undirected simple graph: long-cast (least, greatest)
     * pairs as (a, b), self-loops dropped, dedup'd — UNPINNED. */
@@ -95,6 +130,9 @@ object Graph {
     go(init, 1)
   }
 
+  /** The row count of `df`: one job, no shuffle. */
+  private[operators] def rows(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
   /** Whether some row of `df` meets `cond` — a convergent round's stop
     * test. Over a checkpointed round this is one job with no shuffle,
     * each task stopping at its first matching row. */
@@ -102,32 +140,30 @@ object Graph {
     df.filter(cond).queryExecution.toRdd
       .mapPartitions(rows => Iterator.single(rows.hasNext)).collect().contains(true)
 
-  /** Shared rank-iteration prep: dedup'd (optionally symmetrized)
-    * edge list + per-node out-degrees, both pinned — the opening
-    * moves of pageRank and personalizedPageRank. */
+  /** Shared rank-iteration prep: the dedup'd (optionally
+    * symmetrized) edge list partitioned on dst, and every node's (id,
+    * degree), both pinned — the opening moves of pageRank and
+    * personalizedPageRank. */
   private def rankPrep(edges: DataFrame, srcCol: String, dstCol: String,
                        undirected: Boolean): (DataFrame, DataFrame) = {
-    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected))
-    val outDeg = e.groupBy("src").agg(count(lit(1)).cast("long").as("degree"))
-      .withColumnRenamed("src", "id")
-    val degs = Dedup.pin(nodeSet(e).join(outDeg, Seq("id"), "left")
-      .select(col("id"), coalesce(col("degree"), lit(0L)).as("degree")))
-    (e, degs)
+    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected, "dst"))
+    (e, Dedup.pin(degrees(e)))
   }
 
   /** One pageRank/PPR round over (id, pr, degree): pr'(v) = teleport
     * + d·Σ_{u→v} pr(u)/outdeg(u). `anchor` holds every node's (id,
-    * degree) and what `teleport` reads; degree rides in the frame, so
-    * a round is one join and one grouped sum. */
-  private def powerStep(e: DataFrame, anchor: DataFrame, teleport: Column,
+    * degree) and what `teleport` reads, partitioned as the fold on
+    * dst is; degree rides in the frame, so a round is one join of the
+    * `nodes` ranks onto the edges and one grouped sum, neither with an
+    * exchange while the ranks broadcast. */
+  private def powerStep(e: DataFrame, anchor: DataFrame, nodes: Long, teleport: Column,
                         damping: Double, sortedFold: Boolean)(ranks: DataFrame, r: Int): DataFrame = {
     val sums = e.join(
-        ranks.filter(col("degree") > 0L)
-          .select(col("id").as("src"), (col("pr") / col("degree")).as("c")),
+        broadcastState(ranks.filter(col("degree") > 0L)
+          .select(col("id").as("src"), (col("pr") / col("degree")).as("c")), nodes),
         Seq("src"))
-      .select(col("dst").as("id"), col("c"))
-      .groupBy("id").agg(foldedSum(col("c"), sortedFold).as("s"))
-    anchor.join(sums, Seq("id"), "left")
+      .groupBy(col("dst").as("id")).agg(foldedSum(col("c"), sortedFold).as("s"))
+    anchor.join(sums.hint("shuffle_hash"), Seq("id"), "left")
       .select(col("id"), (teleport + lit(damping) * coalesce(col("s"), lit(0.0))).as("pr"),
         col("degree"))
   }
@@ -149,12 +185,17 @@ object Graph {
     * stated here so the choice is visible; nodes with no in-edges
     * settle at the teleport floor (1-d)/N.
     *
-    * Scale shape: per round ONE hash join (edges × current ranks on
-    * src) + ONE grouped sum on dst — the same shuffle pair as a
-    * relational group-by, repeated `iters` times on a CACHED edge
-    * list (registered under Dedup's cache lifecycle). Degrees are
-    * computed once. No collect except the single node count N (one
-    * scalar). sortedFold=true folds each node's contributions in
+    * Scale shape: the prologue pins the dedup'd edge list
+    * hash-partitioned on dst (one shuffle) and every node's (id,
+    * degree) from ONE grouped aggregate partitioned on id (one more);
+    * N is that frame's row count (one job, no shuffle). A round then
+    * broadcasts the ranks (N rows) to the edges, folds them per dst
+    * and joins the sums to the pinned degrees co-partitioned (a
+    * shuffle-hash join): one broadcast and NO exchange per round.
+    * When N rows pass Spark's broadcast threshold, the join is planned
+    * as Spark would unhinted, with the same result (broadcastState).
+    * Both pins are registered under Dedup's cache lifecycle.
+    * sortedFold=true folds each node's contributions in
     * ascending order (collect_list + sorted sequential fold) —
     * bit-exact vs DuckDB, correctness gates only; false is the
     * distributed partial-agg scale path. The last round stays lazy
@@ -168,11 +209,11 @@ object Graph {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     require(damping > 0.0 && damping < 1.0, s"damping must be in (0, 1), got $damping")
     val (e, degs) = rankPrep(edges, srcCol, dstCol, undirected)
-    val n = degs.count()
+    val n = rows(degs)
     require(n > 0, "pageRank on an empty edge list")
     val init = degs.select(col("id"), lit(1.0 / n.toDouble).as("pr"), col("degree"))
     iterate(init, iters)(
-      powerStep(e, degs, lit((1.0 - damping) / n.toDouble), damping, sortedFold))._1
+      powerStep(e, degs, n, lit((1.0 - damping) / n.toDouble), damping, sortedFold))._1
   }
 
   /** Personalized PageRank (Haveliwala 2002 / Jeh & Widom 2003's
@@ -189,9 +230,11 @@ object Graph {
     * with the teleport restricted to seeds, non-seed sinks simply
     * absorb less), same fixed-iteration determinism contract.
     *
-    * Scale shape: pageRank's per-round join+agg pair exactly, plus a
-    * ONE-TIME broadcast left-join of the seed list (probe-sized) onto
-    * the node table. sortedFold as in pageRank: bit-exact oracle
+    * Scale shape: pageRank's prologue and rounds exactly (one
+    * broadcast, no exchange per round), plus a ONE-TIME broadcast
+    * left-join of the seed list (probe-sized) onto the pinned node
+    * table, whose one aggregate counts N and the seeds present.
+    * sortedFold as in pageRank: bit-exact oracle
     * twin vs distributed partial-agg scale path; the last round
     * stays lazy, so with sortedFold=false cache the result to read it
     * twice (see iterate).
@@ -207,23 +250,24 @@ object Graph {
     val (e, degs) = rankPrep(edges, srcCol, dstCol, undirected)
     // seeds restricted to nodes actually in the graph — teleporting to
     // an absent node would silently leak (1−d)/|S| of mass nowhere
-    val seedIds = seeds.select(col(seedCol).as("id")).distinct()
-      .join(degs.select("id"), Seq("id"))
-    val nS = seedIds.count()
+    val marked = Dedup.pin(degs.join(
+      broadcast(seeds.select(col(seedCol).as("id")).distinct().withColumn("__seed", lit(true))),
+      Seq("id"), "left"))
+    val sizes = marked.agg(count(lit(1)), count(col("__seed"))).head()
+    val (n, nS) = (sizes.getLong(0), sizes.getLong(1))
     require(nS > 0, "personalizedPageRank needs at least one seed present in the graph")
-    val sv = Dedup.pin(degs
-      .join(broadcast(seedIds.withColumn("__s0", lit(1.0 / nS.toDouble))), Seq("id"), "left")
-      .select(col("id"), col("degree"), coalesce(col("__s0"), lit(0.0)).as("__s")))
+    val sv = marked.select(col("id"), col("degree"),
+      when(col("__seed"), lit(1.0 / nS.toDouble)).otherwise(lit(0.0)).as("__s"))
     val init = sv.select(col("id"), col("__s").as("pr"), col("degree"))
     iterate(init, iters)(
-      powerStep(e, sv, lit(1.0 - damping) * col("__s"), damping, sortedFold))._1
+      powerStep(e, sv, n, lit(1.0 - damping) * col("__s"), damping, sortedFold))._1
   }
 
   /** Neighbour-mode vote: per dst, the most frequent label among its
     * in-neighbours' (src, label) rows, ties to the smaller label.
     * Output (id, __new) for every dst with a voting neighbour. */
-  private def modeVote(e: DataFrame, labeled: DataFrame): DataFrame =
-    e.join(labeled, Seq("src"))
+  private def modeVote(e: DataFrame, labeled: DataFrame, nodes: Long): DataFrame =
+    e.join(broadcastState(labeled, nodes), Seq("src"))
       .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("__c"))
       .groupBy("dst")
       .agg(min(struct((-col("__c")).as("nc"), col("label").as("l"))).as("__b"))
@@ -241,22 +285,27 @@ object Graph {
     * oscillate on bipartite structures, and curation wants a
     * deterministic result, not a lucky fixed point.
     *
-    * Scale shape: per round one hash join (edges × labels on src) +
-    * one (dst, label) count + one min_by-struct argmax — the exact
-    * shuffle pattern of pageRank with the sum swapped for a mode.
-    * Nodes with no in-neighbors (directed case) keep their label via
-    * the left join. Output: (id, label) after `rounds` rounds. */
+    * Scale shape: pageRank's — an edge list pinned partitioned on
+    * dst, a pinned node table from one grouped aggregate, N its row
+    * count — with the sum swapped for a mode: per round the labels
+    * broadcast to the edges, one (dst, label) count and one
+    * min_by-struct argmax fold them per dst, and the votes join the
+    * node table co-partitioned; one broadcast and no exchange. Nodes
+    * with no in-neighbors (directed case) keep their label via the
+    * left join. Output: (id, label) after `rounds` rounds. */
   def labelPropagation(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
                        rounds: Int = 2, undirected: Boolean = true): DataFrame = {
     require(rounds >= 1 && rounds <= 50, s"rounds must be in [1, 50], got $rounds")
-    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected))
-    val nodes = Dedup.pin(nodeSet(e))
-    // labels' id set IS the node set (the init and the left join keep
-    // it so), so a round anchors on the labels it reads, not on nodes
+    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected, "dst"))
+    val nodes = Dedup.pin(degrees(e).select("id"))
+    val n = rows(nodes)
+    // a node that gets no vote has no in-neighbour, so it never got
+    // one: its label is still its own id, and a round anchors on the
+    // pinned node table rather than on the labels it reads
     iterate(nodes.select(col("id"), col("id").as("label")), rounds) { (labels, _) =>
-      labels.withColumnRenamed("label", "__old")
-        .join(modeVote(e, labels.withColumnRenamed("id", "src")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__new"), col("__old")).as("label"))
+      nodes.join(modeVote(e, labels.withColumnRenamed("id", "src"), n).hint("shuffle_hash"),
+          Seq("id"), "left")
+        .select(col("id"), coalesce(col("__new"), col("id")).as("label"))
     }._1
   }
 
@@ -276,10 +325,12 @@ object Graph {
     * only, no FP. Nodes that never see a labeled neighbor keep NULL
     * (visibly un-inferred, not defaulted).
     *
-    * Scale shape: per round ONE join (edges × labeled nodes) + one
-    * grouped count + one mode pick — labelPropagation's exact
-    * shuffle shape; the seeded init and every round but the last
-    * (iterate) end in a localCheckpoint. Output: (id, label, is_seed). */
+    * Scale shape: labelPropagation's exactly — per round the labelled
+    * nodes broadcast to the dst-partitioned pinned edges, one grouped
+    * count and one mode pick with no exchange, and a co-partitioned
+    * join with the pinned (id, seed label) table; the seeded init and
+    * every round but the last (iterate) end in a localCheckpoint.
+    * Output: (id, label, is_seed). */
   def labelComplete(edges: DataFrame, srcCol: String, dstCol: String,
                     seeds: DataFrame, idCol: String, labelCol: String,
                     rounds: Int = 2, undirected: Boolean = true): DataFrame = {
@@ -291,22 +342,25 @@ object Graph {
     // id-type mismatch could make every seed join miss and the
     // operator return all-NULL labels with no error — the
     // bfsDistance-family convention is one long id domain throughout
-    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected,
+    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected, "dst",
       castLong = true))
-    val nodes = Dedup.pin(nodeSet(e))
     val sd = seeds.select(col(idCol).cast("long").as("id"),
       col(labelCol).cast("string").as("__seed"))
-    val init = nodes.join(sd, Seq("id"), "left")
-      .select(col("id"), col("__seed").as("label"),
-        col("__seed").isNotNull.cast("int").as("is_seed"))
+    val nodes = Dedup.pin(degrees(e).select("id").join(sd, Seq("id"), "left")
+      .select(col("id"), col("__seed"), col("__seed").isNotNull.cast("int").as("is_seed")))
+    val n = rows(nodes)
+    val init = nodes.select(col("id"), col("__seed").as("label"), col("is_seed"))
       .localCheckpoint(eager = true)
+    // the labelled set only grows, so a non-seed without a labelled
+    // in-neighbour this round had none before either and is still
+    // NULL: a round's label is its vote, and it anchors on the pinned
+    // node table rather than on the labels it reads
     iterate(init, rounds) { (labels, _) =>
       val winners = modeVote(e,
-        labels.filter(col("label").isNotNull).select(col("id").as("src"), col("label")))
-      labels.join(winners, Seq("id"), "left")
+        labels.filter(col("label").isNotNull).select(col("id").as("src"), col("label")), n)
+      nodes.join(winners.hint("shuffle_hash"), Seq("id"), "left")
         .select(col("id"),
-          when(col("is_seed") === 1, col("label"))
-            .otherwise(coalesce(col("__new"), col("label"))).as("label"),
+          when(col("is_seed") === 1, col("__seed")).otherwise(col("__new")).as("label"),
           col("is_seed"))
     }._1
   }
@@ -315,22 +369,19 @@ object Graph {
     * node count at each degree — the one-pass profile that decides
     * whether a graph op needs a skew guard (a power-law head means
     * the top hub's adjacency dwarfs the mean; feed maxBucket /
-    * salting decisions from this, don't guess). Two grouped
-    * aggregations, both partial-agg friendly.
+    * salting decisions from this, don't guess). Scale shape: the edge
+    * prologue's one shuffle, then the (id, degree) aggregate that
+    * opens pageRank and a partial-agg count per degree.
     * Output: (degree, n_nodes) ascending. */
   def degreeHistogram(edges: DataFrame, srcCol: String = "src",
                       dstCol: String = "dst",
                       undirected: Boolean = true): DataFrame = {
-    val e = edgeList(edges, srcCol, dstCol, undirected)
-    // anchor on the full node set so pure sinks count at degree 0
-    // (review r15: grouping the out-endpoint alone silently dropped
+    // every endpoint counts, so pure sinks sit at degree 0 (review
+    // r15: grouping the out-endpoint alone silently dropped
     // zero-out-degree nodes in the directed case, under-reporting
     // node count to exactly the skew decisions this profile feeds;
     // in undirected mode symmetrization makes this a no-op)
-    val deg = e.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).cast("long").as("degree"))
-    nodeSet(e).join(deg, Seq("id"), "left")
-      .select(coalesce(col("degree"), lit(0L)).as("degree"))
+    degrees(edgeList(edges, srcCol, dstCol, undirected, "src"))
       .groupBy("degree").agg(count(lit(1)).cast("long").as("n_nodes"))
       .orderBy("degree")
   }
@@ -417,10 +468,9 @@ object Graph {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 50, s"rounds must be in [1, 50], got $rounds")
     val init = symmetrize(undirectedPairs(edges, srcCol, dstCol)).localCheckpoint()
-    def edgeRows(df: DataFrame): Long = df.queryExecution.toRdd.count()
-    var before = edgeRows(init)
+    var before = rows(init)
     val unchanged = (peeled: DataFrame, _: Int) => {
-      val after = edgeRows(peeled)
+      val after = rows(peeled)
       val same = after == before
       before = after
       same
@@ -571,7 +621,7 @@ object Graph {
     require(maxHops >= 1 && maxHops <= 64, s"maxHops must be in [1, 64], got $maxHops")
     graft.functions.TopKAgg.requireLongCastableId(seeds, seedCol,
       "Graph.bfsDistance")
-    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected,
+    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected, "src",
       castLong = true))
     frontierBfs(e, seeds.select(col(seedCol).cast("long").as("id")).distinct()
       .withColumn("dist", lit(0L)).localCheckpoint(eager = true), Seq("id"), maxHops)
@@ -623,7 +673,7 @@ object Graph {
     require(maxHops >= 1 && maxHops <= 64, s"maxHops must be in [1, 64], got $maxHops")
     graft.functions.TopKAgg.requireLongCastableId(seeds, seedCol,
       "Graph.closenessBounded")
-    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected,
+    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected, "src",
       castLong = true))
     val seedIds = seeds.select(col(seedCol).cast("long").as("id")).distinct()
       .localCheckpoint(eager = true)
@@ -663,6 +713,16 @@ object Graph {
                   wCol: String = "w", maxHops: Int = 4,
                   undirected: Boolean = true): DataFrame = {
     require(maxHops >= 1 && maxHops <= 64, s"maxHops must be in [1, 64], got $maxHops")
+    // the long-id family's refusal (a string id casts to NULL and every
+    // edge drops silently), and the same rule for the weight: a
+    // fractional weight would truncate to a long without a word
+    Seq(srcCol, dstCol).foreach(graft.functions.TopKAgg.requireLongCastableId(edges, _,
+      "Graph.ssspBounded"))
+    graft.functions.TopKAgg.requireLongCastableId(seeds, seedCol, "Graph.ssspBounded")
+    val wType = edges.schema(wCol).dataType
+    require(graft.functions.TopKAgg.longCastable(wType),
+      s"ssspBounded: weight '$wCol' is ${wType.simpleString} — cast to long it would " +
+        "truncate silently; round or scale it to an integral type first")
     val base = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"), col(wCol).cast("long").as("w"))
       .filter(col("src") =!= col("dst"))
@@ -719,10 +779,16 @@ object Graph {
     * 0.0+x = x; array_sort puts the zeros FIRST, so every later
     * partial sum is unchanged too) — the same IEEE-no-op argument the
     * old per-round re-anchor comment already made, now used to DELETE
-    * the re-anchor: per round ONE hash join + grouped sum over the
+    * the re-anchor: per half-round ONE join + grouped sum over a
     * pinned edge list (pageRank's shape), not join+sum+node-anchor
-    * twice. The zeros materialize once, in the final lazy plan
-    * (node-list left joins + coalesce 0). Only frames a LATER round
+    * twice. The edge list is pinned twice, partitioned on dst for the
+    * auth sums and on src for the hub sums, and each half broadcasts
+    * the scores it reads (N rows at most, N the pinned node table's
+    * row count) to its copy, so neither fold exchanges. The zeros
+    * materialize once, in the final lazy plan (shuffle-hash left
+    * joins of the pinned node table + coalesce 0; the checkpointed
+    * auth frame there is the one side that exchanges, since a
+    * checkpoint keeps no partitioning). Only frames a LATER round
     * consumes are checkpointed: the intermediate auth frame inlines
     * into its round's hub job (lineage depth stays ≤ 2 joins from the
     * last checkpoint), the last round's auth frame is checkpointed
@@ -740,9 +806,11 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int = 2, sortedFold: Boolean = false): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
-    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected = false,
+    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected = false, "dst",
       castLong = true))
-    val nodes = Dedup.pin(nodeSet(e))
+    val eOut = Dedup.pin(partitionedOn(e, "src"))
+    val nodes = Dedup.pin(degrees(e).select("id"))
+    val n = rows(nodes)
     // auths is DERIVED from hubs at the top of every round — HITS has
     // no meaningful initial auth vector, so none is seeded (review
     // r15: the old lit(0.0) auth init was dead, overwritten before
@@ -750,13 +818,13 @@ object Graph {
     val init = nodes.select(col("id"), lit(1.0).as("hub"))
     val (auths, hubs) = (1 to iters).foldLeft((init, init)) {
       case ((_, hubsPrev), round) =>
-        val aSums = e.join(hubsPrev.withColumnRenamed("id", "src"), Seq("src"))
+        val aSums = e.join(broadcastState(hubsPrev.withColumnRenamed("id", "src"), n), Seq("src"))
           .groupBy(col("dst").as("id")).agg(foldedSum(col("hub"), sortedFold).as("auth"))
         // checkpoint only what two consumers read: the final round's
         // auth frame feeds both this round's hub sums and the output
         val a = if (round == iters) aSums.localCheckpoint(eager = true)
                 else aSums
-        val hSums0 = e.join(a.withColumnRenamed("id", "dst"), Seq("dst"))
+        val hSums0 = eOut.join(broadcastState(a.withColumnRenamed("id", "dst"), n), Seq("dst"))
           .groupBy(col("src").as("id")).agg(foldedSum(col("auth"), sortedFold).as("hub"))
         // the final round's hub frame has one consumer (the returned
         // plan) — leave it lazy, like pageRank's final round (r19)
@@ -764,7 +832,8 @@ object Graph {
                     else hSums0.localCheckpoint(eager = true)
         (a, hSums)
     }
-    nodes.join(auths, Seq("id"), "left").join(hubs, Seq("id"), "left")
+    nodes.join(auths.hint("shuffle_hash"), Seq("id"), "left")
+      .join(hubs.hint("shuffle_hash"), Seq("id"), "left")
       .select(col("id"), coalesce(col("auth"), lit(0.0)).as("auth"),
         coalesce(col("hub"), lit(0.0)).as("hub"))
   }

@@ -569,6 +569,20 @@ class GraphSpec extends AnyFunSuite {
       Graph.hits(sEdges, "src", "dst")
     }
     assert(e3.getMessage.contains("long-castable"))
+    // ssspBounded casts its endpoints and seeds to long as well: with
+    // ANSI off a string id used to come back [null, 0] with every edge
+    // dropped, with ANSI on as a raw CAST_INVALID_INPUT
+    val wEdges = Seq((1L, 2L, 1L)).toDF("src", "dst", "w")
+    for (ansi <- Seq("true", "false")) withConf("spark.sql.ansi.enabled" -> ansi) {
+      for ((what, e, seeds) <- Seq(
+          ("string endpoints", sEdges.withColumn("w", lit(1L)), lSeeds),
+          ("string seeds", wEdges, sSeeds))) {
+        val e4 = intercept[IllegalArgumentException] {
+          Graph.ssspBounded(e, seeds, seeds.columns.head)
+        }
+        assert(e4.getMessage.contains("long-castable"), s"ssspBounded, $what, ANSI $ansi")
+      }
+    }
   }
 
   test("ssspBounded refuses negative and NULL weights loudly (review r15)") {
@@ -583,11 +597,25 @@ class GraphSpec extends AnyFunSuite {
       Graph.ssspBounded(nul, seeds, "id", maxHops = 2)
     }
     assert(e2.getMessage.contains("NULL"))
+    // a fractional weight would truncate in the long cast: refused by type
+    val frac = Seq((1L, 2L, 0.5), (2L, 3L, 1.5)).toDF("src", "dst", "w")
+    val e3 = intercept[IllegalArgumentException] {
+      Graph.ssspBounded(frac, seeds, "id", maxHops = 2)
+    }
+    assert(e3.getMessage.contains("double"), e3.getMessage)
     // the valid case still computes bounded shortest paths
     val ok = Seq((1L, 2L, 5L), (2L, 3L, 7L)).toDF("src", "dst", "w")
     val d = Graph.ssspBounded(ok, seeds, "id", maxHops = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(d == Map(1L -> 0L, 2L -> 5L, 3L -> 12L), s"got $d")
+  }
+
+  /** Runs `body` with the session conf `kv` set, then restores it. */
+  private def withConf[T](kv: (String, String))(body: => T): T = {
+    val (k, v) = kv
+    val old = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
   }
 
   /** What `body` ran in its job group: eager localCheckpoint calls
@@ -737,8 +765,55 @@ class GraphSpec extends AnyFunSuite {
     }._1
   }
 
+  /** Ascending sort, then a left fold from 0.0: the sorted-fold sum. */
+  private def sortedSum(xs: Seq[Double]): Double = xs.sorted.foldLeft(0.0)(_ + _)
+
+  /** Loop-free, deduplicated directed edges of `pairs`, and the
+    * symmetrized list (both orientations). */
+  private def directed(pairs: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    pairs.filter(p => p._1 != p._2).distinct
+  private def symmetric(pairs: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    directed(pairs).flatMap(p => Seq(p, p.swap)).distinct
+
+  /** pageRank(sortedFold = true) over `und`: id -> (pr, out-degree). */
+  private def pageRankModel(und: Seq[(Long, Long)], iters: Int,
+                            damping: Double): Map[Long, (Double, Long)] = {
+    val nodes = und.flatMap(p => Seq(p._1, p._2)).distinct
+    val deg = und.groupBy(_._1).map { case (v, es) => v -> es.size.toLong }
+    val tele = (1.0 - damping) / nodes.size.toDouble
+    val pr = (1 to iters).foldLeft(nodes.map(_ -> 1.0 / nodes.size.toDouble).toMap) { (pr, _) =>
+      val in = und.groupBy(_._2).map { case (v, es) => v -> sortedSum(es.map(e => pr(e._1) / deg(e._1))) }
+      nodes.map(v => v -> (tele + damping * in.getOrElse(v, 0.0))).toMap
+    }
+    pr.map { case (v, x) => v -> ((x, deg.getOrElse(v, 0L))) }
+  }
+
+  /** Synchronous label propagation over `und`: each node takes its
+    * in-neighbours' most frequent label, the lowest on ties. */
+  private def labelPropagationModel(und: Seq[(Long, Long)], rounds: Int): Map[Long, Long] =
+    (1 to rounds).foldLeft(und.flatMap(p => Seq(p._1, p._2)).distinct.map(v => v -> v).toMap) { (labels, _) =>
+      val votes = und.groupBy(_._2).map { case (v, in) =>
+        v -> in.groupBy(e => labels(e._1)).toSeq.map { case (l, es) => (-es.size, l) }.min._2
+      }
+      labels.map { case (v, l) => v -> votes.getOrElse(v, l) }
+    }
+
+  /** hits(sortedFold = true) over the directed `dir`: id -> (auth, hub). */
+  private def hitsModel(dir: Seq[(Long, Long)], iters: Int): Map[Long, (Double, Double)] = {
+    val nodes = dir.flatMap(p => Seq(p._1, p._2)).distinct
+    val (auth, hub) = (1 to iters).foldLeft((Map.empty[Long, Double], nodes.map(_ -> 1.0).toMap)) {
+      case ((_, hub), _) =>
+        val auth = dir.groupBy(_._2).map { case (v, in) => v -> sortedSum(in.flatMap(e => hub.get(e._1))) }
+        (auth, dir.groupBy(_._1).map { case (v, out) => v -> sortedSum(out.flatMap(e => auth.get(e._2))) })
+    }
+    nodes.map(v => v -> ((auth.getOrElse(v, 0.0), hub.getOrElse(v, 0.0)))).toMap
+  }
+
   test("components, kCore and bfsDistance ≡ local models on seeded random graphs, 1/4/7 partitions") {
-    for (seed <- Seq(3, 8); parts <- Seq(1, 4, 7)) try {
+    // the pinned edge lists take their partition count from the session,
+    // so each layout runs at that many shuffle partitions too
+    for (seed <- Seq(3, 8); parts <- Seq(1, 4, 7))
+      withConf("spark.sql.shuffle.partitions" -> parts.toString) { try {
       val pairs = randomPairs(seed, 40)
       val ctx = s"seed $seed, $parts partitions"
       val df = pairs.toDF("id1", "id2").repartition(parts)
@@ -760,6 +835,41 @@ class GraphSpec extends AnyFunSuite {
       for (maxHops <- Seq(2, 50))
         assert(labels(Graph.bfsDistance(edges, seeds.toSeq.toDF("id"), "id", maxHops = maxHops))
           === bfs(pairs, seeds, maxHops), s"bfsDistance at $maxHops hops, $ctx")
-    } finally Dedup.releaseCaches()
+      // the sorted fold is bit-equal to the local replay (doubles are
+      // compared by their bits), whether the vertex state broadcasts
+      // (10MB, Spark's default threshold) or joins as Spark plans it
+      // unhinted (-1, no broadcast)
+      def bits(x: Double) = java.lang.Double.doubleToRawLongBits(x)
+      for (threshold <- Seq("10MB", "-1"))
+        withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+          val at = s"$ctx, broadcast threshold $threshold"
+          assert(labels(Dedup.connectedComponents(df)) === want, s"connectedComponents, $at")
+          val pr = Graph.pageRank(edges, iters = 3, sortedFold = true).collect()
+            .map(r => r.getLong(0) -> ((bits(r.getDouble(1)), r.getLong(2)))).toMap
+          assert(pr === pageRankModel(symmetric(pairs), 3, 0.85)
+            .map { case (v, (x, d)) => v -> ((bits(x), d)) }, s"pageRank, $at")
+          assert(labels(Graph.labelPropagation(edges, rounds = 3))
+            === labelPropagationModel(symmetric(pairs), 3), s"labelPropagation, $at")
+          val hits = Graph.hits(edges, "src", "dst", iters = 2, sortedFold = true).collect()
+            .map(r => r.getLong(0) -> ((bits(r.getDouble(1)), bits(r.getDouble(2))))).toMap
+          assert(hits === hitsModel(directed(pairs), 2)
+            .map { case (v, (a, h)) => v -> ((bits(a), bits(h))) }, s"hits, $at")
+        }
+    } finally Dedup.releaseCaches() }
+  }
+
+  test("graph rounds: jobs per call on a fixed fixture") {
+    // seed 3's 40-node graph on the test session (local[4], 4 shuffle
+    // partitions). Before the edge lists were pinned partitioned on the
+    // fold key, with the vertex state broadcast to them, these calls
+    // ran 22 (pageRank), 16 (labelPropagation) and 21 (hits) jobs
+    val edges = randomPairs(3, 40).toDF("src", "dst")
+    def jobs(op: => org.apache.spark.sql.DataFrame): Int =
+      try workDuring { op.collect(); () }._2 finally Dedup.releaseCaches()
+    val pr = jobs(Graph.pageRank(edges, iters = 3, sortedFold = true))
+    val lpa = jobs(Graph.labelPropagation(edges, rounds = 2))
+    val hits = jobs(Graph.hits(edges, "src", "dst", iters = 2, sortedFold = true))
+    assert(pr <= 11 && lpa <= 9 && hits <= 15,
+      s"pageRank $pr, labelPropagation $lpa, hits $hits jobs")
   }
 }

@@ -537,4 +537,63 @@ class PlanShapeSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
     }
   }
+
+  test("graph rounds: the vertex state rides a broadcast — no exchange on the edge side") {
+    // each call pins its edge list partitioned on the key its round
+    // folds on, so a round that brings the (node-sized) state to the
+    // edges by broadcast folds them with no exchange; the anchor join
+    // is co-partitioned. Every plan a call executes is checked: its
+    // checkpointed rounds and the lazy last round its collect runs.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import graft.operators.Graph
+    import spark.implicits._
+    object Plans extends AdaptiveSparkPlanHelper
+    val rnd = new scala.util.Random(5)
+    val edges = Seq.fill(400)((1L + rnd.nextInt(100), 1L + rnd.nextInt(100))).toDF("src", "dst")
+    val seeds = Seq((1L, "a"), (2L, "b")).toDF("id", "label")
+    val marker = "graph-round-plans-drained"
+    def plansOf(op: => DataFrame): Seq[SparkPlan] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+      val l = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        op.collect()
+        spark.range(1).selectExpr(s"'$marker' AS m").collect()
+        eventually(timeout(30.seconds), interval(20.millis)) {
+          assert(plans.toArray.exists(_.toString.contains(marker)))
+        }
+      } finally { spark.listenerManager.unregister(l); Dedup.releaseCaches() }
+      plans.toArray(Array.empty[SparkPlan]).toSeq.filterNot(_.toString.contains(marker))
+    }
+    def readsEdges(p: SparkPlan): Boolean = Plans.find(p) {
+      case s: InMemoryTableScanExec => Set("src", "dst").subsetOf(s.output.map(_.name).toSet)
+      case _ => false
+    }.isDefined
+    for ((name, op) <- Seq[(String, () => DataFrame)](
+        "pageRank" -> (() => Graph.pageRank(edges, sortedFold = true)),
+        "personalizedPageRank" -> (() => Graph.personalizedPageRank(edges, seeds, "id")),
+        "labelPropagation" -> (() => Graph.labelPropagation(edges)),
+        "labelComplete" -> (() => Graph.labelComplete(edges, "src", "dst", seeds, "id", "label")),
+        "hits" -> (() => Graph.hits(edges, "src", "dst", sortedFold = true)),
+        "connectedComponents" -> (() => Dedup.connectedComponents(edges, "src", "dst")))) {
+      val rounds = plansOf(op()).filter(readsEdges)
+      assert(rounds.nonEmpty, s"$name: no executed plan reads the pinned edge list")
+      for (p <- rounds) {
+        val edgeSide = Plans.collect(p) { case x: ShuffleExchangeExec if readsEdges(x) => x }
+        assert(edgeSide.isEmpty, s"$name: a round exchanges its edges:\n$p")
+        assert(Plans.collect(p) { case b: BroadcastExchangeExec => b }.nonEmpty,
+          s"$name: the vertex state must reach the edges by broadcast:\n$p")
+      }
+    }
+  }
 }
