@@ -233,34 +233,25 @@ object Classifier {
     * silently mis-scoring. */
   val ModelFormatVersion = 1
 
-  /** Persists standardizer + model as ONE parquet row — the
-    * train-once / serve-anywhere artifact (the `buildIvfIndex` meta
-    * pattern: version + self-describing payload, loud refusals on
-    * drift at load). Doubles round-trip bit-exactly through parquet,
-    * so a loaded model scores identically to the in-memory one. */
+  /** Persists standardizer + model as ONE Artifacts meta row at
+    * `path` — the whole artifact is its meta. Doubles round-trip
+    * bit-exactly through parquet, so a loaded model scores identically
+    * to the in-memory one. */
   def saveLogReg(spark: org.apache.spark.sql.SparkSession, path: String,
                  st: Standardizer, model: LogRegModel): Unit = {
     require(st.dim == model.dim,
       s"standardizer dim ${st.dim} != model dim ${model.dim}")
-    import spark.implicits._
-    Seq((ModelFormatVersion, model.weights.toSeq, model.bias,
-        st.mean.toSeq, st.scale.toSeq, model.lossHistory))
-      .toDF("version", "weights", "bias", "mean", "scale", "loss_history")
-      .repartition(1).write.mode("overwrite").parquet(path)
+    Artifacts.writeMeta(spark, path, (ModelFormatVersion, model.weights.toSeq,
+        model.bias, st.mean.toSeq, st.scale.toSeq, model.lossHistory),
+      "version", "weights", "bias", "mean", "scale", "loss_history")
   }
 
-  /** Loads a `saveLogReg` artifact, refusing loudly on: wrong row
-    * count (corrupt/partial write), unknown format version, ragged
-    * dimensions, or non-finite parameters. */
+  /** Loads a `saveLogReg` artifact, refusing loudly on: the Artifacts
+    * meta refusals, ragged dimensions, or non-finite parameters. */
   def loadLogReg(spark: org.apache.spark.sql.SparkSession, path: String)
       : (Standardizer, LogRegModel) = {
-    val rows = spark.read.parquet(path).collect()
-    require(rows.length == 1,
-      s"model artifact at $path has ${rows.length} rows, expected exactly 1")
-    val r = rows(0)
-    val version = r.getAs[Int]("version")
-    require(version == ModelFormatVersion,
-      s"model artifact version $version at $path; this build reads $ModelFormatVersion")
+    val r = Artifacts.readMeta(spark, path, "LogReg model",
+      ModelFormatVersion to ModelFormatVersion).row
     val w = r.getAs[scala.collection.Seq[Double]]("weights").toArray
     val mean = r.getAs[scala.collection.Seq[Double]]("mean").toArray
     val scale = r.getAs[scala.collection.Seq[Double]]("scale").toArray

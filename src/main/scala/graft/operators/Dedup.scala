@@ -673,11 +673,11 @@ object Dedup {
   // index built with different (n, h, parity) silently estimates
   // garbage agreement against a batch signed with today's params —
   // every band join plausible, every verdict wrong. The persisted
-  // form therefore pins (n, h, parity) and the row count in a one-row
-  // parquet meta written after the data; readMinhashIndex refuses a
-  // family mismatch or a row-count drift, and appendMinhashIndex
-  // signs new batches with the STORED family. Layout: `path/data/`
-  // (the (id, sig) parquet) + `path/_graft_index_meta/`.
+  // form therefore pins (n, h, parity), the row count and the
+  // tombstone count in its Artifacts meta; readMinhashIndex refuses a
+  // family mismatch or a count drift, and appendMinhashIndex signs new
+  // batches with the STORED family. Layout: `path/data/` (the (id,
+  // sig) parquet) + `path/_graft_index_meta/` + `path/_tomb/`.
 
   private val MinhashMetaVersion = 2
 
@@ -689,30 +689,19 @@ object Dedup {
     def live: Long = rows - deleted
   }
 
-  private def writeMinhashMeta(spark: SparkSession, path: String, rows: Long,
-                               deleted: Long, n: Int, h: Int,
-                               parity: Boolean): Unit = {
-    import spark.implicits._
-    Seq((MinhashMetaVersion, rows, deleted, n, h, parity))
-      .toDF("version", "rows", "deleted", "n", "h", "parity")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_graft_index_meta")
-  }
+  /** Writes `meta` at the current format version. */
+  private def writeMinhashMeta(spark: SparkSession, path: String,
+                               meta: MinhashMeta): Unit =
+    Artifacts.writeMeta(spark, s"$path/_graft_index_meta",
+      (MinhashMetaVersion, meta.rows, meta.deleted, meta.n, meta.h,
+        meta.parity),
+      "version", "rows", "deleted", "n", "h", "parity")
 
   private def readMinhashMeta(spark: SparkSession, path: String): MinhashMeta = {
-    // AnalysisException only — transient storage errors surface as
-    // themselves, never as a "rebuild" diagnosis (review r12)
-    val m =
-      try spark.read.parquet(s"$path/_graft_index_meta").head()
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$path is not a graft MinHash index (no _graft_index_meta): ${e.getMessage}") }
-    val version = m.getAs[Int]("version")
-    require(version >= 1 && version <= MinhashMetaVersion,
-      s"MinHash index format version $version at $path; this build reads up " +
-        s"to $MinhashMetaVersion — rebuild")
-    MinhashMeta(version, m.getAs[Long]("rows"),
-      if (version >= 2) m.getAs[Long]("deleted") else 0L,
-      m.getAs[Int]("n"), m.getAs[Int]("h"), m.getAs[Boolean]("parity"))
+    val m = Artifacts.readMeta(spark, s"$path/_graft_index_meta",
+      "MinHash index", 1 to MinhashMetaVersion)
+    MinhashMeta(m.version, m.get[Long]("rows"), m.since(2, "deleted", 0L),
+      m.get[Int]("n"), m.get[Int]("h"), m.get[Boolean]("parity"))
   }
 
   /** Persist the near-dup index: minhashIndex written as parquet plus
@@ -726,76 +715,26 @@ object Dedup {
     val spark = corpus.sparkSession
     // stale tombstones from a previous index at this root must not
     // mask the fresh build's rows
-    val conf = spark.sessionState.newHadoopConf()
-    val tomb = new org.apache.hadoop.fs.Path(minhashTombDir(path))
-    tomb.getFileSystem(conf).delete(tomb, true)
-    writeMinhashMeta(spark, path, spark.read.parquet(s"$path/data").count(),
-      deleted = 0L, n, h, parity)
-    Similarity.refreshIndexPath(spark, path)
+    Artifacts.delete(spark, Artifacts.rootTombDir(path))
+    writeMinhashMeta(spark, path, MinhashMeta(MinhashMetaVersion,
+      spark.read.parquet(s"$path/data").count(), deleted = 0L, n, h, parity))
+    Artifacts.refreshIndexPath(spark, path)
   }
-
-  private def minhashTombDir(path: String): String = s"$path/_tomb"
-
-  /** Tombstoned ids (native id type — MinHash ids are the caller's
-    * column, not necessarily long), None when none were written
-    * (existence-checked — no logged read failures on the common
-    * no-deletes path). */
-  private def minhashTombstones(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(minhashTombDir(path))
-    if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-      Some(spark.read.parquet(minhashTombDir(path)).select(col("id")))
-    else None
-  }
-
-  private def minhashTombCount(spark: SparkSession, path: String): Long =
-    minhashTombstones(spark, path).map(_.count()).getOrElse(0L)
 
   /** Tombstone-delete ids from a persisted MinHash index — the
     * takedown mutation (VERDICT r16 item 2) for the near-dup
-    * signature table: O(takedown) tombstone append, the read surface
-    * anti-joins the set (so a deleted doc stops vetoing batch docs
-    * immediately), and the next compact drops the rows physically.
-    * Idempotent; meta (deleted = prev + newly-tombstoned) writes
-    * AFTER the tombstone data, so a crash is detectably stale. */
+    * signature table (Artifacts.deleteIds, ids in their native type):
+    * the read surface anti-joins the set (so a deleted doc stops
+    * vetoing batch docs immediately), and the next compact drops the
+    * rows physically. Idempotent and self-healing. */
   def deleteFromMinhashIndex(spark: SparkSession, ids: DataFrame,
                              idCol: String, path: String): Unit = {
     val meta = readMinhashMeta(spark, path)
-    // self-heal first (ADVICE r17): a prior delete that crashed between
-    // its tombstone append and its meta write left actual > meta —
-    // the tombstone data is the source of truth (every id in it was
-    // verified live, the set is deduplicated by construction), so the
-    // meta catches up here before anything else; the other direction
-    // (tombstone files lost) has no record to heal from and refuses
-    val actualTombs = minhashTombCount(spark, path)
-    val deleted0 =
-      if (actualTombs > meta.deleted) {
-        writeMinhashMeta(spark, path, meta.rows, actualTombs,
-          meta.n, meta.h, meta.parity)
-        Similarity.refreshIndexPath(spark, path)
-        actualTombs
-      } else {
-        require(actualTombs == meta.deleted,
-          s"Dedup.deleteFromMinhashIndex: the index at $path records " +
-            s"${meta.deleted} tombstones but holds only $actualTombs — " +
-            "tombstone data was lost or hand-edited; the takedown record " +
-            "cannot be reconstructed, rebuild the index")
-        meta.deleted
-      }
-    val existing = minhashTombstones(spark, path)
-    val doomed0 = ids.select(col(idCol).as("id")).distinct()
-      .join(spark.read.parquet(s"$path/data").select(col("id")), "id")
-    val doomed = existing.fold(doomed0)(t =>
-      doomed0.join(t, Seq("id"), "left_anti")).localCheckpoint()
-    try {
-      val nNew = doomed.count()
-      if (nNew > 0) {
-        doomed.write.mode("append").parquet(minhashTombDir(path))
-        writeMinhashMeta(spark, path, meta.rows, deleted0 + nNew,
-          meta.n, meta.h, meta.parity)
-        Similarity.refreshIndexPath(spark, path)
-      }
-    } finally {
-      org.apache.spark.sql.graftglue.ColumnGlue.unpersistLocalCheckpoint(doomed)
+    Artifacts.deleteIds(spark, ids.select(col(idCol).as("id")),
+      s"$path/data", Artifacts.rootTombDir(path), meta.deleted, path,
+      "Dedup.deleteFromMinhashIndex") { deleted =>
+      writeMinhashMeta(spark, path, meta.copy(deleted = deleted))
+      Artifacts.refreshIndexPath(spark, path)
     }
   }
 
@@ -816,29 +755,11 @@ object Dedup {
         s"h=${meta.h}, parity=${meta.parity}) but queried as (n=$n, h=$h, " +
         s"parity=$parity) — signatures are not comparable across families; " +
         "rebuild or match params")
-    val data = spark.read.parquet(s"$path/data")
-    if (verifyRows) {
-      // the two integrity counts are independent read-only jobs — run
-      // them concurrently (Similarity.concurrently2; guide §2.6)
-      val (actual, tombs) = Similarity.concurrently2(
-        data.count(), minhashTombCount(spark, path))
-      require(actual == meta.rows,
-        s"stale MinHash index at $path: meta records ${meta.rows} rows, " +
-          s"index holds $actual — partial append or concurrent write; rebuild")
-      require(tombs == meta.deleted,
-        if (tombs > meta.deleted)
-          s"stale MinHash index at $path: meta records ${meta.deleted} " +
-            s"tombstones, index holds $tombs — interrupted delete; re-run " +
-            "the delete (it self-heals the meta from the tombstone data)"
-        else
-          s"stale MinHash index at $path: meta records ${meta.deleted} " +
-            s"tombstones, index holds only $tombs — tombstone data was " +
-            "lost; rebuild")
-    }
-    if (meta.deleted > 0)
-      data.join(broadcast(minhashTombstones(spark, path).get), Seq("id"),
-        "left_anti")
-    else data
+    val (data, tombDir) = (spark.read.parquet(s"$path/data"),
+      Artifacts.rootTombDir(path))
+    if (verifyRows) Artifacts.requireCounts(spark, data, meta.rows, tombDir,
+      meta.deleted, path, "Dedup.readMinhashIndex")
+    Artifacts.maskTombstones(spark, data, tombDir)
   }
 
   /** Append a new admitted batch to a persisted near-dup index,
@@ -858,18 +779,9 @@ object Dedup {
     val meta = readMinhashMeta(spark, path)
     val (n, h, parity) = (meta.n, meta.h, meta.parity)
     // a batch id in the TOMBSTONE set refuses loudly and first (r17
-    // deletes — see Similarity.requireNotTombstoned): re-appending
-    // before the compact would leave the id with a dead row, a live
-    // row, and a tombstone, and the read-side anti-join would then
-    // mask BOTH rows
-    minhashTombstones(spark, path).foreach { t =>
-      val hit = t.join(batch.select(col(idCol).as("id")).distinct(), "id")
-        .limit(1).count()
-      require(hit == 0L,
-        s"Dedup.appendMinhashIndex: the batch carries ids that are " +
-          s"tombstoned (deleted, awaiting compaction) in the index at $path " +
-          "— compact the index first, then re-append")
-    }
+    // deletes — see Artifacts.requireNotTombstoned)
+    Artifacts.requireNotTombstoned(spark, batch.select(col(idCol).as("id")),
+      Artifacts.rootTombDir(path), path, "Dedup.appendMinhashIndex")
     // pin ONE instantiation of the batch — but only when the audit
     // runs (ADVICE r15): the pin exists so the audit and the signing
     // write see the same rows (a nondeterministic batch plan could
@@ -908,9 +820,8 @@ object Dedup {
       val sigs = if (requireNewIds) sigs0.cache() else sigs0.localCheckpoint()
       try {
         sigs.write.mode("append").parquet(s"$path/data")
-        writeMinhashMeta(spark, path, meta.rows + sigs.count(), meta.deleted,
-          n, h, parity)
-        Similarity.refreshIndexPath(spark, path)
+        writeMinhashMeta(spark, path, meta.copy(rows = meta.rows + sigs.count()))
+        Artifacts.refreshIndexPath(spark, path)
       } finally {
         sigs.unpersist()
         org.apache.spark.sql.graftglue.ColumnGlue.unpersistLocalCheckpoint(sigs)
@@ -932,44 +843,30 @@ object Dedup {
     * file size; 1 fits the signature table's few-dozen-bytes-per-row
     * shape up to hundreds of millions of docs) via the same
     * write-aside + rename swap protocol as the IVF/IVF-PQ compactors
-    * (Similarity.compactIndexRoot — ONE implementation of the
+    * (Artifacts.compactIndexRoot — ONE implementation of the
     * crash-window-sensitive swap, review r15): the live index is
     * never read-and-overwritten in place, the copy is
     * row-count-verified before the swap, and the meta (hash family +
     * row count) is copied verbatim, so reads serve byte-identically.
-    * Refuses an index whose actual row count drifted from its meta.
-    * Single-writer discipline is the caller's, as for append. */
+    * Refuses an index whose row or tombstone count drifted from its
+    * meta. Single-writer discipline is the caller's, as for append. */
   def compactMinhashIndex(spark: SparkSession, path: String,
                           numFiles: Int = 1): Unit = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     val meta = readMinhashMeta(spark, path)
-    val actualTombs = minhashTombCount(spark, path)
-    require(actualTombs == meta.deleted,
-      if (actualTombs > meta.deleted)
-        s"Dedup.compactMinhashIndex: index at $path holds $actualTombs " +
-          s"tombstones but its meta records ${meta.deleted} — interrupted " +
-          "delete; re-run the delete (it self-heals the meta from the " +
-          "tombstone data), then compact"
-      else
-        s"Dedup.compactMinhashIndex: index at $path records ${meta.deleted} " +
-          s"tombstones but holds only $actualTombs — tombstone data was " +
-          "lost; rebuild")
-    val tombs = if (meta.deleted > 0) minhashTombstones(spark, path) else None
-    Similarity.compactIndexRoot(spark, path, "data", "_graft_index_meta",
-      meta.rows, "Dedup.compactMinhashIndex", expectedCopied = meta.live,
-      writeMeta =
-        // tombstoned rows drop physically here (r17 deletes), so the
-        // meta rewrites to (rows := live, deleted := 0); the tombstone
-        // dir stays behind in the swapped-away root
-        if (meta.deleted > 0) Some { metaDest: String =>
-          import spark.implicits._
-          Seq((MinhashMetaVersion, meta.live, 0L, meta.n, meta.h, meta.parity))
-            .toDF("version", "rows", "deleted", "n", "h", "parity")
-            .coalesce(1).write.mode("overwrite").parquet(metaDest)
-        } else None) { (df, dest) =>
-      val survivors = tombs.fold(df)(t =>
-        df.join(broadcast(t), Seq("id"), "left_anti"))
-      survivors.repartition(numFiles).write.mode("overwrite").parquet(dest)
+    val tombDir = Artifacts.rootTombDir(path)
+    Artifacts.requireCounts(spark, spark.read.parquet(s"$path/data"),
+      meta.rows, tombDir, meta.deleted, path, "Dedup.compactMinhashIndex")
+    Artifacts.compactIndexRoot(spark, path, "data", "_graft_index_meta",
+      meta.live, "Dedup.compactMinhashIndex",
+      // tombstoned rows drop physically here (r17 deletes), so the
+      // meta rewrites to (rows := live, deleted := 0); the tombstone
+      // dir stays behind in the swapped-away root
+      rewriteMeta = if (meta.deleted > 0) Some(root =>
+        writeMinhashMeta(spark, root, meta.copy(rows = meta.live, deleted = 0L)))
+      else None) { (df, dest) =>
+      Artifacts.maskTombstones(spark, df, tombDir)
+        .repartition(numFiles).write.mode("overwrite").parquet(dest)
     }
   }
 

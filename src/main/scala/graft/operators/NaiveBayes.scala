@@ -123,44 +123,34 @@ object NaiveBayes {
     * has carried its landed `n_weights` count since it shipped). */
   val MulticlassFormatVersion = 1
 
-  /** Persists an `NBModel` as a versioned parquet artifact — the
-    * `Classifier.saveLogReg` symmetry for the TABLE-shaped model
-    * (VERDICT r12 item 2). The weight table (vocab-sized — too big
-    * for a one-row array at 100 TB vocabularies) lands under
-    * `weights/`; the driver scalars land as ONE meta row under
-    * `meta/`, WRITTEN LAST so it doubles as the commit marker, and
-    * carrying the READ-BACK landed weight row count (the
-    * saveNBMulticlass/savePQ commit-row convention — ADVICE r13) so
-    * a partial/corrupt weights write is refused at load instead of
-    * silently under-scoring. Doubles round-trip bit-exactly through
-    * parquet, so a loaded model scores identically to the in-memory
-    * one. */
+  /** Persists an `NBModel` — the `Classifier.saveLogReg` symmetry for
+    * the TABLE-shaped model (VERDICT r12 item 2). The weight table
+    * (vocab-sized — too big for a one-row array at 100 TB
+    * vocabularies) lands under `weights/`; the driver scalars and the
+    * READ-BACK landed weight row count (ADVICE r13) land in the
+    * Artifacts meta under `meta/`, so a partial/corrupt weights write
+    * is refused at load instead of silently under-scoring. Doubles
+    * round-trip bit-exactly through parquet, so a loaded model scores
+    * identically to the in-memory one. */
   def saveNB(spark: org.apache.spark.sql.SparkSession, path: String,
              model: NBModel): Unit = {
-    import spark.implicits._
     model.weights.select(col("token"), col("c1"), col("c0"), col("w"))
       .write.mode("overwrite").parquet(s"$path/weights")
     val n = spark.read.parquet(s"$path/weights").count()
-    Seq((ModelFormatVersion, model.bias, model.oovW, model.vocabSize,
-        model.alpha, n))
-      .toDF("version", "bias", "oov_w", "vocab_size", "alpha", "n_rows")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Artifacts.writeMeta(spark, s"$path/meta", (ModelFormatVersion, model.bias,
+        model.oovW, model.vocabSize, model.alpha, n),
+      "version", "bias", "oov_w", "vocab_size", "alpha", "n_rows")
   }
 
-  /** Loads a `saveNB` artifact, refusing loudly on: wrong meta row
-    * count (corrupt/partial write), unknown format version, missing
-    * weight columns, a weight row count that disagrees with the meta
-    * (lost/duplicated partitions), or non-finite scalars. The row
+  /** Loads a `saveNB` artifact, refusing loudly on: the Artifacts meta
+    * refusals (only v2 reads), missing weight columns, a weight row
+    * count that disagrees with the meta (lost/duplicated partitions),
+    * or non-finite scalars. The row
     * count check is one bounded job over the vocab-sized relation —
     * the freshness contract, not a corpus scan. */
   def loadNB(spark: org.apache.spark.sql.SparkSession, path: String): NBModel = {
-    val metaRows = spark.read.parquet(s"$path/meta").collect()
-    require(metaRows.length == 1,
-      s"NB model meta at $path has ${metaRows.length} rows, expected exactly 1")
-    val r = metaRows(0)
-    val version = r.getAs[Int]("version")
-    require(version == ModelFormatVersion,
-      s"NB model artifact version $version at $path; this build reads $ModelFormatVersion")
+    val r = Artifacts.readMeta(spark, s"$path/meta", "NB model",
+      ModelFormatVersion to ModelFormatVersion).row
     val (bias, oovW) = (r.getAs[Double]("bias"), r.getAs[Double]("oov_w"))
     val vocab = r.getAs[Long]("vocab_size")
     val alpha = r.getAs[Double]("alpha")
@@ -253,24 +243,22 @@ object NaiveBayes {
 
   /** Persists an `NBMulticlassModel` — the multiclass symmetry of
     * `saveNB`: the dense vocab×classes weight table under `weights/`,
-    * and ONE meta row (version, alpha, the sorted class list, the
+    * and the Artifacts meta (alpha, the sorted class list, the
     * per-class priors and OOV weights aligned to it, and the expected
-    * weight row count) under `meta/`, written LAST as the commit
-    * marker. */
+    * weight row count) under `meta/`. */
   def saveNBMulticlass(spark: org.apache.spark.sql.SparkSession, path: String,
                        model: NBMulticlassModel): Unit = {
-    import spark.implicits._
     val w = model.weights.select(col("token"), col("cls"), col("c"), col("w"))
     w.write.mode("overwrite").parquet(s"$path/weights")
     val n = spark.read.parquet(s"$path/weights").count()
-    Seq((MulticlassFormatVersion, model.alpha, model.classes,
-        model.classes.map(model.priors), model.classes.map(model.oovW), n))
-      .toDF("version", "alpha", "classes", "priors", "oovs", "n_weights")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Artifacts.writeMeta(spark, s"$path/meta", (MulticlassFormatVersion,
+        model.alpha, model.classes, model.classes.map(model.priors),
+        model.classes.map(model.oovW), n),
+      "version", "alpha", "classes", "priors", "oovs", "n_weights")
   }
 
   /** Loads a `saveNBMulticlass` artifact with the same loud-refusal
-    * contract as `loadNB`: meta row count, format version, class-list
+    * contract as `loadNB`: the Artifacts meta refusals, class-list
     * integrity (non-empty, sorted, distinct — the argmax tie-break
     * depends on it), prior/oov alignment, finite scalars, and a
     * weight row count that must equal the meta's dense
@@ -278,13 +266,8 @@ object NaiveBayes {
     * refused, not silently mis-scored). */
   def loadNBMulticlass(spark: org.apache.spark.sql.SparkSession, path: String)
       : NBMulticlassModel = {
-    val metaRows = spark.read.parquet(s"$path/meta").collect()
-    require(metaRows.length == 1,
-      s"NB multiclass meta at $path has ${metaRows.length} rows, expected exactly 1")
-    val r = metaRows(0)
-    val version = r.getAs[Int]("version")
-    require(version == MulticlassFormatVersion,
-      s"NB multiclass artifact version $version at $path; this build reads $MulticlassFormatVersion")
+    val r = Artifacts.readMeta(spark, s"$path/meta", "NB multiclass model",
+      MulticlassFormatVersion to MulticlassFormatVersion).row
     val alpha = r.getAs[Double]("alpha")
     require(alpha > 0.0 && alpha.isFinite,
       s"NB multiclass artifact at $path has alpha $alpha, must be positive finite")

@@ -150,15 +150,13 @@ object Similarity {
   // DIFFERENT centroid set than the one the index was assigned under
   // silently probes the wrong cells (every result plausible, none
   // correct), and a half-finished append serves a partial corpus.
-  // Every index directory therefore carries a one-row parquet meta
-  // (`_graft_index_meta/`: format version, row count, quantizer
-  // fingerprint, and the quantizer itself) written AFTER the data —
+  // Every index directory therefore carries an Artifacts meta
+  // (`_graft_index_meta/`: format version, row count, tombstone count,
+  // quantizer fingerprint, and the quantizer itself) —
   // ivfTopKIndexed refuses a quantizer-mismatched index and a
   // row-count-drifted one, and appendIvfIndex assigns new batches
   // with the STORED quantizer, so the index can never drift from its
-  // build. Single-writer discipline is the caller's (standard for
-  // bulk-built serving indexes); the meta is the detector, not a
-  // lock.
+  // build.
 
   private val IvfMetaVersion = 2
 
@@ -169,24 +167,6 @@ object Similarity {
                                               cents: KMeans.Centroids) {
     def live: Long = rows - deleted
   }
-
-  /** Root-layout tombstone directory (underscore-prefixed, so data
-    * scans at the root never see it) — shared by the float IVF index
-    * and, with its own root, Dedup's MinHash index. */
-  private[operators] def rootTombDir(path: String): String = s"$path/_tomb"
-
-  /** Invalidate Spark's cached plans and file-status listings under a
-    * MUTATED index root — the same refresh Spark's own table INSERTs
-    * perform. Without it, a consumer that cached a read of the index
-    * (df.cache() over a serve, Dedup's internal registerCache) — or
-    * merely re-reads the path through the session-shared file-status
-    * cache — silently serves PRE-mutation rows after an append,
-    * delete, or compact (caught live by IndexDeleteSpec: a compacted
-    * MinHash index kept answering from the pre-compact cached scan).
-    * Every index mutator calls this after its meta write. */
-  private[operators] def refreshIndexPath(spark: SparkSession,
-                                          path: String): Unit =
-    spark.catalog.refreshByPath(path)
 
   /** The cell-partitioned writer every index write goes through: one
     * shuffle keyed on cell → one file per cell (guide §6 small-files —
@@ -234,35 +214,19 @@ object Similarity {
     md.digest().map(b => f"${b & 0xff}%02x").mkString
   }
 
-  private def writeIvfMeta(spark: SparkSession, path: String, rows: Long,
-                           deleted: Long, cents: KMeans.Centroids): Unit = {
-    import spark.implicits._
-    Seq((IvfMetaVersion, rows, deleted, centsFingerprint(cents),
-        cents.sortBy(_._1).toSeq.map { case (cid, v) => (cid, v.toSeq) }))
-      .toDF("version", "rows", "deleted", "fingerprint", "cents")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_graft_index_meta")
-  }
+  /** Writes `meta` at the current format version. */
+  private def writeIvfMeta(spark: SparkSession, path: String,
+                           meta: IvfMeta): Unit =
+    Artifacts.writeMeta(spark, s"$path/_graft_index_meta",
+      (IvfMetaVersion, meta.rows, meta.deleted, meta.fingerprint,
+        Artifacts.encodeCents(meta.cents)),
+      "version", "rows", "deleted", "fingerprint", "cents")
 
   private def readIvfMeta(spark: SparkSession, path: String): IvfMeta = {
-    // AnalysisException only (path missing / not parquet): a transient
-    // storage or permission error must surface as ITSELF, not as a
-    // "rebuild the index" diagnosis (review r12)
-    val meta =
-      try spark.read.parquet(s"$path/_graft_index_meta").head()
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$path is not a graft IVF index (no _graft_index_meta — built " +
-            s"before the freshness contract, or not an index): ${e.getMessage}") }
-    val version = meta.getAs[Int]("version")
-    require(version >= 1 && version <= IvfMetaVersion,
-      s"IVF index format version $version at $path; this build reads up to " +
-        s"$IvfMetaVersion — rebuild")
-    val cents: KMeans.Centroids =
-      meta.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("cents")
-        .map(c => c.getInt(0) -> c.getSeq[Double](1).toArray).toArray
-    IvfMeta(version, meta.getAs[Long]("rows"),
-      if (version >= 2) meta.getAs[Long]("deleted") else 0L,
-      meta.getAs[String]("fingerprint"), cents)
+    val m = Artifacts.readMeta(spark, s"$path/_graft_index_meta",
+      "IVF index", 1 to IvfMetaVersion)
+    IvfMeta(m.version, m.get[Long]("rows"), m.since(2, "deleted", 0L),
+      m.get[String]("fingerprint"), Artifacts.decodeCents(m, "cents"))
   }
 
   /** Reserved column-name guard for filterable index metadata: the
@@ -297,44 +261,6 @@ object Similarity {
         "drop (null-filter) every appended row; project the columns into " +
         "the batch")
   }
-
-  /** Self-healing tombstone reconciliation (ADVICE r17): a crash
-    * between the tombstone append and the meta write leaves actual
-    * tombstones > meta.deleted, and the retry used to be a no-op (the
-    * anti-join finds nothing new, so the meta never catches up and
-    * every verified serve/compact refuses forever). The tombstone data
-    * is the source of truth — every id in it was verified live before
-    * landing and the set is deduplicated by construction — so a delete
-    * entry first rewrites the meta from the OBSERVED count. The other
-    * direction (meta > actual: tombstone files lost) is real
-    * corruption with no record to heal from, so it refuses with the
-    * rebuild diagnosis. Returns the reconciled deleted count. */
-  private def reconcileTombstones(spark: SparkSession, tombDir: String,
-                                  metaDeleted: Long, path: String,
-                                  where: String)(heal: Long => Unit): Long = {
-    val actual = tombstoneCount(spark, tombDir)
-    if (actual > metaDeleted) { heal(actual); actual }
-    else {
-      require(actual == metaDeleted,
-        s"$where: the index at $path records $metaDeleted tombstones but " +
-          s"holds only $actual — tombstone data was lost or hand-edited; " +
-          "the takedown record cannot be reconstructed, rebuild the index")
-      metaDeleted
-    }
-  }
-
-  /** The shared tombstone-drift diagnosis for serve/compact gates:
-    * names the direction-specific remedy (deletes self-heal the
-    * forward direction; the backward one needs a rebuild). */
-  private def tombstoneDriftMsg(path: String, metaDeleted: Long,
-                                actual: Long): String =
-    if (actual > metaDeleted)
-      s"stale index at $path: meta records $metaDeleted tombstones, index " +
-        s"holds $actual — interrupted delete; re-run the delete (delete " +
-        "entries self-heal the meta from the tombstone data)"
-    else
-      s"stale index at $path: meta records $metaDeleted tombstones, index " +
-        s"holds only $actual — tombstone data was lost; rebuild"
 
   /** Persist the IVF index: corpus assigned to its nearest centroid
     * once, written PARTITIONED BY cell — the production form of the
@@ -375,45 +301,25 @@ object Similarity {
     val spark = corpus.sparkSession
     // stale tombstones from a previous index at this root must not
     // mask the fresh build's rows
-    val conf = spark.sessionState.newHadoopConf()
-    val tomb = new org.apache.hadoop.fs.Path(rootTombDir(path))
-    tomb.getFileSystem(conf).delete(tomb, true)
-    writeIvfMeta(spark, path, spark.read.parquet(path).count(),
-      deleted = 0L, cents)
-    refreshIndexPath(spark, path)
+    Artifacts.delete(spark, Artifacts.rootTombDir(path))
+    writeIvfMeta(spark, path, IvfMeta(IvfMetaVersion,
+      spark.read.parquet(path).count(), 0L, centsFingerprint(cents), cents))
+    Artifacts.refreshIndexPath(spark, path)
   }
 
   /** Tombstone-delete ids from a persisted (float) IVF index — the
-    * deleteFromIvfPqIndex contract over the root-layout float table:
-    * O(takedown) tombstone append, serve-side anti-join, physical
-    * drop at the next compact, idempotent, meta written after the
-    * tombstone data so a crash is detectably stale. */
+    * deleteFromIvfPqIndex contract over the root-layout float table
+    * (Artifacts.deleteIds): serve-side anti-join, physical drop at the
+    * next compact, idempotent, self-healing. */
   def deleteFromIvfIndex(spark: SparkSession, ids: DataFrame,
                          idCol: String, path: String): Unit = {
     TopKAgg.requireLongCastableId(ids, idCol, "Similarity.deleteFromIvfIndex")
     val meta = readIvfMeta(spark, path)
-    val tombDir = rootTombDir(path)
-    // self-heal first (ADVICE r17): a prior delete that crashed between
-    // its tombstone append and its meta write re-enters here and the
-    // meta catches up from the tombstone data before anything else
-    val deleted0 = reconcileTombstones(spark, tombDir, meta.deleted, path,
-      "Similarity.deleteFromIvfIndex") { healed =>
-      writeIvfMeta(spark, path, meta.rows, healed, meta.cents)
-      refreshIndexPath(spark, path)
-    }
-    val doomed = ids.select(col(idCol).cast("long").as("id")).distinct()
-      .join(spark.read.parquet(path).select(col("id")), "id")
-      .join(readTombstones(spark, tombDir), Seq("id"), "left_anti")
-      .localCheckpoint()
-    try {
-      val n = doomed.count()
-      if (n > 0) {
-        doomed.write.mode("append").parquet(tombDir)
-        writeIvfMeta(spark, path, meta.rows, deleted0 + n, meta.cents)
-        refreshIndexPath(spark, path)
-      }
-    } finally {
-      org.apache.spark.sql.graftglue.ColumnGlue.unpersistLocalCheckpoint(doomed)
+    Artifacts.deleteIds(spark, ids.select(col(idCol).cast("long").as("id")),
+      path, Artifacts.rootTombDir(path), meta.deleted, path,
+      "Similarity.deleteFromIvfIndex") { deleted =>
+      writeIvfMeta(spark, path, meta.copy(deleted = deleted))
+      Artifacts.refreshIndexPath(spark, path)
     }
   }
 
@@ -486,8 +392,8 @@ object Similarity {
       // audits run concurrently but the tombstone require is CHECKED
       // first, so the refusal order holds
       val (_, _) = concurrently2(
-        requireNotTombstoned(spark, src, rootTombDir(path), path,
-          "Similarity.appendIvfIndex"),
+        Artifacts.requireNotTombstoned(spark, src, Artifacts.rootTombDir(path),
+          path, "Similarity.appendIvfIndex"),
         if (requireNewIds) requireIdsNotIndexed(spark, src, path,
           "Similarity.appendIvfIndex", "serve duplicate rows"))
       // meta rows = prev + batch (O(batch), not a full-index recount —
@@ -498,9 +404,8 @@ object Similarity {
       // one file per cell per append + production file cap (see build)
       cellPartitionedWriter(assigned)
         .partitionBy("cell").mode("append").parquet(path)
-      writeIvfMeta(spark, path, meta.rows + src.count(), meta.deleted,
-        meta.cents)
-      refreshIndexPath(spark, path)
+      writeIvfMeta(spark, path, meta.copy(rows = meta.rows + src.count()))
+      Artifacts.refreshIndexPath(spark, path)
     } finally {
       org.apache.spark.sql.graftglue.ColumnGlue.unpersistLocalCheckpoint(src)
     }
@@ -543,16 +448,10 @@ object Similarity {
         "not match the one the index was built/appended with — probing the " +
         "wrong cells returns silently wrong neighbors; rebuild the index or " +
         "query with its own centroids")
-    if (verifyRows) {
-      val (actual, tombs) = concurrently2(
-        spark.read.parquet(indexPath).count(),
-        tombstoneCount(spark, rootTombDir(indexPath)))
-      require(actual == meta.rows,
-        s"stale IVF index at $indexPath: meta records ${meta.rows} rows, index " +
-          s"holds $actual — partial append or concurrent write; rebuild")
-      require(tombs == meta.deleted,
-        tombstoneDriftMsg(indexPath, meta.deleted, tombs))
-    }
+    if (verifyRows) Artifacts.requireCounts(spark,
+      spark.read.parquet(indexPath), meta.rows,
+      Artifacts.rootTombDir(indexPath), meta.deleted, indexPath,
+      "Similarity.ivfTopKIndexed")
     val pinned = boundedProbes(probes, maxProbes,
       (if (cents.nonEmpty) cents.head._2.length else 0) * 8L,
       "Similarity.ivfTopKIndexed")
@@ -581,13 +480,8 @@ object Similarity {
     // Catalyst pushes it into the parquet reader next to the partition
     // filter, so the ADC/cosine work and the top-k see only qualifying
     // rows — full-k results, no post-filter recall loss
-    val idx0 = filter.fold(idxP)(idxP.filter)
-    // tombstone mask (r17 deletes): one broadcast anti-join against
-    // the takedown-sized set, skipped while no deletes are pending
-    val idx = if (meta.deleted > 0)
-      idx0.join(broadcast(readTombstones(spark, rootTombDir(indexPath))),
-        Seq("id"), "left_anti")
-    else idx0
+    val idx = Artifacts.maskTombstones(spark, filter.fold(idxP)(idxP.filter),
+      Artifacts.rootTombDir(indexPath))
     val scored = idx.join(broadcast(pc), "cell")
       .filter(col("id") =!= col("probe_id"))
       .join(broadcast(pv), "probe_id")
@@ -735,8 +629,8 @@ object Similarity {
     * once, encode everywhere": codes written by a DIFFERENT codebook
     * are silently garbage at ADC time, so the codebook must freeze
     * with the index it encodes. m·k rows (subspace, codeword id,
-    * codeword) land under `codebooks/`; ONE meta row (version, d, m,
-    * k) lands LAST under `meta/` as the commit marker. */
+    * codeword) land under `codebooks/`, then the Artifacts meta
+    * (version, d, m, k, n_rows, residual_to) under `meta/`. */
   def savePQ(spark: SparkSession, path: String, model: PQModel): Unit = {
     import spark.implicits._
     model.codebooks.zipWithIndex
@@ -750,14 +644,13 @@ object Similarity {
     // codewords (vanished cluster), so the load-time drift check must
     // compare against the written count, not m·k
     val n = spark.read.parquet(s"$path/codebooks").count()
-    Seq((PQFormatVersion, model.d, model.m, model.k, n,
-        model.residualTo.orNull))
-      .toDF("version", "d", "m", "k", "n_rows", "residual_to")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Artifacts.writeMeta(spark, s"$path/meta", (PQFormatVersion, model.d,
+        model.m, model.k, n, model.residualTo.orNull),
+      "version", "d", "m", "k", "n_rows", "residual_to")
   }
 
-  /** Loads a `savePQ` artifact, refusing loudly on: wrong meta row
-    * count, unknown version, inconsistent geometry (d not divisible
+  /** Loads a `savePQ` artifact, refusing loudly on: the Artifacts
+    * meta refusals, inconsistent geometry (d not divisible
     * by m, k out of byte range), a codebook row count that disagrees
     * with the meta's written count, per-subspace codeword ids that
     * are not contiguous 1..size (the code column stores these ids and
@@ -769,22 +662,16 @@ object Similarity {
     // the two artifact halves are independent reads — collect them
     // concurrently (guide §2.6); every refusal below still runs in
     // the original order on the completed results
-    val (metaRows, rows) = concurrently2(
-      spark.read.parquet(s"$path/meta").collect(),
+    val (mr, rows) = concurrently2(
+      Artifacts.readMeta(spark, s"$path/meta", "PQ codebook",
+        1 to PQFormatVersion),
       spark.read.parquet(s"$path/codebooks").collect())
-    require(metaRows.length == 1,
-      s"PQ meta at $path has ${metaRows.length} rows, expected exactly 1")
-    val mr = metaRows(0)
-    val version = mr.getAs[Int]("version")
-    require(version >= 1 && version <= PQFormatVersion,
-      s"PQ artifact version $version at $path; this build reads up to " +
-        s"$PQFormatVersion")
-    val (d, m, k) = (mr.getAs[Int]("d"), mr.getAs[Int]("m"), mr.getAs[Int]("k"))
+    val (d, m, k) = (mr.get[Int]("d"), mr.get[Int]("m"), mr.get[Int]("k"))
     require(m >= 1 && d >= m && d % m == 0,
       s"PQ artifact at $path has inconsistent geometry d=$d m=$m")
     require(k >= 1 && k <= 256, s"PQ artifact at $path has k=$k")
     val dsub = d / m
-    val nRows = mr.getAs[Long]("n_rows")
+    val nRows = mr.get[Long]("n_rows")
     require(rows.length.toLong == nRows,
       s"PQ codebooks at $path have ${rows.length} rows, meta says $nRows — " +
         "partial or duplicated write, refusing to serve")
@@ -813,8 +700,7 @@ object Similarity {
     }
     // v1 predates the residual_to column; raw mode is all it could
     // express, so the absent column reads as None (ADVICE r16)
-    PQModel(d, m, k, books,
-      if (version >= 2) Option(mr.getAs[String]("residual_to")) else None)
+    PQModel(d, m, k, books, Option(mr.since[String](2, "residual_to", null)))
   }
 
   /** Train PQ codebooks: the d dims split into m contiguous
@@ -1185,50 +1071,35 @@ object Similarity {
 
   /** Persists a plain OPQ model (rotation + the codebooks trained in
     * rotated space): rotation rows, the PQ artifact (savePQ v2), and
-    * ONE meta row binding BOTH fingerprints LAST as the commit marker
-    * — so a hand-swap of either subdirectory refuses at load. */
+    * the Artifacts meta binding BOTH fingerprints — so a hand-swap of
+    * either subdirectory refuses at load. */
   def saveOpq(spark: SparkSession, path: String, model: OPQModel): Unit = {
-    import spark.implicits._
     // rotation and PQ land in independent subdirectories — write them
-    // concurrently (guide §2.6); the meta row stays LAST: it is the
-    // commit marker binding both fingerprints, so the crash contract
-    // (no meta ⇒ no artifact) is unchanged
+    // concurrently (guide §2.6); the meta stays last
     concurrently2(
       writeRotation(spark, path, model.rotation),
       savePQ(spark, s"$path/pq", model.pq))
-    Seq((OpqFormatVersion, model.rotation.length,
-        rotationFingerprint(model.rotation), pqFingerprint(model.pq)))
-      .toDF("version", "d", "rotation_fp", "pq_fp")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  private def readOpqMeta(spark: SparkSession, path: String)
-      : (Int, String, String) = {
-    val metaRows = spark.read.parquet(s"$path/meta").collect()
-    require(metaRows.length == 1,
-      s"OPQ meta at $path has ${metaRows.length} rows, expected exactly 1")
-    val mr = metaRows(0)
-    val version = mr.getAs[Int]("version")
-    require(version >= 1 && version <= OpqFormatVersion,
-      s"OPQ artifact version $version at $path; this build reads up to " +
-        s"$OpqFormatVersion")
-    (mr.getAs[Int]("d"), mr.getAs[String]("rotation_fp"),
-      mr.getAs[String]("pq_fp"))
+    Artifacts.writeMeta(spark, s"$path/meta", (OpqFormatVersion,
+        model.rotation.length, rotationFingerprint(model.rotation),
+        pqFingerprint(model.pq)),
+      "version", "d", "rotation_fp", "pq_fp")
   }
 
   /** Loads a `saveOpq` artifact — validated rotation (see
     * readRotation) + the paired codebooks, refusing a codebook whose
     * fingerprint disagrees with the meta's pairing record. */
   def loadOpq(spark: SparkSession, path: String): OPQModel = {
-    val (d, rotFp, pqFp) = readOpqMeta(spark, path)
+    val mr = Artifacts.readMeta(spark, s"$path/meta", "OPQ model",
+      1 to OpqFormatVersion)
+    val d = mr.get[Int]("d")
     val pq = loadPQ(spark, s"$path/pq")
-    require(pqFingerprint(pq) == pqFp,
+    require(pqFingerprint(pq) == mr.get[String]("pq_fp"),
       s"OPQ artifact at $path: the stored codebooks do not match the meta's " +
         "pairing fingerprint — a hand-swapped pq/ directory would silently " +
         "decode garbage; refusing to serve")
     require(pq.d == d, s"OPQ artifact at $path: rotation d=$d but codebook " +
       s"d=${pq.d} — mismatched artifact halves")
-    OPQModel(readRotation(spark, path, d, rotFp), pq)
+    OPQModel(readRotation(spark, path, d, mr.get[String]("rotation_fp")), pq)
   }
 
   /** Persists the full production triple (rotation + coarse quantizer
@@ -1237,18 +1108,15 @@ object Similarity {
     * fingerprints and stores the centroids themselves (they are
     * centroid-sized — the writeIvfPqMeta convention). */
   def saveOpqIvf(spark: SparkSession, path: String, model: OpqIvfModel): Unit = {
-    import spark.implicits._
-    // independent subdirectories written concurrently; meta LAST as
-    // the commit marker (see saveOpq)
+    // independent subdirectories written concurrently; meta last
     concurrently2(
       writeRotation(spark, path, model.rotation),
       savePQ(spark, s"$path/pq", model.pq))
-    Seq((OpqFormatVersion, model.rotation.length,
-        rotationFingerprint(model.rotation), pqFingerprint(model.pq),
-        centsFingerprint(model.cents),
-        model.cents.sortBy(_._1).toSeq.map { case (cid, v) => (cid, v.toSeq) }))
-      .toDF("version", "d", "rotation_fp", "pq_fp", "cents_fp", "cents")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Artifacts.writeMeta(spark, s"$path/meta", (OpqFormatVersion,
+        model.rotation.length, rotationFingerprint(model.rotation),
+        pqFingerprint(model.pq), centsFingerprint(model.cents),
+        Artifacts.encodeCents(model.cents)),
+      "version", "d", "rotation_fp", "pq_fp", "cents_fp", "cents")
   }
 
   /** Loads a `saveOpqIvf` artifact with the full refusal battery:
@@ -1257,19 +1125,11 @@ object Similarity {
     * agreement — a forged or mixed artifact fails here, with its own
     * diagnosis, never downstream as wrong neighbors. */
   def loadOpqIvf(spark: SparkSession, path: String): OpqIvfModel = {
-    val metaRows = spark.read.parquet(s"$path/meta").collect()
-    require(metaRows.length == 1,
-      s"OPQ-IVF meta at $path has ${metaRows.length} rows, expected exactly 1")
-    val mr = metaRows(0)
-    val version = mr.getAs[Int]("version")
-    require(version >= 1 && version <= OpqFormatVersion,
-      s"OPQ-IVF artifact version $version at $path; this build reads up to " +
-        s"$OpqFormatVersion")
-    val d = mr.getAs[Int]("d")
-    val cents: KMeans.Centroids =
-      mr.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("cents")
-        .map(c => c.getInt(0) -> c.getSeq[Double](1).toArray).toArray
-    require(centsFingerprint(cents) == mr.getAs[String]("cents_fp"),
+    val mr = Artifacts.readMeta(spark, s"$path/meta", "OPQ-IVF model",
+      1 to OpqFormatVersion)
+    val d = mr.get[Int]("d")
+    val cents = Artifacts.decodeCents(mr, "cents")
+    require(centsFingerprint(cents) == mr.get[String]("cents_fp"),
       s"OPQ-IVF artifact at $path: stored centroids do not match their " +
         "fingerprint — corrupt artifact, refusing to serve")
     // the codebook and rotation halves are independent reads once the
@@ -1277,8 +1137,8 @@ object Similarity {
     // half's refusal battery runs unchanged
     val (pq, rotation) = concurrently2(
       loadPQ(spark, s"$path/pq"),
-      readRotation(spark, path, d, mr.getAs[String]("rotation_fp")))
-    require(pqFingerprint(pq) == mr.getAs[String]("pq_fp"),
+      readRotation(spark, path, d, mr.get[String]("rotation_fp")))
+    require(pqFingerprint(pq) == mr.get[String]("pq_fp"),
       s"OPQ-IVF artifact at $path: the stored codebooks do not match the " +
         "meta's pairing fingerprint — a hand-swapped pq/ directory would " +
         "silently decode garbage; refusing to serve")
@@ -1923,11 +1783,6 @@ object Similarity {
   private def ivfPqTombDir(path: String, gen: Long): String =
     s"$path/_tomb/g$gen"
 
-  private def dirExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
   /** Run two INDEPENDENT Spark actions concurrently and return both —
     * the integrity gates pair a data-row count with a tombstone count,
     * each a tiny job whose wall-clock is scheduling overhead, and the
@@ -1948,19 +1803,6 @@ object Similarity {
       (a, Await.result(fut, Duration.Inf))
     } finally { pool.shutdown(); () }
   }
-
-  /** Tombstoned ids of a generation as (id: long), empty when none
-    * were ever written (existence-checked — no logged read failures
-    * on the common no-deletes path). */
-  private def readTombstones(spark: SparkSession, tombDir: String): DataFrame = {
-    import spark.implicits._
-    if (dirExists(spark, tombDir))
-      spark.read.parquet(tombDir).select(col("id").cast("long").as("id"))
-    else Seq.empty[Long].toDF("id")
-  }
-
-  private def tombstoneCount(spark: SparkSession, tombDir: String): Long =
-    if (dirExists(spark, tombDir)) spark.read.parquet(tombDir).count() else 0L
 
   /** Order-independent digest of a PQ codebook set: md5 over
     * (j, cid, dsub, IEEE-754 bits) in (j, cid) order, plus the
@@ -1993,53 +1835,34 @@ object Similarity {
     * billions of vectors from disk: each row is (id, m small-int
     * codes), written PARTITIONED BY coarse cell, so a query reads
     * nprobe/#cells of an already-32×-compressed table and the floats
-    * are never stored in the index at all. The meta row carries BOTH
-    * provenances (coarse-quantizer fingerprint + centroids, PQ
-    * codebook fingerprint) written AFTER the data: codes decoded
-    * under a drifted codebook, or cells probed under a drifted
-    * quantizer, are silently-plausible garbage — the serve refuses
-    * both. */
-  private def writeIvfPqMeta(spark: SparkSession, path: String, rows: Long,
-                             deleted: Long, gen: Long, fingerprint: String,
-                             cents: KMeans.Centroids, pqFp: String,
-                             rotationFp: Option[String]): Unit = {
-    import spark.implicits._
-    Seq((IvfPqMetaVersion, rows, deleted, gen, fingerprint,
-        cents.sortBy(_._1).toSeq.map { case (cid, v) => (cid, v.toSeq) },
-        pqFp, rotationFp.orNull))
-      .toDF("version", "rows", "deleted", "gen", "fingerprint", "cents",
-        "pq_fingerprint", "rotation_fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_graft_ivfpq_meta")
-  }
+    * are never stored in the index at all. The Artifacts meta carries
+    * BOTH provenances (coarse-quantizer fingerprint + centroids, PQ
+    * codebook fingerprint): codes decoded under a drifted codebook, or
+    * cells probed under a drifted quantizer, are silently-plausible
+    * garbage — the serve refuses both. Writes at the current version. */
+  private def writeIvfPqMeta(spark: SparkSession, path: String,
+                             meta: IvfPqMeta): Unit =
+    Artifacts.writeMeta(spark, s"$path/_graft_ivfpq_meta",
+      (IvfPqMetaVersion, meta.rows, meta.deleted, meta.gen, meta.fingerprint,
+        Artifacts.encodeCents(meta.cents), meta.pqFingerprint,
+        meta.rotationFp.orNull),
+      "version", "rows", "deleted", "gen", "fingerprint", "cents",
+      "pq_fingerprint", "rotation_fp")
 
-  /** Decodes a persisted IVF-PQ index's meta, refusing non-index
-    * paths and unknown (NEWER) format versions. v1 metas — data at
-    * the root, no deletes, no rotation provenance — read as
-    * (deleted = 0, gen = 0, rotationFp = None): every v1 field is
-    * safely interpretable, so reads never strand an old index
-    * (the loadPQ v1 lesson, ADVICE r16); only the write paths demand
-    * the v2 layout, reachable through one compact. */
+  /** Decodes a persisted IVF-PQ index's meta. v1 metas — data at the
+    * root, no deletes, no rotation provenance — read as (deleted = 0,
+    * gen = 0, rotationFp = None): every v1 field is safely
+    * interpretable, so reads never strand an old index (the loadPQ v1
+    * lesson, ADVICE r16); only the write paths demand the v2 layout,
+    * reachable through one compact. */
   private[operators] def readIvfPqMeta(spark: SparkSession,
                                        path: String): IvfPqMeta = {
-    val meta =
-      try spark.read.parquet(s"$path/_graft_ivfpq_meta").head()
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"$path is not a graft IVF-PQ index (no _graft_ivfpq_meta): " +
-            e.getMessage) }
-    val version = meta.getAs[Int]("version")
-    require(version >= 1 && version <= IvfPqMetaVersion,
-      s"IVF-PQ index format version $version at $path; this build reads up " +
-        s"to $IvfPqMetaVersion — rebuild")
-    val cents: KMeans.Centroids =
-      meta.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("cents")
-        .map(c => c.getInt(0) -> c.getSeq[Double](1).toArray).toArray
-    IvfPqMeta(version, meta.getAs[Long]("rows"),
-      if (version >= 2) meta.getAs[Long]("deleted") else 0L,
-      if (version >= 2) meta.getAs[Long]("gen") else 0L,
-      meta.getAs[String]("fingerprint"), cents,
-      meta.getAs[String]("pq_fingerprint"),
-      if (version >= 2) Option(meta.getAs[String]("rotation_fp")) else None)
+    val m = Artifacts.readMeta(spark, s"$path/_graft_ivfpq_meta",
+      "IVF-PQ index", 1 to IvfPqMetaVersion)
+    IvfPqMeta(m.version, m.get[Long]("rows"), m.since(2, "deleted", 0L),
+      m.since(2, "gen", 0L), m.get[String]("fingerprint"),
+      Artifacts.decodeCents(m, "cents"), m.get[String]("pq_fingerprint"),
+      Option(m.since[String](2, "rotation_fp", null)))
   }
 
   def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
@@ -2073,9 +1896,7 @@ object Similarity {
     // index must not leave retired generations, tombstones, or
     // v1-layout cells behind the new meta — the generational twin of
     // the forced-static-overwrite rule (ADVICE r13)
-    val conf = spark.sessionState.newHadoopConf()
-    val rootP = new org.apache.hadoop.fs.Path(path)
-    rootP.getFileSystem(conf).delete(rootP, true)
+    Artifacts.delete(spark, path)
     val dataDir = s"$path/g0"
     // one file per cell per write + production file cap (the compact
     // posture — see buildIvfIndex; guide §6 small-files)
@@ -2089,10 +1910,10 @@ object Similarity {
       .select(col("id") +: col("codes") +: col("cell") +: metaCols.map(col): _*))
       .option("partitionOverwriteMode", "static")
       .partitionBy("cell").mode("overwrite").parquet(dataDir)
-    writeIvfPqMeta(spark, path, spark.read.parquet(dataDir).count(),
-      deleted = 0L, gen = 0L, centsFingerprint(cents), cents,
-      pqFingerprint(model), rotationFp)
-    refreshIndexPath(spark, path)
+    writeIvfPqMeta(spark, path, IvfPqMeta(IvfPqMetaVersion,
+      spark.read.parquet(dataDir).count(), deleted = 0L, gen = 0L,
+      centsFingerprint(cents), cents, pqFingerprint(model), rotationFp))
+    Artifacts.refreshIndexPath(spark, path)
   }
 
   /** Incremental IVF-PQ index maintenance — the `appendIvfIndex`
@@ -2159,8 +1980,8 @@ object Similarity {
       // tombstone refusal still SURFACES first because its require is
       // checked first, so the refusal-order contract above holds
       val (_, _) = concurrently2(
-        requireNotTombstoned(spark, src, ivfPqTombDir(path, meta.gen), path,
-          "Similarity.appendIvfPqIndex"),
+        Artifacts.requireNotTombstoned(spark, src,
+          ivfPqTombDir(path, meta.gen), path, "Similarity.appendIvfPqIndex"),
         if (requireNewIds) requireIdsNotIndexed(spark, src, dataDir,
           "Similarity.appendIvfPqIndex", "serve duplicate rows"))
       val assigned = encodeForIndex(
@@ -2171,10 +1992,8 @@ object Similarity {
       // one file per cell per append + production file cap (see build)
       cellPartitionedWriter(assigned)
         .partitionBy("cell").mode("append").parquet(dataDir)
-      writeIvfPqMeta(spark, path, meta.rows + src.count(), meta.deleted,
-        meta.gen, meta.fingerprint, meta.cents, meta.pqFingerprint,
-        meta.rotationFp)
-      refreshIndexPath(spark, path)
+      writeIvfPqMeta(spark, path, meta.copy(rows = meta.rows + src.count()))
+      Artifacts.refreshIndexPath(spark, path)
     } finally {
       org.apache.spark.sql.graftglue.ColumnGlue.unpersistLocalCheckpoint(src)
     }
@@ -2215,87 +2034,7 @@ object Similarity {
       case (None, None) => ()
     }
 
-  /** Loud refusal when a batch intersects the current generation's
-    * tombstone set — see the appendIvfPqIndexCore comment. One
-    * broadcast-sized semi-join against the (small, takedown-sized)
-    * tombstone table. */
-  private def requireNotTombstoned(spark: SparkSession, batchIds: DataFrame,
-                                   tombDir: String, path: String,
-                                   where: String): Unit = {
-    val hit = readTombstones(spark, tombDir)
-      .join(batchIds.select(col("id")).distinct(), "id").limit(1).count()
-    require(hit == 0L,
-      s"$where: the batch carries ids that are tombstoned (deleted, " +
-        s"awaiting compaction) in the index at $path — appending now would " +
-        "leave the id with a dead row, a live row, and a tombstone, and " +
-        "the serve-side anti-join would silently drop BOTH rows; compact " +
-        "the index first, then re-append")
-  }
-
   // ── Index compaction (VERDICT r14 item 4) ────────────────────────
-
-  /** Shared write-aside + swap compaction protocol for every
-    * appendable index — the cell-partitioned IVF/IVF-PQ tables
-    * (`dataSub = ""`) AND Dedup's MinHash signature table
-    * (`dataSub = "data"`), so the crash-window-sensitive swap
-    * ordering lives in exactly one place (review r15). The live
-    * index is never read-and-overwritten in place (Spark cannot do
-    * that safely — overwrite deletes the source mid-read); instead
-    * `rewrite` lands the compacted copy in a sibling directory, the
-    * meta is copied VERBATIM (compaction changes file layout, nothing
-    * else: fingerprints, stored provenance, and row count all survive
-    * byte-for-byte, so reads serve hash-identically), the copy is
-    * row-count-verified against the meta, and the root swaps in via
-    * two renames — metadata operations on any hierarchical
-    * filesystem, so the swap cost is independent of index size, and
-    * a crash mid-swap leaves either the old or the new directory
-    * intact under a detectable name, never a half-deleted mix. */
-  private[operators] def compactIndexRoot(spark: SparkSession, path: String,
-                                          dataSub: String, metaSubdir: String,
-                                          metaRows: Long, where: String,
-                                          expectedCopied: Long = -1L,
-                                          writeMeta: Option[String => Unit] = None)(
-      rewrite: (DataFrame, String) => Unit): Unit = {
-    def data(root: String): String =
-      if (dataSub.isEmpty) root else s"$root/$dataSub"
-    val wantCopied = if (expectedCopied >= 0) expectedCopied else metaRows
-    val actual = spark.read.parquet(data(path)).count()
-    require(actual == metaRows,
-      s"$where: index at $path holds $actual rows but its meta records " +
-        s"$metaRows — partial append or concurrent writer; compacting now " +
-        "would bless the corruption. Rebuild instead")
-    val tmp = s"${path}__compacting"
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    rewrite(spark.read.parquet(data(path)), data(tmp))
-    // meta: copied verbatim when nothing changed semantically, or
-    // REWRITTEN by the caller when the compact drops tombstoned rows
-    // (rows := live, deleted := 0) — either way it lands in the side
-    // directory before the swap, so a crash can never leave a live
-    // root with a stale meta
-    writeMeta match {
-      case Some(w) => w(s"$tmp/$metaSubdir")
-      case None =>
-        spark.read.parquet(s"$path/$metaSubdir")
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/$metaSubdir")
-    }
-    val copied = spark.read.parquet(data(tmp)).count()
-    require(copied == wantCopied,
-      s"$where: compacted copy at $tmp holds $copied rows, expected " +
-        s"$wantCopied — refusing the swap; the live index is untouched")
-    val live = new org.apache.hadoop.fs.Path(path)
-    val side = new org.apache.hadoop.fs.Path(tmp)
-    val old = new org.apache.hadoop.fs.Path(s"${path}__precompact")
-    fs.delete(old, true)
-    require(fs.rename(live, old), s"$where: could not move $path aside")
-    require(fs.rename(side, live),
-      s"$where: could not move the compacted copy into place — the " +
-        s"original index is preserved at $old; restore it by renaming back")
-    fs.delete(old, true)
-    refreshIndexPath(spark, path)
-    ()
-  }
 
   /** Compact a persisted IVF index in place: every appendIvfIndex
     * lands ≥1 new parquet file per touched cell, so N ingest batches
@@ -2310,27 +2049,15 @@ object Similarity {
     * discipline is the caller's, as for append. */
   def compactIvfIndex(spark: SparkSession, path: String): Unit = {
     val meta = readIvfMeta(spark, path)
-    val tombDir = rootTombDir(path)
-    val actualTombs = tombstoneCount(spark, tombDir)
-    require(actualTombs == meta.deleted,
-      s"Similarity.compactIvfIndex: ${
-        tombstoneDriftMsg(path, meta.deleted, actualTombs)}")
-    val tombs = if (meta.deleted > 0) Some(readTombstones(spark, tombDir))
-      else None
-    compactIndexRoot(spark, path, "", "_graft_index_meta", meta.rows,
-      "Similarity.compactIvfIndex", expectedCopied = meta.live,
-      writeMeta =
-        if (meta.deleted > 0) Some { metaDest: String =>
-          import spark.implicits._
-          Seq((IvfMetaVersion, meta.live, 0L,
-              meta.fingerprint,
-              meta.cents.sortBy(_._1).toSeq.map { case (cid, v) => (cid, v.toSeq) }))
-            .toDF("version", "rows", "deleted", "fingerprint", "cents")
-            .coalesce(1).write.mode("overwrite").parquet(metaDest)
-        } else None) { (df, dest) =>
-      val survivors = tombs.fold(df)(t =>
-        df.join(broadcast(t), Seq("id"), "left_anti"))
-      cellPartitionedWriter(survivors)
+    val tombDir = Artifacts.rootTombDir(path)
+    Artifacts.requireCounts(spark, spark.read.parquet(path), meta.rows,
+      tombDir, meta.deleted, path, "Similarity.compactIvfIndex")
+    Artifacts.compactIndexRoot(spark, path, "", "_graft_index_meta",
+      meta.live, "Similarity.compactIvfIndex",
+      rewriteMeta = if (meta.deleted > 0) Some(root =>
+        writeIvfMeta(spark, root, meta.copy(rows = meta.live, deleted = 0L)))
+      else None) { (df, dest) =>
+      cellPartitionedWriter(Artifacts.maskTombstones(spark, df, tombDir))
         .option("partitionOverwriteMode", "static")
         .partitionBy("cell").mode("overwrite").parquet(dest)
     }
@@ -2355,34 +2082,11 @@ object Similarity {
     TopKAgg.requireLongCastableId(ids, idCol, "Similarity.deleteFromIvfPqIndex")
     val meta = readIvfPqMeta(spark, path)
     requireV2Layout(meta, path, "Similarity.deleteFromIvfPqIndex")
-    val dataDir = ivfPqDataDir(path, meta)
-    val tombDir = ivfPqTombDir(path, meta.gen)
-    // self-heal first (ADVICE r17): a prior delete that crashed between
-    // its tombstone append and its meta write re-enters here and the
-    // meta catches up from the tombstone data before anything else
-    val deleted0 = reconcileTombstones(spark, tombDir, meta.deleted, path,
-      "Similarity.deleteFromIvfPqIndex") { healed =>
-      writeIvfPqMeta(spark, path, meta.rows, healed, meta.gen,
-        meta.fingerprint, meta.cents, meta.pqFingerprint, meta.rotationFp)
-      refreshIndexPath(spark, path)
-    }
-    // pin ONE instantiation of the id set: the live filter, the
-    // tombstone write, and the meta count must agree (the append-pin
-    // discipline, requireIdsNotIndexed)
-    val doomed = ids.select(col(idCol).cast("long").as("id")).distinct()
-      .join(spark.read.parquet(dataDir).select(col("id")), "id")
-      .join(readTombstones(spark, tombDir), Seq("id"), "left_anti")
-      .localCheckpoint()
-    try {
-      val n = doomed.count()
-      if (n > 0) {
-        doomed.write.mode("append").parquet(tombDir)
-        writeIvfPqMeta(spark, path, meta.rows, deleted0 + n, meta.gen,
-          meta.fingerprint, meta.cents, meta.pqFingerprint, meta.rotationFp)
-        refreshIndexPath(spark, path)
-      }
-    } finally {
-      org.apache.spark.sql.graftglue.ColumnGlue.unpersistLocalCheckpoint(doomed)
+    Artifacts.deleteIds(spark, ids.select(col(idCol).cast("long").as("id")),
+      ivfPqDataDir(path, meta), ivfPqTombDir(path, meta.gen), meta.deleted,
+      path, "Similarity.deleteFromIvfPqIndex") { deleted =>
+      writeIvfPqMeta(spark, path, meta.copy(deleted = deleted))
+      Artifacts.refreshIndexPath(spark, path)
     }
   }
 
@@ -2407,29 +2111,15 @@ object Similarity {
     val meta = readIvfPqMeta(spark, path)
     val dataDir = ivfPqDataDir(path, meta)
     val tombDir = ivfPqTombDir(path, meta.gen)
-    val (actual, actualTombs) = concurrently2(
-      spark.read.parquet(dataDir).count(),
-      tombstoneCount(spark, tombDir))
-    require(actual == meta.rows,
-      s"Similarity.compactIvfPqIndex: index at $path holds $actual rows " +
-        s"but its meta records ${meta.rows} — partial append or concurrent " +
-        "writer; compacting now would bless the corruption. Rebuild instead")
-    require(actualTombs == meta.deleted,
-      s"Similarity.compactIvfPqIndex: ${
-        tombstoneDriftMsg(path, meta.deleted, actualTombs)}")
+    Artifacts.requireCounts(spark, spark.read.parquet(dataDir), meta.rows,
+      tombDir, meta.deleted, path, "Similarity.compactIvfPqIndex")
     val newGen = meta.gen + 1
     val dest = s"$path/g$newGen"
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    fs.delete(new org.apache.hadoop.fs.Path(dest), true) // crashed prior try
-    val survivors0 = spark.read.parquet(dataDir)
-    val survivors = if (meta.deleted > 0)
-      survivors0.join(broadcast(readTombstones(spark, tombDir)), Seq("id"),
-        "left_anti")
-    else survivors0
+    Artifacts.delete(spark, dest) // crashed prior try
     // one shuffle keyed on cell → one file per cell; hot cells split
     // at the production maxRecordsPerFile cap (cellPartitionedWriter)
-    cellPartitionedWriter(survivors)
+    cellPartitionedWriter(
+      Artifacts.maskTombstones(spark, spark.read.parquet(dataDir), tombDir))
       .option("partitionOverwriteMode", "static")
       .partitionBy("cell").mode("overwrite").parquet(dest)
     val copied = spark.read.parquet(dest).count()
@@ -2437,26 +2127,33 @@ object Similarity {
       s"Similarity.compactIvfPqIndex: compacted generation at $dest holds " +
         s"$copied rows, expected ${meta.live} — refusing the pointer flip; " +
         "the live generation is untouched")
-    // the FLIP: readers planning from here on resolve g<N+1>
-    writeIvfPqMeta(spark, path, copied, deleted = 0L, newGen,
-      meta.fingerprint, meta.cents, meta.pqFingerprint, meta.rotationFp)
+    // the FLIP: readers planning from here on resolve g<N+1>; the
+    // v2 meta is also the v1 → v2 migration
+    writeIvfPqMeta(spark, path, meta.copy(rows = copied, deleted = 0L,
+      gen = newGen))
     // retire everything OLDER than the just-replaced generation: the
     // replaced one (g<N>, or the v1 root cells) survives until the
     // next compact as the in-flight readers' grace window
-    (0L until meta.gen).foreach { g =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/g$g"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(ivfPqTombDir(path, g)), true)
-    }
+    retireGenerations(spark, path, meta.gen)
     if (meta.version >= 2 && meta.gen >= 1) {
       // a v1-migrated index's original root cells retire once the
       // pointer has moved at least two generations past them
-      val st = fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      st.filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      fs.listStatus(root)
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
         .foreach(s => fs.delete(s.getPath, true))
     }
-    refreshIndexPath(spark, path)
-    ()
+    Artifacts.refreshIndexPath(spark, path)
   }
+
+  /** Deletes generations 0 until `gen` and their tombstones. */
+  private def retireGenerations(spark: SparkSession, path: String,
+                                gen: Long): Unit =
+    (0L until gen).foreach { g =>
+      Artifacts.delete(spark, s"$path/g$g")
+      Artifacts.delete(spark, ivfPqTombDir(path, g))
+    }
 
   // ── Blue/green quantizer retrain (VERDICT r17 item 3) ────────────
   //
@@ -2508,7 +2205,6 @@ object Similarity {
     // delete cannot be silently resurrected because the caller's
     // corpus snapshot still contains the doomed rows. One broadcast
     // anti-join against the takedown-sized tombstone set.
-    val tombs = readTombstones(spark, ivfPqTombDir(path, meta.gen))
     // metadata columns are part of the index's schema contract across
     // generations, exactly as for appends
     val extra = indexExtraCols(spark, ivfPqDataDir(path, meta),
@@ -2517,13 +2213,11 @@ object Similarity {
       "Similarity.retrainIvfPqIndex")
     val newGen = meta.gen + 1
     val dest = s"$path/g$newGen"
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    fs.delete(new org.apache.hadoop.fs.Path(dest), true) // crashed prior try
-    val src = corpus.select(col(idCol).cast("long").as("id") +:
-        prep(VectorOps.toDouble(col(vecCol))).as("__v") +:
-        extra.map(col): _*)
-      .join(broadcast(tombs), Seq("id"), "left_anti")
+    Artifacts.delete(spark, dest) // crashed prior try
+    val src = Artifacts.maskTombstones(spark,
+      corpus.select(col(idCol).cast("long").as("id") +:
+        prep(VectorOps.toDouble(col(vecCol))).as("__v") +: extra.map(col): _*),
+      ivfPqTombDir(path, meta.gen))
     // one file per cell per write + production file cap (the compact
     // posture — see buildIvfIndex; guide §6 small-files)
     cellPartitionedWriter(encodeForIndex(
@@ -2537,16 +2231,13 @@ object Similarity {
     // rotation fingerprints), zero tombstones — readers planning from
     // here resolve the retrained geometry end to end; a crash BEFORE
     // this line leaves the old meta pointing at intact old data
-    writeIvfPqMeta(spark, path, landed, deleted = 0L, newGen,
-      centsFingerprint(cents), cents, pqFingerprint(model), rotationFp)
+    writeIvfPqMeta(spark, path, IvfPqMeta(IvfPqMetaVersion, landed,
+      deleted = 0L, newGen, centsFingerprint(cents), cents,
+      pqFingerprint(model), rotationFp))
     // same grace window as compaction: the replaced generation
     // survives one turnover for in-flight readers; older ones retire
-    (0L until meta.gen).foreach { g =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/g$g"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(ivfPqTombDir(path, g)), true)
-    }
-    refreshIndexPath(spark, path)
-    ()
+    retireGenerations(spark, path, meta.gen)
+    Artifacts.refreshIndexPath(spark, path)
   }
 
   // ── Persisted serving-budget sweep (VERDICT r17 item 5) ──────────
@@ -2561,9 +2252,9 @@ object Similarity {
 
   val SweepFormatVersion = 1
 
-  /** Persist a measured serving sweep under the index root: grid rows
-    * first, then ONE meta row (version + the index's provenance
-    * fingerprints + row count) LAST as the commit marker. */
+  /** Persist a measured serving sweep under the index root: grid rows,
+    * then the Artifacts meta (the index's provenance fingerprints and
+    * the row count) at `_graft_sweep/meta`. */
   def saveServingSweep(spark: SparkSession, indexPath: String,
                        sweep: Seq[ServingBudget]): Unit = {
     require(sweep.nonEmpty, "saveServingSweep: empty sweep")
@@ -2573,46 +2264,34 @@ object Similarity {
       .toDF("nprobe", "shortlist", "recall", "seconds")
       .repartition(1).write.mode("overwrite")
       .parquet(s"$indexPath/_graft_sweep/grid")
-    Seq((SweepFormatVersion, meta.fingerprint, meta.pqFingerprint,
-        meta.rotationFp.orNull, sweep.length.toLong))
-      .toDF("version", "cents_fp", "pq_fp", "rotation_fp", "n_rows")
-      .repartition(1).write.mode("overwrite")
-      .parquet(s"$indexPath/_graft_sweep/meta")
+    Artifacts.writeMeta(spark, s"$indexPath/_graft_sweep/meta",
+      (SweepFormatVersion, meta.fingerprint, meta.pqFingerprint,
+        meta.rotationFp.orNull, sweep.length.toLong),
+      "version", "cents_fp", "pq_fp", "rotation_fp", "n_rows")
   }
 
-  /** Load the index's own stored sweep, refusing: no sweep, an
-    * unknown (newer) version, a row-count drift, or — the one that
+  /** Load the index's own stored sweep (run AnnStress --sweep and
+    * saveServingSweep first), refusing: the Artifacts meta refusals, a
+    * grid row-count drift, or — the one that
     * matters operationally — provenance fingerprints that no longer
     * match the index's current meta (the index was retrained or
     * rebuilt since the sweep was measured; its numbers describe dead
     * geometry — re-run the sweep). */
   def loadServingSweep(spark: SparkSession, indexPath: String): Seq[ServingBudget] = {
     val im = readIvfPqMeta(spark, indexPath)
-    val metaRows =
-      try spark.read.parquet(s"$indexPath/_graft_sweep/meta").collect()
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalArgumentException(
-          s"no serving sweep stored at $indexPath (_graft_sweep missing) — " +
-            s"run the sweep (AnnStress --sweep) and saveServingSweep first: " +
-            e.getMessage) }
-    require(metaRows.length == 1,
-      s"sweep meta at $indexPath has ${metaRows.length} rows, expected 1")
-    val mr = metaRows(0)
-    val version = mr.getAs[Int]("version")
-    require(version >= 1 && version <= SweepFormatVersion,
-      s"sweep artifact version $version at $indexPath; this build reads up " +
-        s"to $SweepFormatVersion")
-    require(mr.getAs[String]("cents_fp") == im.fingerprint
-        && mr.getAs[String]("pq_fp") == im.pqFingerprint
-        && Option(mr.getAs[String]("rotation_fp")) == im.rotationFp,
+    val mr = Artifacts.readMeta(spark, s"$indexPath/_graft_sweep/meta",
+      "serving sweep", 1 to SweepFormatVersion)
+    require(mr.get[String]("cents_fp") == im.fingerprint
+        && mr.get[String]("pq_fp") == im.pqFingerprint
+        && Option(mr.get[String]("rotation_fp")) == im.rotationFp,
       s"stale serving sweep at $indexPath: it was measured under a " +
         "different quantizer/codebook/rotation than the index currently " +
         "serves (retrained or rebuilt since) — its recall/latency numbers " +
         "describe dead geometry; re-run the sweep and save it again")
     val rows = spark.read.parquet(s"$indexPath/_graft_sweep/grid").collect()
-    require(rows.length.toLong == mr.getAs[Long]("n_rows"),
+    require(rows.length.toLong == mr.get[Long]("n_rows"),
       s"sweep grid at $indexPath holds ${rows.length} rows, meta says " +
-        s"${mr.getAs[Long]("n_rows")} — partial write; re-save the sweep")
+        s"${mr.get[Long]("n_rows")} — partial write; re-save the sweep")
     rows.map(r => ServingBudget(r.getAs[Int]("nprobe"),
         r.getAs[Int]("shortlist"), r.getAs[Double]("recall"),
         r.getAs[Double]("seconds")))
@@ -2685,16 +2364,10 @@ object Similarity {
           "paired with a different coarse quantizer than the index's — " +
           "query residuals would subtract the wrong centroids; rebuild")
     }
-    if (verifyRows) {
-      val (actual, tombs) = concurrently2(
-        spark.read.parquet(ivfPqDataDir(indexPath, meta)).count(),
-        tombstoneCount(spark, ivfPqTombDir(indexPath, meta.gen)))
-      require(actual == meta.rows,
-        s"stale IVF-PQ index at $indexPath: meta records ${meta.rows} rows, " +
-          s"index holds $actual — partial write or concurrent writer; rebuild")
-      require(tombs == meta.deleted,
-        tombstoneDriftMsg(indexPath, meta.deleted, tombs))
-    }
+    if (verifyRows) Artifacts.requireCounts(spark,
+      spark.read.parquet(ivfPqDataDir(indexPath, meta)), meta.rows,
+      ivfPqTombDir(indexPath, meta.gen), meta.deleted, indexPath,
+      "Similarity.ivfPqTopKIndexed")
     meta
   }
 
@@ -2706,9 +2379,8 @@ object Similarity {
     ivfPqLiveScan(spark, path, readIvfPqMeta(spark, path))
 
   /** The current generation's candidate scan with tombstoned rows
-    * masked out — what every indexed serve ranks against. The mask is
-    * one broadcast anti-join against the (takedown-sized) tombstone
-    * set, skipped entirely while no deletes are pending. `filter`
+    * masked out (Artifacts.maskTombstones) — what every indexed serve
+    * ranks against. `filter`
     * (round 18 — filtered ANN) is the caller's metadata predicate over
     * the index's metaCols, applied directly on the scan so Catalyst
     * pushes it into the parquet reader BEFORE the mask, the cell join,
@@ -2716,13 +2388,9 @@ object Similarity {
   private def ivfPqLiveScan(spark: SparkSession, indexPath: String,
                             meta: IvfPqMeta,
                             filter: Option[Column] = None): DataFrame = {
-    val data0 = spark.read.parquet(ivfPqDataDir(indexPath, meta))
-    val data = filter.fold(data0)(data0.filter)
-    if (meta.deleted > 0)
-      data.join(broadcast(
-        readTombstones(spark, ivfPqTombDir(indexPath, meta.gen))),
-        Seq("id"), "left_anti")
-    else data
+    val data = spark.read.parquet(ivfPqDataDir(indexPath, meta))
+    Artifacts.maskTombstones(spark, filter.fold(data)(data.filter),
+      ivfPqTombDir(indexPath, meta.gen))
   }
 
   def ivfPqTopKIndexed(spark: SparkSession, indexPath: String,

@@ -155,8 +155,8 @@ object Tokenizer {
     * consumer (token counting, packing, budget cuts) must segment
     * with the SAME frozen rules or its token accounting silently
     * drifts from the model's. Rules land under `merges/` with their
-    * 1-based training step; ONE meta row (version + merge count)
-    * lands LAST under `meta/` as the commit marker. */
+    * 1-based training step; the merge count lands in the Artifacts
+    * meta under `meta/`. */
   def saveBpe(spark: org.apache.spark.sql.SparkSession, path: String,
               merges: Seq[(String, String)]): Unit = {
     require(merges.nonEmpty, "saveBpe: empty merge list — nothing to persist")
@@ -169,26 +169,20 @@ object Tokenizer {
     merges.zipWithIndex.map { case ((l, r), i) => (i + 1L, l, r) }
       .toDF("step", "l", "r")
       .repartition(1).write.mode("overwrite").parquet(s"$path/merges")
-    Seq((MergesFormatVersion, merges.length.toLong))
-      .toDF("version", "n_merges")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Artifacts.writeMeta(spark, s"$path/meta",
+      (MergesFormatVersion, merges.length.toLong), "version", "n_merges")
   }
 
-  /** Loads a `saveBpe` artifact, refusing loudly on: wrong meta row
-    * count, unknown version, a merge row count that disagrees with
+  /** Loads a `saveBpe` artifact, refusing loudly on: the Artifacts
+    * meta refusals, a merge row count that disagrees with
     * the meta, steps that are not exactly 1..n (the fold ORDER is the
     * tokenizer — a reordered or gappy artifact segments differently),
     * or malformed symbols. Returns the rules in training order, ready
     * for `applyBpe`. */
   def loadBpe(spark: org.apache.spark.sql.SparkSession, path: String)
       : Seq[(String, String)] = {
-    val metaRows = spark.read.parquet(s"$path/meta").collect()
-    require(metaRows.length == 1,
-      s"BPE meta at $path has ${metaRows.length} rows, expected exactly 1")
-    val version = metaRows(0).getAs[Int]("version")
-    require(version == MergesFormatVersion,
-      s"BPE artifact version $version at $path; this build reads $MergesFormatVersion")
-    val n = metaRows(0).getAs[Long]("n_merges")
+    val n = Artifacts.readMeta(spark, s"$path/meta", "BPE merge list",
+      MergesFormatVersion to MergesFormatVersion).get[Long]("n_merges")
     val rows = spark.read.parquet(s"$path/merges").collect()
     require(rows.length.toLong == n,
       s"BPE merges at $path have ${rows.length} rows but the meta row says $n — " +

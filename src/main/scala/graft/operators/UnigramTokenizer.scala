@@ -460,39 +460,31 @@ object UnigramTokenizer {
     * the artifact. */
   val UnigramFormatVersion = 2
 
-  /** Persists a unigram vocabulary as a versioned parquet artifact —
-    * the saveBpe discipline: pieces land under `pieces/`; ONE meta
-    * row (version, piece count, total) lands LAST as the commit
-    * marker. Segmentation is a pure function of the (piece, count)
-    * SET, so no ordering is stored; load returns canonical order. */
+  /** Persists a unigram vocabulary — the saveBpe discipline: pieces
+    * land under `pieces/`, then the Artifacts meta (piece count,
+    * total, byte_fallback) under `meta/`. Segmentation is a pure
+    * function of the (piece, count) SET, so no ordering is stored;
+    * load returns canonical order. */
   def saveUnigram(spark: SparkSession, path: String, model: UnigramModel): Unit = {
     import spark.implicits._
     model.pieces.toDF("piece", "c")
       .repartition(1).write.mode("overwrite").parquet(s"$path/pieces")
-    Seq((UnigramFormatVersion, model.pieces.length.toLong, model.total,
-        model.byteFallback))
-      .toDF("version", "n_pieces", "total", "byte_fallback")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Artifacts.writeMeta(spark, s"$path/meta", (UnigramFormatVersion,
+        model.pieces.length.toLong, model.total, model.byteFallback),
+      "version", "n_pieces", "total", "byte_fallback")
   }
 
-  /** Loads a `saveUnigram` artifact, refusing loudly on: wrong meta
-    * row count, unknown version, a piece row count or total that
+  /** Loads a `saveUnigram` artifact, refusing loudly on: the
+    * Artifacts meta refusals, a piece row count or total that
     * disagrees with the meta (partial/duplicated write), duplicate or
     * malformed pieces, or non-positive counts — a drifted vocabulary
     * segments DIFFERENTLY, silently corrupting every downstream token
     * count. */
   def loadUnigram(spark: SparkSession, path: String): UnigramModel = {
-    val metaRows = spark.read.parquet(s"$path/meta").collect()
-    require(metaRows.length == 1,
-      s"unigram meta at $path has ${metaRows.length} rows, expected exactly 1")
-    val version = metaRows(0).getAs[Int]("version")
-    require(version >= 1 && version <= UnigramFormatVersion,
-      s"unigram artifact version $version at $path; this build reads up " +
-        s"to $UnigramFormatVersion")
-    val n = metaRows(0).getAs[Long]("n_pieces")
-    val total = metaRows(0).getAs[Long]("total")
-    val byteFallback =
-      if (version >= 2) metaRows(0).getAs[Boolean]("byte_fallback") else false
+    val m = Artifacts.readMeta(spark, s"$path/meta", "unigram vocabulary",
+      1 to UnigramFormatVersion)
+    val (n, total) = (m.get[Long]("n_pieces"), m.get[Long]("total"))
+    val byteFallback = m.since(2, "byte_fallback", false)
     val rows = spark.read.parquet(s"$path/pieces").collect()
     require(rows.length.toLong == n,
       s"unigram pieces at $path have ${rows.length} rows but the meta says " +

@@ -1,0 +1,256 @@
+package graft
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.{Classifier, Dedup, KMeans, NaiveBayes, Similarity, Tokenizer,
+  UnigramTokenizer}
+
+/** The persisted-artifact protocol over all twelve meta kinds: every
+  * loader refuses a missing meta (naming the kind and the path), a
+  * meta with more than one row, and a newer format version; every
+  * saver writes the meta schema pinned below; v1 index metas still
+  * decode and serve. */
+class ArtifactsSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private lazy val emb =
+    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+  private lazy val docs =
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+  private lazy val probes = emb.orderBy("vec_id").limit(3)
+  private lazy val cents =
+    KMeans.initCentroids(emb, "vec_id", "embedding", KMeans.FirstK(4))
+  private lazy val pq = Similarity.trainPQ(emb, "vec_id", "embedding", d = 64,
+    m = 4, k = 4, maxIter = 0)
+  private lazy val rotation =
+    Array.tabulate(64, 64)((i, j) => if (i == j) 1.0 else 0.0)
+  private lazy val toy = Seq(
+    (1L, "spam spam eggs", 1, "a"), (2L, "spam", 1, "a"),
+    (3L, "ham ham eggs", 0, "b"), (4L, "ham eggs", 0, "c")
+  ).toDF("id", "text", "y", "src")
+
+  private def tmp(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"artifacts_$tag").toString + "/a"
+
+  /** One persisted kind: how to save it at a root, where its meta
+    * lands under that root ("" = the root is the meta), how to load
+    * it, and the meta schema the format pins (recorded before the
+    * codec moved into one module). */
+  private case class Kind(name: String, metaSub: String, ddl: String,
+                          save: String => Unit, load: String => Any)
+
+  private lazy val kinds: Seq[Kind] = Seq(
+    Kind("IVF index", "_graft_index_meta",
+      "version INT NOT NULL,rows BIGINT NOT NULL,deleted BIGINT NOT NULL," +
+        "fingerprint STRING,cents ARRAY<STRUCT<_1: INT NOT NULL, _2: ARRAY<DOUBLE>>>",
+      root => Similarity.buildIvfIndex(emb, "vec_id", "embedding", cents, root),
+      root => Similarity.ivfTopKIndexed(spark, root, probes, "vec_id",
+        "embedding", cents, nprobe = 2, k = 5)),
+    Kind("IVF-PQ index", "_graft_ivfpq_meta",
+      "version INT NOT NULL,rows BIGINT NOT NULL,deleted BIGINT NOT NULL," +
+        "gen BIGINT NOT NULL,fingerprint STRING," +
+        "cents ARRAY<STRUCT<_1: INT NOT NULL, _2: ARRAY<DOUBLE>>>," +
+        "pq_fingerprint STRING,rotation_fp STRING",
+      root => Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", cents, pq,
+        root),
+      root => Similarity.ivfPqIndexCodes(spark, root)),
+    Kind("serving sweep", "_graft_sweep/meta",
+      "version INT NOT NULL,cents_fp STRING,pq_fp STRING,rotation_fp STRING," +
+        "n_rows BIGINT NOT NULL",
+      root => {
+        Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", cents, pq, root)
+        Similarity.saveServingSweep(spark, root,
+          Seq(Similarity.ServingBudget(2, 10, 0.5, 0.1)))
+      },
+      root => Similarity.loadServingSweep(spark, root)),
+    Kind("PQ codebook", "meta",
+      "version INT NOT NULL,d INT NOT NULL,m INT NOT NULL,k INT NOT NULL," +
+        "n_rows BIGINT NOT NULL,residual_to STRING",
+      root => Similarity.savePQ(spark, root, pq),
+      root => Similarity.loadPQ(spark, root)),
+    Kind("OPQ model", "meta",
+      "version INT NOT NULL,d INT NOT NULL,rotation_fp STRING,pq_fp STRING",
+      root => Similarity.saveOpq(spark, root, Similarity.OPQModel(rotation, pq)),
+      root => Similarity.loadOpq(spark, root)),
+    Kind("OPQ-IVF model", "meta",
+      "version INT NOT NULL,d INT NOT NULL,rotation_fp STRING,pq_fp STRING," +
+        "cents_fp STRING,cents ARRAY<STRUCT<_1: INT NOT NULL, _2: ARRAY<DOUBLE>>>",
+      root => Similarity.saveOpqIvf(spark, root,
+        Similarity.OpqIvfModel(rotation, cents, pq)),
+      root => Similarity.loadOpqIvf(spark, root)),
+    Kind("MinHash index", "_graft_index_meta",
+      "version INT NOT NULL,rows BIGINT NOT NULL,deleted BIGINT NOT NULL," +
+        "n INT NOT NULL,h INT NOT NULL,parity BOOLEAN NOT NULL",
+      root => Dedup.writeMinhashIndex(docs, "doc_id", "text", root),
+      root => Dedup.readMinhashIndex(spark, root)),
+    Kind("LogReg model", "",
+      "version INT NOT NULL,weights ARRAY<DOUBLE>,bias DOUBLE NOT NULL," +
+        "mean ARRAY<DOUBLE>,scale ARRAY<DOUBLE>,loss_history ARRAY<DOUBLE>",
+      root => Classifier.saveLogReg(spark, root,
+        Classifier.Standardizer(Array(0.0, 1.0), Array(1.0, 2.0)),
+        Classifier.LogRegModel(Array(0.5, -0.25), 0.125, Seq(0.7, 0.6))),
+      root => Classifier.loadLogReg(spark, root)),
+    Kind("NB model", "meta",
+      "version INT NOT NULL,bias DOUBLE NOT NULL,oov_w DOUBLE NOT NULL," +
+        "vocab_size BIGINT NOT NULL,alpha DOUBLE NOT NULL,n_rows BIGINT NOT NULL",
+      root => NaiveBayes.saveNB(spark, root,
+        NaiveBayes.trainMultinomial(toy, "id", "text", "y")),
+      root => NaiveBayes.loadNB(spark, root)),
+    Kind("NB multiclass model", "meta",
+      "version INT NOT NULL,alpha DOUBLE NOT NULL,classes ARRAY<STRING>," +
+        "priors ARRAY<DOUBLE>,oovs ARRAY<DOUBLE>,n_weights BIGINT NOT NULL",
+      root => NaiveBayes.saveNBMulticlass(spark, root,
+        NaiveBayes.trainMulticlass(toy, "id", "text", "src")),
+      root => NaiveBayes.loadNBMulticlass(spark, root)),
+    Kind("BPE merge list", "meta",
+      "version INT NOT NULL,n_merges BIGINT NOT NULL",
+      root => Tokenizer.saveBpe(spark, root, Seq(("a", "b"), ("ab", "c"))),
+      root => Tokenizer.loadBpe(spark, root)),
+    Kind("unigram vocabulary", "meta",
+      "version INT NOT NULL,n_pieces BIGINT NOT NULL,total BIGINT NOT NULL," +
+        "byte_fallback BOOLEAN NOT NULL",
+      root => UnigramTokenizer.saveUnigram(spark, root,
+        UnigramTokenizer.UnigramModel(Seq(("ab", 3L), ("a", 2L), ("b", 1L)))),
+      root => UnigramTokenizer.loadUnigram(spark, root))
+  )
+
+  /** One saved artifact per kind, shared by the tests below; a test
+    * that needs a broken one edits a copy. */
+  private lazy val saved: Map[String, String] = kinds.map { k =>
+    val root = tmp(k.name.replaceAll("[^A-Za-z]", ""))
+    k.save(root)
+    k.name -> root
+  }.toMap
+
+  private def metaDir(root: String, k: Kind): String =
+    if (k.metaSub.isEmpty) root else s"$root/${k.metaSub}"
+
+  /** A fresh copy of `root` whose meta is `edit` of the original's
+    * (None deletes it). Fresh paths keep Spark's file-status cache
+    * out of the picture. */
+  private def copyWithMeta(root: String, metaSub: String)(
+      edit: Option[DataFrame => DataFrame]): String = {
+    val copy = tmp("copy")
+    FileUtils.copyDirectory(new java.io.File(root), new java.io.File(copy))
+    val dest = if (metaSub.isEmpty) copy else s"$copy/$metaSub"
+    FileUtils.deleteDirectory(new java.io.File(dest))
+    edit.foreach { f =>
+      f(spark.read.parquet(if (metaSub.isEmpty) root else s"$root/$metaSub"))
+        .write.parquet(dest)
+    }
+    copy
+  }
+
+  /** The schema the writer recorded in the meta's parquet footer — the
+    * on-disk format, with the nullability a read-back would relax. */
+  private def footerDDL(dir: String): String = {
+    val file = new java.io.File(dir).listFiles
+      .filter(_.getName.endsWith(".parquet")).head
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.getPath),
+        spark.sessionState.newHadoopConf()))
+    try DataType.fromJson(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .asInstanceOf[StructType].toDDL
+    finally reader.close()
+  }
+
+  test("every kind refuses a missing meta, a two-row meta and a newer version") {
+    kinds.foreach { k =>
+      val root = saved(k.name)
+      val missing = copyWithMeta(root, k.metaSub)(None)
+      val e0 = intercept[IllegalArgumentException](k.load(missing))
+      assert(e0.getMessage.contains(k.name)
+          && e0.getMessage.contains(metaDir(missing, k)),
+        s"${k.name}: ${e0.getMessage}")
+      val twoRows = copyWithMeta(root, k.metaSub)(Some(m => m.union(m)))
+      val e1 = intercept[IllegalArgumentException](k.load(twoRows))
+      assert(e1.getMessage.contains("rows"), s"${k.name}: ${e1.getMessage}")
+      val newer = copyWithMeta(root, k.metaSub)(
+        Some(_.withColumn("version", lit(99))))
+      val e2 = intercept[IllegalArgumentException](k.load(newer))
+      assert(e2.getMessage.contains("version"), s"${k.name}: ${e2.getMessage}")
+    }
+    // the binary NB format reads v2 only
+    val nb = copyWithMeta(saved("NB model"), "meta")(
+      Some(_.withColumn("version", lit(1))))
+    val e = intercept[IllegalArgumentException](NaiveBayes.loadNB(spark, nb))
+    assert(e.getMessage.contains("version"), e.getMessage)
+  }
+
+  test("every saver writes the pinned meta schema, and the artifact loads back") {
+    kinds.foreach { k =>
+      val root = saved(k.name)
+      assert(footerDDL(metaDir(root, k)) == k.ddl, k.name)
+      assert(spark.read.parquet(metaDir(root, k)).count() == 1L, k.name)
+      k.load(root)
+    }
+  }
+
+  private def asSet(d: DataFrame) = d.collect()
+    .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
+
+  /** A v1 copy of a v2 index meta: the v2-only columns dropped. */
+  private def toV1(drop: String*)(m: DataFrame): DataFrame =
+    m.drop(drop: _*).withColumn("version", lit(1))
+
+  test("v1 IVF and MinHash metas decode with no deletes and serve the v2 rows") {
+    val ivf = saved("IVF index")
+    val ivf1 = copyWithMeta(ivf, "_graft_index_meta")(Some(toV1("deleted")))
+    def serve(root: String) = asSet(Similarity.ivfTopKIndexed(spark, root,
+      probes, "vec_id", "embedding", cents, nprobe = 2, k = 5))
+    assert(serve(ivf1) == serve(ivf) && serve(ivf).nonEmpty)
+
+    val mh = saved("MinHash index")
+    val mh1 = copyWithMeta(mh, "_graft_index_meta")(Some(toV1("deleted")))
+    def sigs(root: String) = Dedup.readMinhashIndex(spark, root).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(sigs(mh1) == sigs(mh) && sigs(mh).nonEmpty)
+  }
+
+  test("a v1 IVF-PQ index serves the v2 rows, refuses writes, and compacts into g1") {
+    val v2 = saved("IVF-PQ index")
+    val v1 = copyWithMeta(v2, "_graft_ivfpq_meta")(
+      Some(toV1("deleted", "gen", "rotation_fp")))
+    // the v1 layout keeps its cells at the root
+    val fs = new org.apache.hadoop.fs.Path(v1)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$v1/g0"))
+      .filter(_.getPath.getName.startsWith("cell="))
+      .foreach(s => assert(fs.rename(s.getPath,
+        new org.apache.hadoop.fs.Path(s"$v1/${s.getPath.getName}"))))
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$v1/g0"), true))
+    def serve(root: String) = asSet(Similarity.ivfPqTopKIndexed(spark, root,
+      probes, "vec_id", "embedding", cents, pq, nprobe = 2, k = 5))
+    val want = serve(v2)
+    assert(serve(v1) == want && want.nonEmpty)
+
+    val batch = emb.filter(col("vec_id") % 5 === 0)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
+    Seq[() => Unit](
+      () => Similarity.appendIvfPqIndex(spark, batch, "vec_id", "embedding", pq, v1),
+      () => Similarity.deleteFromIvfPqIndex(spark, probes.select("vec_id"),
+        "vec_id", v1)
+    ).foreach { write =>
+      val e = intercept[IllegalArgumentException](write())
+      assert(e.getMessage.contains("v1 layout"), e.getMessage)
+    }
+
+    Similarity.compactIvfPqIndex(spark, v1)
+    val meta = spark.read.parquet(s"$v1/_graft_ivfpq_meta").collect()
+    assert(meta.length == 1 && meta(0).getAs[Int]("version") == 2
+      && meta(0).getAs[Long]("gen") == 1L && meta(0).getAs[Long]("deleted") == 0L)
+    assert(new java.io.File(s"$v1/g1").isDirectory)
+    assert(serve(v1) == want)
+    // the migrated index takes writes again
+    Similarity.appendIvfPqIndex(spark, batch, "vec_id", "embedding", pq, v1)
+    assert(Similarity.ivfPqIndexCodes(spark, v1).count() ==
+      emb.count() + batch.count())
+  }
+}
