@@ -717,7 +717,7 @@ object Dedup {
     // mask the fresh build's rows
     Artifacts.delete(spark, Artifacts.rootTombDir(path))
     writeMinhashMeta(spark, path, MinhashMeta(MinhashMetaVersion,
-      spark.read.parquet(s"$path/data").count(), deleted = 0L, n, h, parity))
+      Artifacts.scan(spark, s"$path/data").rows, deleted = 0L, n, h, parity))
     Artifacts.refreshIndexPath(spark, path)
   }
 
@@ -743,9 +743,9 @@ object Dedup {
     * drift (partial append), or a tombstone-count drift (interrupted
     * delete). Tombstoned rows are masked out (one anti-join against
     * the takedown-sized set), so every consumer — dedup, calibration
-    * — sees only live signatures. The row checks are parquet-footer
-    * counts — metadata-only I/O; verifyRows=false skips them on hot
-    * paths. */
+    * — sees only live signatures. The row checks sum parquet footers
+    * on the driver — metadata-only I/O, no Spark job; verifyRows=false
+    * skips them on hot paths. */
   def readMinhashIndex(spark: SparkSession, path: String,
                        n: Int = 3, h: Int = 16, parity: Boolean = false,
                        verifyRows: Boolean = true): DataFrame = {
@@ -755,11 +755,11 @@ object Dedup {
         s"h=${meta.h}, parity=${meta.parity}) but queried as (n=$n, h=$h, " +
         s"parity=$parity) — signatures are not comparable across families; " +
         "rebuild or match params")
-    val (data, tombDir) = (spark.read.parquet(s"$path/data"),
+    val (data, tombDir) = (Artifacts.scan(spark, s"$path/data"),
       Artifacts.rootTombDir(path))
     if (verifyRows) Artifacts.requireCounts(spark, data, meta.rows, tombDir,
       meta.deleted, path, "Dedup.readMinhashIndex")
-    Artifacts.maskTombstones(spark, data, tombDir)
+    Artifacts.maskTombstones(spark, data.df, tombDir)
   }
 
   /** Append a new admitted batch to a persisted near-dup index,
@@ -855,9 +855,10 @@ object Dedup {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     val meta = readMinhashMeta(spark, path)
     val tombDir = Artifacts.rootTombDir(path)
-    Artifacts.requireCounts(spark, spark.read.parquet(s"$path/data"),
-      meta.rows, tombDir, meta.deleted, path, "Dedup.compactMinhashIndex")
-    Artifacts.compactIndexRoot(spark, path, "data", "_graft_index_meta",
+    val data = Artifacts.scan(spark, s"$path/data")
+    Artifacts.requireCounts(spark, data, meta.rows, tombDir, meta.deleted,
+      path, "Dedup.compactMinhashIndex")
+    Artifacts.compactIndexRoot(spark, path, data, "data", "_graft_index_meta",
       meta.live, "Dedup.compactMinhashIndex",
       // tombstoned rows drop physically here (r17 deletes), so the
       // meta rewrites to (rows := live, deleted := 0); the tombstone

@@ -136,7 +136,7 @@ object NaiveBayes {
              model: NBModel): Unit = {
     model.weights.select(col("token"), col("c1"), col("c0"), col("w"))
       .write.mode("overwrite").parquet(s"$path/weights")
-    val n = spark.read.parquet(s"$path/weights").count()
+    val n = Artifacts.scan(spark, s"$path/weights").rows
     Artifacts.writeMeta(spark, s"$path/meta", (ModelFormatVersion, model.bias,
         model.oovW, model.vocabSize, model.alpha, n),
       "version", "bias", "oov_w", "vocab_size", "alpha", "n_rows")
@@ -145,9 +145,8 @@ object NaiveBayes {
   /** Loads a `saveNB` artifact, refusing loudly on: the Artifacts meta
     * refusals (only v2 reads), missing weight columns, a weight row
     * count that disagrees with the meta (lost/duplicated partitions),
-    * or non-finite scalars. The row
-    * count check is one bounded job over the vocab-sized relation —
-    * the freshness contract, not a corpus scan. */
+    * or non-finite scalars. The row count check sums the weight
+    * files' parquet footers on the driver — no Spark job. */
   def loadNB(spark: org.apache.spark.sql.SparkSession, path: String): NBModel = {
     val r = Artifacts.readMeta(spark, s"$path/meta", "NB model",
       ModelFormatVersion to ModelFormatVersion).row
@@ -160,7 +159,8 @@ object NaiveBayes {
     require(alpha > 0.0 && alpha.isFinite,
       s"NB model artifact at $path has alpha $alpha, must be positive finite")
     val nRows = r.getAs[Long]("n_rows")
-    val w = spark.read.parquet(s"$path/weights")
+    val weights = Artifacts.scan(spark, s"$path/weights")
+    val w = weights.df
     Seq("token", "c1", "c0", "w").foreach(c =>
       require(w.columns.contains(c),
         s"NB weights at $path are missing column '$c' — refusing to serve"))
@@ -168,7 +168,7 @@ object NaiveBayes {
     // vocab_size (ADVICE r13): a model whose vocabSize disagrees with
     // its weights relation saves fine and must load fine — the check
     // exists to catch lost/duplicated partitions, not semantic fields
-    val n = w.count()
+    val n = weights.rows
     require(n == nRows,
       s"NB weights at $path have $n rows but the meta row says $nRows — " +
         "partial or duplicated write, refusing to serve")
@@ -250,7 +250,7 @@ object NaiveBayes {
                        model: NBMulticlassModel): Unit = {
     val w = model.weights.select(col("token"), col("cls"), col("c"), col("w"))
     w.write.mode("overwrite").parquet(s"$path/weights")
-    val n = spark.read.parquet(s"$path/weights").count()
+    val n = Artifacts.scan(spark, s"$path/weights").rows
     Artifacts.writeMeta(spark, s"$path/meta", (MulticlassFormatVersion,
         model.alpha, model.classes, model.classes.map(model.priors),
         model.classes.map(model.oovW), n),
@@ -285,11 +285,12 @@ object NaiveBayes {
     val nWeights = r.getAs[Long]("n_weights")
     require(nWeights >= classes.length,
       s"NB multiclass artifact at $path declares $nWeights weight rows")
-    val w = spark.read.parquet(s"$path/weights")
+    val weights = Artifacts.scan(spark, s"$path/weights")
+    val w = weights.df
     Seq("token", "cls", "c", "w").foreach(c =>
       require(w.columns.contains(c),
         s"NB multiclass weights at $path are missing column '$c' — refusing to serve"))
-    val n = w.count()
+    val n = weights.rows
     require(n == nWeights,
       s"NB multiclass weights at $path have $n rows but the meta row says " +
         s"$nWeights — partial or duplicated write, refusing to serve")

@@ -249,7 +249,7 @@ object Similarity {
     * narrower schema than the index serves filters against. */
   private def indexExtraCols(spark: SparkSession, dataDir: String,
                              reserved: Set[String]): Seq[String] =
-    spark.read.parquet(dataDir).schema.fieldNames.toSeq.filterNot(reserved)
+    Artifacts.scan(spark, dataDir).df.schema.fieldNames.toSeq.filterNot(reserved)
 
   private def requireBatchCarriesMeta(batch: DataFrame, extra: Seq[String],
                                       path: String, where: String): Unit = {
@@ -303,7 +303,7 @@ object Similarity {
     // mask the fresh build's rows
     Artifacts.delete(spark, Artifacts.rootTombDir(path))
     writeIvfMeta(spark, path, IvfMeta(IvfMetaVersion,
-      spark.read.parquet(path).count(), 0L, centsFingerprint(cents), cents))
+      Artifacts.scan(spark, path).rows, 0L, centsFingerprint(cents), cents))
     Artifacts.refreshIndexPath(spark, path)
   }
 
@@ -348,7 +348,7 @@ object Similarity {
                                               batchIds: DataFrame,
                                               dataPath: String, where: String,
                                               consequence: String): Unit = {
-    val dups = spark.read.parquet(dataPath).select(col("id"))
+    val dups = Artifacts.scan(spark, dataPath).df.select(col("id"))
       .join(batchIds.select(col("id")).distinct(), "id")
       .limit(1).count()
     require(dups == 0L,
@@ -423,9 +423,9 @@ object Similarity {
     * was built/appended under — wrong-cell probes would return
     * plausible garbage — or (b) the index's actual row count drifted
     * from the meta (partial append, manual file surgery). The row
-    * check is a parquet-footer count — metadata-only I/O, no data
-    * read; skip it on hot serving paths via verifyRows=false once an
-    * external writer discipline guarantees it.
+    * check sums parquet footers on the driver — metadata-only I/O, no
+    * Spark job; skip it on hot serving paths via verifyRows=false once
+    * an external writer discipline guarantees it.
     *
     * `filter` (round 18 — filtered ANN): an optional predicate over
     * the index's metadata columns (buildIvfIndex's metaCols), applied
@@ -448,8 +448,8 @@ object Similarity {
         "not match the one the index was built/appended with — probing the " +
         "wrong cells returns silently wrong neighbors; rebuild the index or " +
         "query with its own centroids")
-    if (verifyRows) Artifacts.requireCounts(spark,
-      spark.read.parquet(indexPath), meta.rows,
+    val data = Artifacts.scan(spark, indexPath)
+    if (verifyRows) Artifacts.requireCounts(spark, data, meta.rows,
       Artifacts.rootTombDir(indexPath), meta.deleted, indexPath,
       "Similarity.ivfTopKIndexed")
     val pinned = boundedProbes(probes, maxProbes,
@@ -474,7 +474,7 @@ object Similarity {
     val cells = probeCells.map(_._2).distinct.toSeq
     import spark.implicits._
     val pc = probeCells.toSeq.toDF("probe_id", "cell")
-    val idxP = spark.read.parquet(indexPath)
+    val idxP = data.df
       .filter(col("cell").isin(cells: _*)) // static partition pruning
     // metadata predicate INSIDE the pruned scan, before any scoring:
     // Catalyst pushes it into the parquet reader next to the partition
@@ -643,7 +643,7 @@ object Similarity {
     // convention): a Lloyd-trained book can legitimately hold < k
     // codewords (vanished cluster), so the load-time drift check must
     // compare against the written count, not m·k
-    val n = spark.read.parquet(s"$path/codebooks").count()
+    val n = Artifacts.scan(spark, s"$path/codebooks").rows
     Artifacts.writeMeta(spark, s"$path/meta", (PQFormatVersion, model.d,
         model.m, model.k, n, model.residualTo.orNull),
       "version", "d", "m", "k", "n_rows", "residual_to")
@@ -659,13 +659,11 @@ object Similarity {
     * with a vanished cluster), ragged codeword widths, or non-finite
     * values. */
   def loadPQ(spark: SparkSession, path: String): PQModel = {
-    // the two artifact halves are independent reads — collect them
-    // concurrently (guide §2.6); every refusal below still runs in
-    // the original order on the completed results
-    val (mr, rows) = concurrently2(
-      Artifacts.readMeta(spark, s"$path/meta", "PQ codebook",
-        1 to PQFormatVersion),
-      spark.read.parquet(s"$path/codebooks").collect())
+    // the meta decodes on the driver; only the codebook collect runs
+    // a job
+    val mr = Artifacts.readMeta(spark, s"$path/meta", "PQ codebook",
+      1 to PQFormatVersion)
+    val rows = Artifacts.scan(spark, s"$path/codebooks").df.collect()
     val (d, m, k) = (mr.get[Int]("d"), mr.get[Int]("m"), mr.get[Int]("k"))
     require(m >= 1 && d >= m && d % m == 0,
       s"PQ artifact at $path has inconsistent geometry d=$d m=$m")
@@ -1033,7 +1031,7 @@ object Similarity {
     * contract every OPQ guarantee rests on, so it refuses loudly. */
   private def readRotation(spark: SparkSession, path: String, d: Int,
                            expectedFp: String): Array[Array[Double]] = {
-    val rows = spark.read.parquet(s"$path/rotation").collect()
+    val rows = Artifacts.scan(spark, s"$path/rotation").df.collect()
     require(rows.length == d,
       s"OPQ rotation at $path has ${rows.length} rows, expected d=$d")
     val byI = rows.map(r => r.getAs[Int]("i") ->
@@ -1191,14 +1189,14 @@ object Similarity {
                               filter: Option[Column] = None): DataFrame = {
     TopKAgg.requireLongCastableId(probes, probeIdCol,
       "Similarity.ivfPqTopKIndexedRotated")
-    val meta = requireFreshIvfPqIndex(spark, indexPath, model.cents, model.pq,
-      verifyRows, rotationFp = Some(rotationFingerprint(model.rotation)))
+    val (meta, data) = requireFreshIvfPqIndex(spark, indexPath, model.cents,
+      model.pq, verifyRows, rotationFp = Some(rotationFingerprint(model.rotation)))
     val rotated = probes.select(col(probeIdCol),
       rotateCol(VectorOps.toDouble(col(probeVecCol)), model.rotation)
         .as("__rpv"))
     val pinned = boundedProbes(rotated, maxProbes,
       ivfPqProbeBytes(model.pq, nprobe), "Similarity.ivfPqTopKIndexedRotated")
-    ivfPqTopKIndexedPinned(spark, indexPath, meta, pinned, probeIdCol,
+    ivfPqTopKIndexedPinned(spark, indexPath, meta, data, pinned, probeIdCol,
       "__rpv", model.cents, model.pq, nprobe, k, filter)
   }
 
@@ -1224,8 +1222,8 @@ object Similarity {
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
     TopKAgg.requireLongCastableId(probes, probeIdCol,
       "Similarity.ivfPqTopKIndexedRerankRotated")
-    val meta = requireFreshIvfPqIndex(spark, indexPath, model.cents, model.pq,
-      verifyRows, rotationFp = Some(rotationFingerprint(model.rotation)))
+    val (meta, data) = requireFreshIvfPqIndex(spark, indexPath, model.cents,
+      model.pq, verifyRows, rotationFp = Some(rotationFingerprint(model.rotation)))
     val rotated = probes.select(col(probeIdCol),
       rotateCol(VectorOps.toDouble(col(probeVecCol)), model.rotation)
         .as("__rpv"))
@@ -1233,7 +1231,7 @@ object Similarity {
       ivfPqProbeBytes(model.pq, nprobe),
       "Similarity.ivfPqTopKIndexedRerankRotated")
     // shortlist sized post-filter — see ivfPqTopKIndexedRerank
-    val short = ivfPqTopKIndexedPinned(spark, indexPath, meta, pinned,
+    val short = ivfPqTopKIndexedPinned(spark, indexPath, meta, data, pinned,
       probeIdCol, "__rpv", model.cents, model.pq, nprobe, shortlist, filter)
       .select(col("probe_id"), col("vec_id"))
     // rotate ONLY the touched float rows: a broadcast semi-join on the
@@ -1784,11 +1782,11 @@ object Similarity {
     s"$path/_tomb/g$gen"
 
   /** Run two INDEPENDENT Spark actions concurrently and return both —
-    * the integrity gates pair a data-row count with a tombstone count,
-    * each a tiny job whose wall-clock is scheduling overhead, and the
-    * pair serializes ~0.1-0.3 s per gate for no reason (optimization
-    * guide §2.6, the trainPQCore pool precedent; r19, VERDICT r18
-    * item 3). Results are unchanged: the actions share no state and
+    * an append's two audits, a model's two data writes or loads, each
+    * a small job whose wall-clock is mostly scheduling overhead
+    * (optimization guide §2.6, the trainPQCore pool precedent). The
+    * count gates need no overlap: they read footers on the driver and
+    * run no job. Results are unchanged: the actions share no state and
     * each is a deterministic read. When `fa` throws, `fb` is awaited
     * before the exception propagates, so no job of this call outlives
     * it. */
@@ -1911,7 +1909,7 @@ object Similarity {
       .option("partitionOverwriteMode", "static")
       .partitionBy("cell").mode("overwrite").parquet(dataDir)
     writeIvfPqMeta(spark, path, IvfPqMeta(IvfPqMetaVersion,
-      spark.read.parquet(dataDir).count(), deleted = 0L, gen = 0L,
+      Artifacts.scan(spark, dataDir).rows, deleted = 0L, gen = 0L,
       centsFingerprint(cents), cents, pqFingerprint(model), rotationFp))
     Artifacts.refreshIndexPath(spark, path)
   }
@@ -2050,9 +2048,10 @@ object Similarity {
   def compactIvfIndex(spark: SparkSession, path: String): Unit = {
     val meta = readIvfMeta(spark, path)
     val tombDir = Artifacts.rootTombDir(path)
-    Artifacts.requireCounts(spark, spark.read.parquet(path), meta.rows,
+    val data = Artifacts.scan(spark, path)
+    Artifacts.requireCounts(spark, data, meta.rows,
       tombDir, meta.deleted, path, "Similarity.compactIvfIndex")
-    Artifacts.compactIndexRoot(spark, path, "", "_graft_index_meta",
+    Artifacts.compactIndexRoot(spark, path, data, "", "_graft_index_meta",
       meta.live, "Similarity.compactIvfIndex",
       rewriteMeta = if (meta.deleted > 0) Some(root =>
         writeIvfMeta(spark, root, meta.copy(rows = meta.live, deleted = 0L)))
@@ -2111,7 +2110,8 @@ object Similarity {
     val meta = readIvfPqMeta(spark, path)
     val dataDir = ivfPqDataDir(path, meta)
     val tombDir = ivfPqTombDir(path, meta.gen)
-    Artifacts.requireCounts(spark, spark.read.parquet(dataDir), meta.rows,
+    val data = Artifacts.scan(spark, dataDir)
+    Artifacts.requireCounts(spark, data, meta.rows,
       tombDir, meta.deleted, path, "Similarity.compactIvfPqIndex")
     val newGen = meta.gen + 1
     val dest = s"$path/g$newGen"
@@ -2119,10 +2119,10 @@ object Similarity {
     // one shuffle keyed on cell → one file per cell; hot cells split
     // at the production maxRecordsPerFile cap (cellPartitionedWriter)
     cellPartitionedWriter(
-      Artifacts.maskTombstones(spark, spark.read.parquet(dataDir), tombDir))
+      Artifacts.maskTombstones(spark, data.df, tombDir))
       .option("partitionOverwriteMode", "static")
       .partitionBy("cell").mode("overwrite").parquet(dest)
-    val copied = spark.read.parquet(dest).count()
+    val copied = Artifacts.scan(spark, dest).rows
     require(copied == meta.live,
       s"Similarity.compactIvfPqIndex: compacted generation at $dest holds " +
         s"$copied rows, expected ${meta.live} — refusing the pointer flip; " +
@@ -2226,7 +2226,7 @@ object Similarity {
       .select(col("id") +: col("codes") +: col("cell") +: extra.map(col): _*))
       .option("partitionOverwriteMode", "static")
       .partitionBy("cell").mode("overwrite").parquet(dest)
-    val landed = spark.read.parquet(dest).count()
+    val landed = Artifacts.scan(spark, dest).rows
     // the FLIP: new generation, NEW provenance (quantizer + codebook +
     // rotation fingerprints), zero tombstones — readers planning from
     // here resolve the retrained geometry end to end; a crash BEFORE
@@ -2288,7 +2288,7 @@ object Similarity {
         "different quantizer/codebook/rotation than the index currently " +
         "serves (retrained or rebuilt since) — its recall/latency numbers " +
         "describe dead geometry; re-run the sweep and save it again")
-    val rows = spark.read.parquet(s"$indexPath/_graft_sweep/grid").collect()
+    val rows = Artifacts.scan(spark, s"$indexPath/_graft_sweep/grid").df.collect()
     require(rows.length.toLong == mr.get[Long]("n_rows"),
       s"sweep grid at $indexPath holds ${rows.length} rows, meta says " +
         s"${mr.get[Long]("n_rows")} — partial write; re-save the sweep")
@@ -2335,12 +2335,14 @@ object Similarity {
   /** The indexed serve's freshness contract, shared by every consumer
     * of a persisted IVF-PQ index (indexed top-k, indexed rerank,
     * streaming serve): both provenance fingerprints and (verifyRows)
-    * the footer row count, refused loudly with the diagnosis. */
+    * the footer row count, refused loudly with the diagnosis. Returns
+    * the meta and the current generation's data scan — the files the
+    * row count counted. */
   private def requireFreshIvfPqIndex(spark: SparkSession, indexPath: String,
                                      cents: KMeans.Centroids, model: PQModel,
                                      verifyRows: Boolean,
                                      rotationFp: Option[String] = None)
-      : IvfPqMeta = {
+      : (IvfPqMeta, DataFrame) = {
     val meta = readIvfPqMeta(spark, indexPath)
     require(meta.fingerprint == centsFingerprint(cents),
       s"stale IVF-PQ index at $indexPath: the coarse quantizer passed to the " +
@@ -2364,34 +2366,35 @@ object Similarity {
           "paired with a different coarse quantizer than the index's — " +
           "query residuals would subtract the wrong centroids; rebuild")
     }
-    if (verifyRows) Artifacts.requireCounts(spark,
-      spark.read.parquet(ivfPqDataDir(indexPath, meta)), meta.rows,
+    val data = Artifacts.scan(spark, ivfPqDataDir(indexPath, meta))
+    if (verifyRows) Artifacts.requireCounts(spark, data, meta.rows,
       ivfPqTombDir(indexPath, meta.gen), meta.deleted, indexPath,
       "Similarity.ivfPqTopKIndexed")
-    meta
+    (meta, data.df)
   }
 
   /** The live (tombstone-masked) code table of a persisted IVF-PQ
     * index — (id, codes, cell) from the current generation; the
     * public read surface for audits and tools that want the raw
     * codes rather than a serve. */
-  def ivfPqIndexCodes(spark: SparkSession, path: String): DataFrame =
-    ivfPqLiveScan(spark, path, readIvfPqMeta(spark, path))
+  def ivfPqIndexCodes(spark: SparkSession, path: String): DataFrame = {
+    val meta = readIvfPqMeta(spark, path)
+    ivfPqLiveScan(spark, path, meta,
+      Artifacts.scan(spark, ivfPqDataDir(path, meta)).df)
+  }
 
-  /** The current generation's candidate scan with tombstoned rows
-    * masked out (Artifacts.maskTombstones) — what every indexed serve
-    * ranks against. `filter`
+  /** The current generation's candidate scan `data` with tombstoned
+    * rows masked out (Artifacts.maskTombstones) — what every indexed
+    * serve ranks against. `filter`
     * (round 18 — filtered ANN) is the caller's metadata predicate over
     * the index's metaCols, applied directly on the scan so Catalyst
     * pushes it into the parquet reader BEFORE the mask, the cell join,
     * and ADC. */
   private def ivfPqLiveScan(spark: SparkSession, indexPath: String,
-                            meta: IvfPqMeta,
-                            filter: Option[Column] = None): DataFrame = {
-    val data = spark.read.parquet(ivfPqDataDir(indexPath, meta))
+                            meta: IvfPqMeta, data: DataFrame,
+                            filter: Option[Column] = None): DataFrame =
     Artifacts.maskTombstones(spark, filter.fold(data)(data.filter),
       ivfPqTombDir(indexPath, meta.gen))
-  }
 
   def ivfPqTopKIndexed(spark: SparkSession, indexPath: String,
                        probes: DataFrame, probeIdCol: String,
@@ -2401,10 +2404,10 @@ object Similarity {
                        maxProbes: Int = 10000,
                        filter: Option[Column] = None): DataFrame = {
     TopKAgg.requireLongCastableId(probes, probeIdCol, "Similarity.ivfPqTopKIndexed")
-    val meta = requireFreshIvfPqIndex(spark, indexPath, cents, model, verifyRows)
+    val (meta, data) = requireFreshIvfPqIndex(spark, indexPath, cents, model, verifyRows)
     val pinned = boundedProbes(probes, maxProbes, ivfPqProbeBytes(model, nprobe),
       "Similarity.ivfPqTopKIndexed")
-    ivfPqTopKIndexedPinned(spark, indexPath, meta, pinned, probeIdCol,
+    ivfPqTopKIndexedPinned(spark, indexPath, meta, data, pinned, probeIdCol,
       probeVecCol, cents, model, nprobe, k, filter)
   }
 
@@ -2414,7 +2417,7 @@ object Similarity {
     * column ALREADY in the index's space (rotated entries rotate
     * before pinning). */
   private def ivfPqTopKIndexedPinned(spark: SparkSession, indexPath: String,
-                                     meta: IvfPqMeta,
+                                     meta: IvfPqMeta, data: DataFrame,
                                      pinned: DataFrame, probeIdCol: String,
                                      probeVecCol: String,
                                      cents: KMeans.Centroids, model: PQModel,
@@ -2434,7 +2437,7 @@ object Similarity {
     // cell) query residual and the raw-vector join is skipped — see
     // probeCellsDF
     val (pc, cells) = probeCellsDF(spark, pr, cents, nprobe, model, "cell")
-    val cand = ivfPqLiveScan(spark, indexPath, meta, filter)
+    val cand = ivfPqLiveScan(spark, indexPath, meta, data, filter)
       .filter(col("cell").isin(cells: _*)) // static partition pruning
       .join(broadcast(pc), "cell")
       .filter(col("id") =!= col("probe_id"))
@@ -2476,7 +2479,7 @@ object Similarity {
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
     TopKAgg.requireLongCastableId(probes, probeIdCol,
       "Similarity.ivfPqTopKIndexedRerank")
-    val meta = requireFreshIvfPqIndex(spark, indexPath, cents, model, verifyRows)
+    val (meta, data) = requireFreshIvfPqIndex(spark, indexPath, cents, model, verifyRows)
     val pinned = boundedProbes(probes, maxProbes, ivfPqProbeBytes(model, nprobe),
       "Similarity.ivfPqTopKIndexedRerank")
     // the filter applies INSIDE the shortlist stage, so the shortlist
@@ -2484,7 +2487,7 @@ object Similarity {
     // recall under a selective predicate does not silently degrade the
     // way filtering an unfiltered shortlist would); the exact re-rank
     // then only ever sees filtered ids
-    val short = ivfPqTopKIndexedPinned(spark, indexPath, meta, pinned,
+    val short = ivfPqTopKIndexedPinned(spark, indexPath, meta, data, pinned,
       probeIdCol, probeVecCol, cents, model, nprobe, shortlist, filter)
       .select(col("probe_id"), col("vec_id"))
     exactRerank(corpus, idCol, vecCol, pinned, probeIdCol, probeVecCol,
@@ -2571,7 +2574,7 @@ object Similarity {
     // check, so it is streaming-safe.
     TopKAgg.requireLongCastableId(probes, probeIdCol,
       "Similarity.ivfPqTopKStream")
-    val meta = requireFreshIvfPqIndex(spark, indexPath, cents, model,
+    val (meta, data) = requireFreshIvfPqIndex(spark, indexPath, cents, model,
       verifyRows, rotationFp)
     require(nprobe >= 1 && nprobe <= cents.length,
       s"Similarity.ivfPqTopKStream: nprobe=$nprobe outside 1..${cents.length}")
@@ -2611,7 +2614,7 @@ object Similarity {
     // restarts long-lived serving streams (or serves through
     // foreachBatch → ivfPqTopKIndexed, which re-plans per
     // micro-batch and picks the tombstones up immediately).
-    val idx = ivfPqLiveScan(spark, indexPath, meta, filter)
+    val idx = ivfPqLiveScan(spark, indexPath, meta, data, filter)
       .select("id", "cell", "codes")
     probed.join(idx, Seq("cell"))
       .filter(col("id") =!= col("probe_id"))

@@ -183,7 +183,7 @@ object Tokenizer {
       : Seq[(String, String)] = {
     val n = Artifacts.readMeta(spark, s"$path/meta", "BPE merge list",
       MergesFormatVersion to MergesFormatVersion).get[Long]("n_merges")
-    val rows = spark.read.parquet(s"$path/merges").collect()
+    val rows = Artifacts.scan(spark, s"$path/merges").df.collect()
     require(rows.length.toLong == n,
       s"BPE merges at $path have ${rows.length} rows but the meta row says $n — " +
         "partial or duplicated write, refusing to serve")

@@ -485,7 +485,7 @@ object UnigramTokenizer {
       1 to UnigramFormatVersion)
     val (n, total) = (m.get[Long]("n_pieces"), m.get[Long]("total"))
     val byteFallback = m.since(2, "byte_fallback", false)
-    val rows = spark.read.parquet(s"$path/pieces").collect()
+    val rows = Artifacts.scan(spark, s"$path/pieces").df.collect()
     require(rows.length.toLong == n,
       s"unigram pieces at $path have ${rows.length} rows but the meta says " +
         s"$n — partial or duplicated write, refusing to serve")

@@ -1,13 +1,31 @@
 package graft
 
 import org.apache.commons.io.FileUtils
+import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
-import graft.operators.{Classifier, Dedup, KMeans, NaiveBayes, Similarity, Tokenizer,
-  UnigramTokenizer}
+import graft.operators.{Artifacts, Classifier, Dedup, KMeans, NaiveBayes, Similarity,
+  Tokenizer, UnigramTokenizer}
+
+/** The local file system under a `faulty` scheme whose every file read
+  * fails: a storage outage, for the I/O-failure contract of
+  * `Artifacts.readMeta`. */
+class FaultyFileSystem extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("faulty:///")
+  override def getScheme: String = "faulty"
+  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+    throw new java.io.IOException(s"injected read failure: $f")
+}
 
 /** The persisted-artifact protocol over all twelve meta kinds: every
   * loader refuses a missing meta (naming the kind and the path), a
@@ -214,9 +232,9 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(sigs(mh1) == sigs(mh) && sigs(mh).nonEmpty)
   }
 
-  test("a v1 IVF-PQ index serves the v2 rows, refuses writes, and compacts into g1") {
-    val v2 = saved("IVF-PQ index")
-    val v1 = copyWithMeta(v2, "_graft_ivfpq_meta")(
+  /** A v1 copy of the saved v2 IVF-PQ index: v1 meta, cells at the root. */
+  private def v1IvfPq(): String = {
+    val v1 = copyWithMeta(saved("IVF-PQ index"), "_graft_ivfpq_meta")(
       Some(toV1("deleted", "gen", "rotation_fp")))
     // the v1 layout keeps its cells at the root
     val fs = new org.apache.hadoop.fs.Path(v1)
@@ -226,6 +244,12 @@ class ArtifactsSpec extends AnyFunSuite {
       .foreach(s => assert(fs.rename(s.getPath,
         new org.apache.hadoop.fs.Path(s"$v1/${s.getPath.getName}"))))
     assert(fs.delete(new org.apache.hadoop.fs.Path(s"$v1/g0"), true))
+    v1
+  }
+
+  test("a v1 IVF-PQ index serves the v2 rows, refuses writes, and compacts into g1") {
+    val v2 = saved("IVF-PQ index")
+    val v1 = v1IvfPq()
     def serve(root: String) = asSet(Similarity.ivfPqTopKIndexed(spark, root,
       probes, "vec_id", "embedding", cents, pq, nprobe = 2, k = 5))
     val want = serve(v2)
@@ -252,5 +276,168 @@ class ArtifactsSpec extends AnyFunSuite {
     Similarity.appendIvfPqIndex(spark, batch, "vec_id", "embedding", pq, v1)
     assert(Similarity.ivfPqIndexCodes(spark, v1).count() ==
       emb.count() + batch.count())
+  }
+
+  // ── Driver-side bookkeeping: the meta codec, footer counts, scans ──
+
+  test("every meta decodes on the driver to Spark's own read, v1 metas and NULLs included") {
+    def same(dir: String, kind: String): org.apache.spark.sql.Row = {
+      val got = Artifacts.readMeta(spark, dir, kind, 1 to 99).row
+      val want = spark.read.parquet(dir).collect().head
+      assert(got == want && got.schema == want.schema, s"$kind at $dir: $got vs $want")
+      got
+    }
+    val rows = kinds.map(k => k.name -> same(metaDir(saved(k.name), k), k.name)).toMap
+    Seq(("IVF index", "_graft_index_meta", Seq("deleted")),
+      ("MinHash index", "_graft_index_meta", Seq("deleted")),
+      ("IVF-PQ index", "_graft_ivfpq_meta", Seq("deleted", "gen", "rotation_fp"))
+    ).foreach { case (name, sub, v2Only) =>
+      same(s"${copyWithMeta(saved(name), sub)(Some(toV1(v2Only: _*)))}/$sub", name)
+    }
+    // the unrotated index and the raw codebook store NULL provenance
+    assert(rows("IVF-PQ index").isNullAt(rows("IVF-PQ index").fieldIndex("rotation_fp")))
+    assert(rows("PQ codebook").isNullAt(rows("PQ codebook").fieldIndex("residual_to")))
+  }
+
+  test("a meta directory holding a file that is not parquet refuses as a missing meta") {
+    kinds.foreach { k =>
+      val copy = copyWithMeta(saved(k.name), k.metaSub)(None)
+      val dir = metaDir(copy, k)
+      FileUtils.writeStringToFile(new java.io.File(s"$dir/part-00000.parquet"),
+        "not a parquet file", "UTF-8")
+      val e = intercept[IllegalArgumentException](k.load(copy))
+      assert(e.getMessage.contains(s"no ${k.name} at $dir"), s"${k.name}: ${e.getMessage}")
+    }
+  }
+
+  test("an I/O failure reading a meta surfaces as itself, never as a rebuild refusal") {
+    spark.conf.set("fs.faulty.impl", classOf[FaultyFileSystem].getName)
+    try kinds.foreach { k =>
+      val dir = s"faulty://${metaDir(saved(k.name), k)}"
+      val e = intercept[java.io.IOException](
+        Artifacts.readMeta(spark, dir, k.name, 1 to 99))
+      assert(e.getMessage.contains("injected read failure")
+        && !e.getMessage.contains("rebuild"), s"${k.name}: ${e.getMessage}")
+    } finally spark.conf.unset("fs.faulty.impl")
+  }
+
+  test("footer counts and scan schemas equal Spark's, layout by layout") {
+    val fs = new Path("/").getFileSystem(spark.sessionState.newHadoopConf())
+    def files(dir: String): Seq[String] =
+      FileUtils.listFiles(new java.io.File(dir), null, true)
+        .toArray.map(_.asInstanceOf[java.io.File].getName).toSeq
+    val ivf = copyWithMeta(saved("IVF index"), "_graft_index_meta")(Some(identity))
+    Similarity.deleteFromIvfIndex(spark, probes.select("vec_id"), "vec_id", ivf)
+    val appended = tmp("appended")
+    Similarity.buildIvfPqIndex(emb.filter(col("vec_id") % 2 === 0), "vec_id",
+      "embedding", cents, pq, appended)
+    Similarity.appendIvfPqIndex(spark, emb.filter(col("vec_id") % 2 === 1),
+      "vec_id", "embedding", pq, appended)
+    val mhData = s"${saved("MinHash index")}/data"
+    assert(files(mhData).contains("_SUCCESS") && files(mhData).exists(_.endsWith(".crc")))
+    assert(fs.listStatus(new Path(s"$appended/g0")).filter(_.isDirectory)
+      .exists(d => fs.listStatus(d.getPath).count(_.getPath.getName.endsWith(".parquet")) >= 2))
+    Seq(
+      "v1 IVF-PQ root" -> v1IvfPq(),
+      "v2 IVF-PQ generation" -> s"${saved("IVF-PQ index")}/g0",
+      "float IVF root beside _tomb and its meta" -> ivf,
+      "float IVF tombstones" -> Artifacts.rootTombDir(ivf),
+      "MinHash data with _SUCCESS and .crc files" -> mhData,
+      "appended IVF-PQ, two files per cell" -> s"$appended/g0"
+    ).foreach { case (layout, dir) =>
+      val got = Artifacts.scan(spark, dir)
+      val want = spark.read.parquet(dir)
+      assert(got.rows == want.count() && got.rows > 0, layout)
+      assert(got.df.schema == want.schema, s"$layout: ${got.df.schema} vs ${want.schema}")
+      assert(got.df.inputFiles.sorted.sameElements(want.inputFiles.sorted), layout)
+      assert(got.df.queryExecution.analyzed.sameResult(want.queryExecution.analyzed), layout)
+    }
+  }
+
+  /** Spark jobs started while `body` runs (the job-group listener of
+    * GraphSpec's "jobs per call", drained through a marker job). */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val stamp = System.nanoTime()
+    val (group, marker) = (s"artifacts-spec-$stamp", s"artifacts-spec-marker-$stamp")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var drained = false
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+        if (props.exists(_.getProperty("spark.job.description") == marker)) drained = true
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "ArtifactsSpec body")
+      try body finally sc.clearJobGroup()
+      sc.setJobDescription(marker)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      eventually(timeout(30.seconds), interval(20.millis))(assert(drained))
+    } finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("bookkeeping runs no Spark job: meta reads, count gates and scan planning") {
+    // before the driver-side reads, one IVF-PQ serve on this fixture
+    // ran 12 jobs (17 after a delete) and a MinHash read with its
+    // collect ran 11
+    kinds.foreach { k =>
+      val dir = metaDir(saved(k.name), k)
+      assert(jobsDuring(Artifacts.readMeta(spark, dir, k.name, 1 to 99)) == 0, k.name)
+    }
+    val idx = tmp("jobs")
+    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", cents, pq, idx)
+    def serve(): Unit = Similarity.ivfPqTopKIndexed(spark, idx, probes, "vec_id",
+      "embedding", cents, pq, nprobe = 2, k = 5).collect()
+    val before = jobsDuring(serve())
+    Similarity.deleteFromIvfPqIndex(spark, emb.filter(col("vec_id") % 7 === 0)
+      .select("vec_id"), "vec_id", idx)
+    val after = jobsDuring(serve())
+    assert(before <= 7 && after <= 7, s"serve: $before jobs, $after after a delete")
+
+    val mh = copyWithMeta(saved("MinHash index"), "_graft_index_meta")(Some(identity))
+    Dedup.deleteFromMinhashIndex(spark, docs.filter(col("doc_id") % 7 === 0)
+      .select("doc_id"), "doc_id", mh)
+    assert(jobsDuring(Dedup.readMinhashIndex(spark, mh)) == 0)
+    val read = jobsDuring(Dedup.readMinhashIndex(spark, mh).select("id").collect())
+    assert(read <= 2, s"MinHash read: $read jobs")
+  }
+
+  /** Log events at WARN or above whose message contains `text`,
+    * captured on the root logger while `body` runs. */
+  private def warningsDuring(text: String)(body: => Unit): Int = {
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val appender = new AbstractAppender("artifacts-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains(text)) seen.incrementAndGet()
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    appender.start()
+    ctx.getConfiguration.getRootLogger.addAppender(appender, null, null)
+    ctx.updateLoggers()
+    try body finally {
+      ctx.getConfiguration.getRootLogger.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    seen.get
+  }
+
+  test("an IVF-PQ serve and a model load log no 'All paths were ignored' warning") {
+    val idx = saved("IVF-PQ index")
+    val ignored = "All paths were ignored"
+    // the control: Spark's own read of an underscore-named meta warns
+    assert(warningsDuring(ignored)(
+      spark.read.parquet(s"$idx/_graft_ivfpq_meta").collect()) >= 1)
+    assert(warningsDuring(ignored) {
+      Similarity.ivfPqTopKIndexed(spark, idx, probes, "vec_id", "embedding", cents,
+        pq, nprobe = 2, k = 5).collect()
+      Similarity.loadPQ(spark, saved("PQ codebook"))
+      Classifier.loadLogReg(spark, saved("LogReg model"))
+    } == 0)
   }
 }
