@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Document deduplication for LLM-training-data pipelines: exact
   * (content-hash group-by), MinHash+LSH near-dup (banded — candidate
@@ -35,9 +37,16 @@ object Dedup {
     * releaseCaches() after materializing the result (Bench/Verify do
     * this after every query action). */
   private val cachedTables = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private val cachedRdds = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
 
   private def registerCache(df: DataFrame): DataFrame = synchronized {
     val c = df.cache(); cachedTables += c; c
+  }
+
+  /** Pin an RDD intermediate (Graph's edge blocks) under the same
+    * lifecycle, at the storage level Dataset.cache uses. */
+  private[operators] def pin[T](rdd: RDD[T]): RDD[T] = synchronized {
+    cachedRdds += rdd.persist(StorageLevel.MEMORY_AND_DISK); rdd
   }
 
   /** Pin a caller-built intermediate under this object's cache
@@ -63,6 +72,7 @@ object Dedup {
     * grows without bound. */
   def releaseCaches(): Unit = synchronized {
     cachedTables.foreach(_.unpersist(false)); cachedTables.clear()
+    cachedRdds.foreach(_.unpersist(false)); cachedRdds.clear()
   }
 
   /** Whitespace tokenization — single-space split, matching the
@@ -374,9 +384,11 @@ object Dedup {
     * no exchange (Graph.broadcastState prices the broadcast). Labels
     * only ever decrease, so a round changed something iff one of its
     * rows has component < prev, and the loop stops after the first
-    * round where none has (Graph.iterate's convergent mode: one narrow
-    * scan of the round's checkpoint, no second plan). Every round, the
-    * stable one included, is one eager localCheckpoint. Rounds needed
+    * round where none has (Graph.iterate's convergent mode: the flag is
+    * observed on the round's checkpoint job, no second job). Every
+    * round, the stable one included, is one eager localCheckpoint —
+    * the SQL executions e2ebench counts component rounds by, which is
+    * why this loop stays on Dataset rounds. Rounds needed
     * = graph diameter + the stable one; for near-dup clusters that is small
     * (duplicates of a document are duplicates of each other — clusters
     * are near-cliques; the sf0.01 corpus's deepest chain is 3 nodes). For adversarial
@@ -384,8 +396,8 @@ object Dedup {
     * (Kiveris et al., "Connected Components in MapReduce and
     * Beyond", SoCC'14) at O(log²) rounds — not needed for dedup
     * workloads, noted here so the limit is a decision, not a
-    * surprise. No driver-side graph; the only collects are the
-    * broadcast labels and the stop test.
+    * surprise. No driver-side graph; the only collect is the
+    * broadcast labels.
     *
     * A NULL id connects nothing: it is labelled NULL, and its pairs
     * link none of their other ids (componentsStar's rule too).
@@ -411,7 +423,7 @@ object Dedup {
     // the rounds before it. Where a lost executor must not restart the
     // whole loop, a reliable .checkpoint() is the same shape.
     val (labels, done) = Graph.iterate(nodes.select(col("id"), col("id").as("component")), maxIter,
-        Some((out, _) => !Graph.anyRow(out, col("component") < col("prev")))) { (labels, _) =>
+        Some(Graph.noRowMeets(col("component") < col("prev")))) { (labels, _) =>
       val mins = edges
         .join(Graph.broadcastState(labels.select(col("id").as("dst"), col("component").as("__c")), n),
           Seq("dst"))
@@ -478,7 +490,7 @@ object Dedup {
       .withColumn("__tag", lit(1))
     val current = col("__tag") =!= 2
     val (tagged, done) = Graph.iterate(init, maxIter,
-        Some((out, _) => !Graph.anyRow(out, col("__tag") =!= 3))) { (cur, _) =>
+        Some(Graph.noRowMeets(col("__tag") =!= 3))) { (cur, _) =>
       val edges = cur.filter(current).select("lo", "hi")
       // large-star over the symmetric adjacency
       val sym = edges.select(col("lo").as("u"), col("hi").as("v"))
@@ -796,8 +808,8 @@ object Dedup {
       batch.select(col(idCol), col(textCol)).localCheckpoint()
     else batch.select(col(idCol), col(textCol))
     try {
-      if (requireNewIds) Similarity.requireIdsNotIndexed(spark,
-        src.select(col(idCol).as("id")), s"$path/data",
+      if (requireNewIds) Similarity.requireIdsNotIndexed(
+        src.select(col(idCol).as("id")), Artifacts.scan(spark, s"$path/data").df, s"$path/data",
         "Dedup.appendMinhashIndex", "double-sign them")
       // meta rows = prev + batch (O(batch) — a full-index recount per
       // append would cost more than the append at 100 TB; review r12).

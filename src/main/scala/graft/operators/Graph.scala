@@ -1,33 +1,37 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
 
-import graft.functions.VectorOps
+import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.ColumnGlue
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
 
 /** Graph analytics over edge lists — the companion surface to
   * Dedup's component operators (near-dup pair graphs, citation /
-  * link graphs, user-interaction graphs). Everything here is
-  * edge-list relational algebra: joins + grouped aggregations per
-  * round, never a driver-side adjacency structure, so the operators
-  * inherit Spark's shuffle-partitioned scaling directly.
+  * link graphs, user-interaction graphs). Never a driver-side
+  * adjacency structure, so the operators inherit Spark's
+  * shuffle-partitioned scaling directly. The fixed-round vertex
+  * programs (pageRank, personalizedPageRank, labelPropagation,
+  * labelComplete, hits) run as RDD rounds over edge blocks pinned
+  * once, one Spark job and one shuffle per round (two for hits);
+  * the rest is edge-list relational algebra, joins + grouped
+  * aggregations per round.
   */
 object Graph {
 
-  /** Shared edge prologue: named endpoints, self-loops dropped,
-    * optionally symmetrized, dedup'd, hash-partitioned on `key` (see
-    * partitionedOn) — UNPINNED (callers that read the list more than
-    * once pin it). The dedup runs on the partitioned rows, so the list
-    * shuffles once. `castLong` aligns endpoint types with long-keyed
-    * seed relations (the bfsDistance-family convention). One
-    * implementation (review r15): six operators used to inline
-    * drifting copies of this block, and the drift is exactly what
-    * produced labelComplete's seed-cast-without-edge-cast silent
-    * no-op. */
-  private def edgeList(edges: DataFrame, srcCol: String, dstCol: String,
-                       undirected: Boolean, key: String,
-                       castLong: Boolean = false): DataFrame = {
+  /** Shared edge prologue's first half: the endpoints as (src, dst),
+    * self-loops dropped. `castLong` aligns endpoint types with
+    * long-keyed seed relations (the bfsDistance-family convention). */
+  private def endpoints(edges: DataFrame, srcCol: String, dstCol: String,
+                        castLong: Boolean): DataFrame = {
     if (castLong) {
       // loud, not silent: a string/UUID endpoint would cast to NULL
       // and the self-loop filter would then drop every edge — an
@@ -39,8 +43,21 @@ object Graph {
     val (s, d) =
       if (castLong) (col(srcCol).cast("long"), col(dstCol).cast("long"))
       else (col(srcCol), col(dstCol))
-    val base = edges.select(s.as("src"), d.as("dst"))
-      .filter(col("src") =!= col("dst"))
+    edges.select(s.as("src"), d.as("dst")).filter(col("src") =!= col("dst"))
+  }
+
+  /** Shared edge prologue: `endpoints`, optionally symmetrized,
+    * dedup'd, hash-partitioned on `key` (see partitionedOn) — UNPINNED
+    * (callers that read the list more than once pin it). The dedup
+    * runs on the partitioned rows, so the list shuffles once. One
+    * implementation (review r15): six operators used to inline
+    * drifting copies of this block, and the drift is exactly what
+    * produced labelComplete's seed-cast-without-edge-cast silent
+    * no-op. */
+  private def edgeList(edges: DataFrame, srcCol: String, dstCol: String,
+                       undirected: Boolean, key: String,
+                       castLong: Boolean = false): DataFrame = {
+    val base = endpoints(edges, srcCol, dstCol, castLong)
     val oriented =
       if (undirected) base.union(base.select(col("dst").as("src"), col("src").as("dst")))
       else base
@@ -56,18 +73,6 @@ object Graph {
     * table, never to the checkpointed state it read. */
   private[operators] def partitionedOn(df: DataFrame, key: String): DataFrame =
     df.repartition(SQLConf.get.numShufflePartitions, col(key))
-
-  /** (id, degree) for every endpoint of `e`: its out-degree, 0 for a
-    * node with in-edges only. One grouped aggregate, repartitioned on
-    * id so its frame co-partitions with a round's fold — UNPINNED. */
-  private def degrees(e: DataFrame): DataFrame =
-    partitionedOn(
-      e.select(explode(array(
-          struct(col("src").as("id"), lit(true).as("out")),
-          struct(col("dst").as("id"), lit(false).as("out")))).as("__e"))
-        .select(col("__e.id").as("id"), col("__e.out").as("out")),
-      "id")
-      .groupBy("id").agg(count(when(col("out"), true)).as("degree"))
 
   /** A vertex state on its way to a pinned edge list, `rows` rows at
     * most: hinted to broadcast when that many rows fit Spark's own
@@ -95,77 +100,204 @@ object Graph {
   private def symmetrize(pairs: DataFrame): DataFrame =
     pairs.union(pairs.select(col("b").as("a"), col("a").as("b")))
 
-  /** A group's double sum: the sorted fold, or a partial-agg sum. */
-  private def foldedSum(c: Column, sortedFold: Boolean): Column =
-    if (sortedFold) VectorOps.sortedSum(c) else sum(c)
-
-  /** The one round driver of this file and Dedup's components
-    * (`KMeans.java:220-282`'s loop): at most `rounds` steps from
-    * `init`, `step(cur, r)` building round r (from 1) out of the round
-    * before. A round that a later round reads ends in an eager
+  /** The Dataset round driver of kCore, BFS, sssp and Dedup's
+    * components (`KMeans.java:220-282`'s loop): at most `rounds` steps
+    * from `init`, `step(cur, r)` building round r (from 1) out of the
+    * round before. A round that a later round reads ends in an eager
     * localCheckpoint, so round r's plan never nests r join trees.
-    *  - Fixed rounds (no `stable`; the oracle unrolls the same count):
-    *    the LAST round stays lazy — its one consumer is the returned
-    *    plan — so every action on the result re-runs it: a partial-agg
-    *    double sum (sortedFold=false) may differ in the last bit
-    *    between two actions; cache the result to read it twice.
-    *  - Convergent (`stable` given): every round is checkpointed, and
-    *    the loop stops after the first round whose checkpointed output
-    *    `stable(out, r)` calls stable — the reference's old-vs-new
-    *    centroid test (`KMeans.java:291-310`), read off the round's own
-    *    output rather than a second plan.
+    *  - Fixed rounds (no `stable`): the LAST round stays lazy.
+    *  - Convergent (`stable` = (agg, test)): every round is
+    *    checkpointed with the aggregate `agg` over it observed on the
+    *    checkpoint's own job, and the loop stops after the first round
+    *    r whose value v has `test(v, r)` — the reference's old-vs-new
+    *    centroid test (`KMeans.java:291-310`), with no second job.
     * Returns the last round and whether the loop stopped on stability
     * (never, for fixed rounds). */
   private[operators] def iterate(init: DataFrame, rounds: Int,
-                                 stable: Option[(DataFrame, Int) => Boolean] = None)
+                                 stable: Option[(Column, (Any, Int) => Boolean)] = None)
                                 (step: (DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {
     @annotation.tailrec
     def go(cur: DataFrame, r: Int): (DataFrame, Boolean) =
       if (r > rounds) (cur, false)
       else if (r == rounds && stable.isEmpty) (step(cur, r), false)
-      else {
-        val out = step(cur, r).localCheckpoint(eager = true)
-        if (stable.exists(_(out, r))) (out, true) else go(out, r + 1)
+      else stable match {
+        case None => go(step(cur, r).localCheckpoint(eager = true), r + 1)
+        case Some((agg, test)) =>
+          val (out, v) = checkpointObserving(step(cur, r), agg)
+          if (test(v, r)) (out, true) else go(out, r + 1)
       }
     go(init, 1)
   }
 
+  /** `df` eagerly checkpointed, and the value of the aggregate `agg`
+    * over its rows, observed on the checkpoint's own job and read from
+    * that execution's plan (no wait on the listener bus). */
+  private[operators] def checkpointObserving(df: DataFrame, agg: Column): (DataFrame, Any) = {
+    val seen = df.observe("graft_observed", agg)
+    val out = seen.localCheckpoint(eager = true)
+    (out, seen.queryExecution.observedMetrics("graft_observed").get(0))
+  }
+
+  /** A convergent round's stop test for rounds that change something
+    * iff one of their output rows meets `cond`: the observed flag is
+    * NULL on an empty round, which changed nothing too. */
+  private[operators] def noRowMeets(cond: Column): (Column, (Any, Int) => Boolean) =
+    (max(cond), (v, _) => v != true)
+
   /** The row count of `df`: one job, no shuffle. */
   private[operators] def rows(df: DataFrame): Long = df.queryExecution.toRdd.count()
 
-  /** Whether some row of `df` meets `cond` — a convergent round's stop
-    * test. Over a checkpointed round this is one job with no shuffle,
-    * each task stopping at its first matching row. */
-  private[operators] def anyRow(df: DataFrame, cond: Column): Boolean =
-    df.filter(cond).queryExecution.toRdd
-      .mapPartitions(rows => Iterator.single(rows.hasNext)).collect().contains(true)
+  // ── Vertex programs: RDD rounds over edge blocks pinned once ────
 
-  /** Shared rank-iteration prep: the dedup'd (optionally
-    * symmetrized) edge list partitioned on dst, and every node's (id,
-    * degree), both pinned — the opening moves of pageRank and
-    * personalizedPageRank. */
-  private def rankPrep(edges: DataFrame, srcCol: String, dstCol: String,
-                       undirected: Boolean): (DataFrame, DataFrame) = {
-    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected, "dst"))
-    (e, Dedup.pin(degrees(e)))
+  /** Field i of `r`, typed `t`, as an RDD key: its Catalyst value,
+    * which hashes and compares by content for every groupable type
+    * but binary (wrapped in an ArraySeq) and floating zeros (+0.0
+    * stands for −0.0, as in a SQL grouping). `idValue` unwraps it. */
+  private def idKey(r: InternalRow, i: Int, t: DataType): Any =
+    InternalRow.copyValue(r.get(i, t)) match {
+      case b: Array[Byte] => ArraySeq.unsafeWrapArray(b)
+      case d: java.lang.Double if d == 0.0 => java.lang.Double.valueOf(0.0)
+      case f: java.lang.Float if f == 0.0f => java.lang.Float.valueOf(0.0f)
+      case x => x
+    }
+
+  private def idValue(k: Any): Any = k match {
+    case b: ArraySeq.ofByte => b.unsafeArray
+    case x => x
   }
 
-  /** One pageRank/PPR round over (id, pr, degree): pr'(v) = teleport
-    * + d·Σ_{u→v} pr(u)/outdeg(u). `anchor` holds every node's (id,
-    * degree) and what `teleport` reads, partitioned as the fold on
-    * dst is; degree rides in the frame, so a round is one join of the
-    * `nodes` ranks onto the edges and one grouped sum, neither with an
-    * exchange while the ranks broadcast. */
-  private def powerStep(e: DataFrame, anchor: DataFrame, nodes: Long, teleport: Column,
-                        damping: Double, sortedFold: Boolean)(ranks: DataFrame, r: Int): DataFrame = {
-    val sums = e.join(
-        broadcastState(ranks.filter(col("degree") > 0L)
-          .select(col("id").as("src"), (col("pr") / col("degree")).as("c")), nodes),
-        Seq("src"))
-      .groupBy(col("dst").as("id")).agg(foldedSum(col("c"), sortedFold).as("s"))
-    anchor.join(sums.hint("shuffle_hash"), Seq("id"), "left")
-      .select(col("id"), (teleport + lit(damping) * coalesce(col("s"), lit(0.0))).as("pr"),
-        col("degree"))
+  /** Catalyst's ordering for ids or labels of type `t`, over keys. */
+  private def keyOrder(t: DataType): Ordering[Any] =
+    TypeUtils.getInterpretedOrdering(t).on(idValue)
+
+  /** The loop-free (src, dst) pairs of `edges` as keys, both
+    * orientations when `undirected`, and the output's id field: the
+    * endpoints' common type, nullable if either endpoint is (the id
+    * column of a union of the two). */
+  private def idPairs(edges: DataFrame, srcCol: String, dstCol: String,
+                      undirected: Boolean, castLong: Boolean): (RDD[(Any, Any)], StructField) = {
+    val ends = endpoints(edges, srcCol, dstCol, castLong)
+    val t = ends.select(array(col("src"), col("dst"))).schema.head.dataType.asInstanceOf[ArrayType]
+    val pairs = ends.select(col("src").cast(t.elementType), col("dst").cast(t.elementType))
+      .queryExecution.toRdd.flatMap { r =>
+        val (s, d) = (idKey(r, 0, t.elementType), idKey(r, 1, t.elementType))
+        if (undirected) Iterator((s, d), (d, s)) else Iterator.single((s, d))
+      }
+    (pairs, StructField("id", t.elementType, t.containsNull))
+  }
+
+  /** The edge blocks of `pairs`: every node with its distinct
+    * out-neighbours (empty for a node that only receives),
+    * hash-partitioned on the node into spark.sql.shuffle.partitions
+    * partitions and sorted by id within each, so a recomputed block
+    * reads in the order the pinned one did. One shuffle; pinned under
+    * Dedup's cache lifecycle. */
+  private def blocks(pairs: RDD[(Any, Any)], t: DataType): RDD[(Any, Array[Any])] = {
+    def add(out: mutable.HashSet[Any], v: Any) = { if (v != null) out += v; out }
+    val ord = keyOrder(t)
+    Dedup.pin(pairs.flatMap { case (s, d) => Iterator((s, d), (d, null)) }
+      .combineByKeyWithClassTag[mutable.HashSet[Any]](add(mutable.HashSet.empty, _), add,
+        _ ++= _, new HashPartitioner(SQLConf.get.numShufflePartitions))
+      .mapPartitions(_.map { case (u, out) => (u, out.toArray) }.toArray.sortBy(_._1)(ord).iterator,
+        preservesPartitioning = true)
+      .setName("graph edge blocks"))
+  }
+
+  /** How a round folds what a node was sent: `local` makes one map
+    * task's group of its messages (in edge-block order), `merge`
+    * folds the groups in map-partition order. */
+  private final case class Fold[M, G, R](local: collection.Seq[M] => G,
+                                         merge: collection.Seq[G] => R)
+
+  /** Σ of a node's doubles. sortedFold: all of them ascending, then a
+    * left fold from 0.0 — VectorOps.sortedSum's contract, bit-exact
+    * vs DuckDB. Otherwise each map task's partial sum, added in
+    * map-partition order: no Spark combiner, so two reads of one
+    * result add in the same order and agree bit for bit. */
+  private def sumOf(sortedFold: Boolean): Fold[Double, Array[Double], Double] =
+    if (sortedFold) Fold(_.toArray, { gs =>
+      val all = gs.flatten.toArray
+      java.util.Arrays.sort(all)
+      all.foldLeft(0.0)(_ + _)
+    })
+    else Fold(ms => Array(ms.foldLeft(0.0)(_ + _)), _.foldLeft(0.0)(_ + _.head))
+
+  /** A node's most frequent label, ties to the smaller in Catalyst's
+    * order for `t` — what min(struct(-count, label)) picks. */
+  private def mode(t: DataType): Fold[Any, Array[Any], Any] = {
+    val ord = keyOrder(t)
+    Fold(_.toArray, { gs =>
+      val counts = mutable.HashMap.empty[Any, Long]
+      gs.foreach(_.foreach(l => counts(l) = counts.getOrElse(l, 0L) + 1L))
+      counts.reduce((a, b) => if (a._2 > b._2 || a._2 == b._2 && ord.lteq(a._1, b._1)) a else b)._1
+    })
+  }
+
+  /** One message pass: each node of `state` with a `msg` sends it to
+    * its out-neighbours in the co-partitioned `adj`, zipped
+    * task-locally; one shuffle on adj's partitioner brings each
+    * receiver its messages, which `fold` reduces. */
+  private def pass[S, M, G, R](state: RDD[(Any, S)], adj: RDD[(Any, Array[Any])])(
+      msg: S => Option[M], fold: Fold[M, G, R]): RDD[(Any, R)] = {
+    val sent = state.zipPartitions(adj) { (st, out) =>
+      val (of, to) = (st.toMap, mutable.HashMap.empty[Any, mutable.ArrayBuffer[M]])
+      for ((u, vs) <- out if vs.nonEmpty; m <- msg(of(u)); v <- vs)
+        to.getOrElseUpdate(v, mutable.ArrayBuffer.empty) += m
+      val at = TaskContext.getPartitionId()
+      to.iterator.map { case (v, ms) => (v, (at, fold.local(ms))) }
+    }
+    new ShuffledRDD[Any, (Int, G), (Int, G)](sent, adj.partitioner.get).mapPartitions(
+      _.toSeq.groupBy(_._1).iterator.map { case (v, gs) =>
+        (v, fold.merge(gs.map(_._2).sortBy(_._1).map(_._2)))
+      }, preservesPartitioning = true)
+  }
+
+  /** Each node of `state` with what the co-partitioned `got` holds
+    * for it, if anything — a narrow join. */
+  private def settle[S, R, T](state: RDD[(Any, S)], got: RDD[(Any, R)])(
+      f: (Any, S, Option[R]) => T): RDD[(Any, T)] =
+    state.zipPartitions(got, preservesPartitioning = true) { (st, g) =>
+      val of = g.toMap
+      st.map { case (v, s) => (v, f(v, s, of.get(v))) }
+    }
+
+  /** `n` rounds of `step` from `init`: each state but the last is
+    * locally checkpointed (one job; the RDD keeps its partitioner),
+    * the last stays lazy in the frame built on it, and every action
+    * on that frame re-runs it in the same order (`sumOf`). Round r's
+    * state is named "graph round r". */
+  private def rounds[S](init: RDD[(Any, S)], n: Int)(
+      step: RDD[(Any, S)] => RDD[(Any, S)]): RDD[(Any, S)] =
+    (1 to n).foldLeft(init) { (cur, r) =>
+      val next = step(cur).setName(s"graph round $r")
+      if (r < n) { next.localCheckpoint(); next.count() }
+      next
+    }
+
+  /** The output frame of a vertex program: one row per node of
+    * `state`, its id then `row` of its state, typed by `fields`. */
+  private def frame[S](edges: DataFrame, state: RDD[(Any, S)], fields: StructField*)(
+      row: S => Seq[Any]): DataFrame =
+    ColumnGlue.frame(edges.sparkSession, state.mapPartitions(_.map { case (v, s) =>
+      new GenericInternalRow((idValue(v) +: row(s)).toArray): InternalRow
+    }, preservesPartitioning = true), StructType(fields))
+
+  /** A node's rank state: pr, out-degree and teleport term. */
+  private final case class Rank(pr: Double, degree: Long, teleport: Double)
+
+  /** `iters` power iterations from `init` over `adj`: pr'(v) =
+    * teleport(v) + d·Σ_{u→v} pr(u)/outdeg(u). Output (id, pr, degree). */
+  private def power(edges: DataFrame, adj: RDD[(Any, Array[Any])], id: StructField,
+                    init: RDD[(Any, Rank)], iters: Int, damping: Double,
+                    sortedFold: Boolean): DataFrame = {
+    val folded = sumOf(sortedFold)
+    val ranks = rounds(init, iters) { ranks =>
+      settle(ranks, pass(ranks, adj)(r => Some(r.pr / r.degree.toDouble), folded)) { (_, r, s) =>
+        r.copy(pr = r.teleport + damping * s.getOrElse(0.0))
+      }
+    }
+    frame(edges, ranks, id, StructField("pr", DoubleType, nullable = false),
+      StructField("degree", LongType, nullable = false))(r => Seq[Any](r.pr, r.degree))
   }
 
   /** PageRank with a FIXED number of power iterations (public
@@ -185,35 +317,27 @@ object Graph {
     * stated here so the choice is visible; nodes with no in-edges
     * settle at the teleport floor (1-d)/N.
     *
-    * Scale shape: the prologue pins the dedup'd edge list
-    * hash-partitioned on dst (one shuffle) and every node's (id,
-    * degree) from ONE grouped aggregate partitioned on id (one more);
-    * N is that frame's row count (one job, no shuffle). A round then
-    * broadcasts the ranks (N rows) to the edges, folds them per dst
-    * and joins the sums to the pinned degrees co-partitioned (a
-    * shuffle-hash join): one broadcast and NO exchange per round.
-    * When N rows pass Spark's broadcast threshold, the join is planned
-    * as Spark would unhinted, with the same result (broadcastState).
-    * Both pins are registered under Dedup's cache lifecycle.
-    * sortedFold=true folds each node's contributions in
-    * ascending order (collect_list + sorted sequential fold) —
-    * bit-exact vs DuckDB, correctness gates only; false is the
-    * distributed partial-agg scale path. The last round stays lazy
-    * (see iterate): with sortedFold=false, two actions on the result
-    * can differ in the last bit, so cache it to read it twice.
+    * Scale shape: one prologue job pins the dedup'd edge blocks (one
+    * shuffle) and counts N. A round is one job and one shuffle (see
+    * `pass`); all but the last are checkpointed (`rounds`).
+    * sortedFold=true folds each node's contributions in ascending
+    * order — bit-exact vs DuckDB, correctness gates only; false is the
+    * partial-sum scale path (`sumOf`).
     *
-    * Output: (id, pr, degree) for every node in the edge list. */
+    * Output: (id, pr, degree) for every node in the edge list, id in
+    * its input type. */
   def pageRank(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
                iters: Int = 3, damping: Double = 0.85,
                undirected: Boolean = true, sortedFold: Boolean = false): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     require(damping > 0.0 && damping < 1.0, s"damping must be in (0, 1), got $damping")
-    val (e, degs) = rankPrep(edges, srcCol, dstCol, undirected)
-    val n = rows(degs)
+    val (pairs, id) = idPairs(edges, srcCol, dstCol, undirected, castLong = false)
+    val adj = blocks(pairs, id.dataType)
+    val n = adj.count()
     require(n > 0, "pageRank on an empty edge list")
-    val init = degs.select(col("id"), lit(1.0 / n.toDouble).as("pr"), col("degree"))
-    iterate(init, iters)(
-      powerStep(e, degs, n, lit((1.0 - damping) / n.toDouble), damping, sortedFold))._1
+    power(edges, adj, id, adj.mapValues(out =>
+      Rank(1.0 / n.toDouble, out.length.toLong, (1.0 - damping) / n.toDouble)),
+      iters, damping, sortedFold)
   }
 
   /** Personalized PageRank (Haveliwala 2002 / Jeh & Widom 2003's
@@ -230,14 +354,9 @@ object Graph {
     * with the teleport restricted to seeds, non-seed sinks simply
     * absorb less), same fixed-iteration determinism contract.
     *
-    * Scale shape: pageRank's prologue and rounds exactly (one
-    * broadcast, no exchange per round), plus a ONE-TIME broadcast
-    * left-join of the seed list (probe-sized) onto the pinned node
-    * table, whose one aggregate counts N and the seeds present.
-    * sortedFold as in pageRank: bit-exact oracle
-    * twin vs distributed partial-agg scale path; the last round
-    * stays lazy, so with sortedFold=false cache the result to read it
-    * twice (see iterate).
+    * Scale shape: pageRank's, plus one shuffle of the seed ids (cast
+    * to the id type) onto the blocks' partitions; the prologue job
+    * counts N and the seeds present.
     *
     * Output: (id, pr, degree) for every node of the edge list. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, seedCol: String,
@@ -247,31 +366,22 @@ object Graph {
                            sortedFold: Boolean = false): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     require(damping > 0.0 && damping < 1.0, s"damping must be in (0, 1), got $damping")
-    val (e, degs) = rankPrep(edges, srcCol, dstCol, undirected)
+    val (pairs, id) = idPairs(edges, srcCol, dstCol, undirected, castLong = false)
+    val adj = blocks(pairs, id.dataType)
     // seeds restricted to nodes actually in the graph — teleporting to
     // an absent node would silently leak (1−d)/|S| of mass nowhere
-    val marked = Dedup.pin(degs.join(
-      broadcast(seeds.select(col(seedCol).as("id")).distinct().withColumn("__seed", lit(true))),
-      Seq("id"), "left"))
-    val sizes = marked.agg(count(lit(1)), count(col("__seed"))).head()
-    val (n, nS) = (sizes.getLong(0), sizes.getLong(1))
+    val seeded = seeds.select(col(seedCol).cast(id.dataType)).queryExecution.toRdd
+      .flatMap(r => if (r.isNullAt(0)) None else Some((idKey(r, 0, id.dataType), ())))
+      .partitionBy(adj.partitioner.get)
+    val marked = settle(adj, seeded)((_, out, s) => (out.length.toLong, s.isDefined))
+    val (n, nS) = marked.map { case (_, (_, s)) => (1L, if (s) 1L else 0L) }
+      .fold((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
     require(nS > 0, "personalizedPageRank needs at least one seed present in the graph")
-    val sv = marked.select(col("id"), col("degree"),
-      when(col("__seed"), lit(1.0 / nS.toDouble)).otherwise(lit(0.0)).as("__s"))
-    val init = sv.select(col("id"), col("__s").as("pr"), col("degree"))
-    iterate(init, iters)(
-      powerStep(e, sv, n, lit(1.0 - damping) * col("__s"), damping, sortedFold))._1
+    power(edges, adj, id, marked.mapValues { case (degree, seed) =>
+      val s = if (seed) 1.0 / nS.toDouble else 0.0
+      Rank(s, degree, (1.0 - damping) * s)
+    }, iters, damping, sortedFold)
   }
-
-  /** Neighbour-mode vote: per dst, the most frequent label among its
-    * in-neighbours' (src, label) rows, ties to the smaller label.
-    * Output (id, __new) for every dst with a voting neighbour. */
-  private def modeVote(e: DataFrame, labeled: DataFrame, nodes: Long): DataFrame =
-    e.join(broadcastState(labeled, nodes), Seq("src"))
-      .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("__c"))
-      .groupBy("dst")
-      .agg(min(struct((-col("__c")).as("nc"), col("label").as("l"))).as("__b"))
-      .select(col("dst").as("id"), col("__b.l").as("__new"))
 
   /** Label propagation communities (Raghavan et al. 2007, the
     * synchronous fixed-round variant): every node starts as its own
@@ -285,28 +395,20 @@ object Graph {
     * oscillate on bipartite structures, and curation wants a
     * deterministic result, not a lucky fixed point.
     *
-    * Scale shape: pageRank's — an edge list pinned partitioned on
-    * dst, a pinned node table from one grouped aggregate, N its row
-    * count — with the sum swapped for a mode: per round the labels
-    * broadcast to the edges, one (dst, label) count and one
-    * min_by-struct argmax fold them per dst, and the votes join the
-    * node table co-partitioned; one broadcast and no exchange. Nodes
-    * with no in-neighbors (directed case) keep their label via the
-    * left join. Output: (id, label) after `rounds` rounds. */
+    * Scale shape: pageRank's rounds with the sum swapped for a mode
+    * (`mode`), and no prologue job. Nodes with no in-neighbors
+    * (directed case) keep their label. Output: (id, label). */
   def labelPropagation(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
                        rounds: Int = 2, undirected: Boolean = true): DataFrame = {
     require(rounds >= 1 && rounds <= 50, s"rounds must be in [1, 50], got $rounds")
-    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected, "dst"))
-    val nodes = Dedup.pin(degrees(e).select("id"))
-    val n = rows(nodes)
-    // a node that gets no vote has no in-neighbour, so it never got
-    // one: its label is still its own id, and a round anchors on the
-    // pinned node table rather than on the labels it reads
-    iterate(nodes.select(col("id"), col("id").as("label")), rounds) { (labels, _) =>
-      nodes.join(modeVote(e, labels.withColumnRenamed("id", "src"), n).hint("shuffle_hash"),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("__new"), col("id")).as("label"))
-    }._1
+    val (pairs, id) = idPairs(edges, srcCol, dstCol, undirected, castLong = false)
+    val adj = blocks(pairs, id.dataType)
+    val vote = mode(id.dataType)
+    val own = adj.mapPartitions(_.map { case (v, _) => (v, v: Any) }, preservesPartitioning = true)
+    val labels = this.rounds(own, rounds) { labels =>
+      settle(labels, pass(labels, adj)(Some(_), vote))((v, _, l) => l.getOrElse(v))
+    }
+    frame(edges, labels, id, id.copy(name = "label"))(l => Seq(idValue(l)))
   }
 
   /** Semi-supervised label completion (clamped-seed label
@@ -320,17 +422,14 @@ object Graph {
     * null-start: only seed-derived labels ever propagate, so every
     * inferred label traces to ground truth ≤ rounds hops away.
     *
-    * Determinism: mode tie-break = (count desc, label asc) via the
-    * same min-struct fold as labelPropagation; integer counting
+    * Determinism: mode tie-break = (count desc, label asc), labels
+    * compared as Spark orders strings (UTF-8 bytes); integer counting
     * only, no FP. Nodes that never see a labeled neighbor keep NULL
-    * (visibly un-inferred, not defaulted).
+    * (visibly un-inferred, not defaulted). A seed id listed with
+    * several labels keeps the smallest.
     *
-    * Scale shape: labelPropagation's exactly — per round the labelled
-    * nodes broadcast to the dst-partitioned pinned edges, one grouped
-    * count and one mode pick with no exchange, and a co-partitioned
-    * join with the pinned (id, seed label) table; the seeded init and
-    * every round but the last (iterate) end in a localCheckpoint.
-    * Output: (id, label, is_seed). */
+    * Scale shape: labelPropagation's, only labelled nodes sending,
+    * plus one shuffle of the seeds. Output: (id, label, is_seed). */
   def labelComplete(edges: DataFrame, srcCol: String, dstCol: String,
                     seeds: DataFrame, idCol: String, labelCol: String,
                     rounds: Int = 2, undirected: Boolean = true): DataFrame = {
@@ -342,27 +441,24 @@ object Graph {
     // id-type mismatch could make every seed join miss and the
     // operator return all-NULL labels with no error — the
     // bfsDistance-family convention is one long id domain throughout
-    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected, "dst",
-      castLong = true))
-    val sd = seeds.select(col(idCol).cast("long").as("id"),
-      col(labelCol).cast("string").as("__seed"))
-    val nodes = Dedup.pin(degrees(e).select("id").join(sd, Seq("id"), "left")
-      .select(col("id"), col("__seed"), col("__seed").isNotNull.cast("int").as("is_seed")))
-    val n = rows(nodes)
-    val init = nodes.select(col("id"), col("__seed").as("label"), col("is_seed"))
-      .localCheckpoint(eager = true)
-    // the labelled set only grows, so a non-seed without a labelled
-    // in-neighbour this round had none before either and is still
-    // NULL: a round's label is its vote, and it anchors on the pinned
-    // node table rather than on the labels it reads
-    iterate(init, rounds) { (labels, _) =>
-      val winners = modeVote(e,
-        labels.filter(col("label").isNotNull).select(col("id").as("src"), col("label")), n)
-      nodes.join(winners.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"),
-          when(col("is_seed") === 1, col("__seed")).otherwise(col("__new")).as("label"),
-          col("is_seed"))
-    }._1
+    val (pairs, id) = idPairs(edges, srcCol, dstCol, undirected, castLong = true)
+    val adj = blocks(pairs, LongType)
+    val ord = keyOrder(StringType)
+    val known = seeds.select(col(idCol).cast("long").as("id"), col(labelCol).cast("string").as("l"))
+      .filter(col("id").isNotNull && col("l").isNotNull).queryExecution.toRdd
+      .map(r => (r.getLong(0): Any, r.getUTF8String(1).copy(): Any))
+      .reduceByKey(adj.partitioner.get, (a, b) => ord.min(a, b))
+    // a state is (label, seed label); only seeds are labelled at first
+    val init = settle(adj, known)((_, _, s) => (s.orNull, s.orNull))
+    val vote = mode(StringType)
+    val labels = this.rounds(init, rounds) { labels =>
+      settle(labels, pass(labels, adj)(s => Option(s._1), vote)) { (_, s, l) =>
+        if (s._2 != null) s else (l.orNull, null)
+      }
+    }
+    frame(edges, labels, id, StructField("label", StringType, nullable = true),
+      StructField("is_seed", IntegerType, nullable = false))(s =>
+      Seq(s._1, if (s._2 != null) 1 else 0))
   }
 
   /** Degree distribution of an edge list: per-node degree plus the
@@ -370,8 +466,8 @@ object Graph {
     * whether a graph op needs a skew guard (a power-law head means
     * the top hub's adjacency dwarfs the mean; feed maxBucket /
     * salting decisions from this, don't guess). Scale shape: the edge
-    * prologue's one shuffle, then the (id, degree) aggregate that
-    * opens pageRank and a partial-agg count per degree.
+    * prologue's one shuffle, then one (id, degree) aggregate over
+    * every endpoint and a partial-agg count per degree.
     * Output: (degree, n_nodes) ascending. */
   def degreeHistogram(edges: DataFrame, srcCol: String = "src",
                       dstCol: String = "dst",
@@ -381,7 +477,11 @@ object Graph {
     // zero-out-degree nodes in the directed case, under-reporting
     // node count to exactly the skew decisions this profile feeds;
     // in undirected mode symmetrization makes this a no-op)
-    degrees(edgeList(edges, srcCol, dstCol, undirected, "src"))
+    edgeList(edges, srcCol, dstCol, undirected, "src")
+      .select(explode(array(
+          struct(col("src").as("id"), lit(true).as("out")),
+          struct(col("dst").as("id"), lit(false).as("out")))).as("__e"))
+      .groupBy(col("__e.id")).agg(count(when(col("__e.out"), true)).as("degree"))
       .groupBy("degree").agg(count(lit(1)).cast("long").as("n_nodes"))
       .orderBy("degree")
   }
@@ -451,31 +551,31 @@ object Graph {
     * rounds (the oracle unrolls the same count); peeling is monotone
     * — each round only removes edges — so once a round removes none,
     * every later round is a no-op, and stopping there (iterate's
-    * convergent mode: the round's checkpointed edge count equals the
-    * round before's) changes nothing. With rounds ≥ the peel depth
+    * convergent mode: the edge count observed on the round's
+    * checkpoint equals the round before's) changes nothing. With rounds ≥ the peel depth
     * the result IS the exact k-core.
     *
     * Scale shape: per round ONE grouped degree count + TWO semi-joins
     * of the edge list against the survivor set — the connected-
     * components shuffle pattern — with a localCheckpoint per round
     * (the components lesson: round r's plan otherwise nests r join
-    * trees). No windows, no driver-side adjacency; the only collects
-    * are one row count per round.
+    * trees). No windows, no driver-side adjacency, no collects: each
+    * edge count rides its checkpoint's job.
     * Output: (id, core_degree) for every vertex still standing after
     * `rounds` peels — degree measured within the surviving subgraph. */
   def kCore(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
             k: Int = 2, rounds: Int = 10): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 50, s"rounds must be in [1, 50], got $rounds")
-    val init = symmetrize(undirectedPairs(edges, srcCol, dstCol)).localCheckpoint()
-    var before = rows(init)
-    val unchanged = (peeled: DataFrame, _: Int) => {
-      val after = rows(peeled)
+    val (init, n0) = checkpointObserving(symmetrize(undirectedPairs(edges, srcCol, dstCol)),
+      count(lit(1)))
+    var before = n0
+    val unchanged = (after: Any, _: Int) => {
       val same = after == before
       before = after
       same
     }
-    val (core, _) = iterate(init, rounds, Some(unchanged)) { (cur, _) =>
+    val (core, _) = iterate(init, rounds, Some((count(lit(1)), unchanged))) { (cur, _) =>
       val keep = cur.groupBy("a").agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k).select("a")
       cur.join(keep, Seq("a"), "left_semi")
@@ -609,8 +709,8 @@ object Graph {
     * checkpointed (the pageRank lesson: otherwise lineage nests one
     * join tree per hop). maxHops bounds rounds; the loop also exits
     * after the first hop that reaches no new node (iterate's
-    * convergent mode: one narrow scan of the hop's checkpointed
-    * state for a row at the new distance).
+    * convergent mode: the hop's largest distance, observed on its
+    * checkpoint's job, is short of the hop).
     *
     * Output: (id, dist) — exact longs, a pure function of (edges,
     * seeds, maxHops); the oracle replays it as a bounded recursive
@@ -636,7 +736,8 @@ object Graph {
   private def frontierBfs(e: DataFrame, start: DataFrame, keys: Seq[String],
                           maxHops: Int): DataFrame = {
     val keyCols = keys.map(col)
-    iterate(start, maxHops, Some((dist, h) => !anyRow(dist, col("dist") === h))) { (dist, h) =>
+    // a hop added a key iff one of its rows sits at its own distance
+    iterate(start, maxHops, Some((max(col("dist")), (d, h) => d != h.toLong))) { (dist, h) =>
       val frontier = dist.filter(col("dist") === h - 1)
       dist.union(frontier.join(e, frontier("id") === e("src"))
         .select(col("dst").as("id") +: keyCols.tail: _*).distinct()
@@ -772,69 +873,30 @@ object Graph {
     * Magnitudes stay bounded (≈ degree^iters) for the fixed small
     * round counts this is for.
     *
-    * Scale shape (r19 rewrite — VERDICT r18 item 2, the suite's worst
-    * 8-vs-32-core scaler): scores iterate SPARSE. A node absent from
-    * a round's sum frame holds exact 0.0, and adding 0.0 to any
-    * non-negative partial sum is bit-exact identity (0.0+0.0 = 0.0,
-    * 0.0+x = x; array_sort puts the zeros FIRST, so every later
-    * partial sum is unchanged too) — the same IEEE-no-op argument the
-    * old per-round re-anchor comment already made, now used to DELETE
-    * the re-anchor: per half-round ONE join + grouped sum over a
-    * pinned edge list (pageRank's shape), not join+sum+node-anchor
-    * twice. The edge list is pinned twice, partitioned on dst for the
-    * auth sums and on src for the hub sums, and each half broadcasts
-    * the scores it reads (N rows at most, N the pinned node table's
-    * row count) to its copy, so neither fold exchanges. The zeros
-    * materialize once, in the final lazy plan (shuffle-hash left
-    * joins of the pinned node table + coalesce 0; the checkpointed
-    * auth frame there is the one side that exchanges, since a
-    * checkpoint keeps no partitioning). Only frames a LATER round
-    * consumes are checkpointed: the intermediate auth frame inlines
-    * into its round's hub job (lineage depth stays ≤ 2 joins from the
-    * last checkpoint), the last round's auth frame is checkpointed
-    * because the output reads it too. Net per round: 2 joins + 1
-    * eager barrier fewer at ANY scale — and at bench scale, fewer of
-    * the tiny-task barriers that made 32 cores 3.7× slower than 8.
-    * sortedFold as in pageRank: true = bit-exact oracle twin, false =
-    * partial-agg scale path; both modes are bit-identical to the
-    * dense iteration (GraphSpec pins it). The last hub frame stays
-    * lazy, as in iterate: with sortedFold=false, two actions on the
-    * result can differ in the last bit once scores pass 2^53 (below
-    * it every sum is exact), so cache it to read it twice.
+    * Scale shape: edge blocks on src and, built from them, on dst; no
+    * prologue job. A round is one job with two shuffles: hubs travel
+    * the out-edges, the new auths travel back along the in-edges. A
+    * node nothing reaches scores exact 0.0, which a sum of
+    * non-negative scores never notices (0.0 + x = x, and a sort puts
+    * zeros first). sortedFold as in pageRank; both modes are
+    * bit-identical while every score is an integer below 2^53
+    * (GraphSpec pins it).
     *
     * Output: (id, auth, hub) for every node. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int = 2, sortedFold: Boolean = false): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters must be in [1, 20], got $iters")
-    val e = Dedup.pin(edgeList(edges, srcCol, dstCol, undirected = false, "dst",
-      castLong = true))
-    val eOut = Dedup.pin(partitionedOn(e, "src"))
-    val nodes = Dedup.pin(degrees(e).select("id"))
-    val n = rows(nodes)
-    // auths is DERIVED from hubs at the top of every round — HITS has
-    // no meaningful initial auth vector, so none is seeded (review
-    // r15: the old lit(0.0) auth init was dead, overwritten before
-    // first read); the fold makes that structural
-    val init = nodes.select(col("id"), lit(1.0).as("hub"))
-    val (auths, hubs) = (1 to iters).foldLeft((init, init)) {
-      case ((_, hubsPrev), round) =>
-        val aSums = e.join(broadcastState(hubsPrev.withColumnRenamed("id", "src"), n), Seq("src"))
-          .groupBy(col("dst").as("id")).agg(foldedSum(col("hub"), sortedFold).as("auth"))
-        // checkpoint only what two consumers read: the final round's
-        // auth frame feeds both this round's hub sums and the output
-        val a = if (round == iters) aSums.localCheckpoint(eager = true)
-                else aSums
-        val hSums0 = eOut.join(broadcastState(a.withColumnRenamed("id", "dst"), n), Seq("dst"))
-          .groupBy(col("src").as("id")).agg(foldedSum(col("auth"), sortedFold).as("hub"))
-        // the final round's hub frame has one consumer (the returned
-        // plan) — leave it lazy, like pageRank's final round (r19)
-        val hSums = if (round == iters) hSums0
-                    else hSums0.localCheckpoint(eager = true)
-        (a, hSums)
+    val (pairs, id) = idPairs(edges, srcCol, dstCol, undirected = false, castLong = true)
+    val out = blocks(pairs, LongType)
+    val in = blocks(out.flatMap { case (u, vs) => vs.iterator.map(v => (v, u)) }, LongType)
+    val folded = sumOf(sortedFold)
+    // a state is (auth, hub); auths derive from hubs each round, so
+    // the initial auth is never read
+    val scores = rounds(out.mapValues(_ => (0.0, 1.0)), iters) { st =>
+      val auth = settle(out, pass(st, out)(s => Some(s._2), folded))((_, _, a) => a.getOrElse(0.0))
+      settle(auth, pass(auth, in)(Some(_), folded))((_, a, h) => (a, h.getOrElse(0.0)))
     }
-    nodes.join(auths.hint("shuffle_hash"), Seq("id"), "left")
-      .join(hubs.hint("shuffle_hash"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("auth"), lit(0.0)).as("auth"),
-        coalesce(col("hub"), lit(0.0)).as("hub"))
+    frame(edges, scores, id, StructField("auth", DoubleType, nullable = false),
+      StructField("hub", DoubleType, nullable = false))(s => Seq(s._1, s._2))
   }
 }

@@ -247,9 +247,8 @@ object Similarity {
     * everything in its parquet schema beyond the index's own columns.
     * Appends introspect this so a batch can never silently write a
     * narrower schema than the index serves filters against. */
-  private def indexExtraCols(spark: SparkSession, dataDir: String,
-                             reserved: Set[String]): Seq[String] =
-    Artifacts.scan(spark, dataDir).df.schema.fieldNames.toSeq.filterNot(reserved)
+  private def indexExtraCols(indexed: DataFrame, reserved: Set[String]): Seq[String] =
+    indexed.schema.fieldNames.toSeq.filterNot(reserved)
 
   private def requireBatchCarriesMeta(batch: DataFrame, extra: Seq[String],
                                       path: String, where: String): Unit = {
@@ -344,11 +343,10 @@ object Similarity {
     * batch once and feed the same relation to the audit, the write,
     * and the meta count. Shared with Dedup.appendMinhashIndex, so a
     * hardening here reaches every appendable index. */
-  private[operators] def requireIdsNotIndexed(spark: SparkSession,
-                                              batchIds: DataFrame,
+  private[operators] def requireIdsNotIndexed(batchIds: DataFrame, indexed: DataFrame,
                                               dataPath: String, where: String,
                                               consequence: String): Unit = {
-    val dups = Artifacts.scan(spark, dataPath).df.select(col("id"))
+    val dups = indexed.select(col("id"))
       .join(batchIds.select(col("id")).distinct(), "id")
       .limit(1).count()
     require(dups == 0L,
@@ -376,7 +374,9 @@ object Similarity {
     // filterable metadata columns are part of the index's schema
     // contract: a batch missing them would append rows every filtered
     // serve silently null-filters away
-    val extra = indexExtraCols(spark, path, Set("id", "v", "n", "cell"))
+    // one listing of the index serves the schema check and the audit
+    val indexed = Artifacts.scan(spark, path).df
+    val extra = indexExtraCols(indexed, Set("id", "v", "n", "cell"))
     requireBatchCarriesMeta(batch, extra, path, "Similarity.appendIvfIndex")
     // pin ONE instantiation of the batch: the audit, the write, and
     // the meta count must see the same rows (see requireIdsNotIndexed)
@@ -394,7 +394,7 @@ object Similarity {
       val (_, _) = concurrently2(
         Artifacts.requireNotTombstoned(spark, src, Artifacts.rootTombDir(path),
           path, "Similarity.appendIvfIndex"),
-        if (requireNewIds) requireIdsNotIndexed(spark, src, path,
+        if (requireNewIds) requireIdsNotIndexed(src, indexed, path,
           "Similarity.appendIvfIndex", "serve duplicate rows"))
       // meta rows = prev + batch (O(batch), not a full-index recount —
       // review r12); a crash between data and meta leaves actual > meta,
@@ -1955,7 +1955,9 @@ object Similarity {
     val dataDir = ivfPqDataDir(path, meta)
     // filterable metadata columns are part of the index's schema
     // contract (see appendIvfIndex)
-    val extra = indexExtraCols(spark, dataDir, Set("id", "codes", "cell"))
+    // one listing of the generation serves the schema check and the audit
+    val indexed = Artifacts.scan(spark, dataDir).df
+    val extra = indexExtraCols(indexed, Set("id", "codes", "cell"))
     requireBatchCarriesMeta(batch, extra, path, "Similarity.appendIvfPqIndex")
     // pin ONE instantiation of the batch: the audit, the write, and
     // the meta count must see the same rows (see requireIdsNotIndexed)
@@ -1980,7 +1982,7 @@ object Similarity {
       val (_, _) = concurrently2(
         Artifacts.requireNotTombstoned(spark, src,
           ivfPqTombDir(path, meta.gen), path, "Similarity.appendIvfPqIndex"),
-        if (requireNewIds) requireIdsNotIndexed(spark, src, dataDir,
+        if (requireNewIds) requireIdsNotIndexed(src, indexed, dataDir,
           "Similarity.appendIvfPqIndex", "serve duplicate rows"))
       val assigned = encodeForIndex(
         KMeans.assign(src, "__v", cents = meta.cents, outCol = "cell"),
@@ -2207,7 +2209,7 @@ object Similarity {
     // anti-join against the takedown-sized tombstone set.
     // metadata columns are part of the index's schema contract across
     // generations, exactly as for appends
-    val extra = indexExtraCols(spark, ivfPqDataDir(path, meta),
+    val extra = indexExtraCols(Artifacts.scan(spark, ivfPqDataDir(path, meta)).df,
       Set("id", "codes", "cell"))
     requireBatchCarriesMeta(corpus, extra, path,
       "Similarity.retrainIvfPqIndex")

@@ -45,6 +45,13 @@ object ColumnGlue {
       case _ => ()
     }
 
+  /** A frame over Catalyst rows of `schema`, read lazily from `rows`:
+    * each action runs the RDD (SparkSession.internalCreateDataFrame). */
+  def frame(spark: org.apache.spark.sql.SparkSession,
+            rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+            schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(rows, schema)
+
   /** Stop the streaming state-store maintenance thread pool (it is
     * JVM-global, started by the first stateful streaming query and
     * otherwise alive until JVM exit). A driver that stops its

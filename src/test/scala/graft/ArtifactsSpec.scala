@@ -355,8 +355,9 @@ class ArtifactsSpec extends AnyFunSuite {
   }
 
   /** Spark jobs started while `body` runs (the job-group listener of
-    * GraphSpec's "jobs per call", drained through a marker job). */
-  private def jobsDuring(body: => Unit): Int = {
+    * GraphSpec's "jobs per call", drained through a marker job),
+    * counting those whose description meets `described`. */
+  private def jobsDuring(body: => Unit, described: String => Boolean = _ => true): Int = {
     val sc = spark.sparkContext
     val stamp = System.nanoTime()
     val (group, marker) = (s"artifacts-spec-$stamp", s"artifacts-spec-marker-$stamp")
@@ -365,7 +366,9 @@ class ArtifactsSpec extends AnyFunSuite {
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
-        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+        if (props.exists(p => p.getProperty("spark.jobGroup.id") == group &&
+            described(String.valueOf(p.getProperty("spark.job.description")))))
+          jobs.incrementAndGet()
         if (props.exists(_.getProperty("spark.job.description") == marker)) drained = true
       }
     }
@@ -404,6 +407,25 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(jobsDuring(Dedup.readMinhashIndex(spark, mh)) == 0)
     val read = jobsDuring(Dedup.readMinhashIndex(spark, mh).select("id").collect())
     assert(read <= 2, s"MinHash read: $read jobs")
+  }
+
+  test("an IVF or IVF-PQ append lists the current generation once") {
+    // past spark.sql.sources.parallelPartitionDiscovery.threshold cell
+    // directories a listing is a Spark job; an append's schema check
+    // and id audit read one listing. Lowered here so the 4 cells cross it.
+    val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val (ivf, ivfPq) = (tmp("listed-ivf"), tmp("listed-ivfpq"))
+    val (even, odd) = (emb.filter(col("vec_id") % 2 === 0), emb.filter(col("vec_id") % 2 === 1))
+    Similarity.buildIvfIndex(even, "vec_id", "embedding", cents, ivf)
+    Similarity.buildIvfPqIndex(even, "vec_id", "embedding", cents, pq, ivfPq)
+    def listings(body: => Unit): Int = jobsDuring(body, _.startsWith("Listing leaf files"))
+    spark.conf.set(threshold, "1")
+    try {
+      assert(listings(Similarity.appendIvfIndex(spark, odd, "vec_id", "embedding", ivf)) === 1,
+        "IVF append")
+      assert(listings(Similarity.appendIvfPqIndex(spark, odd, "vec_id", "embedding", pq, ivfPq))
+        === 1, "IVF-PQ append")
+    } finally spark.conf.unset(threshold)
   }
 
   /** Log events at WARN or above whose message contains `text`,

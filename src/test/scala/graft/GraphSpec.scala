@@ -41,10 +41,12 @@ class GraphSpec extends AnyFunSuite {
   test("pageRank directed: node with no in-edges sits at the teleport floor") {
     // 1 -> 2 -> 3, directed; node 1 receives nothing
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val pr = Graph.pageRank(edges, "src", "dst", iters = 3, undirected = false)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val rows = Graph.pageRank(edges, "src", "dst", iters = 3, undirected = false).collect()
+    val pr = rows.map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(math.abs(pr(1L) - 0.15 / 3.0) < 1e-12)
     assert(pr(2L) > pr(1L) && pr(3L) > pr(1L))
+    // 3 has in-edges only: it is a node, at out-degree 0
+    assert(rows.map(r => r.getLong(0) -> r.getLong(2)).toMap === Map(1L -> 1L, 2L -> 1L, 3L -> 0L))
     Dedup.releaseCaches()
   }
 
@@ -440,6 +442,13 @@ class GraphSpec extends AnyFunSuite {
       assert(got(5L) === Some("a"))
       assert(got(6L) === Some("a"), "tie must break to the smallest label")
       assert(got(4L) === Some("z"), "a seed keeps its label against any vote")
+      // a tie between labels whose UTF-16 order (String.compareTo) and
+      // UTF-8 order differ breaks as Spark orders strings, by UTF-8
+      // bytes: "｡" (EF BD A1) before "😀" (F0 9F 98 80)
+      val tie = Graph.labelComplete(Seq((1L, 3L), (2L, 3L)).toDF("src", "dst"), "src", "dst",
+        Seq((1L, "😀"), (2L, "｡")).toDF("id", "l"), "id", "l", rounds = 1)
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(tie(3L) === "｡", "the tie must break to the smaller label in UTF-8 order")
     } finally Dedup.releaseCaches()
   }
 
@@ -520,6 +529,42 @@ class GraphSpec extends AnyFunSuite {
         assert(math.abs(a) < 9.007199254740992e15 &&
             math.abs(h) < 9.007199254740992e15,
           s"node $id: score ($a, $h) at or beyond 2^53")
+      }
+    } finally Dedup.releaseCaches()
+  }
+
+  test("vertex programs: output schema and nullability as the SQL rounds built them") {
+    // ids keep their input type (long for the long-id labelComplete
+    // and hits) and are nullable if either endpoint column is; the
+    // literals are what the SQL-round operators returned
+    val inputs = Seq(
+      "long" -> Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"),
+      "nullable" -> Seq((Some(1L), Some(2L)), (Some(2L), Some(3L))).toDF("src", "dst"),
+      "mixed" -> Seq((1, Some(2L)), (2, Some(3L))).toDF("src", "dst"),
+      "string" -> Seq(("a", "b"), ("b", "c")).toDF("src", "dst"))
+    val seeds = Seq((1L, "x")).toDF("id", "label")
+    try for ((name, e) <- inputs) {
+      val (id, nn) = name match {
+        case "long" => ("BIGINT NOT NULL", " NOT NULL")
+        case "string" => ("STRING", "")
+        case _ => ("BIGINT", "")
+      }
+      val labelType = id.stripSuffix(" NOT NULL")
+      def ddl(df: org.apache.spark.sql.DataFrame) = df.schema.toDDL
+      for (u <- Seq(true, false)) {
+        assert(ddl(Graph.pageRank(e, undirected = u))
+          === s"id $id,pr DOUBLE NOT NULL,degree BIGINT NOT NULL", s"pageRank, $name")
+        assert(ddl(Graph.labelPropagation(e, undirected = u)) === s"id $id,label $labelType$nn",
+          s"labelPropagation, $name")
+      }
+      val firstId = e.select("src").limit(1)
+      assert(ddl(Graph.personalizedPageRank(e, firstId, "src"))
+        === s"id $id,pr DOUBLE NOT NULL,degree BIGINT NOT NULL", s"personalizedPageRank, $name")
+      if (name != "string") {
+        assert(ddl(Graph.labelComplete(e, "src", "dst", seeds, "id", "label"))
+          === s"id $id,label STRING,is_seed INT NOT NULL", s"labelComplete, $name")
+        assert(ddl(Graph.hits(e, "src", "dst")) === s"id $id,auth DOUBLE NOT NULL,hub DOUBLE NOT NULL",
+          s"hits, $name")
       }
     } finally Dedup.releaseCaches()
   }
@@ -620,14 +665,20 @@ class GraphSpec extends AnyFunSuite {
 
   /** What `body` ran in its job group: eager localCheckpoint calls
     * (root SQL executions described "localCheckpoint at <call site>",
-    * the marker the e2ebench Checkpoints listener counts rounds by)
-    * and Spark jobs. */
-  private def workDuring(body: => Unit): (Int, Int) = {
+    * the marker the e2ebench Checkpoints listener counts rounds by),
+    * Spark jobs, and for each vertex-round state RDD a job read
+    * ("graph round r") whether it was persisted — a local checkpoint
+    * persists the RDD it cuts. */
+  private final case class Work(checkpoints: Int, jobs: Int, rounds: Map[Int, Boolean])
+
+  private def workDuring(body: => Unit): Work = {
     val sc = spark.sparkContext
     val group = s"graph-spec-checkpoints-${System.nanoTime()}"
     val marker = s"$group-drained"
     val n = new java.util.concurrent.atomic.AtomicInteger(0)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val rounds = new java.util.concurrent.ConcurrentHashMap[Int, Boolean]
+    val Round = "graph round (\\d+)".r
     @volatile var drained = false
     val l = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -638,7 +689,13 @@ class GraphSpec extends AnyFunSuite {
       }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val props = Option(e.properties)
-        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          for (st <- e.stageInfos; rdd <- st.rddInfos) rdd.name match {
+            case Round(r) => rounds.merge(r.toInt, rdd.storageLevel.isValid, _ || _)
+            case _ =>
+          }
+        }
         if (props.exists(_.getProperty("spark.job.description") == marker))
           drained = true
       }
@@ -652,30 +709,35 @@ class GraphSpec extends AnyFunSuite {
       try spark.range(1).count() finally sc.setJobDescription(null)
       eventually(timeout(30.seconds), interval(20.millis))(assert(drained))
     } finally sc.removeSparkListener(l)
-    (n.get, jobs.get)
+    import scala.jdk.CollectionConverters._
+    Work(n.get, jobs.get, rounds.asScala.toMap)
   }
 
   /** Eager localCheckpoint calls made while `body` runs. */
-  private def checkpointsDuring(body: => Unit): Int = workDuring(body)._1
+  private def checkpointsDuring(body: => Unit): Int = workDuring(body).checkpoints
 
   test("barrier contract: an eager localCheckpoint after every round but the last") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
     val seeds = Seq((1L, "a")).toDF("id", "label")
     def barriers(op: => org.apache.spark.sql.DataFrame): Int =
       checkpointsDuring { op.collect(); () }
+    // the vertex programs checkpoint each round's state RDD instead:
+    // every round but the last is persisted by its local checkpoint,
+    // the last is read lazily by the collect
+    def stateRounds(op: => org.apache.spark.sql.DataFrame): Map[Int, Boolean] =
+      workDuring { op.collect(); () }.rounds
     for (n <- Seq(1, 3)) try {
-      assert(barriers(Graph.pageRank(edges, iters = n)) === n - 1, s"pageRank, $n rounds")
-      assert(barriers(Graph.personalizedPageRank(edges, seeds, "id", iters = n)) === n - 1,
+      val want = (1 to n).map(r => r -> (r < n)).toMap
+      assert(stateRounds(Graph.pageRank(edges, iters = n)) === want, s"pageRank, $n rounds")
+      assert(stateRounds(Graph.personalizedPageRank(edges, seeds, "id", iters = n)) === want,
         s"personalizedPageRank, $n rounds")
-      assert(barriers(Graph.labelPropagation(edges, rounds = n)) === n - 1,
+      assert(stateRounds(Graph.labelPropagation(edges, rounds = n)) === want,
         s"labelPropagation, $n rounds")
-      // one barrier on the seeded init, then n − 1 rounds
-      assert(barriers(Graph.labelComplete(edges, "src", "dst", seeds, "id", "label",
-        rounds = n)) === n, s"labelComplete, $n rounds")
+      assert(stateRounds(Graph.labelComplete(edges, "src", "dst", seeds, "id", "label",
+        rounds = n)) === want, s"labelComplete, $n rounds")
+      assert(stateRounds(Graph.hits(edges, "src", "dst", iters = n)) === want, s"hits, $n rounds")
       assert(barriers(Graph.ssspBounded(edges.withColumn("w", lit(1L)), seeds, "id",
         maxHops = n)) === n, s"ssspBounded, $n rounds")
-      // each non-final hub frame, and the final auth frame the output reads
-      assert(barriers(Graph.hits(edges, "src", "dst", iters = n)) === n, s"hits, $n rounds")
     } finally Dedup.releaseCaches()
     // convergent callers checkpoint every round, the stable one included
     try {
@@ -714,7 +776,7 @@ class GraphSpec extends AnyFunSuite {
     // path 1–…–5: four rounds that change labels, one that finds none
     val path = (1L until 5L).map(i => (i, i + 1)).toDF("id1", "id2")
     try {
-      val (checkpoints, jobs) = workDuring { Dedup.connectedComponents(path).collect(); () }
+      val Work(checkpoints, jobs, _) = workDuring { Dedup.connectedComponents(path).collect(); () }
       assert(checkpoints === 5)
       // measured at 27 on the test session (local[4], 4 shuffle
       // partitions); a stop test that runs its own plan costs more
@@ -788,6 +850,39 @@ class GraphSpec extends AnyFunSuite {
     pr.map { case (v, x) => v -> ((x, deg.getOrElse(v, 0L))) }
   }
 
+  /** personalizedPageRank(sortedFold = true) over `und` from the
+    * seeds in the graph: id -> (pr, out-degree). */
+  private def pprModel(und: Seq[(Long, Long)], seeds: Set[Long], iters: Int,
+                       damping: Double): Map[Long, (Double, Long)] = {
+    val nodes = und.flatMap(p => Seq(p._1, p._2)).distinct
+    val deg = und.groupBy(_._1).map { case (v, es) => v -> es.size.toLong }
+    val present = seeds.intersect(nodes.toSet)
+    val s = nodes.map(v => v -> (if (present(v)) 1.0 / present.size.toDouble else 0.0)).toMap
+    val pr = (1 to iters).foldLeft(s) { (pr, _) =>
+      val in = und.groupBy(_._2).map { case (v, es) => v -> sortedSum(es.map(e => pr(e._1) / deg(e._1))) }
+      nodes.map(v => v -> ((1.0 - damping) * s(v) + damping * in.getOrElse(v, 0.0))).toMap
+    }
+    pr.map { case (v, x) => v -> ((x, deg.getOrElse(v, 0L))) }
+  }
+
+  /** labelComplete over `und`: seeds keep their label, every other
+    * node takes its labelled in-neighbours' most frequent label, ties
+    * to the smaller in UTF-8 byte order, or stays unlabelled. */
+  private def labelCompleteModel(und: Seq[(Long, Long)], seeds: Map[Long, String],
+                                 rounds: Int): Map[Long, Option[String]] = {
+    val utf8 = Ordering.by[String, Iterable[Int]](_.getBytes("UTF-8").toSeq.map(_ & 0xff))
+    val nodes = und.flatMap(p => Seq(p._1, p._2)).distinct
+    (1 to rounds).foldLeft(nodes.map(v => v -> seeds.get(v)).toMap) { (labels, _) =>
+      val votes = und.groupBy(_._2).flatMap { case (v, in) =>
+        val ls = in.flatMap(e => labels(e._1))
+        if (ls.isEmpty) None
+        else Some(v -> ls.groupBy(identity).toSeq.map { case (l, n) => (-n.size, l) }
+          .min(Ordering.Tuple2(Ordering.Int, utf8))._2)
+      }
+      labels.map { case (v, l) => v -> (if (seeds.contains(v)) l else votes.get(v)) }
+    }
+  }
+
   /** Synchronous label propagation over `und`: each node takes its
     * in-neighbours' most frequent label, the lowest on ties. */
   private def labelPropagationModel(und: Seq[(Long, Long)], rounds: Int): Map[Long, Long] =
@@ -854,22 +949,53 @@ class GraphSpec extends AnyFunSuite {
             .map(r => r.getLong(0) -> ((bits(r.getDouble(1)), bits(r.getDouble(2))))).toMap
           assert(hits === hitsModel(directed(pairs), 2)
             .map { case (v, (a, h)) => v -> ((bits(a), bits(h))) }, s"hits, $at")
+          val ranks = (df: org.apache.spark.sql.DataFrame) => df.collect()
+            .map(r => r.getLong(0) -> ((bits(r.getDouble(1)), r.getLong(2)))).toMap
+          val modelRanks = (m: Map[Long, (Double, Long)]) =>
+            m.map { case (v, (x, d)) => v -> ((bits(x), d)) }
+          // directed: nodes with in-edges only sit at out-degree 0
+          assert(ranks(Graph.pageRank(edges, iters = 3, undirected = false, sortedFold = true))
+            === modelRanks(pageRankModel(directed(pairs), 3, 0.85)), s"directed pageRank, $at")
+          assert(ranks(Graph.personalizedPageRank(edges, seeds.toSeq.toDF("id"), "id",
+              iters = 3, sortedFold = true))
+            === modelRanks(pprModel(symmetric(pairs), seeds, 3, 0.85)), s"personalizedPageRank, $at")
+          // labels whose UTF-8 and UTF-16 orders differ ("｡" < "😀" in UTF-8)
+          val tags = Seq("😀", "｡", "b")
+          val known = pairs.flatMap(p => Seq(p._1, p._2)).distinct.filter(_ % 4 == 0)
+            .map(v => v -> tags((v % 3).toInt)).toMap
+          assert(Graph.labelComplete(edges, "src", "dst", known.toSeq.toDF("id", "l"), "id", "l",
+              rounds = 2).collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+            === labelCompleteModel(symmetric(pairs), known, 2), s"labelComplete, $at")
+          // the partial-sum scale path: two actions on one returned
+          // frame fold in the same order, so they agree bit for bit
+          for ((name, fast) <- Seq(
+              "pageRank" -> Graph.pageRank(edges, iters = 3),
+              "personalizedPageRank" -> Graph.personalizedPageRank(edges, seeds.toSeq.toDF("id"), "id"),
+              "hits" -> Graph.hits(edges, "src", "dst", iters = 3))) {
+            def read() = fast.collect().map(r => r.getLong(0) -> ((bits(r.getDouble(1)), r.get(2)))).toMap
+            assert(read() === read(), s"$name read twice, $at")
+          }
         }
     } finally Dedup.releaseCaches() }
   }
 
   test("graph rounds: jobs per call on a fixed fixture") {
     // seed 3's 40-node graph on the test session (local[4], 4 shuffle
-    // partitions). Before the edge lists were pinned partitioned on the
-    // fold key, with the vertex state broadcast to them, these calls
-    // ran 22 (pageRank), 16 (labelPropagation) and 21 (hits) jobs
+    // partitions). As SQL rounds over pinned frames with the vertex
+    // state broadcast, these calls ran up to 11 (pageRank), 9
+    // (labelPropagation) and 15 (hits) jobs; as RDD rounds each round
+    // is one job, plus at most a prologue job and the collect
     val edges = randomPairs(3, 40).toDF("src", "dst")
+    val seeds = Seq((1L, "a"), (2L, "b")).toDF("id", "label")
     def jobs(op: => org.apache.spark.sql.DataFrame): Int =
-      try workDuring { op.collect(); () }._2 finally Dedup.releaseCaches()
+      try workDuring { op.collect(); () }.jobs finally Dedup.releaseCaches()
     val pr = jobs(Graph.pageRank(edges, iters = 3, sortedFold = true))
+    val ppr = jobs(Graph.personalizedPageRank(edges, seeds, "id", iters = 3))
     val lpa = jobs(Graph.labelPropagation(edges, rounds = 2))
+    val lc = jobs(Graph.labelComplete(edges, "src", "dst", seeds, "id", "label", rounds = 2))
     val hits = jobs(Graph.hits(edges, "src", "dst", iters = 2, sortedFold = true))
-    assert(pr <= 11 && lpa <= 9 && hits <= 15,
-      s"pageRank $pr, labelPropagation $lpa, hits $hits jobs")
+    assert(pr <= 3 + 2 && ppr <= 3 + 2 && lpa <= 2 + 2 && lc <= 2 + 2 && hits <= 2 + 2,
+      s"pageRank $pr, personalizedPageRank $ppr, labelPropagation $lpa, " +
+        s"labelComplete $lc, hits $hits jobs")
   }
 }

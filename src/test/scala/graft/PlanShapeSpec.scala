@@ -539,11 +539,12 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("graph rounds: the vertex state rides a broadcast — no exchange on the edge side") {
-    // each call pins its edge list partitioned on the key its round
-    // folds on, so a round that brings the (node-sized) state to the
-    // edges by broadcast folds them with no exchange; the anchor join
-    // is co-partitioned. Every plan a call executes is checked: its
-    // checkpointed rounds and the lazy last round its collect runs.
+    // connectedComponents, the SQL-round graph loop, pins its pair list
+    // partitioned on the key its round folds on, so a round that brings
+    // the (node-sized) labels to the pairs by broadcast folds them with
+    // no exchange; the anchor join is co-partitioned. Every plan the
+    // call executes is checked, its checkpointed rounds included. The
+    // vertex programs build no SQL rounds (next test).
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -557,7 +558,6 @@ class PlanShapeSpec extends AnyFunSuite {
     object Plans extends AdaptiveSparkPlanHelper
     val rnd = new scala.util.Random(5)
     val edges = Seq.fill(400)((1L + rnd.nextInt(100), 1L + rnd.nextInt(100))).toDF("src", "dst")
-    val seeds = Seq((1L, "a"), (2L, "b")).toDF("id", "label")
     val marker = "graph-round-plans-drained"
     def plansOf(op: => DataFrame): Seq[SparkPlan] = {
       val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
@@ -580,11 +580,6 @@ class PlanShapeSpec extends AnyFunSuite {
       case _ => false
     }.isDefined
     for ((name, op) <- Seq[(String, () => DataFrame)](
-        "pageRank" -> (() => Graph.pageRank(edges, sortedFold = true)),
-        "personalizedPageRank" -> (() => Graph.personalizedPageRank(edges, seeds, "id")),
-        "labelPropagation" -> (() => Graph.labelPropagation(edges)),
-        "labelComplete" -> (() => Graph.labelComplete(edges, "src", "dst", seeds, "id", "label")),
-        "hits" -> (() => Graph.hits(edges, "src", "dst", sortedFold = true)),
         "connectedComponents" -> (() => Dedup.connectedComponents(edges, "src", "dst")))) {
       val rounds = plansOf(op()).filter(readsEdges)
       assert(rounds.nonEmpty, s"$name: no executed plan reads the pinned edge list")
@@ -595,5 +590,51 @@ class PlanShapeSpec extends AnyFunSuite {
           s"$name: the vertex state must reach the edges by broadcast:\n$p")
       }
     }
+  }
+
+  test("graph rounds: vertex programs zip state and edge blocks — one shuffle a round") {
+    // each vertex program pins its edge blocks hash-partitioned on the
+    // node and keeps its state on the same partitioner, so a round's
+    // map side zips state and blocks with no exchange, and its one
+    // shuffle (two for hits: hubs out, auths back) lands on that
+    // partitioner again. Read off the returned frame's lineage: the
+    // last round, back to what it reads pinned — the edge blocks and
+    // the round before, checkpointed.
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    import graft.operators.Graph
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val edges = Seq.fill(400)((1L + rnd.nextInt(100), 1L + rnd.nextInt(100))).toDF("src", "dst")
+    val seeds = Seq((1L, "a"), (2L, "b")).toDF("id", "label")
+    for ((name, op, shuffles) <- Seq[(String, () => DataFrame, Int)](
+        ("pageRank", () => Graph.pageRank(edges, sortedFold = true), 1),
+        ("personalizedPageRank", () => Graph.personalizedPageRank(edges, seeds, "id"), 1),
+        ("labelPropagation", () => Graph.labelPropagation(edges), 1),
+        ("labelComplete", () => Graph.labelComplete(edges, "src", "dst", seeds, "id", "label"), 1),
+        ("hits", () => Graph.hits(edges, "src", "dst", sortedFold = true), 2))) try {
+      val out = op()
+      out.collect()
+      val last = out.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
+      assert(last.isDefined, s"$name: the frame is not read from its last round")
+      val part = last.get.partitioner
+      assert(part.isDefined, s"$name: the last round lost its partitioner")
+      val exchanges = scala.collection.mutable.Set.empty[Int]
+      val pinned = scala.collection.mutable.Set.empty[RDD[_]]
+      def walk(r: RDD[_]): Unit = r.dependencies.foreach { d =>
+        d match { case s: ShuffleDependency[_, _, _] => exchanges += s.shuffleId; case _ => }
+        if (d.rdd.getStorageLevel.isValid) pinned += d.rdd else walk(d.rdd)
+      }
+      walk(last.get)
+      assert(exchanges.size === shuffles, s"$name: shuffles in its last round")
+      val blocks = pinned.filter(_.name == "graph edge blocks")
+      assert(blocks.nonEmpty, s"$name: the last round does not read pinned edge blocks")
+      val before = pinned.filter(_.isCheckpointed)
+      assert(before.nonEmpty, s"$name: the round before the last is not checkpointed")
+      (blocks ++ before).foreach(r =>
+        assert(r.partitioner === part, s"$name: ${r.name} is not on the state's partitioner"))
+    } finally Dedup.releaseCaches()
   }
 }
