@@ -40,15 +40,32 @@ object Similarity {
           graft.functions.VectorOps.toDouble(col(vecCol))).as("centroid"),
         count(col(vecCol)).as("n"))
 
+  /** The one per-probe ranking tail of every serve. `scored` carries
+    * (probe_id, __id: long, __s); each probe keeps its k best through
+    * TopKAgg's bounded partial aggregation (at most k pairs per probe
+    * leave a task; ties break on the lowest id). Output: (probe_id,
+    * vec_id, rank: int, sim), or (…, adist) when `__s` is an ADC
+    * distance, where lower ranks first. */
+  private def rankTail(scored: DataFrame, k: Int, adc: Boolean): DataFrame = {
+    val (score, out) =
+      if (adc) (-col("__s"), (-col("p._2")).as("adist"))
+      else (col("__s"), col("p._2").as("sim"))
+    scored.groupBy("probe_id")
+      .agg(TopKAgg.topK(k, col("__id"), score).as("top"))
+      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "p")))
+      .select(col("probe_id"), col("p._1").as("vec_id"),
+        (col("r0") + 1).cast("int").as("rank"), out)
+  }
+
   /** Exact cosine top-k per probe via bounded partial aggregation.
     * probes must be small (broadcast); self-matches are excluded.
-    * Output: (probe_id, vec_id, rank, sim). */
+    * Runs rankTail. Output: (probe_id, vec_id, rank, sim). */
   def topKCosine(corpus: DataFrame, idCol: String, vecCol: String,
                  probes: DataFrame, probeIdCol: String, probeVecCol: String,
                  k: Int): DataFrame = {
     TopKAgg.requireLongCastableId(corpus, idCol, "Similarity.topKCosine")
     TopKAgg.requireLongCastableId(probes, probeIdCol, "Similarity.topKCosine")
-    val scored = corpus
+    rankTail(corpus
       .select(col(idCol).cast("long").as("__id"), VectorOps.toDouble(col(vecCol)).as("__v"))
       .withColumn("__n", VectorOps.norm2(col("__v")))
       .crossJoin(broadcast(probes.select(
@@ -58,12 +75,7 @@ object Similarity {
       .filter(col("__id") =!= col("probe_id"))
       .select(col("probe_id"), col("__id"),
         VectorOps.cosineWithNorms(col("__v"), col("__pv"), col("__n"), col("__pn"))
-          .as("__sim"))
-    scored.groupBy("probe_id")
-      .agg(TopKAgg.topK(k, col("__id"), col("__sim")).as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "p")))
-      .select(col("probe_id"), col("p._1").as("vec_id"),
-        (col("r0") + 1).cast("int").as("rank"), col("p._2").as("sim"))
+          .as("__s")), k, adc = false)
   }
 
   // ── Random-hyperplane LSH ────────────────────────────────────────
@@ -105,7 +117,7 @@ object Similarity {
 
   /** ANN top-k: candidates = corpus vectors sharing ANY table-bucket
     * with the probe (union over L tables, deduplicated), then exact
-    * cosine + top-k among candidates. Probes broadcast. */
+    * cosine + rankTail among candidates. Probes broadcast. */
   def annTopK(corpus: DataFrame, idCol: String, vecCol: String,
               probes: DataFrame, probeIdCol: String, probeVecCol: String,
               k: Int, tables: Int, bits: Int, d: Int): DataFrame = {
@@ -115,7 +127,7 @@ object Similarity {
     val cands = cb.join(broadcast(pb), Seq("tbl", "bucket"))
       .filter(col(idCol) =!= col("probe_id"))
       .select(col("probe_id"), col(idCol)).distinct()
-    val scored = cands
+    rankTail(cands
       .join(corpus.select(col(idCol), VectorOps.toDouble(col(vecCol)).as("__v"))
         .withColumn("__n", VectorOps.norm2(col("__v"))), idCol)
       .join(broadcast(probes.select(col(probeIdCol).cast("long").as("probe_id"),
@@ -123,20 +135,11 @@ object Similarity {
         .withColumn("__pn", VectorOps.norm2(col("__pv")))), "probe_id")
       .select(col("probe_id"), col(idCol).cast("long").as("__id"),
         VectorOps.cosineWithNorms(col("__v"), col("__pv"), col("__n"), col("__pn"))
-          .as("__sim"))
-    scored.groupBy("probe_id")
-      .agg(TopKAgg.topK(k, col("__id"), col("__sim")).as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "p")))
-      .select(col("probe_id"), col("p._1").as("vec_id"),
-        (col("r0") + 1).cast("int").as("rank"), col("p._2").as("sim"))
+          .as("__s")), k, adc = false)
   }
 
   // ── IVF (inverted file) via K-Means coarse quantizer ─────────────
 
-  /** IVF top-k: the corpus is assigned once to its nearest centroid
-    * (the index build — in production a bucketed/partitioned table);
-    * each probe scans only its nprobe nearest cells. Composes the
-    * K-Means operator (KMeans.assignColumn) with TopKAgg. */
   /** Driver-side nprobe nearest cells for a LOCAL probe vector —
     * exact same ranking as the probeCells plan (sqDist asc, cid asc). */
   def nearestCells(v: Array[Double], cents: KMeans.Centroids, nprobe: Int): Seq[Int] =
@@ -388,14 +391,11 @@ object Similarity {
     // the ContextCleaner leaks one batch of storage per append in a
     // long-lived ingest driver
     try {
-      // tombstoned ids refuse FIRST — see appendIvfPqIndexCore; the
-      // audits run concurrently but the tombstone require is CHECKED
-      // first, so the refusal order holds
-      val (_, _) = concurrently2(
-        Artifacts.requireNotTombstoned(spark, src, Artifacts.rootTombDir(path),
-          path, "Similarity.appendIvfIndex"),
-        if (requireNewIds) requireIdsNotIndexed(src, indexed, path,
-          "Similarity.appendIvfIndex", "serve duplicate rows"))
+      // tombstoned ids refuse FIRST — see appendIvfPqIndexCore
+      Artifacts.requireNotTombstoned(spark, src, Artifacts.rootTombDir(path),
+        path, "Similarity.appendIvfIndex")
+      if (requireNewIds) requireIdsNotIndexed(src, indexed, path,
+        "Similarity.appendIvfIndex", "serve duplicate rows")
       // meta rows = prev + batch (O(batch), not a full-index recount —
       // review r12); a crash between data and meta leaves actual > meta,
       // which ivfTopKIndexed's row check refuses
@@ -414,9 +414,8 @@ object Similarity {
   /** IVF top-k against a PERSISTED index: probe cells are computed
     * driver-side from the (local, tiny) centroid set, then pushed as a
     * literal `cell IN (...)` predicate — Parquet partition pruning
-    * skips every other cell's files entirely. The scan-side plan is
-    * identical to ivfTopK from the join onward, so results match the
-    * in-memory path bit-for-bit.
+    * skips every other cell's files entirely. Both IVF serves run
+    * ivfCosineServe, so results match the in-memory path bit-for-bit.
     *
     * Freshness (VERDICT r11 item 5): refuses to serve when (a) the
     * passed quantizer's fingerprint differs from the one the index
@@ -452,94 +451,59 @@ object Similarity {
     if (verifyRows) Artifacts.requireCounts(spark, data, meta.rows,
       Artifacts.rootTombDir(indexPath), meta.deleted, indexPath,
       "Similarity.ivfTopKIndexed")
-    val pinned = boundedProbes(probes, maxProbes,
+    val pinned = boundedProbes(probes, probeIdCol, probeVecCol, identity, maxProbes,
       (if (cents.nonEmpty) cents.head._2.length else 0) * 8L,
       "Similarity.ivfTopKIndexed")
-    // two broadcast relations (the ivfPqTopKIndexed shape, VERDICT
-    // r13 item 1): (probe, cell) pruning pairs — ranked driver-side
-    // from the pinned collect — and ONE d-vector per probe joined on
-    // probe_id (folding the vector into the cell relation would ship
-    // it nprobe times per probe). The vector relation reads the
-    // pinned checkpoint, not a driver-side re-embedding of the
-    // collected rows into the plan.
-    val pv = pinned
-      .select(col(probeIdCol).cast("long").as("probe_id"),
-        VectorOps.toDouble(col(probeVecCol)).as("__pv"))
-      .withColumn("__pn", VectorOps.norm2(col("__pv")))
-    val probeRows = pv.select(col("probe_id"), col("__pv"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-    val probeCells = probeRows.flatMap { case (pid, v) =>
-      nearestCells(v, cents, nprobe).map(c => (pid, c))
-    }
-    val cells = probeCells.map(_._2).distinct.toSeq
-    import spark.implicits._
-    val pc = probeCells.toSeq.toDF("probe_id", "cell")
+    val (pc, cells) = probeCellsDF(spark, pinned.collect(), cents, nprobe,
+      residual = false)
     val idxP = data.df
       .filter(col("cell").isin(cells: _*)) // static partition pruning
     // metadata predicate INSIDE the pruned scan, before any scoring:
     // Catalyst pushes it into the parquet reader next to the partition
-    // filter, so the ADC/cosine work and the top-k see only qualifying
+    // filter, so the cosine work and the top-k see only qualifying
     // rows — full-k results, no post-filter recall loss
-    val idx = Artifacts.maskTombstones(spark, filter.fold(idxP)(idxP.filter),
-      Artifacts.rootTombDir(indexPath))
-    val scored = idx.join(broadcast(pc), "cell")
-      .filter(col("id") =!= col("probe_id"))
-      .join(broadcast(pv), "probe_id")
-      .select(col("probe_id"), col("id").as("__id"),
-        VectorOps.cosineWithNorms(col("v"), col("__pv"), col("n"), col("__pn"))
-          .as("__sim"))
-    scored.groupBy("probe_id")
-      .agg(TopKAgg.topK(k, col("__id"), col("__sim")).as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "p")))
-      .select(col("probe_id"), col("p._1").as("vec_id"),
-        (col("r0") + 1).cast("int").as("rank"), col("p._2").as("sim"))
+    ivfCosineServe(Artifacts.maskTombstones(spark, filter.fold(idxP)(idxP.filter),
+      Artifacts.rootTombDir(indexPath)), pc, pinned, k)
   }
 
+  /** IVF top-k: the corpus is assigned to its nearest centroid inside
+    * the query (the index build — ivfTopKIndexed serves the persisted
+    * form); each probe scans only its nprobe nearest cells, ranked in
+    * SQL by (sqDist, cid). Runs ivfCosineServe. */
   def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
               probes: DataFrame, probeIdCol: String, probeVecCol: String,
               cents: KMeans.Centroids, nprobe: Int, k: Int,
               maxProbes: Int = 10000): DataFrame = {
     TopKAgg.requireLongCastableId(corpus, idCol, "Similarity.ivfTopK")
     TopKAgg.requireLongCastableId(probes, probeIdCol, "Similarity.ivfTopK")
-    val cell = KMeans.assign(
-      corpus.select(col(idCol).cast("long").as("__id"), VectorOps.toDouble(col(vecCol)).as("__v")),
-      "__v", cents, outCol = "cell")
-      .withColumn("__n", VectorOps.norm2(col("__v")))
-    // nprobe nearest cells per probe: rank centroids by (sqDist, cid).
-    // Two broadcast relations (VERDICT r13 item 1): the (probe, cell)
-    // pairs and ONE d-vector per probe joined on probe_id — carrying
-    // __pv on the cell relation would ship it nprobe times per probe.
-    // Both derive from ONE bounded, eagerly-checkpointed instantiation
-    // (review r14 + ADVICE r14): two independent evaluations of a
-    // nondeterministic probes plan could prune cells under one probe
-    // set and score vectors from another — silently wrong neighbors,
-    // no error — and the force-broadcast of an unbounded probe set
-    // was the one sibling path without the per-probe byte budget.
-    val pvecs = boundedProbes(
-      probes
-        .select(col(probeIdCol).cast("long").as("probe_id"),
-          VectorOps.toDouble(col(probeVecCol)).as("__pv"))
-        .withColumn("__pn", VectorOps.norm2(col("__pv"))),
-      maxProbes,
+    val pinned = boundedProbes(probes, probeIdCol, probeVecCol, identity, maxProbes,
       (if (cents.nonEmpty) cents.head._2.length else 0) * 8L,
       "Similarity.ivfTopK")
-    val probeCells = pvecs
+    val pc = pinned
       .select(col("probe_id"),
         explode(slice(array_sort(transform(typedlit(cents.sortBy(_._1).map { case (cid, v) => (cid, v.toSeq) }.toSeq),
           c => struct(VectorOps.sqDist(col("__pv"), c.getField("_2")).as("d"),
             c.getField("_1").as("cid")))), 1, nprobe)).as("pc"))
       .select(col("probe_id"), col("pc.cid").as("cell"))
-    val scored = cell.join(broadcast(probeCells), "cell")
-      .filter(col("__id") =!= col("probe_id"))
-      .join(broadcast(pvecs), "probe_id")
-      .select(col("probe_id"), col("__id"),
-        VectorOps.cosineWithNorms(col("__v"), col("__pv"), col("__n"), col("__pn"))
-          .as("__sim"))
-    scored.groupBy("probe_id")
-      .agg(TopKAgg.topK(k, col("__id"), col("__sim")).as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "p")))
-      .select(col("probe_id"), col("p._1").as("vec_id"),
-        (col("r0") + 1).cast("int").as("rank"), col("p._2").as("sim"))
+    ivfCosineServe(KMeans.assign(corpus.select(col(idCol).cast("long").as("id"),
+      VectorOps.toDouble(col(vecCol)).as("v")), "v", cents, outCol = "cell")
+      .withColumn("n", VectorOps.norm2(col("v"))), pc, pinned, k)
+  }
+
+  /** The cosine body of both IVF serves: candidates (id, cell, v, n)
+    * join the (probe_id, cell) pairs `pc`, then ONE d-vector per
+    * probe (`pinned`, see boundedProbes) on probe_id — two broadcast
+    * relations, so a probe's vector ships once, not nprobe times —
+    * and rankTail keeps the k best by cosine. */
+  private def ivfCosineServe(cand: DataFrame, pc: DataFrame, pinned: DataFrame,
+                             k: Int): DataFrame = {
+    val pv = pinned.withColumn("__pn", VectorOps.norm2(col("__pv")))
+    rankTail(cand.join(broadcast(pc), "cell")
+      .filter(col("id") =!= col("probe_id"))
+      .join(broadcast(pv), "probe_id")
+      .select(col("probe_id"), col("id").as("__id"),
+        VectorOps.cosineWithNorms(col("v"), col("__pv"), col("n"), col("__pn"))
+          .as("__s")), k, adc = false)
   }
 
   // ── Product quantization (PQ) ────────────────────────────────────
@@ -1072,11 +1036,8 @@ object Similarity {
     * the Artifacts meta binding BOTH fingerprints — so a hand-swap of
     * either subdirectory refuses at load. */
   def saveOpq(spark: SparkSession, path: String, model: OPQModel): Unit = {
-    // rotation and PQ land in independent subdirectories — write them
-    // concurrently (guide §2.6); the meta stays last
-    concurrently2(
-      writeRotation(spark, path, model.rotation),
-      savePQ(spark, s"$path/pq", model.pq))
+    writeRotation(spark, path, model.rotation)
+    savePQ(spark, s"$path/pq", model.pq)
     Artifacts.writeMeta(spark, s"$path/meta", (OpqFormatVersion,
         model.rotation.length, rotationFingerprint(model.rotation),
         pqFingerprint(model.pq)),
@@ -1106,10 +1067,8 @@ object Similarity {
     * fingerprints and stores the centroids themselves (they are
     * centroid-sized — the writeIvfPqMeta convention). */
   def saveOpqIvf(spark: SparkSession, path: String, model: OpqIvfModel): Unit = {
-    // independent subdirectories written concurrently; meta last
-    concurrently2(
-      writeRotation(spark, path, model.rotation),
-      savePQ(spark, s"$path/pq", model.pq))
+    writeRotation(spark, path, model.rotation)
+    savePQ(spark, s"$path/pq", model.pq)
     Artifacts.writeMeta(spark, s"$path/meta", (OpqFormatVersion,
         model.rotation.length, rotationFingerprint(model.rotation),
         pqFingerprint(model.pq), centsFingerprint(model.cents),
@@ -1130,12 +1089,8 @@ object Similarity {
     require(centsFingerprint(cents) == mr.get[String]("cents_fp"),
       s"OPQ-IVF artifact at $path: stored centroids do not match their " +
         "fingerprint — corrupt artifact, refusing to serve")
-    // the codebook and rotation halves are independent reads once the
-    // meta is in hand — load them concurrently (guide §2.6); each
-    // half's refusal battery runs unchanged
-    val (pq, rotation) = concurrently2(
-      loadPQ(spark, s"$path/pq"),
-      readRotation(spark, path, d, mr.get[String]("rotation_fp")))
+    val pq = loadPQ(spark, s"$path/pq")
+    val rotation = readRotation(spark, path, d, mr.get[String]("rotation_fp"))
     require(pqFingerprint(pq) == mr.get[String]("pq_fp"),
       s"OPQ-IVF artifact at $path: the stored codebooks do not match the " +
         "meta's pairing fingerprint — a hand-swapped pq/ directory would " +
@@ -1175,30 +1130,24 @@ object Similarity {
       rotationFp = Some(rotationFingerprint(model.rotation)))
 
   /** Indexed IVF-PQ top-k over a ROTATED persisted index: probes
-    * arrive RAW and rotate here, through the same kernel the build
-    * used, before the pin — cell ranking, residuals, and ADC then run
+    * arrive RAW and rotate through the same kernel the build used
+    * before the pin — cell ranking, residuals, and ADC then run
     * entirely in rotated space, bit-identically to an in-memory
     * search over pre-rotated inputs. Refuses an unrotated or
-    * differently-rotated index (requireRotationMatch). */
+    * differently-rotated index (requireRotationMatch). Runs
+    * ivfPqIndexedServe. */
   def ivfPqTopKIndexedRotated(spark: SparkSession, indexPath: String,
                               probes: DataFrame, probeIdCol: String,
                               probeVecCol: String, model: OpqIvfModel,
                               nprobe: Int, k: Int,
                               verifyRows: Boolean = true,
                               maxProbes: Int = 10000,
-                              filter: Option[Column] = None): DataFrame = {
-    TopKAgg.requireLongCastableId(probes, probeIdCol,
-      "Similarity.ivfPqTopKIndexedRotated")
-    val (meta, data) = requireFreshIvfPqIndex(spark, indexPath, model.cents,
-      model.pq, verifyRows, rotationFp = Some(rotationFingerprint(model.rotation)))
-    val rotated = probes.select(col(probeIdCol),
-      rotateCol(VectorOps.toDouble(col(probeVecCol)), model.rotation)
-        .as("__rpv"))
-    val pinned = boundedProbes(rotated, maxProbes,
-      ivfPqProbeBytes(model.pq, nprobe), "Similarity.ivfPqTopKIndexedRotated")
-    ivfPqTopKIndexedPinned(spark, indexPath, meta, data, pinned, probeIdCol,
-      "__rpv", model.cents, model.pq, nprobe, k, filter)
-  }
+                              filter: Option[Column] = None): DataFrame =
+    ivfPqIndexedServe(spark, indexPath, probes, probeIdCol, probeVecCol,
+      v => rotateCol(v, model.rotation), model.cents, model.pq, nprobe, k,
+      verifyRows, maxProbes, filter,
+      rotationFp = Some(rotationFingerprint(model.rotation)),
+      "Similarity.ivfPqTopKIndexedRotated")._2
 
   /** Shortlist + exact re-rank from a ROTATED persisted index — the
     * complete production OPQ query path: raw probes rotate once,
@@ -1207,9 +1156,8 @@ object Similarity {
     * exact-cosine final top-k. The exact math runs in rotated space;
     * orthogonality makes its cosine mathematically equal to the raw-
     * space cosine, and the oracle replays the rotated arithmetic
-    * bit-for-bit. `corpus` is the RAW float table (rotated here, one
-    * rowwise pass over the probes × shortlist join rows only — the
-    * anti-join order keeps the rotation off the corpus scan). */
+    * bit-for-bit. `corpus` is the RAW float table. Runs
+    * ivfPqIndexedServe, then rerankShortlist over the touched rows. */
   def ivfPqTopKIndexedRerankRotated(spark: SparkSession, indexPath: String,
                                     corpus: DataFrame, idCol: String,
                                     vecCol: String, probes: DataFrame,
@@ -1220,32 +1168,21 @@ object Similarity {
                                     maxProbes: Int = 10000,
                                     filter: Option[Column] = None): DataFrame = {
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
-    TopKAgg.requireLongCastableId(probes, probeIdCol,
+    val served = ivfPqIndexedServe(spark, indexPath, probes, probeIdCol,
+      probeVecCol, v => rotateCol(v, model.rotation), model.cents, model.pq,
+      nprobe, shortlist, verifyRows, maxProbes, filter,
+      rotationFp = Some(rotationFingerprint(model.rotation)),
       "Similarity.ivfPqTopKIndexedRerankRotated")
-    val (meta, data) = requireFreshIvfPqIndex(spark, indexPath, model.cents,
-      model.pq, verifyRows, rotationFp = Some(rotationFingerprint(model.rotation)))
-    val rotated = probes.select(col(probeIdCol),
-      rotateCol(VectorOps.toDouble(col(probeVecCol)), model.rotation)
-        .as("__rpv"))
-    val pinned = boundedProbes(rotated, maxProbes,
-      ivfPqProbeBytes(model.pq, nprobe),
-      "Similarity.ivfPqTopKIndexedRerankRotated")
-    // shortlist sized post-filter — see ivfPqTopKIndexedRerank
-    val short = ivfPqTopKIndexedPinned(spark, indexPath, meta, data, pinned,
-      probeIdCol, "__rpv", model.cents, model.pq, nprobe, shortlist, filter)
-      .select(col("probe_id"), col("vec_id"))
     // rotate ONLY the touched float rows: a broadcast semi-join on the
     // (probes × shortlist)-bounded id set prunes the corpus FIRST, so
     // the d×d rotation runs on thousands of rows, never corpus-wide
     val touched = corpus
       .select(col(idCol).cast("long").as("__cid"),
         VectorOps.toDouble(col(vecCol)).as("__cv"))
-      .join(broadcast(short.select(col("vec_id").as("__cid")).distinct()),
+      .join(broadcast(served._2.select(col("vec_id").as("__cid")).distinct()),
         Seq("__cid"), "left_semi")
-    val rotTouched = touched.select(col("__cid"),
-      rotateCol(col("__cv"), model.rotation).as("__rv"))
-    exactRerank(rotTouched, "__cid", "__rv", pinned, probeIdCol, "__rpv",
-      short, k)
+      .select(col("__cid"), rotateCol(col("__cv"), model.rotation).as("__rv"))
+    rerankShortlist(touched, "__cid", "__rv", served, k)
   }
 
   /** Mean squared FULL-STACK reconstruction error (coarse + residual
@@ -1383,28 +1320,15 @@ object Similarity {
         "__cr", model, outCol).drop("__cr")
     }
 
-  /** Asymmetric-distance (ADC) top-k over PQ codes: a candidate's
-    * approximate squared distance to a probe is Σ_j sqDist(probe's
-    * j-th subvector, codeword code_j) — computed EXECUTOR-side per
-    * row from the probe's broadcast d-vector and ONE literal codebook
-    * embedded in the plan (VERDICT r14 item 2). Nothing probe-scaled
-    * is ever built on the driver: the old shape precomputed each
-    * probe's m×k sub-distance table in a single-threaded driver loop
-    * and broadcast probes × m·k doubles (~330 MiB at the priced
-    * ceiling); now the broadcast is the d-vector alone (probes × d
-    * doubles — 5 MiB for 10k probes at d=64) and the codebook ships
-    * once, probe-count-independent, as m·k·dsub plan-literal doubles.
-    * The trade is per-pair flops: m sqDists of dsub dims (= d
-    * mult-adds) instead of m table lookups — the same arithmetic the
-    * table build amortized, re-run per pair. At corpus scale the scan
-    * is I/O-bound on the 32×-compressed code column and the codebook
-    * is cache-resident, so the flop increase is noise next to the
-    * removed driver/broadcast ceiling; ranking still reuses the
-    * TopKAgg partial-agg path (≤k rows per probe leave each task).
-    * Ties break on the lowest vec_id; self-matches excluded, like
-    * topKCosine. Output: (probe_id, vec_id, rank, adist); re-rank the
-    * head with exact floats when exactness matters — the standard PQ
-    * recipe. */
+  /** `src` (id, __v, …) assigned to its nearest cell under `cents` and
+    * encoded (encodeForIndex) into (…, cell, codes) — the rows every
+    * IVF-PQ build, append and retrain writes, and the in-memory serve
+    * ranks over. */
+  private def assignEncode(src: DataFrame, cents: KMeans.Centroids,
+                           model: PQModel): DataFrame =
+    encodeForIndex(KMeans.assign(src, "__v", cents, outCol = "cell"),
+      "__v", "cell", cents, model, outCol = "codes")
+
   /** The m×k literal codebook for the HOF twin — DENSE and
     * CID-INDEXED: position c of subspace j holds codeword cid c, or
     * null where the cid vanished in training, so element_at(…, c) is
@@ -1452,9 +1376,12 @@ object Similarity {
         element_at(element_at(books, j + lit(1)), c))))
   }
 
-  /** Probe-count guard shared by the probe paths: every path
-    * broadcasts `perProbeBytes` per probe — since the executor-side
-    * ADC rewrite (VERDICT r14 item 2) that is the d-vector alone,
+  /** The probe pin of every batch vector serve: (probe_id: long,
+    * __pv: the probe vector as doubles through `prep` — identity, or
+    * the OPQ rotation, so rotated serves rank in the index's space),
+    * under the probe-count guard. Every path broadcasts
+    * `perProbeBytes` per probe — since the executor-side ADC rewrite
+    * (VERDICT r14 item 2) that is the d-vector alone,
     * d·8 bytes, for PQ and float paths alike (the m×k tables no
     * longer exist anywhere; the codebook is a probe-count-independent
     * plan literal) — and the IVF paths additionally collect the
@@ -1482,9 +1409,14 @@ object Similarity {
     * between stages, and the probe subplan is evaluated exactly once
     * however many stages consume it. Driver memory is the SAME budget
     * as before: the collect this replaces always happened downstream,
-    * priced by perProbeBytes. */
-  private def boundedProbes(probes: DataFrame, maxProbes: Int,
-                            perProbeBytes: Long, where: String): DataFrame = {
+    * priced by perProbeBytes. Both stages of a rerank read the same
+    * pinned rows. */
+  private def boundedProbes(probes0: DataFrame, probeIdCol: String,
+                            probeVecCol: String, prep: Column => Column,
+                            maxProbes: Int, perProbeBytes: Long,
+                            where: String): DataFrame = {
+    val probes = probes0.select(col(probeIdCol).cast("long").as("probe_id"),
+      prep(VectorOps.toDouble(col(probeVecCol))).as("__pv"))
     val rows = probes.limit(maxProbes + 1).collect()
     require(rows.length <= maxProbes,
       s"$where: probe set exceeds maxProbes=$maxProbes — probes collect to " +
@@ -1507,16 +1439,16 @@ object Similarity {
     if (model.residual) model.d.toLong * 8L * (nprobe + 1L)
     else model.d * 8L
 
-  /** The (probe, probed-cell) pruning relation for the IVF-PQ serves,
-    * built driver-side from the pinned probe collect (`pr` rows are
-    * (probe_id: long, pv: seq<double>)). Raw mode: (probe_id,
-    * cellCol) int pairs — probes × nprobe ints; the probe d-vector
-    * joins separately on probe_id. Residual mode: the relation ALSO
-    * carries the per-(probe, cell) QUERY RESIDUAL q − c(cell) as
-    * `__pv` (the IVF-ADC probe-side subtraction — a candidate found
-    * through cell c stores codes for x − c, so its ADC must use
-    * q − c; the same IEEE a−b the index side and the oracle compute),
-    * and the raw-vector join is skipped. A probe whose length differs
+  /** The (probe, probed-cell) pruning relation of the persisted IVF
+    * serve and every IVF-PQ serve, built driver-side from the pinned
+    * probe collect (`pr` rows are boundedProbes' (probe_id, __pv)).
+    * Raw mode: (probe_id, cell) int pairs — probes × nprobe ints; the
+    * probe d-vector joins separately on probe_id. Residual mode: the
+    * relation ALSO carries the per-(probe, cell) QUERY RESIDUAL
+    * q − c(cell) as `__pv` (the IVF-ADC probe-side subtraction — a
+    * candidate found through cell c stores codes for x − c, so its ADC
+    * must use q − c; the same IEEE a−b the index side and the oracle
+    * compute), and the raw-vector join is skipped. A probe whose length differs
     * from the centroid dim gets an EMPTY residual — ADC then nulls
     * every candidate distance (adcValid: pv too short), the same
     * no-results outcome the raw path reaches via adcValid on the
@@ -1524,15 +1456,14 @@ object Similarity {
   private def probeCellsDF(spark: SparkSession,
                            pr: Array[org.apache.spark.sql.Row],
                            cents: KMeans.Centroids, nprobe: Int,
-                           model: PQModel, cellCol: String)
-      : (DataFrame, Seq[Int]) = {
+                           residual: Boolean): (DataFrame, Seq[Int]) = {
     import spark.implicits._
-    if (!model.residual) {
+    if (!residual) {
       val pairs = pr.toSeq.flatMap { r =>
         val pv = r.getSeq[Double](1).toArray
         nearestCells(pv, cents, nprobe).map(c => (r.getLong(0), c))
       }
-      (pairs.toDF("probe_id", cellCol), pairs.map(_._2).distinct)
+      (pairs.toDF("probe_id", "cell"), pairs.map(_._2).distinct)
     } else {
       val centMap = cents.map { case (cid, v) => cid -> v }.toMap
       val triples = pr.toSeq.flatMap { r =>
@@ -1545,42 +1476,57 @@ object Similarity {
           (r.getLong(0), c, res)
         }
       }
-      (triples.toDF("probe_id", cellCol, "__pv"), triples.map(_._2).distinct)
+      (triples.toDF("probe_id", "cell", "__pv"), triples.map(_._2).distinct)
     }
   }
 
+  /** Asymmetric-distance (ADC) top-k over PQ codes: a candidate's
+    * approximate squared distance to a probe is Σ_j sqDist(probe's
+    * j-th subvector, codeword code_j) — computed EXECUTOR-side per
+    * row from the probe's broadcast d-vector and ONE literal codebook
+    * embedded in the plan (VERDICT r14 item 2). Nothing probe-scaled
+    * is ever built on the driver: the old shape precomputed each
+    * probe's m×k sub-distance table in a single-threaded driver loop
+    * and broadcast probes × m·k doubles (~330 MiB at the priced
+    * ceiling); now the broadcast is the d-vector alone (probes × d
+    * doubles — 5 MiB for 10k probes at d=64) and the codebook ships
+    * once, probe-count-independent, as m·k·dsub plan-literal doubles.
+    * The trade is per-pair flops: m sqDists of dsub dims (= d
+    * mult-adds) instead of m table lookups — the same arithmetic the
+    * table build amortized, re-run per pair. At corpus scale the scan
+    * is I/O-bound on the 32×-compressed code column and the codebook
+    * is cache-resident, so the flop increase is noise next to the
+    * removed driver/broadcast ceiling; ranking still reuses the
+    * TopKAgg partial-agg path (≤k rows per probe leave each task).
+    * Ties break on the lowest vec_id; self-matches excluded, like
+    * topKCosine. Runs pqServe. Output: (probe_id, vec_id, rank,
+    * adist); re-rank the head with exact floats when exactness matters
+    * — the standard PQ recipe. */
   def pqTopK(codes: DataFrame, idCol: String, codesCol: String,
              probes: DataFrame, probeIdCol: String, probeVecCol: String,
-             model: PQModel, k: Int, maxProbes: Int = 10000): DataFrame = {
-    val pinned = boundedProbes(probes, maxProbes, pqProbeBytes(model),
-      "Similarity.pqTopK")
-    pqTopKPinned(codes, idCol, codesCol, pinned, probeIdCol, probeVecCol,
-      model, k)
-  }
+             model: PQModel, k: Int, maxProbes: Int = 10000): DataFrame =
+    pqServe(codes, idCol, codesCol, probes, probeIdCol, probeVecCol, model,
+      k, maxProbes, "Similarity.pqTopK")._2
 
-  /** pqTopK past the probe pin — `probes` MUST already be the bounded,
-    * checkpointed relation boundedProbes returned (the rerank entries
-    * pin ONCE and feed both stages; re-pinning here would checkpoint
-    * the probe plan twice — VERDICT r14 item 1). */
-  private def pqTopKPinned(codes: DataFrame, idCol: String, codesCol: String,
-                           probes: DataFrame, probeIdCol: String,
-                           probeVecCol: String, model: PQModel,
-                           k: Int): DataFrame = {
+  /** The flat-PQ serve: pins the probes (boundedProbes), crosses
+    * them with the whole code table and ranks by ADC (rankTail).
+    * Returns the pin with the top-k, so pqTopKRerank's exact stage
+    * reads the same probe rows. */
+  private def pqServe(codes: DataFrame, idCol: String, codesCol: String,
+                      probes: DataFrame, probeIdCol: String,
+                      probeVecCol: String, model: PQModel, k: Int,
+                      maxProbes: Int, where: String): (DataFrame, DataFrame) = {
     requireRawModel(model, "Similarity.pqTopK")
     TopKAgg.requireLongCastableId(codes, idCol, "Similarity.pqTopK")
     TopKAgg.requireLongCastableId(probes, probeIdCol, "Similarity.pqTopK")
-    val pv = probes.select(col(probeIdCol).cast("long").as("probe_id"),
-      VectorOps.toDouble(col(probeVecCol)).as("__pv"))
-    codes.select(col(idCol).cast("long").as("__id"), col(codesCol).as("__c"))
-      .crossJoin(broadcast(pv))
-      .filter(col("__id") =!= col("probe_id"))
-      .select(col("probe_id"), col("__id"),
-        adcDist(col("__c"), col("__pv"), model).as("__d"))
-      .groupBy("probe_id")
-      .agg(TopKAgg.topK(k, col("__id"), -col("__d")).as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "p")))
-      .select(col("probe_id"), col("p._1").as("vec_id"),
-        (col("r0") + 1).cast("int").as("rank"), (-col("p._2")).as("adist"))
+    val pinned = boundedProbes(probes, probeIdCol, probeVecCol, identity,
+      maxProbes, pqProbeBytes(model), where)
+    (pinned, rankTail(
+      codes.select(col(idCol).cast("long").as("__id"), col(codesCol).as("__c"))
+        .crossJoin(broadcast(pinned))
+        .filter(col("__id") =!= col("probe_id"))
+        .select(col("probe_id"), col("__id"),
+          adcDist(col("__c"), col("__pv"), model).as("__s")), k, adc = true))
   }
 
   /** PQ shortlist + exact re-rank — the full standard recipe: ADC
@@ -1590,7 +1536,10 @@ object Similarity {
     * The float join touches shortlist·probes rows — thousands, not
     * the corpus — so the expensive exact math runs on a vanishing
     * fraction of the data while recall approaches brute force as
-    * `shortlist`/k grows. Output matches topKCosine's shape:
+    * `shortlist`/k grows. One bounded probe pin feeds both stages, so
+    * a nondeterministic probes plan cannot re-rank a shortlist against
+    * vectors that never produced it. Runs pqServe, then
+    * rerankShortlist. Output matches topKCosine's shape:
     * (probe_id, vec_id, rank, sim). */
   def pqTopKRerank(corpus: DataFrame, idCol: String, vecCol: String,
                    codes: DataFrame, codesIdCol: String, codesCol: String,
@@ -1598,49 +1547,40 @@ object Similarity {
                    model: PQModel, k: Int, shortlist: Int,
                    maxProbes: Int = 10000): DataFrame = {
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
-    // ONE bounded probe instantiation feeds both stages (review r14 +
-    // VERDICT r14 item 1): a nondeterministic probes plan evaluated
-    // separately per stage would re-rank a shortlist against vectors
-    // that never produced it — silently wrong final top-k — and
-    // pinning BEFORE the budget guard (the old shape) materialized an
-    // over-budget probe set fully to block storage before refusing
-    // it, then checkpointed the plan a second time inside pqTopK.
-    // boundedProbes limits first, checkpoints once; both stages read
-    // the same pinned rows.
-    val pinned = boundedProbes(probes, maxProbes, pqProbeBytes(model),
-      "Similarity.pqTopKRerank")
-    val short = pqTopKPinned(codes, codesIdCol, codesCol,
-      pinned, probeIdCol, probeVecCol, model, shortlist)
-      .select(col("probe_id"), col("vec_id"))
-    exactRerank(corpus, idCol, vecCol, pinned, probeIdCol, probeVecCol,
-      short, k)
+    rerankShortlist(corpus, idCol, vecCol, pqServe(codes, codesIdCol, codesCol,
+      probes, probeIdCol, probeVecCol, model, shortlist, maxProbes,
+      "Similarity.pqTopKRerank"), k)
   }
 
   /** Exact cosine re-rank of a candidate shortlist — the generic back
-    * half of every approximate-then-exact recipe (shared by
-    * pqTopKRerank and ivfPqTopKRerank): ONLY the shortlist rows
-    * (probes × shortlist — thousands, not the corpus) join the float
-    * table, so the exact math runs on a vanishing fraction of the
-    * data. `cands` must carry (probe_id, vec_id). Output matches
-    * topKCosine's shape: (probe_id, vec_id, rank, sim). */
+    * half of every approximate-then-exact recipe: ONLY the shortlist
+    * rows (probes × shortlist — thousands, not the corpus) join the
+    * float table, so the exact math runs on a vanishing fraction of
+    * the data. `cands` must carry (probe_id, vec_id). Runs rankTail.
+    * Output matches topKCosine's shape: (probe_id, vec_id, rank, sim). */
   def exactRerank(corpus: DataFrame, idCol: String, vecCol: String,
                   probes: DataFrame, probeIdCol: String, probeVecCol: String,
                   cands: DataFrame, k: Int): DataFrame = {
     val pv = probes.select(col(probeIdCol).cast("long").as("probe_id"),
       VectorOps.toDouble(col(probeVecCol)).as("__pv"))
       .withColumn("__pn", VectorOps.norm2(col("__pv")))
-    val scored = cands.select(col("probe_id"), col("vec_id"))
+    rankTail(cands.select(col("probe_id"), col("vec_id"))
       .join(corpus.select(col(idCol).cast("long").as("vec_id"),
         VectorOps.toDouble(col(vecCol)).as("__v")), "vec_id")
       .join(broadcast(pv), "probe_id")
-      .select(col("probe_id"), col("vec_id"),
+      .select(col("probe_id"), col("vec_id").as("__id"),
         VectorOps.cosineWithNorms(col("__v"), col("__pv"),
-          VectorOps.norm2(col("__v")), col("__pn")).as("__sim"))
-    scored.groupBy("probe_id")
-      .agg(TopKAgg.topK(k, col("vec_id"), col("__sim")).as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "p")))
-      .select(col("probe_id"), col("p._1").as("vec_id"),
-        (col("r0") + 1).cast("int").as("rank"), col("p._2").as("sim"))
+          VectorOps.norm2(col("__v")), col("__pn")).as("__s")), k, adc = false)
+  }
+
+  /** exactRerank of a serve's (pinned probes, shortlist) pair, the
+    * shortlist ranked against the same pinned probe rows. */
+  private def rerankShortlist(corpus: DataFrame, idCol: String, vecCol: String,
+                              pinnedAndShort: (DataFrame, DataFrame),
+                              k: Int): DataFrame = {
+    val (pinned, short) = pinnedAndShort
+    exactRerank(corpus, idCol, vecCol, pinned, "probe_id", "__pv",
+      short.select(col("probe_id"), col("vec_id")), k)
   }
 
   /** IVF-PQ shortlist + exact float re-rank — the COMPLETE
@@ -1650,90 +1590,81 @@ object Similarity {
     * per probe without reading a single float, and ONLY those
     * probes × shortlist rows join the float table for the exact final
     * top-k — recall approaches brute force as shortlist/k grows while
-    * the exact math never touches the corpus. Output: topKCosine's
-    * shape, (probe_id, vec_id, rank, sim). */
+    * the exact math never touches the corpus. Runs ivfPqServe, then
+    * rerankShortlist. Output: topKCosine's shape,
+    * (probe_id, vec_id, rank, sim). */
   def ivfPqTopKRerank(corpus: DataFrame, idCol: String, vecCol: String,
                       probes: DataFrame, probeIdCol: String,
                       probeVecCol: String, cents: KMeans.Centroids,
                       model: PQModel, nprobe: Int, k: Int, shortlist: Int,
                       maxProbes: Int = 10000): DataFrame = {
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
-    // ONE bounded probe instantiation feeds both stages (review r14 +
-    // VERDICT r14 item 1) — see pqTopKRerank
-    val pinned = boundedProbes(probes, maxProbes, ivfPqProbeBytes(model, nprobe),
-      "Similarity.ivfPqTopKRerank")
-    val short = ivfPqTopKPinned(corpus, idCol, vecCol,
-      pinned, probeIdCol, probeVecCol, cents, model, nprobe, shortlist)
-      .select(col("probe_id"), col("vec_id"))
-    exactRerank(corpus, idCol, vecCol, pinned, probeIdCol, probeVecCol,
-      short, k)
+    rerankShortlist(corpus, idCol, vecCol, ivfPqInMemory(corpus, idCol, vecCol,
+      probes, probeIdCol, probeVecCol, cents, model, nprobe, shortlist,
+      maxProbes, "Similarity.ivfPqTopKRerank"), k)
   }
 
   /** IVF-PQ top-k — the composition that actually indexes billions
     * of vectors: the IVF coarse quantizer restricts each query to
-    * nprobe cells (partition pruning when the code table is persisted
-    * partitioned by cell, as buildIvfIndex does for floats), and
-    * within those cells ranking runs entirely on PQ codes via the
-    * broadcast ADC tables — the floats are never read at query time.
-    * The index row is (id, cell, codes): a cell id plus m small ints
-    * per vector. Query cost = (nprobe / #cells) · corpus · O(m)
-    * lookups, zero corpus shuffle (TopKAgg ships ≤k rows per probe
-    * per task). Exclusions/ties follow pqTopK. Output: (probe_id,
-    * vec_id, rank, adist). */
+    * nprobe cells, and within those cells ranking runs entirely on PQ
+    * codes — the floats are never read at query time. The index row
+    * is (id, cell, codes): a cell id plus m small ints per vector.
+    * This entry assigns and encodes the corpus inside the query (the
+    * in-memory audit path); ivfPqTopKIndexed serves the persisted
+    * form through the same ivfPqServe, so both return the same rows.
+    * Exclusions/ties follow pqTopK. Output: (probe_id, vec_id, rank,
+    * adist). */
   def ivfPqTopK(corpus: DataFrame, idCol: String, vecCol: String,
                 probes: DataFrame, probeIdCol: String, probeVecCol: String,
                 cents: KMeans.Centroids, model: PQModel,
-                nprobe: Int, k: Int, maxProbes: Int = 10000): DataFrame = {
-    val pinned = boundedProbes(probes, maxProbes, ivfPqProbeBytes(model, nprobe),
-      "Similarity.ivfPqTopK")
-    ivfPqTopKPinned(corpus, idCol, vecCol, pinned, probeIdCol, probeVecCol,
-      cents, model, nprobe, k)
-  }
+                nprobe: Int, k: Int, maxProbes: Int = 10000): DataFrame =
+    ivfPqInMemory(corpus, idCol, vecCol, probes, probeIdCol, probeVecCol,
+      cents, model, nprobe, k, maxProbes, "Similarity.ivfPqTopK")._2
 
-  /** ivfPqTopK past the probe pin — `probes` MUST already be the
-    * bounded, checkpointed relation boundedProbes returned (see
-    * pqTopKPinned). */
-  private def ivfPqTopKPinned(corpus: DataFrame, idCol: String, vecCol: String,
-                              probes: DataFrame, probeIdCol: String,
-                              probeVecCol: String, cents: KMeans.Centroids,
-                              model: PQModel, nprobe: Int, k: Int): DataFrame = {
+  /** The in-memory IVF-PQ serve: pins the probes, assigns and encodes
+    * the corpus (assignEncode, the index build's own code) and runs
+    * ivfPqServe over it. Returns the pin with the top-k. */
+  private def ivfPqInMemory(corpus: DataFrame, idCol: String, vecCol: String,
+                            probes: DataFrame, probeIdCol: String,
+                            probeVecCol: String, cents: KMeans.Centroids,
+                            model: PQModel, nprobe: Int, k: Int,
+                            maxProbes: Int, where: String)
+      : (DataFrame, DataFrame) = {
     TopKAgg.requireLongCastableId(corpus, idCol, "Similarity.ivfPqTopK")
     TopKAgg.requireLongCastableId(probes, probeIdCol, "Similarity.ivfPqTopK")
-    val spark = probes.sparkSession
-    // index build (in production: persisted once, partitioned by
-    // cell); residual models encode x − c(x) here (encodeForIndex)
-    val indexed = encodeForIndex(
-      KMeans.assign(
-        corpus.select(col(idCol).cast("long").as("__id"),
-          VectorOps.toDouble(col(vecCol)).as("__v")),
-        "__v", cents, outCol = "__cell"),
-      "__v", "__cell", cents, model, outCol = "__c")
-      .select("__id", "__cell", "__c")
-    // two broadcast relations (VERDICT r13 item 1): (probe, cell)
-    // pairs — probes × nprobe ints, ranked driver-side from the
-    // pinned collect (the same collect the budget prices) — and ONE
-    // d-vector per probe joined on probe_id after the cell join has
-    // pruned the corpus; the ADC arithmetic runs per row from the
-    // plan-literal codebook (VERDICT r14 item 2 — nothing m×k-scaled
-    // is built on the driver or broadcast). Residual mode folds the
-    // per-(probe, cell) query residual INTO the pruning relation
-    // (probeCellsDF) and skips the raw-vector join.
-    val pvecs = probes.select(col(probeIdCol).cast("long").as("probe_id"),
-      VectorOps.toDouble(col(probeVecCol)).as("__pv"))
-    val pr = pvecs.collect()
-    val (pc, _) = probeCellsDF(spark, pr, cents, nprobe, model, "__cell")
-    val cand = indexed.join(broadcast(pc), "__cell")
-      .filter(col("__id") =!= col("probe_id"))
-    val withPv = if (model.residual) cand
-      else cand.join(broadcast(pvecs), "probe_id")
-    withPv
-      .select(col("probe_id"), col("__id"),
-        adcDist(col("__c"), col("__pv"), model).as("__d"))
-      .groupBy("probe_id")
-      .agg(TopKAgg.topK(k, col("__id"), -col("__d")).as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "p")))
-      .select(col("probe_id"), col("p._1").as("vec_id"),
-        (col("r0") + 1).cast("int").as("rank"), (-col("p._2")).as("adist"))
+    val pinned = boundedProbes(probes, probeIdCol, probeVecCol, identity,
+      maxProbes, ivfPqProbeBytes(model, nprobe), where)
+    val encoded = assignEncode(corpus.select(col(idCol).cast("long").as("id"),
+      VectorOps.toDouble(col(vecCol)).as("__v")), cents, model)
+    (pinned, ivfPqServe(encoded, prune = false, pinned, cents, model, nprobe, k))
+  }
+
+  /** The one ADC body of every batch IVF-PQ serve. `cand` is a
+    * candidate table carrying (id, cell, codes): the persisted live
+    * scan, or the in-memory encoded corpus. The (probe, cell) pairs
+    * rank driver-side from the pinned collect (probeCellsDF); `prune`
+    * adds the static `cell IN (...)` predicate, which reaches a
+    * persisted scan as partition pruning (an in-memory table has no
+    * partitions, and the predicate would be pushed below its
+    * assignment and run it twice). Two broadcast relations join the
+    * candidates — the pairs, then ONE d-vector per probe on probe_id,
+    * after the cell join has cut the scan; residual mode carries the
+    * per-(probe, cell) query residual inside the pairs and skips the
+    * vector join. ADC runs per row from the plan-literal codebook, so
+    * nothing m×k-scaled is driver-built or broadcast, and rankTail
+    * keeps the k best. */
+  private def ivfPqServe(cand: DataFrame, prune: Boolean, pinned: DataFrame,
+                         cents: KMeans.Centroids, model: PQModel, nprobe: Int,
+                         k: Int): DataFrame = {
+    val (pc, cells) = probeCellsDF(pinned.sparkSession, pinned.collect(), cents,
+      nprobe, model.residual)
+    val joined = (if (prune) cand.filter(col("cell").isin(cells: _*)) else cand)
+      .join(broadcast(pc), "cell")
+      .filter(col("id") =!= col("probe_id"))
+    val withPv = if (model.residual) joined
+      else joined.join(broadcast(pinned), "probe_id")
+    rankTail(withPv.select(col("probe_id"), col("id").as("__id"),
+      adcDist(col("codes"), col("__pv"), model).as("__s")), k, adc = true)
   }
 
   // ── Persisted IVF-PQ index (the full production serving stack) ───
@@ -1780,27 +1711,6 @@ object Similarity {
     * the one-compact grace window. */
   private def ivfPqTombDir(path: String, gen: Long): String =
     s"$path/_tomb/g$gen"
-
-  /** Run two INDEPENDENT Spark actions concurrently and return both —
-    * an append's two audits, a model's two data writes or loads, each
-    * a small job whose wall-clock is mostly scheduling overhead
-    * (optimization guide §2.6, the trainPQCore pool precedent). The
-    * count gates need no overlap: they read footers on the driver and
-    * run no job. Results are unchanged: the actions share no state and
-    * each is a deterministic read. When `fa` throws, `fb` is awaited
-    * before the exception propagates, so no job of this call outlives
-    * it. */
-  private[graft] def concurrently2[A, B](fa: => A, fb: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val fut = Future(fb)(ec)
-      val a = try fa catch { case t: Throwable => Await.ready(fut, Duration.Inf); throw t }
-      (a, Await.result(fut, Duration.Inf))
-    } finally { pool.shutdown(); () }
-  }
 
   /** Order-independent digest of a PQ codebook set: md5 over
     * (j, cid, dsub, IEEE-754 bits) in (j, cid) order, plus the
@@ -1898,13 +1808,10 @@ object Similarity {
     val dataDir = s"$path/g0"
     // one file per cell per write + production file cap (the compact
     // posture — see buildIvfIndex; guide §6 small-files)
-    cellPartitionedWriter(encodeForIndex(
-      KMeans.assign(
-        corpus.select(col(idCol).cast("long").as("id") +:
-          prep(VectorOps.toDouble(col(vecCol))).as("__v") +:
-          metaCols.map(col): _*),
-        "__v", cents, outCol = "cell"),
-      "__v", "cell", cents, model, outCol = "codes")
+    cellPartitionedWriter(assignEncode(
+      corpus.select(col(idCol).cast("long").as("id") +:
+        prep(VectorOps.toDouble(col(vecCol))).as("__v") +:
+        metaCols.map(col): _*), cents, model)
       .select(col("id") +: col("codes") +: col("cell") +: metaCols.map(col): _*))
       .option("partitionOverwriteMode", "static")
       .partitionBy("cell").mode("overwrite").parquet(dataDir)
@@ -1975,18 +1882,11 @@ object Similarity {
       // disappearing the re-appended document. After a compact the id
       // is physically gone and re-appends cleanly (gated in
       // q_ivfpq_delete).
-      // the two audits are independent read-only probes of the SAME
-      // pinned batch — run them concurrently (concurrently2); the
-      // tombstone refusal still SURFACES first because its require is
-      // checked first, so the refusal-order contract above holds
-      val (_, _) = concurrently2(
-        Artifacts.requireNotTombstoned(spark, src,
-          ivfPqTombDir(path, meta.gen), path, "Similarity.appendIvfPqIndex"),
-        if (requireNewIds) requireIdsNotIndexed(src, indexed, dataDir,
-          "Similarity.appendIvfPqIndex", "serve duplicate rows"))
-      val assigned = encodeForIndex(
-        KMeans.assign(src, "__v", cents = meta.cents, outCol = "cell"),
-        "__v", "cell", meta.cents, model, outCol = "codes")
+      Artifacts.requireNotTombstoned(spark, src,
+        ivfPqTombDir(path, meta.gen), path, "Similarity.appendIvfPqIndex")
+      if (requireNewIds) requireIdsNotIndexed(src, indexed, dataDir,
+        "Similarity.appendIvfPqIndex", "serve duplicate rows")
+      val assigned = assignEncode(src, meta.cents, model)
         .select(col("id") +: col("codes") +: col("cell") +:
           extra.map(col): _*)
       // one file per cell per append + production file cap (see build)
@@ -2222,9 +2122,7 @@ object Similarity {
       ivfPqTombDir(path, meta.gen))
     // one file per cell per write + production file cap (the compact
     // posture — see buildIvfIndex; guide §6 small-files)
-    cellPartitionedWriter(encodeForIndex(
-      KMeans.assign(src, "__v", cents, outCol = "cell"),
-      "__v", "cell", cents, model, outCol = "codes")
+    cellPartitionedWriter(assignEncode(src, cents, model)
       .select(col("id") +: col("codes") +: col("cell") +: extra.map(col): _*))
       .option("partitionOverwriteMode", "static")
       .partitionBy("cell").mode("overwrite").parquet(dest)
@@ -2326,14 +2224,6 @@ object Similarity {
         "1M stress), then retrain, re-sweep, and save the new grid"
     }
 
-  /** IVF-PQ top-k against a PERSISTED index: probe cells rank
-    * driver-side against the meta's stored centroids, prune the scan
-    * to `cell IN (...)` parquet partitions, and rank entirely on the
-    * stored codes via broadcast ADC tables — identical arithmetic to
-    * `ivfPqTopK`, so results match the in-memory path bit-for-bit.
-    * Refuses to serve when the passed quantizer or codebook
-    * fingerprint differs from what the index was built under, or
-    * (verifyRows) when the footer row count drifted from the meta. */
   /** The indexed serve's freshness contract, shared by every consumer
     * of a persisted IVF-PQ index (indexed top-k, indexed rerank,
     * streaming serve): both provenance fingerprints and (verifyRows)
@@ -2398,61 +2288,49 @@ object Similarity {
     Artifacts.maskTombstones(spark, filter.fold(data)(data.filter),
       ivfPqTombDir(indexPath, meta.gen))
 
+  /** IVF-PQ top-k against a PERSISTED index: probe cells rank
+    * driver-side against the meta's stored centroids, prune the scan
+    * to `cell IN (...)` parquet partitions, and rank entirely on the
+    * stored codes — the in-memory `ivfPqTopK`'s ivfPqServe, so results
+    * match it bit-for-bit. Refuses to serve when the passed quantizer
+    * or codebook fingerprint differs from what the index was built
+    * under, or (verifyRows) when the footer row count drifted from the
+    * meta. `filter` (filtered ANN) is a predicate over the index's
+    * metaCols, applied inside the pruned scan before ADC. Runs
+    * ivfPqIndexedServe. */
   def ivfPqTopKIndexed(spark: SparkSession, indexPath: String,
                        probes: DataFrame, probeIdCol: String,
                        probeVecCol: String, cents: KMeans.Centroids,
                        model: PQModel, nprobe: Int, k: Int,
                        verifyRows: Boolean = true,
                        maxProbes: Int = 10000,
-                       filter: Option[Column] = None): DataFrame = {
-    TopKAgg.requireLongCastableId(probes, probeIdCol, "Similarity.ivfPqTopKIndexed")
-    val (meta, data) = requireFreshIvfPqIndex(spark, indexPath, cents, model, verifyRows)
-    val pinned = boundedProbes(probes, maxProbes, ivfPqProbeBytes(model, nprobe),
-      "Similarity.ivfPqTopKIndexed")
-    ivfPqTopKIndexedPinned(spark, indexPath, meta, data, pinned, probeIdCol,
-      probeVecCol, cents, model, nprobe, k, filter)
-  }
+                       filter: Option[Column] = None): DataFrame =
+    ivfPqIndexedServe(spark, indexPath, probes, probeIdCol, probeVecCol,
+      identity, cents, model, nprobe, k, verifyRows, maxProbes, filter,
+      rotationFp = None, "Similarity.ivfPqTopKIndexed")._2
 
-  /** ivfPqTopKIndexed past the freshness gate and the probe pin —
-    * `probes` MUST already be the bounded, checkpointed relation
-    * boundedProbes returned (see pqTopKPinned), with its vector
-    * column ALREADY in the index's space (rotated entries rotate
-    * before pinning). */
-  private def ivfPqTopKIndexedPinned(spark: SparkSession, indexPath: String,
-                                     meta: IvfPqMeta, data: DataFrame,
-                                     pinned: DataFrame, probeIdCol: String,
-                                     probeVecCol: String,
-                                     cents: KMeans.Centroids, model: PQModel,
-                                     nprobe: Int, k: Int,
-                                     filter: Option[Column] = None): DataFrame = {
-    // two broadcast relations (VERDICT r13 item 1): the (probe, cell)
-    // pruning pairs — probes × nprobe ints, ranked driver-side from
-    // the pinned collect — and ONE d-vector per probe joined on
-    // probe_id AFTER the cell join has already cut the scan to probed
-    // cells; ADC runs per row from the plan-literal codebook (VERDICT
-    // r14 item 2), so nothing m×k-scaled is driver-built or broadcast
-    // and the probe broadcast is exactly what boundedProbes prices.
-    val pvecs = pinned.select(col(probeIdCol).cast("long").as("probe_id"),
-      VectorOps.toDouble(col(probeVecCol)).as("__pv"))
-    val pr = pvecs.collect()
-    // residual mode: the pruning relation carries the per-(probe,
-    // cell) query residual and the raw-vector join is skipped — see
-    // probeCellsDF
-    val (pc, cells) = probeCellsDF(spark, pr, cents, nprobe, model, "cell")
-    val cand = ivfPqLiveScan(spark, indexPath, meta, data, filter)
-      .filter(col("cell").isin(cells: _*)) // static partition pruning
-      .join(broadcast(pc), "cell")
-      .filter(col("id") =!= col("probe_id"))
-    val withPv = if (model.residual) cand
-      else cand.join(broadcast(pvecs), "probe_id")
-    withPv
-      .select(col("probe_id"), col("id").as("__id"),
-        adcDist(col("codes"), col("__pv"), model).as("__d"))
-      .groupBy("probe_id")
-      .agg(TopKAgg.topK(k, col("__id"), -col("__d")).as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "p")))
-      .select(col("probe_id"), col("p._1").as("vec_id"),
-        (col("r0") + 1).cast("int").as("rank"), (-col("p._2")).as("adist"))
+  /** The persisted IVF-PQ serve behind every batch indexed entry, plain
+    * and rotated: the freshness gate (requireFreshIvfPqIndex, with
+    * `rotationFp` the OPQ provenance), the probe pin (boundedProbes,
+    * with `prep` mapping raw probes into the index's space before the
+    * pin), then ivfPqServe over the pruned live scan. Returns the pin with
+    * the top-k, so the rerank entries' exact stage reads the same
+    * probe rows. */
+  private def ivfPqIndexedServe(spark: SparkSession, indexPath: String,
+                                probes: DataFrame, probeIdCol: String,
+                                probeVecCol: String, prep: Column => Column,
+                                cents: KMeans.Centroids, model: PQModel,
+                                nprobe: Int, k: Int, verifyRows: Boolean,
+                                maxProbes: Int, filter: Option[Column],
+                                rotationFp: Option[String], where: String)
+      : (DataFrame, DataFrame) = {
+    TopKAgg.requireLongCastableId(probes, probeIdCol, where)
+    val (meta, data) = requireFreshIvfPqIndex(spark, indexPath, cents, model,
+      verifyRows, rotationFp)
+    val pinned = boundedProbes(probes, probeIdCol, probeVecCol, prep, maxProbes,
+      ivfPqProbeBytes(model, nprobe), where)
+    (pinned, ivfPqServe(ivfPqLiveScan(spark, indexPath, meta, data, filter),
+      prune = true, pinned, cents, model, nprobe, k))
   }
 
   /** Shortlist + exact re-rank served from a PERSISTED index — the
@@ -2463,11 +2341,11 @@ object Similarity {
     * audit path and re-assigns + re-encodes the whole corpus inside
     * every query; at the 1M-vector stress that difference is 57 s vs
     * the indexed serve's seconds), and only probes × shortlist rows
-    * join the FLOAT table for the exact-cosine final top-k. One
-    * bounded probe pin feeds both stages; the freshness gate is the
-    * indexed serve's. `corpus` is the float table the index was built
-    * from — the exact re-rank's only float access, probes × shortlist
-    * rows of it. Output: topKCosine's shape,
+    * join the FLOAT table for the exact-cosine final top-k. The
+    * filter applies inside the shortlist stage, so the shortlist holds
+    * `shortlist` QUALIFYING candidates. `corpus` is the float table
+    * the index was built from. Runs ivfPqIndexedServe, then
+    * rerankShortlist. Output: topKCosine's shape,
     * (probe_id, vec_id, rank, sim) — identical to `ivfPqTopKRerank`
     * over the same corpus/model, which is the oracle's replay. */
   def ivfPqTopKIndexedRerank(spark: SparkSession, indexPath: String,
@@ -2479,21 +2357,10 @@ object Similarity {
                              maxProbes: Int = 10000,
                              filter: Option[Column] = None): DataFrame = {
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
-    TopKAgg.requireLongCastableId(probes, probeIdCol,
-      "Similarity.ivfPqTopKIndexedRerank")
-    val (meta, data) = requireFreshIvfPqIndex(spark, indexPath, cents, model, verifyRows)
-    val pinned = boundedProbes(probes, maxProbes, ivfPqProbeBytes(model, nprobe),
-      "Similarity.ivfPqTopKIndexedRerank")
-    // the filter applies INSIDE the shortlist stage, so the shortlist
-    // holds `shortlist` QUALIFYING candidates (sized post-filter —
-    // recall under a selective predicate does not silently degrade the
-    // way filtering an unfiltered shortlist would); the exact re-rank
-    // then only ever sees filtered ids
-    val short = ivfPqTopKIndexedPinned(spark, indexPath, meta, data, pinned,
-      probeIdCol, probeVecCol, cents, model, nprobe, shortlist, filter)
-      .select(col("probe_id"), col("vec_id"))
-    exactRerank(corpus, idCol, vecCol, pinned, probeIdCol, probeVecCol,
-      short, k)
+    rerankShortlist(corpus, idCol, vecCol, ivfPqIndexedServe(spark, indexPath,
+      probes, probeIdCol, probeVecCol, identity, cents, model, nprobe,
+      shortlist, verifyRows, maxProbes, filter, rotationFp = None,
+      "Similarity.ivfPqTopKIndexedRerank"), k)
   }
 
   /** IVF-PQ serving of a STREAMING probe relation against a persisted
@@ -2533,8 +2400,9 @@ object Similarity {
     * checked once at plan-build time.
     *
     * Output per completed trigger: (probe_id, vec_id, rank, adist) —
-    * the batch serve's columns, so the completed sink table equals
-    * `ivfPqTopKIndexed` over the fed probes row for row. */
+    * the batch serve's columns (the same rankTail), so the completed
+    * sink table equals `ivfPqTopKIndexed` over the fed probes row for
+    * row. Runs ivfPqTopKStreamCore. */
   def ivfPqTopKStream(spark: SparkSession, indexPath: String,
                       probes: DataFrame, probeIdCol: String,
                       probeVecCol: String, cents: KMeans.Centroids,
@@ -2618,15 +2486,10 @@ object Similarity {
     // micro-batch and picks the tombstones up immediately).
     val idx = ivfPqLiveScan(spark, indexPath, meta, data, filter)
       .select("id", "cell", "codes")
-    probed.join(idx, Seq("cell"))
+    rankTail(probed.join(idx, Seq("cell"))
       .filter(col("id") =!= col("probe_id"))
       .select(col("probe_id"), col("id").as("__id"),
-        adcDist(col("codes"), col("__pv"), model).as("__d"))
-      .groupBy("probe_id")
-      .agg(TopKAgg.topK(k, col("__id"), -col("__d")).as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("r0", "p")))
-      .select(col("probe_id"), col("p._1").as("vec_id"),
-        (col("r0") + 1).cast("int").as("rank"), (-col("p._2")).as("adist"))
+        adcDist(col("codes"), col("__pv"), model).as("__s")), k, adc = true)
   }
 
   /** One row of a measured serving-budget sweep: the recall and

@@ -33,13 +33,17 @@ object ColumnGlue {
     * otherwise released only when the ContextCleaner GCs the RDD
     * reference — storage pressure in a long-lived ingest driver doing
     * many pinned appends (ADVICE r15). No-op on frames that are not
-    * checkpoint-backed, so callers can release unconditionally. */
+    * checkpoint-backed, so callers can release unconditionally. The
+    * blocks go through SparkContext.unpersistRDD, which frees the same
+    * blocks as RDD.unpersist without its WARN that a locally
+    * checkpointed RDD cannot be recomputed — the pinned frame is
+    * never read again. */
   def unpersistLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df match {
       case d: org.apache.spark.sql.classic.Dataset[_] =>
         d.queryExecution.analyzed match {
           case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            lr.rdd.unpersist(false); ()
+            d.sparkSession.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
           case _ => ()
         }
       case _ => ()

@@ -6,7 +6,7 @@ import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -461,5 +461,41 @@ class ArtifactsSpec extends AnyFunSuite {
       Similarity.loadPQ(spark, saved("PQ codebook"))
       Classifier.loadLogReg(spark, saved("LogReg model"))
     } == 0)
+  }
+
+  test("an append frees its pinned batch without the 'locally checkpointed' warning") {
+    val truncated = "was locally checkpointed, its lineage has been truncated"
+    // the control: RDD.unpersist on a locally checkpointed frame warns
+    val cp = emb.select("vec_id").localCheckpoint()
+    val cpRdd = cp.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.head
+    assert(warningsDuring(truncated)(cpRdd.unpersist(blocking = true)) >= 1)
+    val (ivf, ivfPq, mh) = (tmp("pin-ivf"), tmp("pin-ivfpq"), tmp("pin-mh"))
+    val (even, odd) = (emb.filter(col("vec_id") % 2 === 0), emb.filter(col("vec_id") % 2 === 1))
+    Similarity.buildIvfIndex(even, "vec_id", "embedding", cents, ivf)
+    Similarity.buildIvfPqIndex(even, "vec_id", "embedding", cents, pq, ivfPq)
+    Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", mh)
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    val freed = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val l = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = freed.add(e.rddId)
+    }
+    sc.addSparkListener(l)
+    try {
+      assert(warningsDuring(truncated) {
+        Similarity.appendIvfIndex(spark, odd, "vec_id", "embedding", ivf)
+        Similarity.appendIvfPqIndex(spark, odd, "vec_id", "embedding", pq, ivfPq)
+        Dedup.appendMinhashIndex(spark, docs.filter(col("doc_id") % 2 === 1),
+          "doc_id", "text", mh)
+      } == 0)
+      // one pinned batch per append, plus the MinHash signature cache
+      eventually(timeout(30.seconds), interval(20.millis))(assert(freed.size >= 3))
+    } finally sc.removeSparkListener(l)
+    // every pinned batch's RDD left the context's persistent set
+    freed.forEach(id => assert(!sc.getPersistentRDDs.contains(id), s"RDD $id"))
+    assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty,
+      s"pinned batches still registered: ${sc.getPersistentRDDs.keySet -- persisted}")
   }
 }

@@ -1138,14 +1138,75 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("concurrently2: when fa throws, fb finishes before the exception reaches the caller") {
-    val fbDone = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val fbStarted = new java.util.concurrent.CountDownLatch(1)
-    val e = intercept[IllegalStateException](Similarity.concurrently2(
-      { fbStarted.await(); throw new IllegalStateException("fa failed") },
-      { fbStarted.countDown(); Thread.sleep(300); fbDone.set(true) }))
-    assert(e.getMessage == "fa failed")
-    assert(fbDone.get, "fb was still running when fa's exception reached the caller")
+  test("every vector serve entry keeps its output schema") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val cents = KMeans.initCentroids(emb, "vec_id", "embedding", KMeans.FirstK(8))
+    val pq = Similarity.trainPQ(emb, "vec_id", "embedding", d = 64, m = 4,
+      k = 16, maxIter = 0)
+    val opq = Similarity.OpqIvfModel(
+      Array.tabulate(64, 64)((i, j) => if (i == j) 1.0 else 0.0), cents, pq)
+    val codes = Similarity.encodePQ(emb, "embedding", pq).select("vec_id", "codes")
+    val probes = emb.orderBy("vec_id").limit(3)
+    val base = java.nio.file.Files.createTempDirectory("serve_schema").toString
+    val (ivf, ivfPq, rot) = (s"$base/ivf", s"$base/ivfpq", s"$base/rot")
+    Similarity.buildIvfIndex(emb, "vec_id", "embedding", cents, ivf)
+    Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", cents, pq, ivfPq)
+    Similarity.buildIvfPqIndexRotated(emb, "vec_id", "embedding", opq, rot)
+    val cands = Similarity.topKCosine(emb, "vec_id", "embedding", probes,
+      "vec_id", "embedding", 5).select("probe_id", "vec_id")
+    val entries = Seq(
+      "topKCosine" -> Similarity.topKCosine(emb, "vec_id", "embedding", probes,
+        "vec_id", "embedding", 5),
+      "annTopK" -> Similarity.annTopK(emb, "vec_id", "embedding", probes,
+        "vec_id", "embedding", 5, tables = 2, bits = 4, d = 64),
+      "ivfTopK" -> Similarity.ivfTopK(emb, "vec_id", "embedding", probes,
+        "vec_id", "embedding", cents, nprobe = 2, k = 5),
+      "ivfTopKIndexed" -> Similarity.ivfTopKIndexed(spark, ivf, probes,
+        "vec_id", "embedding", cents, nprobe = 2, k = 5),
+      "pqTopK" -> Similarity.pqTopK(codes, "vec_id", "codes", probes,
+        "vec_id", "embedding", pq, 5),
+      "pqTopKRerank" -> Similarity.pqTopKRerank(emb, "vec_id", "embedding",
+        codes, "vec_id", "codes", probes, "vec_id", "embedding", pq, 5, 10),
+      "ivfPqTopK" -> Similarity.ivfPqTopK(emb, "vec_id", "embedding", probes,
+        "vec_id", "embedding", cents, pq, nprobe = 2, k = 5),
+      "ivfPqTopKRerank" -> Similarity.ivfPqTopKRerank(emb, "vec_id",
+        "embedding", probes, "vec_id", "embedding", cents, pq, nprobe = 2,
+        k = 5, shortlist = 10),
+      "ivfPqTopKIndexed" -> Similarity.ivfPqTopKIndexed(spark, ivfPq, probes,
+        "vec_id", "embedding", cents, pq, nprobe = 2, k = 5),
+      "ivfPqTopKIndexedRotated" -> Similarity.ivfPqTopKIndexedRotated(spark,
+        rot, probes, "vec_id", "embedding", opq, nprobe = 2, k = 5),
+      "ivfPqTopKIndexedRerank" -> Similarity.ivfPqTopKIndexedRerank(spark,
+        ivfPq, emb, "vec_id", "embedding", probes, "vec_id", "embedding",
+        cents, pq, nprobe = 2, k = 5, shortlist = 10),
+      "ivfPqTopKIndexedRerankRotated" -> Similarity.ivfPqTopKIndexedRerankRotated(
+        spark, rot, emb, "vec_id", "embedding", probes, "vec_id", "embedding",
+        opq, nprobe = 2, k = 5, shortlist = 10),
+      "exactRerank" -> Similarity.exactRerank(emb, "vec_id", "embedding",
+        probes, "vec_id", "embedding", cands, 3))
+    // DDL literals recorded from the serves before they shared one
+    // ranking tail: a nullable probe_id where the probe relation's id
+    // reaches the output, NOT NULL where the driver-built (probe, cell)
+    // pairs do
+    def ddl(probeId: String, score: String) =
+      s"probe_id BIGINT$probeId,vec_id BIGINT,rank INT NOT NULL,$score DOUBLE"
+    val (nullable, notNull) = ("", " NOT NULL")
+    val want = Map(
+      "topKCosine" -> ddl(nullable, "sim"),
+      "annTopK" -> ddl(nullable, "sim"),
+      "ivfTopK" -> ddl(nullable, "sim"),
+      "ivfTopKIndexed" -> ddl(notNull, "sim"),
+      "pqTopK" -> ddl(nullable, "adist"),
+      "pqTopKRerank" -> ddl(nullable, "sim"),
+      "ivfPqTopK" -> ddl(notNull, "adist"),
+      "ivfPqTopKRerank" -> ddl(notNull, "sim"),
+      "ivfPqTopKIndexed" -> ddl(notNull, "adist"),
+      "ivfPqTopKIndexedRotated" -> ddl(notNull, "adist"),
+      "ivfPqTopKIndexedRerank" -> ddl(notNull, "sim"),
+      "ivfPqTopKIndexedRerankRotated" -> ddl(notNull, "sim"),
+      "exactRerank" -> ddl(nullable, "sim"))
+    assert(entries.map(_._1).toSet == want.keySet)
+    for ((name, df) <- entries) assert(df.schema.toDDL === want(name), name)
   }
 }
 
